@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from codex_africanus_spark.functions.complex_algebra import Cplx, cexp_i, clit
 from codex_africanus_spark.functions.jones import Jones2x2
+from codex_africanus_spark.sources.tables import local_frame
 
 
 def feed_rotation(pa: Column, feed_type: str = "linear") -> Jones2x2:
@@ -50,7 +51,7 @@ def parallactic_angle_table(
     """Distinct-(time, antenna) PA dimension table (broadcast side input).
 
     For 'casa'/'astropy' backends, compute the same table driver-side
-    with the external ephemeris library and `spark.createDataFrame` it —
+    with the external ephemeris library and `sources.tables.local_frame` it —
     the join shape downstream is identical (the reference isolates
     casacore in a spawned process pool for the same reason,
     fused/transformers/parangle.py).
@@ -208,7 +209,7 @@ def astropy_parallactic_angle_table(spark, times, antenna_positions, field_centr
         for i in range(len(times))
         for a in range(len(antenna_positions))
     ]
-    return spark.createDataFrame(rows, "time double, antenna int, pa double")
+    return local_frame(spark, rows, "time double, antenna int, pa double")
 
 
 def transform_sources(

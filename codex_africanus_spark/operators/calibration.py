@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codex_africanus_spark.functions.complex_algebra import Cplx
+from codex_africanus_spark.sources.tables import local_frame
 
 
 def correct_vis(corrupted: DataFrame, gains: DataFrame) -> DataFrame:
@@ -115,7 +116,8 @@ def gauss_newton_phase_only(
 
     for it in range(maxiter):
         gdf = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(a, c, math.cos(p), math.sin(p)) for (a, c), p in phases.items()],
                 "antenna int, chan int, g_re double, g_im double",
             )

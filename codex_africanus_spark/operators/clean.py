@@ -14,6 +14,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from codex_africanus_spark.sources.tables import local_frame
+
 
 def psf_fit_gaussian(psf: np.ndarray) -> tuple[float, float, float]:
     """Fit (amplitude, σ_u, σ_v) of a separable Gaussian to the PSF peak
@@ -72,10 +74,9 @@ def hogbom_clean(
         .sort_values(["u_cell", "v_cell"])
         .reset_index(drop=True)
     )
+    schema = "iteration int, u_cell long, v_cell long, flux double"
     if pdf.empty:
-        return spark.createDataFrame(
-            [], "iteration int, u_cell long, v_cell long, flux double"
-        )
+        return local_frame(spark, [], schema)
     resid = (pdf.grid_re_q / pdf.wsum_q).to_numpy(dtype=np.float64)
     cells = pdf[["u_cell", "v_cell"]].to_numpy()
     thresh = threshold_frac * np.abs(resid).max()
@@ -87,10 +88,7 @@ def hogbom_clean(
             break
         comps.append((it, int(cells[p, 0]), int(cells[p, 1]), float(gamma * peak)))
         resid[p] -= gamma * peak
-    out = pd.DataFrame(comps, columns=["iteration", "u_cell", "v_cell", "flux"])
-    return spark.createDataFrame(out.astype(
-        {"iteration": "int32", "u_cell": "int64", "v_cell": "int64", "flux": "float64"}
-    )) if comps else spark.createDataFrame([], "iteration int, u_cell long, v_cell long, flux double")
+    return local_frame(spark, comps, schema)
 
 
 def _q_half_away(x: np.ndarray, grid: float) -> np.ndarray:
@@ -163,11 +161,13 @@ def clean_restore(
     a 1e-9 integer before summing. Scale shape: gridding is the cluster
     reduction, everything here is O(#cells × #components) driver work on
     the ~10^6-cell image (SURVEY §2.9)."""
+    schema = (
+        "u_cell long, v_cell long, n_picks int, residual double, "
+        "restored double"
+    )
     mc = _hogbom_minor_cycle(grid, gamma, threshold_frac, maxiter)
     if mc is None:
-        return spark.createDataFrame(
-            [], "u_cell long, v_cell long, n_picks int, residual double, restored double"
-        )
+        return local_frame(spark, [], schema)
     cells, resid, comps, picks = mc
     beam_q = _beam_splat_q(cells, comps, sigma)
 
@@ -180,17 +180,7 @@ def clean_restore(
             "restored": _q_half_away(resid + beam_q / 1e9, 1e6) / 1e6,
         }
     )
-    return spark.createDataFrame(
-        out.astype(
-            {
-                "u_cell": "int64",
-                "v_cell": "int64",
-                "n_picks": "int32",
-                "residual": "float64",
-                "restored": "float64",
-            }
-        )
-    )
+    return local_frame(spark, out, schema)
 
 
 def clean_restore_beam_sweep(
@@ -215,7 +205,7 @@ def clean_restore_beam_sweep(
     )
     mc = _hogbom_minor_cycle(grid, gamma, threshold_frac, maxiter)
     if mc is None:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     cells, resid, comps, picks = mc
     frames = []
     for sigma in sigmas:
@@ -232,17 +222,7 @@ def clean_restore_beam_sweep(
                 }
             )
         )
-    out = pd.concat(frames, ignore_index=True).astype(
-        {
-            "sigma": "float64",
-            "u_cell": "int64",
-            "v_cell": "int64",
-            "n_picks": "int32",
-            "residual": "float64",
-            "restored": "float64",
-        }
-    )
-    return spark.createDataFrame(out)
+    return local_frame(spark, pd.concat(frames, ignore_index=True), schema)
 
 
 # ---------------------------------------------------------------------------
@@ -318,7 +298,7 @@ def multiscale_clean(
         .reset_index(drop=True)
     )
     if pdf.empty:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     half = MS_N // 2
     if (pdf.u_cell.abs().max() > half) or (pdf.v_cell.abs().max() > half):
         raise ValueError(
@@ -373,12 +353,4 @@ def multiscale_clean(
             if 0 <= uu < MS_N and 0 <= vv < MS_N:
                 im[uu, vv] -= flux * w
         comps.append((it, k, pu - half, pv - half, flux))
-    if not comps:
-        return spark.createDataFrame([], schema)
-    out = pd.DataFrame(
-        comps, columns=["iteration", "scale", "u_cell", "v_cell", "flux"]
-    )
-    return spark.createDataFrame(out.astype(
-        {"iteration": "int32", "scale": "int32",
-         "u_cell": "int64", "v_cell": "int64", "flux": "float64"}
-    ))
+    return local_frame(spark, comps, schema)

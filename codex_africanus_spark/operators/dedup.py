@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from codex_africanus_spark.sources.tables import fan_out
+from codex_africanus_spark.sources.tables import fan_out, local_frame
 from codex_africanus_spark.functions.text import (
     HASH_P,
     hash31,
@@ -1008,8 +1008,8 @@ def pagerank_lsh_graph(docs: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     edges = _cut_lineage(edges.join(outdeg, "doc_a"))
     n_docs = nodes.count()
     if n_docs == 0:
-        return docs.sparkSession.createDataFrame(
-            [], "doc_id long, pagerank_q long"
+        return local_frame(
+            docs.sparkSession, [], "doc_id long, pagerank_q long"
         )
     base_q = (PR_SCALE * (PR_D_DEN - PR_D_NUM)) // (PR_D_DEN * n_docs)
     # cast to long: an int32 initial rank overflows at r_q * 85 for

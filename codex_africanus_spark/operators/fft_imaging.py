@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codex_africanus_spark.functions.deterministic import qsum
+from codex_africanus_spark.sources.tables import local_frame
 
 GRID_SCALE = 1e6
 
@@ -246,8 +247,10 @@ def model_vis_from_image(
         for vc in range(ny)
         for uc in range(nx)
     ]
-    mdf = vis.sparkSession.createDataFrame(
-        rows, "v_cell long, u_cell long, m_re double, m_im double"
+    mdf = local_frame(
+        vis.sparkSession,
+        rows,
+        "v_cell long, u_cell long, m_re double, m_im double",
     )
     ucell = F.pmod(F.round(F.col("u") / F.lit(cell)).cast("long"), F.lit(nx))
     vcell = F.pmod(F.round(F.col("v") / F.lit(cell)).cast("long"), F.lit(ny))

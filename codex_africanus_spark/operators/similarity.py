@@ -24,7 +24,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from codex_africanus_spark.sources.tables import fan_out, fast_row_count
+from codex_africanus_spark.sources.tables import (
+    fan_out,
+    fast_row_count,
+    local_frame,
+)
 
 DOT_SCALE = "1000000000000"  # 1e12 as exact integer literal
 N_PLANES = 4
@@ -622,7 +626,7 @@ def _ivf_build(embeddings: DataFrame, n_vecs: int | None = None):
         # hand the probe a LocalRelation of the same rows — one job
         # where checkpoint-then-collect was two (r14 stage-glue)
         rows = cent.orderBy("cid").collect()
-        cent_local = embeddings.sparkSession.createDataFrame(rows, cent.schema)
+        cent_local = local_frame(embeddings.sparkSession, rows, cent.schema)
         return cent_local, _assign_arrow(embeddings, rows)
     return cent, _assign_relational(embeddings, cent)
 
@@ -885,7 +889,8 @@ def _write_index_meta(
     from codex_africanus_spark.sources import snapshot as snap
 
     fmt, n_vecs, chk, constants = fingerprint
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [(fmt, n_vecs, chk, constants, source_fp)],
         "format int, n_vecs long, checksum long, constants string,"
         " source_fp string",
@@ -1996,7 +2001,8 @@ def kmeans_lloyd_stats(
     use_arrow = fast_row_count(embeddings) * k >= ARROW_ASSIGN_MIN_PAIRS
 
     def _lit_frame(rows):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(int(r["cid"]), [float(v) for v in r["centroid"]]) for r in rows],
             "cid long, centroid array<double>",
         )
@@ -2390,8 +2396,8 @@ def pca_power_iteration(embeddings: DataFrame, iters: int = PCA_ITERS) -> DataFr
     spark = embeddings.sparkSession
     # u = (A*q)(v*q) => the eigenvalue lives on the q^2 grid
     out = [(i, v[i] / _PCA_Q, mx / (_PCA_Q * _PCA_Q)) for i in range(d)]
-    return spark.createDataFrame(
-        out, "dim_idx int, eigvec double, lambda_inf double"
+    return local_frame(
+        spark, out, "dim_idx int, eigvec double, lambda_inf double"
     ).orderBy("dim_idx")
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-from codex_africanus_spark.sources.tables import load
+from codex_africanus_spark.sources.tables import load, local_frame
 from codex_africanus_spark.operators import dedup as dedup_op  # noqa: E402
 from codex_africanus_spark.operators import multimodal as mm_op  # noqa: E402
 from codex_africanus_spark.operators import similarity as sim_op  # noqa: E402
@@ -599,7 +599,7 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = scored.select(
         "doc_id", "n_tokens", quantize(F.col("quality_score"), 1e6).alias("q_ppm")
     )
-    th = spark.createDataFrame([(t,) for t in _SWEEP_PPM], "t_ppm long")
+    th = local_frame(spark, [(t,) for t in _SWEEP_PPM], "t_ppm long")
     tot = s2.agg(F.sum("n_tokens").alias("tot_tokens"))
     kept = F.when(F.col("q_ppm") >= F.col("t_ppm"), 1).otherwise(0)
     kept_tok = F.when(F.col("q_ppm") >= F.col("t_ppm"), F.col("n_tokens")).otherwise(0)
@@ -1506,8 +1506,8 @@ def ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = counts.agg(
         F.sum("c").alias("n_tot"), F.count(F.lit(1)).alias("v")
     )
-    cuts = spark.createDataFrame(
-        [(c,) for c in _NGRAM_COVERAGE_CUTS], "cutoff long"
+    cuts = local_frame(
+        spark, [(c,) for c in _NGRAM_COVERAGE_CUTS], "cutoff long"
     )
     j = ranked.crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(cuts))
     return (
@@ -2260,8 +2260,8 @@ def lsh_params_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("decile")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
-    planner = spark.createDataFrame(
-        _LSH_PLANNER_ROWS, "b int, r int, decile long, detect_ppm long"
+    planner = local_frame(
+        spark, _LSH_PLANNER_ROWS, "b int, r int, decile long, detect_ppm long"
     )
     return (
         deciles.join(F.broadcast(planner), "decile")
@@ -2437,7 +2437,7 @@ def rag_context_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes to the posting list before the per-query window sorts
     it.""".format(budget=_RAG_BUDGET)
     docs = load(spark, "documents", sf_dir)
-    terms = spark.createDataFrame([(t,) for t in _RAG_TERMS], ["query_term"])
+    terms = local_frame(spark, [(t,) for t in _RAG_TERMS], "query_term string")
     toks = F.split(F.col("text"), " ")
     scored = docs.crossJoin(F.broadcast(terms)).select(
         "query_term",

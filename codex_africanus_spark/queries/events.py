@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from codex_africanus_spark.functions.deterministic import qsum
 from codex_africanus_spark.sources import tpch_ms
-from codex_africanus_spark.sources.tables import load
+from codex_africanus_spark.sources.tables import load, local_frame
 from codex_africanus_spark.operators import bda as bda_op  # noqa: E402
 from codex_africanus_spark.operators import splines as spline_op  # noqa: E402
 from codex_africanus_spark.operators import skew as skew_op  # noqa: E402
@@ -1268,7 +1268,7 @@ def events_session_duration_quantiles(spark: SparkSession, sf_dir: str) -> DataF
     w = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, 0)
     cum = buckets.withColumn("cc", F.sum("c").over(w))
     n = buckets.agg(F.sum("c").cast("long").alias("n_sessions"))
-    qs = spark.createDataFrame([(50,), (90,), (99,)], "q int")
+    qs = local_frame(spark, [(50,), (90,), (99,)], "q int")
     hit = F.when(
         F.col("cc") >= F.expr("(n_sessions * q + 99) DIV 100"),
         F.col("bucket"),

@@ -11,6 +11,7 @@ from codex_africanus_spark.functions.coordinates import radec_to_lmn
 from codex_africanus_spark.functions.deterministic import qsum
 from codex_africanus_spark.functions.phase import phase_delay_angle, phase_path
 from codex_africanus_spark.sources import tpch_ms
+from codex_africanus_spark.sources.tables import local_frame
 from codex_africanus_spark.operators import calibration as cal_op  # noqa: E402
 from codex_africanus_spark.operators import clean as clean_op  # noqa: E402
 from codex_africanus_spark.operators import dft as dft_op  # noqa: E402
@@ -974,7 +975,7 @@ def asof_freq_grid_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     its enclosing grid interval with clamped linear weight (reference
     fast_beam_cubes.py:11-54 freq_grid_interp)."""
     vis = tpch_ms.vis_table(spark, sf_dir).filter(F.col("row_id") % 37 == 0)
-    grid = spark.createDataFrame([(g,) for g in _FREQ_GRID], "grid_value double")
+    grid = local_frame(spark, [(g,) for g in _FREQ_GRID], "grid_value double")
     out = asof_op.asof_grid_interp(
         vis.select("row_id", "frequency"), grid, "frequency", keys=["row_id"]
     )
@@ -1204,6 +1205,19 @@ _FFT_DIRTY_ORACLE = _with_ms(
 )
 
 
+def _image_pixels(spark: SparkSession, img) -> DataFrame:
+    """A driver-side image as (y, x, value) rows, value rounded to 6dp."""
+    return local_frame(
+        spark,
+        [
+            (y, x, round(float(img[y, x]), 6))
+            for y in range(img.shape[0])
+            for x in range(img.shape[1])
+        ],
+        "y long, x long, value double",
+    )
+
+
 @register("fft_dirty_image", _FFT_DIRTY_ORACLE)
 def fft_dirty_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FFT imaging tier: distributed exact uv-grid accumulation + driver
@@ -1212,18 +1226,9 @@ def fft_dirty_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     direct DFT over the same fixed-point grid — the FFT and the DFT agree
     to ~1e-12, far inside the 6dp output round (the engine-side identity
     is also machine-precision-tested in tests/test_fft_imaging.py)."""
-    import pandas as _pd
-
     vis = tpch_ms.vis_table(spark, sf_dir)
     img, wsum = fft_op.dirty_image(vis, nx=32, ny=32)
-    ys, xs = [], []
-    for y in range(img.shape[0]):
-        for x in range(img.shape[1]):
-            ys.append(y), xs.append(x)
-    pdf = _pd.DataFrame(
-        {"y": ys, "x": xs, "value": [round(float(img[y, x]), 6) for y, x in zip(ys, xs)]}
-    )
-    return spark.createDataFrame(pdf)
+    return _image_pixels(spark, img)
 
 
 _FFT_WSTACK_ORACLE = _with_ms(
@@ -1268,18 +1273,9 @@ def fft_dirty_image_wstack(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes summed. The oracle is the direct w-term DFT over the same
     fixed-point plane grids — FFT·screen vs DFT agree to ~1e-12, inside
     the 6dp output round."""
-    import pandas as _pd
-
     vis = tpch_ms.vis_table(spark, sf_dir)
     img, wsum = fft_op.dirty_image_wstack(vis, nx=32, ny=32, cell=10.0, w_step=2.0)
-    ys, xs = [], []
-    for y in range(img.shape[0]):
-        for x in range(img.shape[1]):
-            ys.append(y), xs.append(x)
-    pdf = _pd.DataFrame(
-        {"y": ys, "x": xs, "value": [round(float(img[y, x]), 6) for y, x in zip(ys, xs)]}
-    )
-    return spark.createDataFrame(pdf)
+    return _image_pixels(spark, img)
 
 
 # Fixed 8×8 two-pixel model image for the residual query: its forward
@@ -1368,20 +1364,11 @@ def fft_psf_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     member of the imaging triple next to fft_dirty_image and
     fft_residual_grid (reference wgridder vis2im with vis≡1; PSF peak
     normalizes to 1 at the phase centre)."""
-    import pandas as _pd
-
     vis = tpch_ms.vis_table(spark, sf_dir).withColumn(
         "vis_re", F.lit(1.0)
     ).withColumn("vis_im", F.lit(0.0))
     img, wsum = fft_op.dirty_image(vis, nx=32, ny=32)
-    ys, xs = [], []
-    for y in range(img.shape[0]):
-        for x in range(img.shape[1]):
-            ys.append(y), xs.append(x)
-    pdf = _pd.DataFrame(
-        {"y": ys, "x": xs, "value": [round(float(img[y, x]), 6) for y, x in zip(ys, xs)]}
-    )
-    return spark.createDataFrame(pdf)
+    return _image_pixels(spark, img)
 
 
 _PSF_FIT_ORACLE = f"""
@@ -1409,8 +1396,6 @@ def psf_gaussian_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     deconv/hogbom/clean.py:40-72). Weights are quantized (1e-6) over the
     6dp-rounded PSF pixels so both engines sum identical integers; the
     peak tie-break is (|value| desc, y, x)."""
-    import pandas as _pd
-
     vis = tpch_ms.vis_table(spark, sf_dir).withColumn(
         "vis_re", F.lit(1.0)
     ).withColumn("vis_im", F.lit(0.0))
@@ -1426,14 +1411,11 @@ def psf_gaussian_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = sum(w for _, _, w in wq)
     mu = sum(w * (y - py) ** 2 for y, _, w in wq)
     mv = sum(w * (x - qx) ** 2 for _, x, w in wq)
-    pdf = _pd.DataFrame(
-        {
-            "amp": [round(amp, 6)],
-            "sigma_u": [round((mu / a) ** 0.5, 6)],
-            "sigma_v": [round((mv / a) ** 0.5, 6)],
-        }
+    return local_frame(
+        spark,
+        [(round(amp, 6), round((mu / a) ** 0.5, 6), round((mv / a) ** 0.5, 6))],
+        "amp double, sigma_u double, sigma_v double",
     )
-    return spark.createDataFrame(pdf)
 
 
 _UVDIST_PROFILE_ORACLE = _with_ms(
@@ -2478,7 +2460,8 @@ def spw_aware_regrid(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
         )
     )
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         _SPW_GRID,
         "spw int, target_idx int, target_freq double, lo_chan int, "
         "hi_chan int, frac9 long",
@@ -2810,7 +2793,8 @@ def sault_mosaic_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(F.col("time") / F.lit(604800.0)).cast("long") % 3)
         .cast("int").alias("field_id")
     ).agg(qsum(F.col("weight"), 1e6).alias("s_w"))
-    centres = spark.createDataFrame(
+    centres = local_frame(
+        spark,
         [(p, lc, mc) for p, (lc, mc) in enumerate(_MOSAIC_CENTRES)],
         "field_id int, lc double, mc double",
     )
@@ -2971,8 +2955,6 @@ def psf_sidelobe_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver FFT); the rollup runs on 1024 pixels."""
     import math as _math
 
-    import pandas as _pd
-
     vis = tpch_ms.vis_table(spark, sf_dir).withColumn(
         "vis_re", F.lit(1.0)
     ).withColumn("vis_im", F.lit(0.0))
@@ -2989,11 +2971,11 @@ def psf_sidelobe_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 max(pk, abs(v)),
                 pw + int(_math.floor(v * v * 1e12 + 0.5)),
             )
-    pdf = _pd.DataFrame(
+    return local_frame(
+        spark,
         [(a, n, pk, pw) for a, (n, pk, pw) in sorted(rows.items())],
-        columns=["annulus", "n_pix", "peak_abs", "power_q"],
-    ).astype({"annulus": "int32", "n_pix": "int64", "power_q": "int64"})
-    return spark.createDataFrame(pdf).orderBy("annulus")
+        "annulus int, n_pix long, peak_abs double, power_q long",
+    ).orderBy("annulus")
 
 
 # ---------------------------------------------------------------------------
@@ -3048,7 +3030,7 @@ def wproj_planes_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(quantize_w).alias("wmax_q"),
         F.count(F.lit(1)).alias("n_rows"),
     )
-    eps = spark.createDataFrame(_WPROJ_EPS, "eps_id int, eps double")
+    eps = local_frame(spark, _WPROJ_EPS, "eps_id int, eps double")
     span = (F.col("wmax_q") - F.col("wmin_q")) / F.lit(1e6)
     return (
         wstats.crossJoin(F.broadcast(eps))

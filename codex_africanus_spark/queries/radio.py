@@ -17,7 +17,7 @@ from codex_africanus_spark.functions.stokes import stokes_to_corr
 from codex_africanus_spark.operators import averaging as avg_op
 from codex_africanus_spark.operators import predict as predict_op
 from codex_africanus_spark.sources import tpch_ms
-from codex_africanus_spark.sources.tables import load
+from codex_africanus_spark.sources.tables import load, local_frame
 from codex_africanus_spark.sources.tables import scan_twin as tables_scan_twin
 from codex_africanus_spark.operators import calibration as cal_op  # noqa: E402
 from codex_africanus_spark.operators import spi as spi_op  # noqa: E402
@@ -780,7 +780,7 @@ def gauss_newton_phase_solve(spark: SparkSession, sf_dir: str) -> DataFrame:
         (a, c, round(p - ref[c], 4))
         for (a, c), p in sorted(phases.items())
     ]
-    return spark.createDataFrame(rows, "antenna int, chan int, phase_rel double")
+    return local_frame(spark, rows, "antenna int, chan int, phase_rel double")
 
 
 _FEED_ROT_ORACLE = _with_ms(
@@ -1414,7 +1414,7 @@ _CASA_STOKES = [
 def casa_stokes_id_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASA stokes/correlation enumeration as a broadcast dimension table
     (reference util/casa_types.py:4-53 STOKES_ID_MAP)."""
-    ids = spark.createDataFrame(_CASA_STOKES, "corr_id int, corr_name string")
+    ids = local_frame(spark, _CASA_STOKES, "corr_id int, corr_name string")
     src = tpch_ms.source_table(spark, sf_dir)
     return (
         src.join(F.broadcast(ids), ids.corr_id == 9 + (src.source_id % 4))

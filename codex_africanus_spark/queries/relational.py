@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from codex_africanus_spark.functions.deterministic import qsum
 from codex_africanus_spark.sources import tpch_ms
-from codex_africanus_spark.sources.tables import load
+from codex_africanus_spark.sources.tables import load, local_frame
 from codex_africanus_spark.operators import skew as skew_op  # noqa: E402
 from codex_africanus_spark.operators import sketches as sketch_op  # noqa: E402
 from codex_africanus_spark.sources import tables as tables_mod  # noqa: E402
@@ -2244,8 +2244,10 @@ def snapshot_merge_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("qty_c2").cast("long").alias("qty_c2"),
         )
     )
-    conflict_row = spark.createDataFrame(
-        [("conflict", n_conflict_merges, 0)], "tag string, n_rows long, qty_c2 long"
+    conflict_row = local_frame(
+        spark,
+        [("conflict", n_conflict_merges, 0)],
+        "tag string, n_rows long, qty_c2 long",
     )
     return rollup.unionByName(conflict_row).orderBy("tag")
 
@@ -2468,7 +2470,8 @@ def snapshot_zorder_pruned_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(tpch_ms.REF_FREQ) * (1 + F.col("chan") / F.lit(8.0)))
         .alias("frequency"),
     )
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(856e6,), (1070e6,), (1284e6,), (1498e6,), (1712e6,)],
         "grid_value double",
     )

@@ -52,6 +52,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from codex_africanus_spark.sources.tables import local_frame
+
 CHECKPOINT_EVERY = 10
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
@@ -163,7 +165,7 @@ def read_snapshot(
 
         v = latest_version(root) if version is None else version
         schema = StructType.fromJson(json.loads(_read_manifest(root, v)["schema"]))
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     # r13: a snapshot carrying DELETION VECTORS reads merge-on-read —
     # the DV set anti-joins away tombstoned (file, position) rows. A
     # DV-free snapshot (every pre-r13 table) takes the unchanged fast

@@ -174,6 +174,49 @@ def fast_row_count(df: DataFrame) -> int:
         return df.count()
 
 
+def local_frame(spark: SparkSession, data, schema) -> DataFrame:
+    """Hand driver-held rows to Spark as a JVM ``LocalRelation``.
+
+    `data` is a list of tuples (or Rows), a pandas frame or a
+    ``pyarrow.Table``; `schema` is a DDL string or a StructType, and the
+    frame's field names, types and nullability are exactly its. The rows
+    become one Arrow table typed by the schema, so the frame carries its
+    real size: the planner can broadcast it and a scan starts no Python
+    worker. (``createDataFrame`` on a list builds a pickled Python RDD
+    whose size estimate is Long.MaxValue, and on an empty pandas frame
+    it takes the same path.) Every handoff of driver state back to Spark
+    in this package goes through here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(data, pa.Table):
+        table = data.cast(arrow_schema)
+    else:
+        if hasattr(data, "columns"):  # pandas, matched by column name
+            columns = [data[f.name] for f in arrow_schema]
+        else:
+            rows = list(data)
+            columns = [[r[i] for r in rows] for i in range(len(arrow_schema))]
+        # from_pandas=False: a NaN double stays NaN (pandas reads it as null)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type, from_pandas=False)
+             for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(table, schema)
+
+
+def localize(df: DataFrame) -> DataFrame:
+    """Collect `df` through Arrow and return it as a ``LocalRelation``
+    with the same schema: the collect-and-return handoff of the
+    streaming carries, which cuts the lineage without a Python RDD."""
+    return local_frame(df.sparkSession, df.toArrow(), df.schema)
+
+
 def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}")

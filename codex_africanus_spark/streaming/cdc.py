@@ -21,10 +21,14 @@ an event whose epoch's version has not yet committed raises
 ``ValueError`` — loud, never a silent mis-join.
 
 Carry per (epoch, segment): n_events + val_c_sum — two integers,
-independent of history length; DURABLE as ``carry_<batch_id>.parquet``
-beside the summaries (the r12-ADVICE salted/unwrap idiom: reload the
-latest marker-committed carry each batch, marker written last), so a
-driver restart replays against the true stream state.
+independent of history length. In process, each step collects the
+merged carry through Arrow and hands it back as a JVM ``LocalRelation``
+(`sources.tables.localize`): no Python worker scans it and the planner
+sees its real size. The marker-committed carry stays on disk, DURABLE
+as ``carry_<batch_id>.parquet`` beside the summaries (the
+r12-ADVICE salted/unwrap idiom: reload the latest marker-committed
+carry each batch, marker written last), so a driver restart replays
+against the true stream state.
 """
 
 from __future__ import annotations
@@ -33,12 +37,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codex_africanus_spark.operators import cdc as cdc_op
+from codex_africanus_spark.sources.tables import (
+    fast_row_count,
+    local_frame,
+    localize,
+)
 
 CARRY_SCHEMA = "epoch long, segment long, n_events long, val_c_sum long"
 
 
 def empty_carry(spark) -> DataFrame:
-    return spark.createDataFrame([], CARRY_SCHEMA)
+    return local_frame(spark, [], CARRY_SCHEMA)
 
 
 def cdc_dim_increment(
@@ -90,7 +99,7 @@ def cdc_dim_increment(
              + F.coalesce(F.col("val_c_sum"), F.lit(0))).alias("val_c_sum"),
         )
     )
-    new_carry = spark.createDataFrame(merged.collect(), CARRY_SCHEMA)
+    new_carry = localize(merged)
     dim_new = cdc_op.dim_new_counts(spark, root, versions)
     return cdc_op.final_summary(new_carry, dim_new), new_carry
 
@@ -129,8 +138,9 @@ def streaming_cdc_dim_sink(
         carry_new.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"carry_{batch_id}.parquet")
         )
+        rows = fast_row_count(spark.read.parquet(target))
         with open(marker, "w") as fh:
-            json.dump({"batch_id": batch_id, "rows": summary.count()}, fh)
+            json.dump({"batch_id": batch_id, "rows": rows}, fh)
 
     return (
         stream_ev.writeStream.foreachBatch(_batch)

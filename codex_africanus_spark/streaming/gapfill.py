@@ -13,10 +13,16 @@ data seen so far (the dense grid re-derives from the merged bounds, so
 a batch that extends a type's span retroactively lengthens its grid,
 exactly as the batch query would).
 
-Durable carry: ``carry_<batch_id>.parquet`` beside the summaries,
-reloaded from the latest marker-committed batch each step, marker
-written LAST (the r12-ADVICE restart discipline) — a driver restart
-replays against the true stream state.
+In-process handoff: each step collects the merged carry through Arrow
+and hands it back as a JVM ``LocalRelation`` (`sources.tables.localize`)
+— no Python worker scans it and the planner sees its real size.
+
+The durable carry stays on disk: ``carry_<batch_id>.parquet`` beside
+the summaries, reloaded from the latest marker-committed batch each step,
+marker written LAST (the r12-ADVICE restart discipline) — a driver
+restart replays against the true stream state. The marker's row count
+comes from the written summary's parquet footers, not a re-run of the
+summary plan.
 """
 
 from __future__ import annotations
@@ -25,12 +31,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codex_africanus_spark.operators import gapfill as gapfill_op
+from codex_africanus_spark.sources.tables import (
+    fast_row_count,
+    local_frame,
+    localize,
+)
 
 CARRY_SCHEMA = "event_type string, h long, n long"
 
 
 def empty_carry(spark) -> DataFrame:
-    return spark.createDataFrame([], CARRY_SCHEMA)
+    return local_frame(spark, [], CARRY_SCHEMA)
 
 
 def gap_fill_increment(
@@ -39,7 +50,6 @@ def gap_fill_increment(
     """One micro-batch step: collapse the batch to hourly counts, merge
     into the carry (exact integer add), recompute the gap statistics
     from the merged state. Returns (summary, new_carry)."""
-    spark = batch_ev.sparkSession
     inc = gapfill_op.hourly_counts(batch_ev)
     c = carry.select("event_type", "h", F.col("n").alias("c_n"))
     merged = (
@@ -53,7 +63,7 @@ def gap_fill_increment(
             ).alias("n"),
         )
     )
-    new_carry = spark.createDataFrame(merged.collect(), CARRY_SCHEMA)
+    new_carry = localize(merged)
     return gapfill_op.gap_fill_stats(new_carry), new_carry
 
 
@@ -89,8 +99,9 @@ def streaming_gap_fill_sink(
         carry_new.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"carry_{batch_id}.parquet")
         )
+        rows = fast_row_count(spark.read.parquet(target))
         with open(marker, "w") as fh:
-            json.dump({"batch_id": batch_id, "rows": summary.count()}, fh)
+            json.dump({"batch_id": batch_id, "rows": rows}, fh)
 
     return (
         stream_ev.writeStream.foreachBatch(_batch)

@@ -17,7 +17,10 @@ Kappa shape: `salted_bda_increment` is a pure (batch frame, carry
 frame) → (bins frame, new carry frame) function — directly usable from
 `foreachBatch` (see `streaming_salted_bda_sink`) with the repo's
 exactly-once batch-id marker idiom, and directly testable without the
-streaming machinery.
+streaming machinery. The empty carry is an Arrow-built JVM
+``LocalRelation`` (`sources.tables.local_frame`); the returned carry
+stays a lazy plan, which the sink commits to disk as parquet, marker
+last, and reloads on the next batch.
 
 Bit-equality to the unsalted streaming twin: the closure rule reads
 only the exact integer motion prefix and the anchor time, both of
@@ -38,6 +41,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codex_africanus_spark.sources.tables import local_frame
+
 # per-baseline open-bin accumulator — field-for-field the unsalted
 # twin's BDA_STATE_SCHEMA (streaming/stateful.py), keyed by baseline
 CARRY_SCHEMA = (
@@ -54,7 +59,7 @@ BINS_SCHEMA = (
 
 
 def empty_carry(spark) -> DataFrame:
-    return spark.createDataFrame([], CARRY_SCHEMA)
+    return local_frame(spark, [], CARRY_SCHEMA)
 
 
 def salted_bda_increment(

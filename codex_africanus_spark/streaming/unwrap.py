@@ -21,7 +21,11 @@ no float accumulates across batches, so there is nothing to drift.
 
 Carry per baseline: running count, net/total wraps, last raw phase,
 k at the stream end, and globally-shifted last/min/max unwrapped
-values — 9 integers, independent of history length.
+values — 9 integers, independent of history length. In process, each
+step collects the updated carry through Arrow and hands it back as a
+JVM ``LocalRelation`` (`sources.tables.localize`): no Python worker
+scans it and the planner sees its real size. `streaming_unwrap_sink`
+still commits the carry to disk as parquet, marker last.
 """
 
 from __future__ import annotations
@@ -30,6 +34,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codex_africanus_spark.operators import unwrap as unwrap_op
+from codex_africanus_spark.sources.tables import (
+    fast_row_count,
+    local_frame,
+    localize,
+)
 
 CARRY_SCHEMA = (
     "antenna1 int, antenna2 int, n long, net long, total long, "
@@ -38,7 +47,7 @@ CARRY_SCHEMA = (
 
 
 def empty_carry(spark) -> DataFrame:
-    return spark.createDataFrame([], CARRY_SCHEMA)
+    return local_frame(spark, [], CARRY_SCHEMA)
 
 
 def phase_unwrap_increment(
@@ -57,7 +66,6 @@ def phase_unwrap_increment(
     Returns (summary, new_carry); summary has the registered batch
     query's exact output shape (n_samples, net_wraps, total_wraps,
     final_unw_mrad, span_mrad per baseline)."""
-    spark = batch_ph.sparkSession
     bs = unwrap_op.baseline_summary(
         unwrap_op.stitch_buckets(unwrap_op.bucket_summary(batch_ph))
     )
@@ -104,7 +112,7 @@ def phase_unwrap_increment(
         .when(has_batch, F.col("max_unw") + shift)
         .otherwise(F.col("c_max_unw")).alias("max_unw"),
     )
-    new_carry = spark.createDataFrame(upd.collect(), CARRY_SCHEMA)
+    new_carry = localize(upd)
     summary = new_carry.select(
         "antenna1", "antenna2",
         F.col("n").alias("n_samples"),
@@ -161,8 +169,9 @@ def streaming_unwrap_sink(
         carry_new.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"carry_{batch_id}.parquet")
         )
+        rows = fast_row_count(spark.read.parquet(target))
         with open(marker, "w") as fh:
-            json.dump({"batch_id": batch_id, "rows": summary.count()}, fh)
+            json.dump({"batch_id": batch_id, "rows": rows}, fh)
 
     return (
         stream_vis.writeStream.foreachBatch(_batch)

@@ -20,8 +20,9 @@ from codex_africanus_spark.sources import tpch_ms
 from codex_africanus_spark.streaming import cdc as scdc
 
 # Heavyweight end-to-end rehearsal: excluded from the default (driver-budget)
-# selection; run with `pytest -m slow` (see pytest.ini).
-pytestmark = pytest.mark.slow
+# selection; run with `pytest -m slow` (see pytest.ini). The 3-split parity
+# case is the fast default-selection check of the carry handoff.
+SLOW = pytest.mark.slow
 
 EV_SCHEMA = (
     "event_id long, ts_us long, user_id long, event_type string, value double"
@@ -67,7 +68,11 @@ def _drive_increment(spark, ev_pdf, root, splits):
     )
 
 
-@pytest.mark.parametrize("splits", [1, 4, 9])
+@pytest.mark.parametrize(
+    "splits",
+    [pytest.param(1, marks=SLOW), 3, pytest.param(4, marks=SLOW),
+     pytest.param(9, marks=SLOW)],
+)
 def test_streaming_cdc_matches_batch_query(spark, sf_dir, tmp_path, splits):
     """Final running summary == the registered batch query for any
     split count — events in ANY order across batches (all three dim
@@ -77,9 +82,12 @@ def test_streaming_cdc_matches_batch_query(spark, sf_dir, tmp_path, splits):
     _build_dim(spark, ev, root)
     pdf = ev.toPandas().sample(frac=1.0, random_state=7).reset_index(drop=True)
     got = _drive_increment(spark, pdf, root, splits)
-    pd.testing.assert_frame_equal(got, _want(spark, sf_dir), check_dtype=False)
+    pd.testing.assert_frame_equal(
+        got, _want(spark, sf_dir), check_dtype=False, check_exact=True
+    )
 
 
+@SLOW
 def test_streaming_cdc_refresh_between_batches(spark, sf_dir, tmp_path):
     """The realistic CDC schedule: version e+1 commits just before
     epoch-e events stream in. Each batch re-resolves the root (the
@@ -118,6 +126,7 @@ def test_streaming_cdc_refresh_between_batches(spark, sf_dir, tmp_path):
     pd.testing.assert_frame_equal(got, _want(spark, sf_dir), check_dtype=False)
 
 
+@SLOW
 def test_streaming_cdc_watermark_violation_raises(spark, sf_dir, tmp_path):
     """An event whose epoch's dim version has not committed must raise,
     never silently drop (the per-epoch filters would otherwise eat it)."""
@@ -140,6 +149,7 @@ def test_streaming_cdc_watermark_violation_raises(spark, sf_dir, tmp_path):
         )
 
 
+@SLOW
 def test_streaming_cdc_sink_exactly_once_and_restart(spark, sf_dir, tmp_path):
     """End-to-end readStream/foreachBatch: run two micro-batches under
     one sink instance, then a FRESH sink (fresh closure = restarted
@@ -201,3 +211,9 @@ def test_streaming_cdc_sink_exactly_once_and_restart(spark, sf_dir, tmp_path):
     pd.testing.assert_frame_equal(got, _want(spark, sf_dir), check_dtype=False)
     with open(os.path.join(out_dir, f"_marker_{last_id}.json")) as fh:
         assert json.load(fh)["batch_id"] == last_id
+    # every marker records the row count of the summary it commits
+    for m in markers:
+        with open(os.path.join(out_dir, m)) as fh:
+            rec = json.load(fh)
+        summary = os.path.join(out_dir, f"summary_batch_{rec['batch_id']}")
+        assert rec["rows"] == spark.read.parquet(summary).count()

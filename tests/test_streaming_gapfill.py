@@ -34,8 +34,15 @@ def _summarize(df):
     return df.toPandas().sort_values("event_type").reset_index(drop=True)
 
 
-@pytest.mark.parametrize("splits,shuffle", [(1, False), (4, True), (9, True)])
-@pytest.mark.slow
+@pytest.mark.parametrize(
+    "splits,shuffle",
+    [
+        pytest.param(1, False, marks=pytest.mark.slow),
+        (3, True),
+        pytest.param(4, True, marks=pytest.mark.slow),
+        pytest.param(9, True, marks=pytest.mark.slow),
+    ],
+)
 def test_streaming_gapfill_matches_batch_query(
     spark, sf_dir, tmp_path, splits, shuffle
 ):
@@ -54,7 +61,8 @@ def test_streaming_gapfill_matches_batch_query(
         batch = spark.createDataFrame(chunk.reset_index(drop=True), EV_SCHEMA)
         summary, carry = sgap.gap_fill_increment(batch, carry)
     pd.testing.assert_frame_equal(
-        _summarize(summary), _want(spark, sf_dir), check_dtype=False
+        _summarize(summary), _want(spark, sf_dir),
+        check_dtype=False, check_exact=True,
     )
 
 
@@ -144,3 +152,9 @@ def test_streaming_gapfill_sink_exactly_once_and_restart(
     pd.testing.assert_frame_equal(got, _want(spark, sf_dir), check_dtype=False)
     with open(os.path.join(out_dir, f"_marker_{last_id}.json")) as fh:
         assert json.load(fh)["batch_id"] == last_id
+    # every marker records the row count of the summary it commits
+    for m in markers:
+        with open(os.path.join(out_dir, m)) as fh:
+            rec = json.load(fh)
+        summary = os.path.join(out_dir, f"summary_batch_{rec['batch_id']}")
+        assert rec["rows"] == spark.read.parquet(summary).count()

@@ -15,8 +15,9 @@ from codex_africanus_spark.sources import tpch_ms
 from codex_africanus_spark.streaming import unwrap as sunwrap
 
 # Heavyweight end-to-end rehearsal: excluded from the default (driver-budget)
-# selection; run with `pytest -m slow` (see pytest.ini).
-pytestmark = pytest.mark.slow
+# selection; run with `pytest -m slow` (see pytest.ini). The 3-split parity
+# case is the fast default-selection check of the carry handoff.
+SLOW = pytest.mark.slow
 
 
 def _drive_increment(spark, ph_pdf, splits):
@@ -38,7 +39,9 @@ def _drive_increment(spark, ph_pdf, splits):
     )
 
 
-@pytest.mark.parametrize("splits", [1, 3, 7])
+@pytest.mark.parametrize(
+    "splits", [pytest.param(1, marks=SLOW), 3, pytest.param(7, marks=SLOW)]
+)
 def test_streaming_unwrap_matches_batch_query(spark, sf_dir, splits):
     """Final running summary == the registered batch query, bit-exact,
     for any number of ordered micro-batches over the real corpus."""
@@ -57,6 +60,7 @@ def test_streaming_unwrap_matches_batch_query(spark, sf_dir, splits):
     )
 
 
+@SLOW
 @pytest.mark.parametrize("seed", [3, 99])
 @pytest.mark.parametrize("splits", [2, 5])
 def test_streaming_unwrap_fuzz_wrap_dense(spark, seed, splits):
@@ -101,6 +105,7 @@ def test_streaming_unwrap_fuzz_wrap_dense(spark, seed, splits):
     assert (got["total_wraps"] > 100).all()
 
 
+@SLOW
 def test_streaming_unwrap_sink_exactly_once(spark, sf_dir, tmp_path):
     """End-to-end through readStream/foreachBatch with availableNow: the
     last published summary equals the batch query; replaying a marked
@@ -158,8 +163,15 @@ def test_streaming_unwrap_sink_exactly_once(spark, sf_dir, tmp_path):
     with open(mpath) as fh:
         rec = json.load(fh)
     assert rec["batch_id"] == last_id
+    # every marker records the row count of the summary it commits
+    for m in markers:
+        with open(os.path.join(out_dir, m)) as fh:
+            rec = json.load(fh)
+        summary = os.path.join(out_dir, f"summary_batch_{rec['batch_id']}")
+        assert rec["rows"] == spark.read.parquet(summary).count()
 
 
+@SLOW
 def test_streaming_unwrap_sink_survives_driver_restart(spark, sf_dir, tmp_path):
     """r12 ADVICE (high): the carry must persist on disk, not in the
     foreachBatch closure. Simulate a driver restart by running the first
