@@ -52,6 +52,11 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
+# Arrow-shingler crossover: input corpus bytes (sum of file sizes) at
+# which the mapInPandas kernel beats the JVM chain (_arrow_shingle_ok).
+ARROW_SHINGLE_MIN_BYTES = 32 << 20
+
+
 def _arrow_shingle_ok(docs: DataFrame) -> bool:
     """Dispatch gate for the Arrow shingler (r14, guide §4.2): the JVM
     path stays authoritative unless the frame matches the corpus
@@ -60,29 +65,21 @@ def _arrow_shingle_ok(docs: DataFrame) -> bool:
     measured: the kernel is 1.31x/1.13x on minhash-LSH/prefix-filter at
     sf10 (59 MB corpus) but 0.8x on the 0.6 MB sf0.1 corpus, where the
     shingle CPU is smaller than the worker round-trip. Size-adaptive
-    like tables.fan_out (sum of input file sizes; unknown lineage means
-    small/test frames, which stay JVM). SPARK_GRAFT_ARROW_SHINGLE=0
-    forces the JVM path, =1 forces the Arrow tier (the bit-compare
-    tests use it); SPARK_GRAFT_ARROW_SHINGLE_MIN_MB tunes the
-    crossover (default 32)."""
+    like tables.fan_out: the sum of input file sizes against
+    ARROW_SHINGLE_MIN_BYTES; unknown lineage means small/test frames,
+    which stay JVM."""
     import os
 
     d = dict(docs.dtypes)
     if d.get("doc_id") != "bigint" or d.get("text") != "string":
         return False
-    mode = os.environ.get("SPARK_GRAFT_ARROW_SHINGLE", "")
-    if mode == "0":
-        return False
-    if mode == "1":
-        return True
-    min_bytes = int(os.environ.get("SPARK_GRAFT_ARROW_SHINGLE_MIN_MB", "32")) << 20
     try:
         files = [f[len("file:"):] if f.startswith("file:") else f
                  for f in docs.inputFiles()]
         return (
             bool(files)
             and all(os.path.exists(p) for p in files)
-            and sum(os.path.getsize(p) for p in files) >= min_bytes
+            and sum(os.path.getsize(p) for p in files) >= ARROW_SHINGLE_MIN_BYTES
         )
     except Exception:
         return False
@@ -1178,10 +1175,10 @@ PREFIX_RARE_DF_MAX = 16
 
 # Broadcast-verify gate: the per-doc ordered-token table is broadcast to
 # the verify stage only while its estimated size (n_docs × (8·avg_set +
-# ~32B row overhead)) stays under this bound; past it the operator falls
-# back to the shuffle-verify pipeline. 2 GiB ≈ 15M docs at the corpus'
+# ~32B row overhead)) stays under this bound; past it the same two-level
+# decomposition runs at shuffle grain. 2 GiB ≈ 15M docs at the corpus'
 # ~130-shingle sets — far beyond any single broadcast a 100 TB job
-# should attempt, and the fallback is the plain pre-r12 plan.
+# should attempt.
 PREFIX_BROADCAST_MAX_BYTES = 2 << 30
 
 
@@ -1248,9 +1245,9 @@ def prefix_filter_jaccard_join(
     candidate×token exchange), and the channel-2 anti-join runs as a
     shuffle anti-join. Every exchange stays linear-or-candidate
     bounded — the completeness argument above is path-independent, and
-    the three paths (broadcast two-level, shuffle two-level, pre-r12
-    `_prefix_jaccard_shuffle_fallback`) are result-identical
-    (tests/test_round12_fixes.py, tests/test_round13_fixes.py)."""
+    the two paths (broadcast two-level, shuffle two-level) are
+    result-identical (tests/test_round12_fixes.py,
+    tests/test_round13_fixes.py)."""
     sh = _shingle_frame(fan_out(docs)).distinct().localCheckpoint(eager=True)  # GC-scoped (r8)
     df_ = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     D = PREFIX_RARE_DF_MAX
@@ -1432,115 +1429,6 @@ def prefix_filter_jaccard_join(
     )
 
 
-def _prefix_jaccard_shuffle_fallback(sh: DataFrame) -> DataFrame:
-    """Pre-r12 shuffle pipeline, kept as the beyond-broadcast fallback
-    for low-duplication corpora whose per-doc core table exceeds the
-    broadcast gate: prefix postings self-join + m/pa/pb positional
-    aggregation + pair-grain array verify. Result-identical to the
-    broadcast path; disk cost grows with duplication density (the reason
-    the two-level path is the default). Takes the checkpointed distinct
-    (doc_id, h) shingle frame built by the caller."""
-    df_ = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    # per-doc: tokens ordered rarest-first (global (df, h) order), set
-    # size, and the token array for verification — one doc_id shuffle
-    sets = (
-        sh.join(df_, "h")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "h"))).alias("toks"))
-        .select(
-            "doc_id",
-            F.expr("transform(toks, t -> t.h)").alias("ord_h"),
-            F.size("toks").alias("s"),
-        )
-        .localCheckpoint(eager=True)  # GC-scoped, not CacheManager-pinned (r8)
-    )
-    # prefix length p = s - ceil(tau*s) + 1; for tau = 1/2: s - (s+1)//2 + 1
-    prefix = sets.select(
-        "doc_id",
-        "s",
-        F.posexplode(
-            F.expr("slice(ord_h, 1, CAST(s - ((s + 1) DIV 2) + 1 AS INT))")
-        ).alias("pos0", "h"),
-    ).select("doc_id", "h", "s", (F.col("pos0") + 1).alias("pos"))
-    # PPJoin candidate pruning, both integer-exact and provably lossless
-    # (they only drop pairs whose final jaccard CANNOT reach τ, so the
-    # output set is unchanged for any τ):
-    #   length filter — jac ≥ 1/2 ⇒ min/max set-size ratio ≥ 1/2, folded
-    #   into the join condition so undersized pairs never materialize;
-    #   positional filter — both shingle lists share the global (df, h)
-    #   order, so with m shared PREFIX tokens and (pa, pb) the positions
-    #   of the globally-last one, every other common token sits strictly
-    #   after BOTH: inter ≤ m + min(sa − pa, sb − pb). At sf0.1 this cuts
-    #   the verify join's input from 409 k pairs (×~130 shingles each in
-    #   the intersection explode) to ~3 k — the difference between the
-    #   verify stage dominating the query and vanishing into it.
-    cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (
-                F.least(F.col("a.s"), F.col("b.s")) * PREFIX_JACCARD_TAU_DEN
-                >= F.greatest(F.col("a.s"), F.col("b.s")) * PREFIX_JACCARD_TAU_NUM
-            ),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.s").alias("sa"),
-            F.col("b.s").alias("sb"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("m"),
-            F.max("a.pos").alias("pa"),
-            F.max("b.pos").alias("pb"),
-        )
-        .filter(
-            (
-                F.col("m")
-                + F.least(F.col("sa") - F.col("pa"), F.col("sb") - F.col("pb"))
-            )
-            * (PREFIX_JACCARD_TAU_DEN + PREFIX_JACCARD_TAU_NUM)
-            >= (F.col("sa") + F.col("sb")) * PREFIX_JACCARD_TAU_NUM
-        )
-        .select("doc_a", "doc_b", "sa", "sb")
-    )
-    # verify on the per-doc token ARRAYS instead of the explode kernel:
-    # each surviving pair would explode to its full shingle set
-    # (~|set| rows/pair) and re-shuffle; two doc_id-keyed array joins +
-    # a compiled array_intersect keep the verify at pair cardinality
-    # (same exact integer count — ord_h IS the distinct shingle set)
-    inter = (
-        cand.join(
-            sets.select(F.col("doc_id").alias("doc_a"), F.col("ord_h").alias("arr_a")),
-            "doc_a",
-        )
-        .join(
-            sets.select(F.col("doc_id").alias("doc_b"), F.col("ord_h").alias("arr_b")),
-            "doc_b",
-        )
-        .select(
-            "doc_a", "doc_b", "sa", "sb",
-            F.size(F.array_intersect("arr_a", "arr_b")).cast("long").alias("inter"),
-        )
-    )
-    return (
-        inter.filter(
-            F.col("inter") * (PREFIX_JACCARD_TAU_DEN + PREFIX_JACCARD_TAU_NUM)
-            >= (F.col("sa") + F.col("sb")) * PREFIX_JACCARD_TAU_NUM
-        )
-        .select(
-            "doc_a", "doc_b", "inter",
-            F.round(
-                F.col("inter")
-                / (F.col("sa") + F.col("sb") - F.col("inter")).cast("double"),
-                9,
-            ).alias("jaccard"),
-        )
-    )
-
-
 PREFIX_JACCARD_SQL = f"""
   WITH {_SHINGLE_CTE},
   dsh AS (SELECT DISTINCT doc_id, h FROM shingles),
@@ -1555,7 +1443,7 @@ PREFIX_JACCARD_SQL = f"""
     SELECT doc_id, h, s, pos FROM ranked WHERE pos <= s - ((s + 1) // 2) + 1
   ),
   cand AS (
-    -- PPJoin length + positional filters (lossless; see the Spark twin)
+    -- PPJoin length + positional filters (lossless: drop only pairs below tau)
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.s AS sa, b.s AS sb
     FROM prefix a JOIN prefix b
       ON a.h = b.h AND a.doc_id < b.doc_id

@@ -37,14 +37,12 @@ separate fact-scan job) and dropped for the sources-only collect
 (~n_src rows, one tiny dimension-scan job).
 
 Dispatch gates (fall back to the JVM expand path, behavior unchanged):
-SPARK_GRAFT_ARROW_PREDICT=0 kill-switch; any required vis/source column
-missing; empty or > ARROW_MAX_SRC source catalogue (the fold embeds it
-in the task closure).
+any required vis/source column missing; empty or > ARROW_MAX_SRC source
+catalogue (the fold embeds it in the task closure). Tests force the
+expand path by setting ARROW_MAX_SRC to 0.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -63,10 +61,6 @@ POINT_COLS = ("l", "m", "n", "flux_i", "spi", "ref_freq")
 SHAPE_COLS = ("source_type", "emaj", "emin", "position_angle")
 FULL_CORR_COLS = ("l", "m", "n", "flux_i", "flux_q", "flux_u", "flux_v", "spi", "ref_freq")
 CORR_SUMS = ("xx_re", "xx_im", "xy_re", "xy_im", "yx_re", "yx_im", "yy_re", "yy_im")
-
-
-def enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_ARROW_PREDICT", "1") != "0"
 
 
 def _collect_sources(sources: DataFrame, need: tuple[str, ...]):
@@ -112,8 +106,6 @@ def point_fold(
     partial sums over the source axis. The caller's groupBy(KEY_COLS)
     .sum() then equals the expand path's qsum exactly.
     """
-    if not enabled():
-        return None
     need_src = POINT_COLS + (SHAPE_COLS if with_shape else ())
     if not set(need_src) <= set(sources.columns) or not set(VIS_COLS) <= set(vis.columns):
         return None
@@ -186,8 +178,6 @@ def full_corr_fold(vis: DataFrame, sources: DataFrame) -> DataFrame | None:
     Brightness (bxx/byy incl. the spectral pow) is evaluated on the same
     per-batch unique-frequency grid; theta trig is numpy
     (flip-rate-verified)."""
-    if not enabled():
-        return None
     if not set(FULL_CORR_COLS) <= set(sources.columns) or not set(VIS_COLS) <= set(vis.columns):
         return None
     src = _collect_sources(sources, FULL_CORR_COLS)

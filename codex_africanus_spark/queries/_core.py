@@ -97,106 +97,21 @@ _AVG_ORACLE = _with_ms(
 )
 
 
-# Queries a driver round already verified green (hash_match=true, or
-# rows-only queries with rows_match=true — union of CORRECTNESS_r01/r02).
-# The driver checks the first ~50 registered queries per round, so
-# registry() orders repaired + never-yet-verified queries ahead of these —
-# across rounds every query then accumulates a CORRECTNESS row.
-_DRIVER_GREEN = frozenset({
-    "ann_ivf_topk", "ann_lsh_bucketed_topk", "asof_freq_grid_interp",
-    "bda_baseline_dependent_average", "beam_cube_dde_sampling",
-    "bpe_token_estimate", "briggs_robust_weights", "casa_stokes_id_mapping",
-    "compute_and_corrupt_vis_dde", "corpus_curation_pipeline",
-    "corr_to_stokes_roundtrip", "correct_vis_inverse_gains",
-    "corrupt_vis_apply_gains", "degrid_kernel_footprint",
-    "degrid_nearest_cell", "dft_im_to_vis_forward", "dft_vis_to_im_adjoint",
-    "doc_fingerprints", "doc_token_quality", "embedding_cosine_topk",
-    "embedding_near_dup_pairs", "estimate_cell_size", "events_sessionize",
-    "events_tumbling_window", "exact_dedup_documents",
-    "feed_rotation_full_sandwich", "fft_dirty_image_wstack",
-    "fit_spi_components", "gauss_newton_phase_solve",
-    "gaussian_shape_envelope", "gp_exponential_squared_kernel",
-    "gp_phase_screen_corrupt", "grid_kernel_footprint", "grid_kernel_kbsinc",
-    "grid_kernel_sinc", "hogbom_clean_components", "lang_id_heuristic",
-    "lm_to_radec_inverse", "merge_flags_row_chan",
-    "minhash_lsh_near_dup_pairs", "minhash_signatures",
-    "multimodal_decode_metadata", "multimodal_frame_sample",
-    "near_dup_clusters", "ngram_jaccard_pairs",
-    "parallactic_angles_geometric", "parts_never_returned_anti",
-    "phase_delay_factor", "predict_full_corr_2x2", "predict_vis_point_gauss",
-    "q10_returned_items", "q1_pricing_summary", "q3_shipping_priority",
-    "q4_order_priority_exists", "q5_region_revenue", "q6_forecast_revenue",
-    "radec_to_lm_transform", "residual_vis_data_minus_model",
-    "rime2x2_compiled_predict", "rime2x2_feed_rotation_predict",
-    "rime_compiled_predict", "rime_lm_transformer_predict",
-    "salted_skew_safe_aggregate", "shapelet_basis_eval",
-    "simhash_fingerprints", "simhash_near_dup_pairs", "spectral_model_flux",
-    "stokes_convert_partial_schema", "stokes_to_corr_conversion",
-    "stratified_sample_documents", "tigger_model_predict",
-    "tigger_model_reader", "time_and_channel_average",
-    "time_bin_sequential_exact", "time_index_dense_rank",
-    "topk_parts_by_revenue", "transform_sources_rotation",
-    "union_source_catalogues", "unique_times_counts", "uv_grid_histogram",
-    "uvw_facet_transforms", "wsclean_model_reader",
-    "wsclean_polynomial_spectra", "wsclean_predict_end_to_end",
-    "zernike_dde_sampling",
-    # Round-3 green rows (CORRECTNESS_r03.json, hash_match=true):
-    "events_sliding_window", "spline_smooth_user_series",
-    "events_rollup_grouping_sets", "distinct_user_counts",
-    "events_sessionize_relational", "events_sessionize_salted",
-    "degrid_policy_phase_rotate", "feed_rotation_jones",
-    "kmv_theta_distinct_customers", "kmv_merge_rollup_customers",
-    "kll_grid_quantiles_price", "kll_quantile_rollup",
-    "rime_shapelet_predict", "shapelet_2d_w_term",
-    "exact_quantiles_price", "pipeline_predict_corrupt_average",
-    "rime_feed_rotation_predict", "q18_large_volume_customers",
-    "q7_volume_shipping", "q8_market_share", "q13_customer_distribution",
-    "q14_promo_revenue", "q15_top_supplier", "events_lag_lead_deltas",
-    "bda_ragged_channel_factor", "multimodal_audio_windows",
-    "multimodal_extract_features", "fft_dirty_image", "fft_residual_grid",
-    "q2_min_cost_supplier", "q9_product_profit", "q11_important_stock",
-    "q12_shipping_delay", "q16_supplier_part_counts",
-    "q17_small_quantity_revenue", "q19_disjunctive_pushdown",
-    "q20_promo_part_suppliers", "q21_blocking_returns", "q22_idle_customers",
-    "chunk_dedup_corpus", "repetition_quality_flags",
-    "dedup_keep_best_quality", "eval_decontamination",
-    "events_asof_prior_join", "ms_sink_roundtrip", "tfidf_top_terms",
-    "winnowing_fingerprints",
-})
-
-
-# Round-4 verification head: the 8 queries that have never been inside a
-# driver window across rounds 1–3 (locally bit-exact-parity green, but no
-# CORRECTNESS row), followed by the sketch queries reworked this round
-# from engine-opaque (no_oracle) to expression-level exact-oracle forms.
-_R4_HEAD: tuple[str, ...] = (
-    "sequence_packing", "packed_sequence_manifest",
-    "unigram_logprob_quality", "events_user_set_ops",
-    "ann_lsh_recall_eval", "embedding_centroid_outliers",
-    "fft_psf_image", "psf_gaussian_fit",
-    "hll_sketch_distinct_parts", "hll_union_rollup",
-    "approx_percentile_price", "ann_ivf_recall_eval",
-    "cross_doc_dup_spans", "boilerplate_top_spans",
-)
-
-
 @functools.lru_cache(maxsize=1)
 def _driver_green_now() -> frozenset:
-    """Driver-green set, self-maintaining: start from the hand-audited
-    baseline above, then replay every CORRECTNESS_r*.json the driver has
-    written into the repo root in round order — a green row adds the
-    query, a failing/erroring row REMOVES it (so regressions cycle back
-    into the verification head automatically, with no hand-edited round
-    lists to go stale — the round-3 verdict's `registry()` complaint).
-    A rows-only (no-oracle) row with no failure is NEUTRAL: it neither
-    promotes nor evicts, so a query verified green in an earlier round
-    is not permanently pinned into the bounded head by a later weaker
-    check. Cached per process — the files only change between rounds."""
+    """Driver-green set, replayed from the CORRECTNESS_r*.json files the
+    driver has written into the repo root, in round order: a green row
+    adds the query, a failing/erroring row REMOVES it (so regressions
+    cycle back into the verification head automatically). A rows-only
+    (no-oracle) row with no failure is NEUTRAL: it neither promotes nor
+    evicts, so a query verified green in an earlier round is not
+    permanently pinned into the bounded head by a later weaker check.
+    Cached per process — the files only change between rounds."""
     import glob
     import json
     import os
 
-    green = set(_DRIVER_GREEN)
+    green: set[str] = set()
     # queries/ is a package now: repo root is THREE levels up
     root = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -228,20 +143,13 @@ def _driver_green_now() -> frozenset:
 
 def registry() -> dict[str, QueryDef]:
     """Full query registry, ordered for the driver's bounded verification
-    window: never-driver-tested (or regressed) queries first — computed
-    from the driver's own CORRECTNESS files at call time — then any other
-    driver-unverified queries in registration order, then the
-    driver-green remainder."""
+    window: queries the CORRECTNESS replay does not mark green (never
+    driver-tested, or regressed) first, then the driver-green remainder,
+    each in registration order."""
     green_set = _driver_green_now()
-    head = {
-        n: REGISTRY[n] for n in _R4_HEAD if n in REGISTRY and n not in green_set
-    }
-    fresh = {
-        n: qd for n, qd in REGISTRY.items()
-        if n not in green_set and n not in head
-    }
+    fresh = {n: qd for n, qd in REGISTRY.items() if n not in green_set}
     green = {n: qd for n, qd in REGISTRY.items() if n in green_set}
-    return {**head, **fresh, **green}
+    return {**fresh, **green}
 
 
 _PA_FIELD = (0.1, -0.6)  # field centre (ra, dec) in rad — southern site

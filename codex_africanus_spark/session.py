@@ -23,75 +23,74 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Local-bench-only I/O knobs (r13 verdict item 2), applied only under a
+# `local` master. The testdata tables are single small parquet files, so
+# an 8 MB split target restores scan parallelism on 32 cores; on a real
+# cluster it would be ~12.5M tasks per 100 TB scan, so the 128 MB default
+# stays there (guide §6 even recommends raising it). The driver's session
+# keeps the 200/400 shuffle width; at bench scale the right pre-AQE width
+# is the core count (AQE still coalesces down, but over-wide shuffles pay
+# task-launch overhead in the iterative solvers' per-iteration joins).
+# Cluster deployments size it from data volume instead.
+LOCAL_ONLY = frozenset({
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.shuffle.partitions",
+})
+
+# The engine's one session-conf table: `get_spark` builds from it,
+# `configure_session` applies it to an externally-created session.
+CONFS: tuple[tuple[str, str], ...] = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    # guide §3.1/§9: let the planner pick shuffled-hash join when its
+    # size conditions hold instead of always sort-merge — drops both
+    # sort passes from fact⋈fact joins (measured at sf10: q5's
+    # lineitem⋈orders). Scale-safe: SHJ is only chosen when the
+    # build side fits the per-partition hash-map bound; SMJ remains
+    # the fallback for genuinely large both-sides joins.
+    ("spark.sql.join.preferSortMergeJoin", "false"),
+    # AQE twin of the same choice for runtime-sized shuffles
+    ("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"),
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    ("spark.sql.parquet.mergeSchema", "false"),
+    ("spark.sql.files.maxPartitionBytes", "8m"),
+    ("spark.sql.files.openCostInBytes", "1m"),
+    ("spark.sql.shuffle.partitions", DEFAULT_CPUS),
+    # launch-time confs: a running session refuses them, so on an
+    # external session they stay whatever its builder chose
+    ("spark.ui.enabled", "false"),
+    ("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")),
+)
+
 
 def get_spark(app_name: str = "codex_africanus_spark", cpus: str | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
-    builder = (
+    confs = {**dict(CONFS), "spark.sql.shuffle.partitions": str(cpus)}
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # guide §3.1/§9: let the planner pick shuffled-hash join when its
-        # size conditions hold instead of always sort-merge — drops both
-        # sort passes from fact⋈fact joins (measured at sf10: q5's
-        # lineitem⋈orders). Scale-safe: SHJ is only chosen when the
-        # build side fits the per-partition hash-map bound; SMJ remains
-        # the fallback for genuinely large both-sides joins.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        # AQE twin of the same choice for runtime-sized shuffles
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.mergeSchema", "false")
-        # local-mode parallelism: the testdata tables are single small
-        # parquet files; the 128 MB default yields ~3 input partitions on
-        # 32 cores. On a real cluster with 100 TB of many files the
-        # default is correct — this is a local-bench knob.
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-        .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(map=confs)
+        .getOrCreate()
     )
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
     """Apply this engine's runtime confs to an externally-created session
-    (the driver harness constructs its own SparkSession)."""
+    (the driver harness constructs its own SparkSession); the LOCAL_ONLY
+    entries only under a `local` master."""
     try:
         is_local = spark.conf.get("spark.master", "").startswith("local")
     except Exception:
         is_local = False
-    confs = [
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.join.preferSortMergeJoin", "false"),
-        ("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"),
-    ]
-    if is_local:
-        # Local-bench-only I/O knobs (r13 verdict item 2): the testdata
-        # tables are single small parquet files, so an 8 MB split target
-        # restores scan parallelism on 32 cores. On a real cluster an
-        # 8 MB target would be ~12.5M tasks per 100 TB scan — keep the
-        # 128 MB default there (guide §6 even recommends raising it).
-        confs += [
-            ("spark.sql.files.maxPartitionBytes", "8m"),
-            ("spark.sql.files.openCostInBytes", "1m"),
-            # the driver's session keeps the 200/400 default; at bench
-            # scale the right pre-AQE width is the core count (AQE still
-            # coalesces down, but over-wide shuffles pay task-launch
-            # overhead in the iterative solvers' per-iteration joins).
-            # Cluster deployments size this from data volume instead.
-            ("spark.sql.shuffle.partitions", DEFAULT_CPUS),
-        ]
-    for k, v in confs:
+    for k, v in CONFS:
+        if k in LOCAL_ONLY and not is_local:
+            continue
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -8,11 +8,18 @@ reference's dataset grouping keys (FIELD_ID, DATA_DESC_ID, SCAN_NUMBER —
 SURVEY §1.4) so downstream scans prune, and sort within partitions by
 (TIME, ANTENNA1, ANTENNA2) to re-establish the reference's ordering
 contract for ordered consumers.
+
+`marker_committed_sink` is the streaming twins' write-back: per
+micro-batch summary + durable carry, committed by a batch-id marker.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+
+from codex_africanus_spark.sources.tables import fast_row_count
 
 
 def write_model_data(
@@ -110,3 +117,66 @@ def merge_column_update(
         shutil.move(str(src_dir), str(dst_dir))
     shutil.rmtree(stage_root, ignore_errors=True)
     return part_vals
+
+
+def marker_committed_sink(
+    stream: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    carry_schema: str,
+    empty_carry: Callable[[SparkSession], DataFrame],
+    step: Callable[[DataFrame, DataFrame], tuple[DataFrame, DataFrame]],
+):
+    """foreachBatch wiring for a carry-threaded streaming twin: the
+    exactly-once batch-id marker protocol with a DURABLE carry (r12
+    ADVICE), so a driver restart replays against the true stream state
+    instead of an empty carry. Per micro-batch:
+
+    1. a batch whose marker exists was already applied: skip it;
+    2. load the carry of the latest marker below this batch, or
+       `empty_carry(spark)` for the first one;
+    3. `step(batch_df, carry) -> (summary, new_carry)`;
+    4. overwrite ``summary_batch_<id>`` and ``carry_<id>.parquet`` —
+       batch-unique targets, so a replay after a crash between these
+       writes and the marker rewrites both idempotently;
+    5. take the summary's row count from its parquet footers, not a
+       re-run of the summary plan;
+    6. write ``_marker_<id>.json`` LAST.
+
+    Returns the unstarted DataStreamWriter."""
+    import json
+    import os
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        marker = os.path.join(out_dir, f"_marker_{batch_id}.json")
+        if os.path.exists(marker):  # replayed batch: already applied
+            return
+        os.makedirs(out_dir, exist_ok=True)
+        done = sorted(
+            int(f[len("_marker_"):-len(".json")])
+            for f in os.listdir(out_dir)
+            if f.startswith("_marker_") and f.endswith(".json")
+        )
+        prev = [b for b in done if b < batch_id]
+        if prev:
+            carry = spark.read.schema(carry_schema).parquet(
+                os.path.join(out_dir, f"carry_{prev[-1]}.parquet")
+            )
+        else:
+            carry = empty_carry(spark)
+        summary, carry_new = step(batch_df, carry)
+        target = os.path.join(out_dir, f"summary_batch_{batch_id}")
+        summary.write.mode("overwrite").parquet(target)
+        carry_new.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"carry_{batch_id}.parquet")
+        )
+        rows = fast_row_count(spark.read.parquet(target))
+        with open(marker, "w") as fh:
+            json.dump({"batch_id": batch_id, "rows": rows}, fh)
+
+    return (
+        stream.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )

@@ -37,11 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codex_africanus_spark.operators import cdc as cdc_op
-from codex_africanus_spark.sources.tables import (
-    fast_row_count,
-    local_frame,
-    localize,
-)
+from codex_africanus_spark.sources.sink import marker_committed_sink
+from codex_africanus_spark.sources.tables import local_frame, localize
 
 CARRY_SCHEMA = "epoch long, segment long, n_events long, val_c_sum long"
 
@@ -107,43 +104,10 @@ def cdc_dim_increment(
 def streaming_cdc_dim_sink(
     stream_ev: DataFrame, root: str, out_dir: str, checkpoint_dir: str
 ):
-    """foreachBatch wiring, exactly-once marker idiom with the DURABLE
-    carry: reload the latest marker-committed carry from disk, step the
-    increment against the freshly-resolved dim versions, overwrite the
-    batch-unique summary + carry targets, publish the marker LAST."""
-    import json
-    import os
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = os.path.join(out_dir, f"_marker_{batch_id}.json")
-        if os.path.exists(marker):  # replayed batch: already applied
-            return
-        os.makedirs(out_dir, exist_ok=True)
-        done = sorted(
-            int(f[len("_marker_"):-len(".json")])
-            for f in os.listdir(out_dir)
-            if f.startswith("_marker_") and f.endswith(".json")
-        )
-        prev = [b for b in done if b < batch_id]
-        if prev:
-            carry = spark.read.schema(CARRY_SCHEMA).parquet(
-                os.path.join(out_dir, f"carry_{prev[-1]}.parquet")
-            )
-        else:
-            carry = empty_carry(spark)
-        summary, carry_new = cdc_dim_increment(batch_df, carry, root)
-        target = os.path.join(out_dir, f"summary_batch_{batch_id}")
-        summary.write.mode("overwrite").parquet(target)
-        carry_new.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"carry_{batch_id}.parquet")
-        )
-        rows = fast_row_count(spark.read.parquet(target))
-        with open(marker, "w") as fh:
-            json.dump({"batch_id": batch_id, "rows": rows}, fh)
-
-    return (
-        stream_ev.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    """foreachBatch wiring: `cdc_dim_increment` against the freshly
+    resolved dim versions of `root`, under the marker-committed
+    durable-carry protocol (`sources.sink`)."""
+    return marker_committed_sink(
+        stream_ev, out_dir, checkpoint_dir, CARRY_SCHEMA, empty_carry,
+        lambda batch_df, carry: cdc_dim_increment(batch_df, carry, root),
     )

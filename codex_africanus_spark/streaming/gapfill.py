@@ -17,12 +17,12 @@ In-process handoff: each step collects the merged carry through Arrow
 and hands it back as a JVM ``LocalRelation`` (`sources.tables.localize`)
 — no Python worker scans it and the planner sees its real size.
 
-The durable carry stays on disk: ``carry_<batch_id>.parquet`` beside
-the summaries, reloaded from the latest marker-committed batch each step,
-marker written LAST (the r12-ADVICE restart discipline) — a driver
-restart replays against the true stream state. The marker's row count
-comes from the written summary's parquet footers, not a re-run of the
-summary plan.
+The durable carry stays on disk (`sources.sink.marker_committed_sink`):
+``carry_<batch_id>.parquet`` beside the summaries, reloaded from the
+latest marker-committed batch each step, marker written LAST (the
+r12-ADVICE restart discipline) — a driver restart replays against the
+true stream state. The marker's row count comes from the written
+summary's parquet footers, not a re-run of the summary plan.
 """
 
 from __future__ import annotations
@@ -31,11 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codex_africanus_spark.operators import gapfill as gapfill_op
-from codex_africanus_spark.sources.tables import (
-    fast_row_count,
-    local_frame,
-    localize,
-)
+from codex_africanus_spark.sources.sink import marker_committed_sink
+from codex_africanus_spark.sources.tables import local_frame, localize
 
 CARRY_SCHEMA = "event_type string, h long, n long"
 
@@ -70,41 +67,9 @@ def gap_fill_increment(
 def streaming_gap_fill_sink(
     stream_ev: DataFrame, out_dir: str, checkpoint_dir: str
 ):
-    """foreachBatch wiring — exactly-once marker idiom with the durable
-    carry (the streaming/cdc.py sink, minus the dim resolution)."""
-    import json
-    import os
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = os.path.join(out_dir, f"_marker_{batch_id}.json")
-        if os.path.exists(marker):  # replayed batch: already applied
-            return
-        os.makedirs(out_dir, exist_ok=True)
-        done = sorted(
-            int(f[len("_marker_"):-len(".json")])
-            for f in os.listdir(out_dir)
-            if f.startswith("_marker_") and f.endswith(".json")
-        )
-        prev = [b for b in done if b < batch_id]
-        if prev:
-            carry = spark.read.schema(CARRY_SCHEMA).parquet(
-                os.path.join(out_dir, f"carry_{prev[-1]}.parquet")
-            )
-        else:
-            carry = empty_carry(spark)
-        summary, carry_new = gap_fill_increment(batch_df, carry)
-        target = os.path.join(out_dir, f"summary_batch_{batch_id}")
-        summary.write.mode("overwrite").parquet(target)
-        carry_new.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"carry_{batch_id}.parquet")
-        )
-        rows = fast_row_count(spark.read.parquet(target))
-        with open(marker, "w") as fh:
-            json.dump({"batch_id": batch_id, "rows": rows}, fh)
-
-    return (
-        stream_ev.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    """foreachBatch wiring: `gap_fill_increment` under the
+    marker-committed durable-carry protocol (`sources.sink`)."""
+    return marker_committed_sink(
+        stream_ev, out_dir, checkpoint_dir,
+        CARRY_SCHEMA, empty_carry, gap_fill_increment,
     )

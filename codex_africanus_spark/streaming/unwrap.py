@@ -34,11 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codex_africanus_spark.operators import unwrap as unwrap_op
-from codex_africanus_spark.sources.tables import (
-    fast_row_count,
-    local_frame,
-    localize,
-)
+from codex_africanus_spark.sources.sink import marker_committed_sink
+from codex_africanus_spark.sources.tables import local_frame, localize
 
 CARRY_SCHEMA = (
     "antenna1 int, antenna2 int, n long, net long, total long, "
@@ -127,54 +124,12 @@ def phase_unwrap_increment(
 def streaming_unwrap_sink(
     stream_vis: DataFrame, out_dir: str, checkpoint_dir: str
 ):
-    """foreachBatch wiring with the repo's exactly-once batch-id marker
-    idiom: each micro-batch derives the phase frame, steps the
-    increment, and overwrites the running per-baseline summary under a
-    batch-unique directory before publishing a marker — replay after a
-    crash rewrites the same directory idempotently.
-
-    The carry is DURABLE (r12 ADVICE, high): it is written as
-    ``carry_<batch_id>.parquet`` beside the summaries and every batch
-    reloads the latest marker-committed carry from disk — the
-    streaming/salted.py idiom — so a driver restart replays against the
-    true stream state instead of an empty carry. The marker is written
-    LAST: a crash between summary/carry writes and the marker makes the
-    replay rewrite both (batch-unique targets, mode=overwrite), and a
-    committed batch is a no-op."""
-    import json
-    import os
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = os.path.join(out_dir, f"_marker_{batch_id}.json")
-        if os.path.exists(marker):  # replayed batch: already applied
-            return
-        os.makedirs(out_dir, exist_ok=True)
-        done = sorted(
-            int(f[len("_marker_"):-len(".json")])
-            for f in os.listdir(out_dir)
-            if f.startswith("_marker_") and f.endswith(".json")
-        )
-        prev = [b for b in done if b < batch_id]
-        if prev:
-            carry = spark.read.schema(CARRY_SCHEMA).parquet(
-                os.path.join(out_dir, f"carry_{prev[-1]}.parquet")
-            )
-        else:
-            carry = empty_carry(spark)
-        ph = unwrap_op.phase_frame(batch_df)
-        summary, carry_new = phase_unwrap_increment(ph, carry)
-        target = os.path.join(out_dir, f"summary_batch_{batch_id}")
-        summary.write.mode("overwrite").parquet(target)
-        carry_new.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"carry_{batch_id}.parquet")
-        )
-        rows = fast_row_count(spark.read.parquet(target))
-        with open(marker, "w") as fh:
-            json.dump({"batch_id": batch_id, "rows": rows}, fh)
-
-    return (
-        stream_vis.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    """foreachBatch wiring: each micro-batch derives the phase frame and
+    steps `phase_unwrap_increment` under the marker-committed
+    durable-carry protocol (`sources.sink`)."""
+    return marker_committed_sink(
+        stream_vis, out_dir, checkpoint_dir, CARRY_SCHEMA, empty_carry,
+        lambda batch_df, carry: phase_unwrap_increment(
+            unwrap_op.phase_frame(batch_df), carry
+        ),
     )

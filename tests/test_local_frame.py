@@ -136,3 +136,36 @@ def test_create_dataframe_only_inside_local_frame():
                 rel = path.relative_to(PKG).as_posix()
                 calls.append((rel, owner.get(id(node))))
     assert calls == [("sources/tables.py", "local_frame")], calls
+
+
+def test_env_read_only_for_deployment_settings():
+    """AST scan of the package: `os.environ` / `os.getenv` are read only
+    for deployment settings — the session's cores and driver memory and
+    the default testdata directory. A tier gate is a module constant,
+    never an env knob."""
+    reads = set()
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        parent = {
+            id(child): node
+            for node in ast.walk(tree)
+            for child in ast.iter_child_nodes(node)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in ("environ", "getenv"):
+                use = parent[id(node)]
+                if isinstance(use, ast.Attribute):  # os.environ.get(...)
+                    use = parent[id(use)]
+                if isinstance(use, ast.Subscript):
+                    arg = use.slice
+                elif isinstance(use, ast.Call) and use.args:
+                    arg = use.args[0]
+                else:
+                    arg = None
+                key = arg.value if isinstance(arg, ast.Constant) else None
+                reads.add((path.relative_to(PKG).as_posix(), key))
+    assert reads == {
+        ("session.py", "SPARK_GRAFT_CPUS"),
+        ("session.py", "SPARK_DRIVER_MEMORY"),
+        ("sources/tables.py", "SPARK_GRAFT_SF_DIR"),
+    }, reads

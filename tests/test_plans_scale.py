@@ -9,6 +9,7 @@ import re
 from pyspark.sql import functions as F
 
 from codex_africanus_spark.operators import predict as predict_op
+from codex_africanus_spark.operators import predict_arrow
 from codex_africanus_spark.queries import registry
 from codex_africanus_spark.sources import tpch_ms
 from codex_africanus_spark.sources.tables import load
@@ -23,9 +24,16 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_predict_uses_broadcast_join_not_shuffle(spark, sf_dir):
+def test_predict_uses_broadcast_join_not_shuffle(spark, sf_dir, monkeypatch):
+    """Both predict tiers stay shuffle-join free: the default Arrow fold
+    has no source join at all, and the expand path (forced by a zero
+    fold bound) broadcasts the catalogue."""
     vis = tpch_ms.vis_table(spark, sf_dir)
     src = tpch_ms.source_table(spark, sf_dir)
+    plan = plan_of(predict_op.predict_point_vis(vis, src))
+    assert "MapInPandas" in plan
+    assert "SortMergeJoin" not in plan
+    monkeypatch.setattr(predict_arrow, "ARROW_MAX_SRC", 0)
     plan = plan_of(predict_op.predict_point_vis(vis, src))
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan

@@ -1,8 +1,8 @@
 """Round-12 fixes.
 
 1. prefix_filter_jaccard_join rebuild (the r11 verdict's one red): the
-   broadcast/group-collapse path and the pre-r12 shuffle fallback must be
-   result-identical, and the group collapse must stay exact on a
+   broadcast/group-collapse path and the shuffle-grain path past the
+   broadcast gate must be result-identical, and the group collapse must stay exact on a
    duplication-dense corpus (the sf10 failure regime: many near-identical
    copies of each base doc) — checked against the all-pairs brute force.
 2. r11 ADVICE closures: bda_partial_oracle raises (not assert) on a
@@ -46,9 +46,9 @@ def _brute_force(docs):
 
 
 def test_prefix_broadcast_and_fallback_paths_identical(spark, sf_dir):
-    """The r12 broadcast/group-collapse path and the pre-r12 shuffle
-    fallback (forced via broadcast_max_bytes=0) must emit byte-identical
-    results on the real corpus."""
+    """The r12 broadcast/group-collapse path and the shuffle-grain
+    fallback past the gate (forced via broadcast_max_bytes=0) must emit
+    byte-identical results on the real corpus."""
     docs = load(spark, "documents", sf_dir)
     new = [
         tuple(r)

@@ -3,10 +3,10 @@
 1. prefix_filter_jaccard_join shuffle-grain two-level tier (closes the
    r12 verdict's "fallback re-inherits the disk quadratic"): past the
    broadcast gate the SAME core/rare decomposition now runs with
-   sort-merge set joins and a groupBy-deduped group-pair channel. All
-   THREE paths (broadcast two-level, shuffle two-level, pre-r12 shuffle
-   pipeline) must be result-identical — on the real corpus AND on the
-   adversarial huge+duplication-dense regime the old fallback died on.
+   sort-merge set joins and a groupBy-deduped group-pair channel. Both
+   paths (broadcast two-level, shuffle two-level) must be
+   result-identical — on the real corpus AND on the adversarial
+   huge+duplication-dense regime the pre-r12 shuffle pipeline died on.
 2. The shuffle path must contain no broadcast of the core-set frame
    (the exact OOM the gate exists to prevent).
 """
@@ -47,19 +47,13 @@ def _rows(df):
 
 
 @pytest.mark.slow
-def test_prefix_three_paths_identical_real_corpus(spark, sf_dir):
-    """broadcast two-level == shuffle two-level == pre-r12 pipeline on
-    the real documents table."""
+def test_prefix_two_paths_identical_real_corpus(spark, sf_dir):
+    """broadcast two-level == shuffle two-level on the real documents
+    table."""
     docs = load(spark, "documents", sf_dir)
     bcast = _rows(dedup_op.prefix_filter_jaccard_join(docs))
     shuf = _rows(dedup_op.prefix_filter_jaccard_join(docs, broadcast_max_bytes=0))
-    sh = (
-        dedup_op._shingle_frame(dedup_op.fan_out(docs))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    legacy = _rows(dedup_op._prefix_jaccard_shuffle_fallback(sh))
-    assert bcast == shuf == legacy
+    assert bcast == shuf
     assert len(bcast) > 0
 
 

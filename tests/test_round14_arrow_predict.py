@@ -6,8 +6,6 @@ selection — all three were green at adoption). Same quantized integer
 multiset + associative int64 sum; the only numeric divergence sources
 (numpy vs JVM cos/sin/exp/pow) are flip-rate-measured to land on the
 same 1e-6 grid (tools/sincos_fliprate.py: zero flips through sf10)."""
-import os
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -36,11 +34,11 @@ def _bitcompare(a_df, b_df):
 
 
 def _both_paths(monkeypatch, build):
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_PREDICT", raising=False)
     folded = build()
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_PREDICT", "0")
-    expanded = build()
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_PREDICT", raising=False)
+    # a zero closure bound forces the JVM expand path
+    with monkeypatch.context() as m:
+        m.setattr(predict_arrow, "ARROW_MAX_SRC", 0)
+        expanded = build()
     return folded, expanded
 
 
@@ -79,7 +77,6 @@ def test_fold_dispatches_on_bench_queries(spark, sf_dir):
     fallback would leave the optimization OFF while tests stay green):
     the fold plan carries a MapInPandas/ArrowEvalPython node and no
     BroadcastNestedLoop/BroadcastHashJoin below the aggregate."""
-    assert predict_arrow.enabled()
     vis = tpch_ms.vis_table(spark, sf_dir)
     src = tpch_ms.source_table(spark, sf_dir)
     plan = predict_op.predict_point_vis(vis, src)._jdf.queryExecution().toString()
@@ -106,17 +103,16 @@ def test_fold_collapses_duplicate_keys(spark, sf_dir, monkeypatch):
 def test_fold_gates(spark, sf_dir, monkeypatch):
     vis = tpch_ms.vis_table(spark, sf_dir)
     src = tpch_ms.source_table(spark, sf_dir)
-    # kill-switch
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_PREDICT", "0")
-    assert predict_arrow.point_fold(vis, src) is None
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_PREDICT", raising=False)
     # missing source column -> fallback
     assert predict_arrow.point_fold(vis, src.drop("spi")) is None
     # missing vis column -> fallback
     assert predict_arrow.point_fold(vis.drop("u"), src) is None
-    # catalogue over the closure bound -> fallback
-    monkeypatch.setattr(predict_arrow, "ARROW_MAX_SRC", 3)
-    assert predict_arrow.point_fold(vis, src) is None
+    # catalogue over the closure bound -> fallback (a bound of 0 is how
+    # tests force the expand path)
+    for bound in (3, 0):
+        monkeypatch.setattr(predict_arrow, "ARROW_MAX_SRC", bound)
+        assert predict_arrow.point_fold(vis, src) is None
+        assert predict_arrow.full_corr_fold(vis, src) is None
     monkeypatch.undo()
     # empty catalogue -> fallback (the expand path emits zero rows; a
     # fold would emit zero-valued rows instead)

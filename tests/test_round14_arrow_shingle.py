@@ -17,14 +17,19 @@ def _docs(spark, sf):
 
 
 def _both(monkeypatch, build):
-    # "1" forces the Arrow tier regardless of the size-adaptive gate
-    # (test corpora sit below the 32 MB crossover by design)
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLE", "1")
-    arrow = build()
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLE", "0")
-    jvm = build()
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_SHINGLE", raising=False)
+    # a zero crossover forces the Arrow tier on any file-backed corpus
+    # (test corpora sit below the 32 MB default by design); an
+    # unreachable one forces the JVM chain
+    with monkeypatch.context() as m:
+        m.setattr(dedup_op, "ARROW_SHINGLE_MIN_BYTES", 0)
+        arrow = build()
+        m.setattr(dedup_op, "ARROW_SHINGLE_MIN_BYTES", 1 << 62)
+        jvm = build()
     return arrow, jvm
+
+
+def _plan(df):
+    return df._jdf.queryExecution().toString()
 
 
 def _bitcompare(a_df, b_df, key):
@@ -45,7 +50,7 @@ def test_shingle_frame_matches_jvm(spark, sf_dir, monkeypatch):
     arrow, jvm = _both(
         monkeypatch, lambda: dedup_op._shingle_frame(_docs(spark, sf_dir))
     )
-    assert "MapInPandas" in arrow._jdf.queryExecution().toString()
+    assert "MapInPandas" in _plan(arrow)
     _bitcompare(arrow, jvm, ["doc_id", "h"])
 
 
@@ -54,7 +59,7 @@ def test_minhash_signatures_match_jvm(spark, sf_dir, monkeypatch):
         monkeypatch,
         lambda: dedup_op.minhash_signatures(_docs(spark, sf_dir), keep=("lang",)),
     )
-    assert "MapInPandas" in arrow._jdf.queryExecution().toString()
+    assert "MapInPandas" in _plan(arrow)
     _bitcompare(arrow, jvm, ["doc_id"])
 
 
@@ -65,31 +70,30 @@ def test_lsh_pairs_end_to_end_match(spark, sf_dir, monkeypatch):
     arrow, jvm = _both(
         monkeypatch, lambda: reg["minhash_lsh_near_dup_pairs"].fn(spark, sf_dir)
     )
+    assert "MapInPandas" in _plan(arrow)
     _bitcompare(arrow, jvm, ["doc_a", "doc_b"])
 
 
 def test_shingle_gates(spark, sf_dir, monkeypatch):
     docs = _docs(spark, sf_dir)
-    # kill-switch restores the pure-JVM plan
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLE", "0")
-    plan = dedup_op._shingle_frame(docs)._jdf.queryExecution().toString()
-    assert "MapInPandas" not in plan
-    # non-contract frame (doc_id not bigint) falls back even when forced
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLE", "1")
+    # size-adaptive default: the tiny test corpus stays JVM
+    assert "MapInPandas" not in _plan(dedup_op._shingle_frame(docs))
+    # an unreachable crossover keeps the pure-JVM plan
+    monkeypatch.setattr(dedup_op, "ARROW_SHINGLE_MIN_BYTES", 1 << 62)
+    assert "MapInPandas" not in _plan(dedup_op._shingle_frame(docs))
+    monkeypatch.setattr(dedup_op, "ARROW_SHINGLE_MIN_BYTES", 0)
+    # non-contract frame (doc_id not bigint) falls back even when the
+    # size gate is 0
     other = docs.withColumn("doc_id", F.col("doc_id").cast("int"))
-    plan = dedup_op._shingle_frame(other)._jdf.queryExecution().toString()
-    assert "MapInPandas" not in plan
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_SHINGLE", raising=False)
-    # size-adaptive default: the tiny test corpus stays JVM, a low
-    # crossover flips it to the Arrow tier (the sf10 regime)
-    plan = dedup_op._shingle_frame(docs)._jdf.queryExecution().toString()
-    assert "MapInPandas" not in plan
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLE_MIN_MB", "0")
-    plan = dedup_op._shingle_frame(docs)._jdf.queryExecution().toString()
-    assert "MapInPandas" in plan
+    assert "MapInPandas" not in _plan(dedup_op._shingle_frame(other))
+    # so does a frame with no file lineage (unknown size)
+    mem = spark.range(3).selectExpr("id AS doc_id", "'a b c d' AS text")
+    assert "MapInPandas" not in _plan(dedup_op._shingle_frame(mem))
+    # a low crossover flips the corpus to the Arrow tier (the sf10 regime)
+    assert "MapInPandas" in _plan(dedup_op._shingle_frame(docs))
 
 
-def test_short_and_null_docs_skip_like_jvm(spark, monkeypatch):
+def test_short_and_null_docs_skip_like_jvm(spark, monkeypatch, tmp_path):
     pdf_rows = [
         (1, "only two"),
         (2, "a b c d"),
@@ -97,8 +101,12 @@ def test_short_and_null_docs_skip_like_jvm(spark, monkeypatch):
         (4, ""),
         (5, "x y z"),
     ]
-    docs = spark.createDataFrame(pdf_rows, "doc_id long, text string")
+    # written out first: the size gate reads the corpus' file lineage
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(pdf_rows, "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
     arrow, jvm = _both(monkeypatch, lambda: dedup_op._shingle_frame(docs))
+    assert "MapInPandas" in _plan(arrow)
     _bitcompare(arrow, jvm, ["doc_id", "h"])
     assert sorted(
         arrow.select("doc_id").distinct().toPandas()["doc_id"].tolist()

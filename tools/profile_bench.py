@@ -29,25 +29,15 @@ SF_DIR = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
 
 
 def get_spark_ui(app_name: str = "profile-bench"):
-    from codex_africanus_spark.session import DEFAULT_CPUS
+    from codex_africanus_spark.session import CONFS, DEFAULT_CPUS
     from pyspark.sql import SparkSession
 
     return (
         SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.mergeSchema", "false")
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-        .config("spark.sql.files.openCostInBytes", "1m")
+        .config(map=dict(CONFS))
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4049")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .getOrCreate()
     )
 
