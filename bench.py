@@ -4,8 +4,13 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is executed to completion (collect of the aggregated result —
-results are small; nothing large crosses the driver boundary).
+It also holds the one measurement protocol that the bench tools under
+tools/ import. A query is measured by `measure`: one warm-up, whose
+wall is reported only as its `cold_sec`, then RUNS timed executions; its
+number in `queries` is the minimum of those warm walls. Every execution writes the
+query's DataFrame to the noop sink, which evaluates every output column
+and moves nothing across the driver, and runs under a watchdog that
+cancels all jobs after BUDGET_S.
 """
 
 from __future__ import annotations
@@ -13,14 +18,20 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
+from dataclasses import dataclass
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from codex_africanus_spark.queries import registry  # noqa: E402
 from codex_africanus_spark.session import get_spark  # noqa: E402
+from perfbench.probe import Counters  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+RUNS = 3         # timed executions per query after the warm-up
+BUDGET_S = 420   # watchdog budget of one execution
 
 HEADLINE = [
     "predict_vis_point_gauss",
@@ -62,59 +73,78 @@ EXTENDED = [
 ]
 
 
-# The two perennial drift-band queries (r7 verdict #5): both plans are
-# structurally pinned (GP screen: zero exchanges; DDE corrupt:
-# 1 exchange + 9 broadcasts) yet their sub-2s wall times drifted ±2×
-# across rounds on host weather alone. They get one UNTIMED warm-up
-# (whole-stage-codegen JIT + broadcast build) plus min-of-5 so the
-# recorded number compares structure, not scheduler noise.
-DRIFT_PINNED = {
-    "gp_phase_screen_corrupt",
-    "compute_and_corrupt_vis_dde",
-    # r8: joined the same club — a 27-stage build+probe pipeline over
-    # 5 000 rows is pure scheduler constants at sf0.1 (band 1.66-3.7 s
-    # across rounds with a byte-identical plan; the persisted tier
-    # ann_ivf_persisted_topk exists to amortize the build for real
-    # serving). Min-of-5 with an untimed warm-up compares structure.
-    "ann_ivf_topk",
-    # r10: the r9 driver bench read these at +75% / +32%; the idle-host
-    # re-measure with the calibration probe green returned both to their
-    # historical bands (1.05 s / 0.45 s) with byte-locked plans — the
-    # same scheduler-constant class as the three above. Pinned so the
-    # recorded number compares structure, not host weather.
-    "minhash_lsh_near_dup_pairs",
-    "approx_percentile_price",
-    # r13 (r12 verdict item 5): the three biggest apparent r12 bench
-    # "regressions" were adjudicated to host weather by a controlled
-    # same-host A/B (r12 code equal-or-faster on all three, idle
-    # min-of-3). Pinned so the next driver reading self-adjudicates.
-    "faceted_mosaic_predict",
-    "bda_salted_average",
-    "prefix_filter_jaccard_join",
-}
+class Cancelled(RuntimeError):
+    """An execution the watchdog cancelled after BUDGET_S."""
 
 
-def _calibrate(spark) -> float:
+@dataclass
+class Measurement:
+    cold: float                  # wall of the untimed warm-up
+    warm: list[float]            # wall of each timed execution, in order
+    ids: list[tuple[int, int]]   # (next job id, next stage id) before each
+    # execution and after the last: execution i launched the jobs and
+    # stages with ids in [ids[i], ids[i + 1])
+
+    @property
+    def best(self) -> float:
+        return min(self.warm)
+
+
+def noop(df) -> None:
+    """Evaluate every output column of `df` (count() would let Catalyst
+    prune the aggregates) without moving rows to the driver."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def timed(spark, action) -> float:
+    """Wall seconds of one call of `action`, under a watchdog that cancels
+    all of the session's jobs after BUDGET_S, so one pathological plan
+    cannot stall a run; a cancelled call raises `Cancelled`."""
+    cancelled = threading.Event()
+
+    def _kill():
+        cancelled.set()
+        spark.sparkContext.cancelAllJobs()
+
+    watchdog = threading.Timer(BUDGET_S, _kill)
+    watchdog.start()
+    t0 = time.perf_counter()
+    try:
+        action()
+        return time.perf_counter() - t0
+    except Exception as e:
+        if cancelled.is_set():
+            raise Cancelled(f"cancelled>{BUDGET_S}s") from e
+        raise
+    finally:
+        watchdog.cancel()
+
+
+def measure(spark, build, runs: int = RUNS) -> Measurement:
+    """The protocol: noop-execute ``build()`` once as a warm-up, which
+    pays whole-stage-codegen JIT, broadcast builds and Python-worker start
+    and is reported only as `cold`, then `runs` more times (`warm`)."""
+    counters = Counters(spark)
+    ids = [counters.ids()]
+    walls = []
+    for _ in range(runs + 1):
+        walls.append(timed(spark, lambda: noop(build())))
+        ids.append(counters.ids())
+    return Measurement(cold=walls[0], warm=walls[1:], ids=ids)
+
+
+def calibrate(spark) -> float:
     """Host-load calibration probe (r9 verdict item 2): a FIXED pure-JVM
     computation — 400M-row codegen sum over 32 partitions, no I/O, no
     Python — timed min-of-3. Its wall time depends only on host CPU
-    availability, so a reading far above the idle-host constant
-    (~0.20-0.35 s on this 32-thread box) marks the surrounding bench
-    numbers as weather-contaminated. Reported as calib_before_sec /
-    calib_after_sec so every BENCH_rN is interpretable without guessing
-    (the r9 10% regression was unadjudicable for lack of this)."""
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 400_000_000, 1, 32).selectExpr(
-            "sum(id * 2 + 1) AS s"
-        ).collect()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 3)
+    availability, so a reading far above the idle-host constant marks
+    the surrounding bench numbers as weather-contaminated. Reported as
+    calib_before_sec / calib_after_sec."""
+    probe = spark.range(0, 400_000_000, 1, 32).selectExpr("sum(id * 2 + 1) AS s")
+    return round(min(timed(spark, partial(noop, probe)) for _ in range(3)), 3)
 
 
-def _loadavg() -> float:
+def loadavg() -> float:
     try:
         with open("/proc/loadavg") as f:
             return float(f.read().split()[0])
@@ -125,13 +155,10 @@ def _loadavg() -> float:
 def main() -> None:
     spark = get_spark("codex-africanus-spark-bench")
     reg = registry()
-    # warm the JVM + parquet footers with a trivial action
-    spark.read.parquet(os.path.join(SF_DIR, "nation.parquet")).count()
-    load_before = _loadavg()
-    calib_before = _calibrate(spark)
+    load_before = loadavg()
+    calib_before = calibrate(spark)
 
     errors: dict[str, str] = {}
-
     cold: dict[str, float] = {}
 
     def time_set(names: list[str]) -> dict[str, float]:
@@ -139,41 +166,21 @@ def main() -> None:
         for name in names:
             if name not in reg:
                 continue
-            # three runs, report the steady-state (min): the first execution
-            # of a heavy expression pipeline pays one-off whole-stage-codegen
-            # JIT cost that a long-running cluster amortizes away, and
-            # min-of-3 bounds run-to-run load drift well under the 25% target
-            best = None
-            pinned = name in DRIFT_PINNED
             try:
-                if pinned:  # warm-up, untimed for `value` — but its cold
-                    # cost is recorded separately (r13 verdict item 7) so
-                    # pinning does not erase the first-run number entirely
-                    t0 = time.perf_counter()
-                    reg[name].fn(spark, SF_DIR).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    cold[name] = round(time.perf_counter() - t0, 3)
-                for _ in range(5 if pinned else 3):
-                    t0 = time.perf_counter()
-                    df = reg[name].fn(spark, SF_DIR)
-                    # noop sink forces full evaluation of every output column
-                    # (count() alone would let Catalyst prune the aggregates)
-                    df.write.format("noop").mode("overwrite").save()
-                    dt = time.perf_counter() - t0
-                    best = dt if best is None else min(best, dt)
+                m = measure(spark, partial(reg[name].fn, spark, SF_DIR))
             except Exception as e:  # noqa: BLE001 — one broken query must
                 # not zero out the whole round's measurement (round 2 bite)
                 errors[name] = f"{type(e).__name__}: {e}"[:300]
                 print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
                 continue
-            timings[name] = round(best, 3)
+            cold[name] = round(m.cold, 3)
+            timings[name] = round(m.best, 3)
             print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
         return timings
 
     timings = time_set(HEADLINE)
     extended = time_set(EXTENDED)
-    calib_after = _calibrate(spark)
+    calib_after = calibrate(spark)
 
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     result = {
@@ -185,10 +192,9 @@ def main() -> None:
         "extended_value": round(sum(extended.values()), 3),
         "calib_before_sec": calib_before,
         "calib_after_sec": calib_after,
-        "cold_sec": cold,  # first-run (untimed-warm-up) cost of each
-        # DRIFT_PINNED query — additions-only; `value` is unchanged
+        "cold_sec": cold,
         "loadavg_before": load_before,
-        "loadavg_after": _loadavg(),
+        "loadavg_after": loadavg(),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     if errors:

@@ -8,40 +8,34 @@ process on ONE SparkSession, interleaved A,B,A,B so host drift cancels:
 
     git worktree add /tmp/r13head <baseline-ref>
     python tools/ab.py /tmp/r13head q5_region_revenue,rime_compiled_predict \
-        [SF_DIR] [--runs N] [--cpus N] > AB.json
+        [SF_DIR] [--runs N] > AB.json
 
-Per query: one untimed warm-up per tree, then `--runs` (default 3) timed
-noop-sink executions per tree, interleaved; min per tree is reported.
+Per query: one untimed warm-up per tree, then `--runs` (default bench.RUNS)
+timed executions per tree, interleaved, each one `bench.timed` noop-sink
+execution; min per tree is reported. The session's cores come from
+SPARK_GRAFT_CPUS, as for every tool.
 Tree switching purges `codex_africanus_spark` from sys.modules and swaps
 sys.path, then applies that tree's `configure_session` so runtime-settable
 conf changes under test take effect (static confs cannot differ — the
 session is shared by design; measure those with two full bench runs).
 """
+import argparse
 import json
 import os
 import sys
-import time
 
-ARGS = [a for a in sys.argv[1:] if not a.startswith("--")]
-OPTS = {a.split("=")[0]: a.split("=", 1)[1] if "=" in a else True
-        for a in sys.argv[1:] if a.startswith("--")}
-if len(ARGS) < 2:
-    sys.exit(__doc__)
-TREE_A = os.path.abspath(ARGS[0])          # baseline worktree
 TREE_B = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
-QUERIES = ARGS[1].split(",")
-SF_DIR = ARGS[2] if len(ARGS) > 2 else os.environ.get(
-    "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-RUNS = int(OPTS.get("--runs", 3))
-CPUS = str(OPTS.get("--cpus", os.environ.get("SPARK_GRAFT_CPUS", "32")))
+sys.path.insert(0, TREE_B)
+
+from bench import RUNS, SF_DIR, noop, timed  # noqa: E402
 
 
-def load_tree(path: str):
+def load_tree(path: str, trees):
     """Swap the active engine tree: purge modules, re-point sys.path."""
     for m in list(sys.modules):
         if m.split(".")[0] == "codex_africanus_spark":
             del sys.modules[m]
-    sys.path[:] = [p for p in sys.path if p not in (TREE_A, TREE_B)]
+    sys.path[:] = [p for p in sys.path if p not in trees]
     sys.path.insert(0, path)
     from codex_africanus_spark.queries import registry
     from codex_africanus_spark.session import configure_session
@@ -49,34 +43,35 @@ def load_tree(path: str):
 
 
 def main() -> None:
-    # session from tree B (HEAD); runtime confs re-applied per tree below
-    sys.path.insert(0, TREE_B)
-    from codex_africanus_spark.session import get_spark
-    spark = get_spark("ab-harness", cpus=CPUS)
-    spark.read.parquet(os.path.join(SF_DIR, "nation.parquet")).count()
+    ap = argparse.ArgumentParser(
+        usage="python tools/ab.py TREE_A q1,q2,... [SF_DIR] [--runs N]",
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("tree_a", help="baseline worktree")
+    ap.add_argument("queries", help="comma-separated registry names")
+    ap.add_argument("sf_dir", nargs="?", default=SF_DIR)
+    ap.add_argument("--runs", type=int, default=RUNS)
+    args = ap.parse_args()
+    trees = {"a": os.path.abspath(args.tree_a), "b": TREE_B}
 
-    trees = {"a": TREE_A, "b": TREE_B}
-    out = {"sf_dir": SF_DIR, "runs": RUNS, "cpus": CPUS,
-           "tree_a": TREE_A, "tree_b": TREE_B, "queries": {}}
-    for name in QUERIES:
+    # session from tree B (HEAD); runtime confs re-applied per tree below
+    from codex_africanus_spark.session import DEFAULT_CPUS, get_spark
+    spark = get_spark("ab-harness")
+
+    out = {"sf_dir": args.sf_dir, "runs": args.runs, "cpus": DEFAULT_CPUS,
+           "tree_a": trees["a"], "tree_b": trees["b"], "queries": {}}
+    for name in args.queries.split(","):
         best: dict[str, float] = {}
-        # warm-up once per tree (JIT, broadcast build, Python workers)
-        for key, path in trees.items():
-            reg, conf = load_tree(path)
+
+        def once(key):
+            reg, conf = load_tree(trees[key], trees.values())
             conf(spark)
-            spark.sparkContext.setJobDescription(f"ab-warm-{key}: {name}")
-            reg[name].fn(spark, SF_DIR).write.format("noop").mode(
-                "overwrite").save()
-        for r in range(RUNS):
-            for key, path in trees.items():
-                reg, conf = load_tree(path)
-                conf(spark)
-                spark.sparkContext.setJobDescription(f"ab-{key}{r}: {name}")
-                t0 = time.perf_counter()
-                reg[name].fn(spark, SF_DIR).write.format("noop").mode(
-                    "overwrite").save()
-                dt = time.perf_counter() - t0
-                best[key] = min(best.get(key, 1e9), dt)
+            return timed(spark, lambda: noop(reg[name].fn(spark, args.sf_dir)))
+
+        for r in range(args.runs + 1):  # r == 0: warm-up, once per tree
+            for key in trees:
+                wall = once(key)
+                if r:
+                    best[key] = min(best.get(key, wall), wall)
         rec = {"a_sec": round(best["a"], 3), "b_sec": round(best["b"], 3),
                "speedup_b_over_a": round(best["a"] / best["b"], 3)}
         out["queries"][name] = rec

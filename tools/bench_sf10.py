@@ -5,10 +5,11 @@ each query's DuckDB oracle twin in a KILLABLE subprocess with a
 timeout, so a twin that cannot finish at this scale is recorded as
 such instead of hanging the bench.
 
-Spark side: noop sink (full evaluation, nothing crosses the driver),
-min-of-2, per-query watchdog that cancels all jobs after BUDGET_S so
-one pathological plan cannot stall the run. The bench.py calibration
-probe brackets the run for weather adjudication.
+Spark side: bench.py's protocol (`bench.measure`) with one timed run
+after the warm-up, so two executions per query fit the sf10 wall
+budget; each execution's watchdog cancels all jobs after
+bench.BUDGET_S. The bench.py calibration probe brackets the run for
+weather adjudication.
 
 Usage: python tools/bench_sf10.py [SF_DIR] [only1,only2,...] > BENCH_sf10.json
        (the optional second arg restricts the run to a subset of WORK —
@@ -22,18 +23,17 @@ import os
 import re
 import subprocess
 import sys
-import threading
-import time
+from functools import partial
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
+from bench import Cancelled, calibrate, loadavg, measure  # noqa: E402
 from codex_africanus_spark.queries import registry  # noqa: E402
 from codex_africanus_spark.session import get_spark  # noqa: E402
 
 ARGS = [a for a in sys.argv[1:] if a != "--no-twins"]
 RUN_TWINS = "--no-twins" not in sys.argv
 SF_DIR = ARGS[0] if len(ARGS) > 0 else "/tmp/sf10"
-BUDGET_S = 420          # per-query Spark watchdog
 TWIN_TIMEOUT_S = 420    # per-oracle DuckDB subprocess timeout
 
 WORK = [
@@ -66,22 +66,6 @@ WORK = [
 if len(ARGS) > 1:
     only = set(ARGS[1].split(","))
     WORK = [w for w in WORK if w in only]
-
-
-def _calibrate(spark) -> float:
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 400_000_000, 1, 32).selectExpr(
-            "sum(id * 2 + 1) AS s"
-        ).collect()
-        best = min(best or 1e9, time.perf_counter() - t0)
-    return round(best, 3)
-
-
-def _loadavg() -> float:
-    with open("/proc/loadavg") as f:
-        return float(f.read().split()[0])
 
 
 _TWIN_PROG = r"""
@@ -135,46 +119,26 @@ def time_twin(sql: str) -> tuple:
 def main() -> None:
     spark = get_spark("codex-africanus-spark-bench-sf10")
     reg = registry()
-    spark.read.parquet(os.path.join(SF_DIR, "nation.parquet")).count()
     out = {
         "metric": "sf10_work_dominated_wall_time",
         "unit": "sec",
         "sf": 10.0,
-        "loadavg_before": _loadavg(),
-        "calib_before_sec": _calibrate(spark),
+        "loadavg_before": loadavg(),
+        "calib_before_sec": calibrate(spark),
         "queries": {},
         "twins": {},
     }
     for name in WORK:
-        best = None
-        err = None
-        for _ in range(2):
-            cancelled = threading.Event()
-
-            def _kill():
-                cancelled.set()
-                spark.sparkContext.cancelAllJobs()
-
-            watchdog = threading.Timer(BUDGET_S, _kill)
-            watchdog.start()
-            t0 = time.perf_counter()
-            try:
-                df = reg[name].fn(spark, SF_DIR)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            except Exception as e:  # noqa: BLE001
-                err = (
-                    f"cancelled>{BUDGET_S}s" if cancelled.is_set()
-                    else f"{type(e).__name__}: {e}"[:200]
-                )
-                break
-            finally:
-                watchdog.cancel()
-        out["queries"][name] = round(best, 3) if best is not None else err
+        try:
+            m = measure(spark, partial(reg[name].fn, spark, SF_DIR), runs=1)
+            out["queries"][name] = round(m.best, 3)
+        except Cancelled as e:
+            out["queries"][name] = str(e)
+        except Exception as e:  # noqa: BLE001
+            out["queries"][name] = f"{type(e).__name__}: {e}"[:200]
         print(f"# {name}: {out['queries'][name]}", file=sys.stderr, flush=True)
-    out["calib_after_sec"] = _calibrate(spark)
-    out["loadavg_after"] = _loadavg()
+    out["calib_after_sec"] = calibrate(spark)
+    out["loadavg_after"] = loadavg()
     spark.stop()
     # give DuckDB its best shot where a faster equivalent replay exists
     # (BASELINE.md r10 protocol: the salted-BDA timed twin is the

@@ -15,15 +15,18 @@ number to move. This tool times the three twin families end-to-end:
                    streaming_window_drop — the events_watermark_window_drop
                    twin), one trigger per arrival batch.
 
-Methodology mirrors bench.py: min-of-RUNS wall per twin, fresh
-checkpoint/output dirs per run (a reused checkpoint would replay markers
-and time nothing), ONE JSON line on stdout:
+Each twin is measured with bench.py's protocol (`bench.measure`: one
+warm-up, then bench.RUNS timed executions, min reported). Every
+execution drives all BATCHES micro-batches, handed to Spark through
+`sources.tables.local_frame` like the engine's own driver-held frames,
+and noop-writes the twin's final output; the watermark twin stages into
+fresh source/checkpoint dirs per execution (a reused checkpoint would
+replay markers and time nothing). ONE JSON line on stdout:
   {"metric": "streaming_twin_wall_time", "value": total,
-   "queries": {name: sec}, "sf": ..., "batches": N}
+   "queries": {name: sec}, "sf": ..., "batches": N, "runs": N}
 
-Usage: python tools/bench_streaming.py [SF_DIR] [--runs=N] [--batches=N]
-Baseline (this box, idle, 2026-08-18, sf0.1, 32 cores, runs=2,
-batches=6): see OPTIMIZATION_r14.md "streaming twins" entry.
+Usage: python tools/bench_streaming.py [SF_DIR]
+Baseline: ROADMAP.md "Streaming CDC carry handoff".
 """
 
 import json
@@ -31,26 +34,24 @@ import os
 import shutil
 import sys
 import tempfile
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from codex_africanus_spark.session import get_spark  # noqa: E402
 from codex_africanus_spark.sources import snapshot as snap  # noqa: E402
+from codex_africanus_spark.sources.tables import local_frame  # noqa: E402
 from codex_africanus_spark.sources import tpch_ms  # noqa: E402
 from codex_africanus_spark.streaming import cdc as scdc  # noqa: E402
 from codex_africanus_spark.streaming import gapfill as sgap  # noqa: E402
 from codex_africanus_spark.streaming import windowed  # noqa: E402
 
-ARGS = [a for a in sys.argv[1:] if not a.startswith("--")]
-OPTS = {a.split("=")[0]: a.split("=", 1)[1] for a in sys.argv[1:] if "=" in a}
-SF_DIR = ARGS[0] if ARGS else os.environ.get(
-    "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-RUNS = int(OPTS.get("--runs", 2))
-BATCHES = int(OPTS.get("--batches", 6))
+SF_DIR = sys.argv[1] if len(sys.argv) > 1 else bench.SF_DIR
+BATCHES = 6  # micro-batches per drive
 
 EV_SCHEMA = (
     "event_id long, ts_us long, user_id long, event_type string, value double"
@@ -74,60 +75,25 @@ def _build_dim(spark, ev, root):
         snap.commit(d, root, mode="append")
 
 
-def _drive_cdc(spark, ev_pdf, root):
-    carry = scdc.empty_carry(spark)
-    summary = None
+def _drive(spark, ev_pdf, increment, carry):
+    """Feed the events to `increment` in BATCHES micro-batches; return
+    the last batch's summary."""
     for chunk in np.array_split(ev_pdf, BATCHES):
-        if len(chunk) == 0:
-            continue
-        batch = spark.createDataFrame(chunk.reset_index(drop=True), EV_SCHEMA)
-        summary, carry = scdc.cdc_dim_increment(batch, carry, root)
-    summary.write.format("noop").mode("overwrite").save()
-
-
-def _drive_gapfill(spark, ev_pdf):
-    carry = sgap.empty_carry(spark)
-    summary = None
-    for chunk in np.array_split(ev_pdf, BATCHES):
-        if len(chunk) == 0:
-            continue
-        batch = spark.createDataFrame(chunk.reset_index(drop=True), EV_SCHEMA)
-        summary, carry = sgap.gap_fill_increment(batch, carry)
-    summary.write.format("noop").mode("overwrite").save()
+        summary, carry = increment(local_frame(spark, chunk, EV_SCHEMA), carry)
+    return summary
 
 
 def main() -> None:
     spark = get_spark("codex-africanus-spark-bench-streaming")
-    spark.sparkContext.setLogLevel("WARN")
     ev = tpch_ms.events_table(spark, SF_DIR)
     # one driver-side event frame reused by the increment drives (the
     # micro-batch splitter needs a stable row order; inside the timed
-    # region each run re-creates every batch DataFrame from it)
+    # region each execution re-creates every batch DataFrame from it)
     ev_pdf = ev.toPandas().sort_values("event_id").reset_index(drop=True)
     work = tempfile.mkdtemp(prefix="bench_streaming_")
-    timings: dict[str, float] = {}
 
-    def timed(name, fn):
-        spark.sparkContext.setJobDescription(f"bench_streaming: {name}")
-        best = None
-        for r in range(RUNS):
-            t0 = time.perf_counter()
-            fn(r)
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
-        print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr, flush=True)
-
-    # cdc: dim committed once (fixture, untimed — the twin consumes a
-    # pre-existing dim table); each timed run drives all N batches
-    dim_root = os.path.join(work, "dim")
-    _build_dim(spark, ev, dim_root)
-    timed("cdc_increment", lambda r: _drive_cdc(spark, ev_pdf, dim_root))
-    timed("gapfill_increment", lambda r: _drive_gapfill(spark, ev_pdf))
-
-    def run_wm(r):
-        src = os.path.join(work, f"wm_src_{r}")
-        ck = os.path.join(work, f"wm_ck_{r}")
+    def _drive_wm():
+        src, ck = tempfile.mkdtemp(dir=work), tempfile.mkdtemp(dir=work)
         windowed.stage_arrival_batches(
             ev, src,
             jitter_us=1_800_000_000, batch_us=3_600_000_000 * 24 * 14,
@@ -135,11 +101,26 @@ def main() -> None:
         got, _dropped = windowed.streaming_window_drop(
             spark, src, ck,
             delay_us=7_200_000_000, hour_us=3_600_000_000 * 24,
-            name=f"bench_wm_{r}",
+            name="bench_wm",
         )
-        got.write.format("noop").mode("overwrite").save()
+        return got
 
-    timed("watermark_window_drop", run_wm)
+    # cdc: dim committed once (fixture, untimed — the twin consumes a
+    # pre-existing dim table); each execution drives all BATCHES batches
+    dim_root = os.path.join(work, "dim")
+    _build_dim(spark, ev, dim_root)
+    twins = {
+        "cdc_increment": lambda: _drive(
+            spark, ev_pdf, partial(scdc.cdc_dim_increment, root=dim_root),
+            scdc.empty_carry(spark)),
+        "gapfill_increment": lambda: _drive(
+            spark, ev_pdf, sgap.gap_fill_increment, sgap.empty_carry(spark)),
+        "watermark_window_drop": _drive_wm,
+    }
+    timings: dict[str, float] = {}
+    for name, build in twins.items():
+        timings[name] = round(bench.measure(spark, build).best, 3)
+        print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr, flush=True)
 
     print(json.dumps({
         "metric": "streaming_twin_wall_time",
@@ -147,7 +128,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "batches": BATCHES,
-        "runs": RUNS,
+        "runs": bench.RUNS,
         "sf": SF_DIR.rstrip("/").split("sf")[-1],
     }))
     shutil.rmtree(work, ignore_errors=True)

@@ -1,7 +1,8 @@
 """Persisted-bucketed layout benchmark: pay the shuffle once, amortize it.
 
-Writes bucketed twins of lineitem/orders (bucketBy join key), then times
-the orders⋈lineitem aggregate both ways:
+Writes bucketed twins of lineitem/orders (bucketBy join key) into a
+temporary database, then measures the orders⋈lineitem aggregate both
+ways with bench.py's protocol (`bench.measure`), broadcast joins off:
 
   plain    — parquet scan → Exchange both sides → SortMergeJoin
   bucketed — bucketed scan → SortMergeJoin (zero Exchange below the join)
@@ -17,13 +18,19 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import sys
 import tempfile
-import time
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from bench import measure, timed  # noqa: E402
+from codex_africanus_spark.session import get_spark  # noqa: E402
+
+DB = "cas_bucketed_bench"
 
 
 def _agg(li, orders):
@@ -42,16 +49,11 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
     n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 32
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     warehouse = tempfile.mkdtemp(prefix="cas_bucketed_")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.warehouse.dir", warehouse)
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("bucketed-bench")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.sql(f"DROP DATABASE IF EXISTS {DB} CASCADE")
+    spark.sql(f"CREATE DATABASE {DB} LOCATION '{warehouse}'")
     try:
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
             "l_orderkey", "l_quantity"
@@ -60,35 +62,24 @@ def main() -> None:
             "o_orderkey", "o_orderdate"
         )
 
-        t0 = time.perf_counter()
-        (
-            li.write.bucketBy(n_buckets, "l_orderkey").sortBy("l_orderkey")
-            .mode("overwrite").saveAsTable("li_b")
-        )
-        (
-            orders.write.bucketBy(n_buckets, "o_orderkey").sortBy("o_orderkey")
-            .mode("overwrite").saveAsTable("o_b")
-        )
-        layout_s = time.perf_counter() - t0
+        def layout():
+            for df, key, table in ((li, "l_orderkey", "li_b"),
+                                   (orders, "o_orderkey", "o_b")):
+                (
+                    df.write.bucketBy(n_buckets, key).sortBy(key)
+                    .mode("overwrite").saveAsTable(f"{DB}.{table}")
+                )
 
-        def best_of(df_fn, n=3):
-            best = None
-            for _ in range(n):
-                t = time.perf_counter()
-                df_fn().collect()
-                dt = time.perf_counter() - t
-                best = dt if best is None else min(best, dt)
-            return best
+        def bucketed_agg():
+            return _agg(spark.table(f"{DB}.li_b"), spark.table(f"{DB}.o_b"))
 
-        plain = best_of(lambda: _agg(li, orders))
-        bucketed = best_of(
-            lambda: _agg(spark.table("li_b"), spark.table("o_b"))
-        )
-        plan = (
-            _agg(spark.table("li_b"), spark.table("o_b"))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        join_free = "Exchange" not in plan.split("SortMergeJoin")[-1]
+        layout_s = timed(spark, layout)
+        plain = measure(spark, lambda: _agg(li, orders)).best
+        bucketed = measure(spark, bucketed_agg).best
+        plan = bucketed_agg()._jdf.queryExecution().executedPlan().toString()
+        # the session may plan a shuffled-hash join; both keep bucketing
+        join_part = re.split("SortMergeJoin|ShuffledHashJoin", plan)[-1]
+        join_free = "Exchange" not in join_part
         print(json.dumps({
             "metric": "bucketed_join_speedup",
             "plain_join_sec": round(plain, 3),
@@ -102,8 +93,7 @@ def main() -> None:
             "sf_dir": sf_dir,
         }))
     finally:
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS o_b")
+        spark.sql(f"DROP DATABASE IF EXISTS {DB} CASCADE")
         shutil.rmtree(warehouse, ignore_errors=True)
 
 
