@@ -5,5 +5,3 @@ import math
 LIGHTSPEED = 2.99792458e8  # m/s
 TWO_PI_OVER_C = 2.0 * math.pi / LIGHTSPEED
 MINUS_TWO_PI_OVER_C = -TWO_PI_OVER_C
-ARCSEC2RAD = math.pi / (180.0 * 3600.0)
-DEG2RAD = math.pi / 180.0

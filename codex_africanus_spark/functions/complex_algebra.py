@@ -75,19 +75,8 @@ def clit(re: float, im: float = 0.0) -> Cplx:
     return Cplx(F.lit(float(re)), F.lit(float(im)))
 
 
-def from_struct(col: Column) -> Cplx:
-    return Cplx(col["re"], col["im"])
-
-
 def cexp_i(theta: Column) -> Cplx:
     """e^{i·theta} = (cos θ, sin θ) — the phase-factor primitive
     (reference computes this per (source,row,chan):
     /root/reference/africanus/rime/phase.py:36-59)."""
     return Cplx(F.cos(theta), F.sin(theta))
-
-
-def csum(z: Cplx) -> Cplx:
-    """Aggregate sum of a complex column pair (partial+final hash agg —
-    Spark's map-side combine replaces the reference's LinearReduction /
-    parallel_reduction strategies, dask_predict.py:64-369)."""
-    return Cplx(F.sum(z.re), F.sum(z.im))

@@ -17,7 +17,6 @@ addend, which dominates float roundoff anyway at these scales.
 
 from __future__ import annotations
 
-import pandas
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -43,10 +42,6 @@ def qsum(col: Column, scale: float = 1e6) -> Column:
     return F.sum(quantize(col, scale))
 
 
-def qsum_double(col: Column, scale: float = 1e6) -> Column:
-    return (qsum(col, scale) / F.lit(scale)).cast("double")
-
-
 def qsum_wide(col: Column, scale: float = 1e6) -> Column:
     """qsum with a DECIMAL(38,0) accumulator (r11): for fine grids x
     fact cardinality where the BIGINT sum overflows under ANSI mode
@@ -55,40 +50,3 @@ def qsum_wide(col: Column, scale: float = 1e6) -> Column:
     engines then convert the same exact integer to its nearest double
     when the post-agg division recovers the value."""
     return F.sum(quantize(col, scale).cast("decimal(38,0)"))
-
-
-def fsum_udaf():
-    """Exactly-rounded float sum as a grouped-agg pandas UDF — the
-    unbounded-dynamic-range alternative to qsum (ROADMAP quality item).
-
-    The reference uses ordered Kahan folds for reproducibility
-    (fused/core.py:97-118); Kahan still depends on order. math.fsum is
-    Shewchuk's exact accumulation: the result is the correctly-rounded
-    true sum, hence order-independent and partitioning-independent by
-    *exactness*, with no quantization grid and no n·B·s < 2^63 bound.
-
-    Cost: the whole group ships to one task (grouped-agg UDFs have no
-    partial aggregation). For skewed/huge groups compose with
-    skew.salted_sum-style two-level keys — each level stays exactly
-    rounded, so the composition is deterministic to 1 ulp per level."""
-    @F.pandas_udf("double")
-    def fsum(v: pandas.Series) -> float:
-        # self-contained closure (executors cannot import this package)
-        import math
-
-        return math.fsum(v.dropna())
-
-    return fsum
-
-
-def qsum_sql(expr: str, scale: float = 1e6) -> str:
-    """The DuckDB/ANSI mirror of qsum(), for oracle parity.
-
-    The outer CAST matters: DuckDB types SUM(BIGINT) as HUGEINT (int128),
-    which its client fetches as float64 — diverging from Spark's int64
-    under a type-sensitive value hash even when every value is equal."""
-    return f"CAST(SUM(CAST(ROUND(({expr}) * {scale:.0f}) AS BIGINT)) AS BIGINT)"
-
-
-def qsum_double_sql(expr: str, scale: float = 1e6) -> str:
-    return f"(SUM(CAST(ROUND(({expr}) * {scale:.0f}) AS BIGINT)) / {scale:.0f})"

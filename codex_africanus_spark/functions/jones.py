@@ -18,8 +18,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import functions as F
-
 from codex_africanus_spark.functions.complex_algebra import Cplx, clit
 
 

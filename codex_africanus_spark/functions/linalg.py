@@ -1,13 +1,10 @@
-"""Kronecker-structured linear algebra and bounding geometry — driver-side
-utilities.
+"""Kronecker-structured linear algebra — driver-side utilities.
 
 Parity with /root/reference/africanus/linalg/kronecker_tools.py:29-180
-(kron_matvec/kron_tensorvec/kron_matmat/kron_cholesky) and the facet
-bounding geometry of /root/reference/africanus/linalg/geometry.py. These
-operate on *small* per-problem matrices (GP hyperkernels, facet masks),
-so they run on the driver (SURVEY §2.8 disposition: "driver-side NumPy;
-not distributed") — their Spark role is producing partition predicates
-(facet pruning) and broadcast operands.
+(kron_matvec/kron_tensorvec/kron_matmat/kron_cholesky). These operate on
+*small* per-problem matrices (GP hyperkernels), so they run on the
+driver (SURVEY §2.8 disposition: "driver-side NumPy; not distributed")
+— their Spark role is producing broadcast operands.
 """
 
 from __future__ import annotations
@@ -37,37 +34,3 @@ def kron_matmat(As: list[np.ndarray], X: np.ndarray) -> np.ndarray:
 def kron_cholesky(As: list[np.ndarray]) -> list[np.ndarray]:
     """Cholesky of a Kronecker product = Kronecker of the Choleskys."""
     return [np.linalg.cholesky(a) for a in As]
-
-
-def bounding_box(points: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Axis-aligned bounding box (geometry.py facet masks) → the min/max
-    corners usable as partition-pruning predicates."""
-    return points.min(axis=0), points.max(axis=0)
-
-
-def convex_hull_mask(points: np.ndarray, queries: np.ndarray) -> np.ndarray:
-    """Point-in-convex-hull test via half-plane checks of the 2-D hull
-    (gift-wrapping; geometry.py builds the same masks with scipy)."""
-    pts = np.unique(points, axis=0)
-    if len(pts) < 3:
-        lo, hi = bounding_box(pts)
-        return np.all((queries >= lo) & (queries <= hi), axis=1)
-    # Andrew's monotone chain
-    pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
-
-    def half(points_iter):
-        out = []
-        for p in points_iter:
-            while len(out) >= 2 and np.cross(out[-1] - out[-2], p - out[-2]) <= 0:
-                out.pop()
-            out.append(p)
-        return out
-
-    hull = half(pts) [:-1] + half(pts[::-1])[:-1]
-    hull = np.array(hull)
-    inside = np.ones(len(queries), dtype=bool)
-    n = len(hull)
-    for i in range(n):
-        a, b = hull[i], hull[(i + 1) % n]
-        inside &= np.cross(b - a, queries - a) >= -1e-12
-    return inside

@@ -15,8 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from codex_africanus_spark.constants import LIGHTSPEED, MINUS_TWO_PI_OVER_C, TWO_PI_OVER_C
-from codex_africanus_spark.functions.complex_algebra import Cplx, cexp_i
+from codex_africanus_spark.constants import MINUS_TWO_PI_OVER_C, TWO_PI_OVER_C
 
 
 def phase_path(u: Column, v: Column, w: Column, l: Column, m: Column, n: Column) -> Column:
@@ -34,25 +33,3 @@ def phase_delay_angle(
     else:
         raise ValueError(f"convention must be 'fourier' or 'casa', got {convention!r}")
     return F.lit(const) * path * frequency
-
-
-def phase_delay(
-    u: Column,
-    v: Column,
-    w: Column,
-    l: Column,
-    m: Column,
-    n: Column,
-    frequency: Column,
-    convention: str = "fourier",
-) -> Cplx:
-    return cexp_i(phase_delay_angle(phase_path(u, v, w, l, m, n), frequency, convention))
-
-
-# SQL mirrors --------------------------------------------------------------
-
-def phase_angle_sql(u: str, v: str, w: str, l: str, m: str, n: str, freq: str,
-                    convention: str = "fourier") -> str:
-    sign = "-" if convention == "fourier" else ""
-    c = repr(2.0 * 3.141592653589793 / LIGHTSPEED)
-    return f"({sign}{c} * (({u})*({l}) + ({v})*({m}) + ({w})*(({n}) - 1.0)) * ({freq}))"

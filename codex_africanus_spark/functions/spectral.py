@@ -53,7 +53,3 @@ def wsclean_spectra(
         lterm = lterm * logx
         logarithmic = logarithmic + c * lterm
     return F.when(log_poly, F.exp(logarithmic)).otherwise(ordinary)
-
-
-def spectral_model_sql(flux: str, spi: str, ref_freq: str, freq: str) -> str:
-    return f"(({flux}) * pow(({freq}) / ({ref_freq}), ({spi})))"

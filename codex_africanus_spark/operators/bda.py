@@ -29,8 +29,6 @@ these SFs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -430,7 +428,6 @@ BDA_DECORRELATION = 0.98
 BDA_MAX_FOV_DEG = 0.05  # synthetic uvw units — keeps bins multi-row
 BDA_MAX_LM = 0.0008726646259971648  # radians(BDA_MAX_FOV_DEG)
 BDA_N_MAX = 3.8077184716378554e-07  # |sqrt(1 - max_lm^2) - 1|
-BDA_MAX_CHAN_FREQ = 856000000.0 * 1.875  # top of the 8-chan synthetic band
 # K = max_chan_freq * sin(max_lm) * pi / c  (bda_mapping.py:152-158)
 BDA_SINC_K = 0.014677480880217962
 BDA_SINC_GRID = 1e9

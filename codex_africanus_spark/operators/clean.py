@@ -17,20 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from codex_africanus_spark.sources.tables import local_frame
 
 
-def psf_fit_gaussian(psf: np.ndarray) -> tuple[float, float, float]:
-    """Fit (amplitude, σ_u, σ_v) of a separable Gaussian to the PSF peak
-    neighbourhood via second moments (reference deconv/hogbom/clean.py:40-72
-    fits the clean-beam parameters the same way before restore)."""
-    psf = np.asarray(psf, dtype=np.float64)
-    peak = np.unravel_index(np.abs(psf).argmax(), psf.shape)
-    amp = float(psf[peak])
-    iu, iv = np.indices(psf.shape)
-    w = np.abs(psf) / np.abs(psf).sum()
-    su = float(np.sqrt((w * (iu - peak[0]) ** 2).sum()) + 1e-12)
-    sv = float(np.sqrt((w * (iv - peak[1]) ** 2).sum()) + 1e-12)
-    return amp, su, sv
-
-
 def restore(
     components: pd.DataFrame,
     shape: tuple[int, int],

@@ -147,8 +147,8 @@ def minhash_signatures(docs: DataFrame, keep: tuple = ()) -> DataFrame:
     whole thing rides the scan. (The earlier explode + groupBy form paid
     a doc-cardinality shuffle for what is row-local arithmetic.)
 
-    `keep` passes extra columns through the projection (e.g. the event
-    time for the streaming candidate gate) without a re-join.
+    `keep` passes extra columns through the projection without a
+    re-join.
 
     r14 (guide §4.2): the hot form is an Arrow `mapInPandas` kernel —
     md5-shingling in C-speed Python (see _shingle_frame) and the k=8
@@ -937,15 +937,13 @@ INGEST_HORIZON_DOCS = 60  # ingest-order horizon (docs arrive 1/minute)
 
 def lsh_candidates_horizon(docs: DataFrame) -> DataFrame:
     """Near-dup candidate pairs restricted to documents ingested within
-    the dedup horizon of each other — the batch/backfill surface of the
-    streaming LSH gate (streaming/lsh.py), with ingest order derived
-    from doc_id (the synthetic corpus ingests one doc per minute, so a
-    1-hour horizon is |doc_a − doc_b| ≤ 60).
+    the dedup horizon of each other, with ingest order derived from
+    doc_id (the synthetic corpus ingests one doc per minute, so a 1-hour
+    horizon is |doc_a − doc_b| ≤ 60).
 
     Plan: the shared _pairs_from_banded candidate join with the horizon
     predicate (Catalyst folds the filter into the join condition) — at
-    scale the horizon prunes the candidate set exactly like the stream's
-    state-store eviction bounds it."""
+    scale the horizon bounds the candidate set."""
     return _pairs_from_banded(lsh_banded(docs), with_sig_match=False).filter(
         F.col("doc_b") - F.col("doc_a") <= INGEST_HORIZON_DOCS
     )
@@ -2243,9 +2241,8 @@ PARA_SIG_MIN = 6  # ≥6/8 signature agreement = near-dup unit
 
 def para_units(docs: DataFrame, keep: tuple = ()) -> DataFrame:
     """Sentence-grain units with packed uid — the ONE place the
-    paragraph split/radix lives, shared by the batch dedup and the r11
-    streaming gate (parity by construction). Projection-only, so it is
-    stream-safe; `keep` threads extra columns (source / event time)."""
+    paragraph split/radix lives. Projection-only; `keep` threads extra
+    columns (source)."""
     from codex_africanus_spark.sources.tables import fan_out
 
     return (
@@ -2266,8 +2263,7 @@ def para_units(docs: DataFrame, keep: tuple = ()) -> DataFrame:
 
 
 def para_banded_from_units(units: DataFrame, keep: tuple = ()) -> DataFrame:
-    """Band-keyed MinHash frame of paragraph units (shared expressions:
-    batch dedup + streaming gate). Pure projections — stream-safe."""
+    """Band-keyed MinHash frame of paragraph units. Pure projections."""
     hashed = units.select(
         "uid", "doc_id", *keep,
         F.transform(word_3gram_shingles("ptext"), hash31).alias("hs"),
@@ -2289,17 +2285,6 @@ def para_banded_from_units(units: DataFrame, keep: tuple = ()) -> DataFrame:
         "uid", "doc_id", *keep,
         *[F.col(f"sig_{k}") for k in range(len(MINHASH_A))],
         F.posexplode(band_keys).alias("band", "band_key"),
-    )
-
-
-PARA_N_SIGS = len(MINHASH_A)
-
-
-def para_sig_agreement():
-    """#agreeing signatures between an a_k / b_k pair projection."""
-    return sum(
-        (F.col(f"a_{k}") == F.col(f"b_{k}")).cast("int")
-        for k in range(PARA_N_SIGS)
     )
 
 

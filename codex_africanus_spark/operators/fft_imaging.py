@@ -69,45 +69,6 @@ def dirty_image(
     return img, wsum
 
 
-def dirty_image_bands(
-    vis: DataFrame,
-    nx: int = 64,
-    ny: int = 64,
-    cell: float = 10.0,
-    chan_per_band: int = 2,
-) -> dict[int, tuple[np.ndarray, float]]:
-    """Per-frequency-band dirty images — the reference's band loop
-    (vis2im.py:46-76: one gridding+FFT per band, partial images summed
-    per band). One distributed pass groups on (band, cell); the driver
-    FFTs each band's small grid. Returns {band: (image, wsum)}."""
-    ucell = F.pmod(F.round(F.col("u") / F.lit(cell)).cast("long"), F.lit(nx))
-    vcell = F.pmod(F.round(F.col("v") / F.lit(cell)).cast("long"), F.lit(ny))
-    band = F.expr(f"chan DIV {chan_per_band}").alias("band")
-    gated = vis.filter(~(F.col("flag") | F.col("flag_row")))
-    rows = (
-        gated.groupBy(band, ucell.alias("u_cell"), vcell.alias("v_cell"))
-        .agg(
-            qsum(F.col("vis_re") * F.col("weight"), GRID_SCALE).alias("g_re_q"),
-            qsum(F.col("vis_im") * F.col("weight"), GRID_SCALE).alias("g_im_q"),
-            qsum(F.col("weight"), GRID_SCALE).alias("w_q"),
-        )
-        .collect()
-    )
-    grids: dict[int, np.ndarray] = {}
-    wsums: dict[int, float] = {}
-    for r in rows:
-        g = grids.setdefault(int(r.band), np.zeros((ny, nx), dtype=np.complex128))
-        g[int(r.v_cell), int(r.u_cell)] += (r.g_re_q + 1j * r.g_im_q) / GRID_SCALE
-        wsums[int(r.band)] = wsums.get(int(r.band), 0.0) + r.w_q / GRID_SCALE
-    out = {}
-    for b, g in grids.items():
-        img = np.fft.ifft2(g).real * (nx * ny)
-        if wsums[b] > 0:
-            img /= wsums[b]
-        out[b] = (img, wsums[b])
-    return out
-
-
 def accumulate_grid_wstack(
     vis: DataFrame,
     nx: int = 64,
@@ -297,24 +258,3 @@ def residual_image(
     ny, nx = image.shape
     rows = residual_grid(vis, image, cell).collect()
     return _ifft_collect(rows, ny, nx, "r_re_q", "r_im_q")
-
-
-def hessian_image(
-    vis: DataFrame, image: np.ndarray, cell: float = 10.0
-) -> tuple[np.ndarray, float]:
-    """convolvedim = ms2dirty(dirty2ms(image)) (hessian.py:36-110): the
-    PSF-convolution normal operator applied to an image — vis
-    contributes only its uv-coverage and weights."""
-    ny, nx = image.shape
-    mv = model_vis_from_image(vis, image, cell)
-    gated = mv.filter(~(F.col("flag") | F.col("flag_row")))
-    rows = (
-        gated.groupBy("u_cell", "v_cell")
-        .agg(
-            qsum(F.col("m_re") * F.col("weight"), GRID_SCALE).alias("h_re_q"),
-            qsum(F.col("m_im") * F.col("weight"), GRID_SCALE).alias("h_im_q"),
-            qsum(F.col("weight"), GRID_SCALE).alias("w_q"),
-        )
-        .collect()
-    )
-    return _ifft_collect(rows, ny, nx, "h_re_q", "h_im_q")

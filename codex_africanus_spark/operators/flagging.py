@@ -94,8 +94,7 @@ def _cells(vis: DataFrame) -> DataFrame:
 def sumthreshold_cell_flags(vis: DataFrame) -> DataFrame:
     """Per-cell SumThreshold decisions — the shared kernel: one row per
     (baseline, chan, time) cell with the tier flags (f1/f2/f4/fany).
-    ``sumthreshold_flags`` aggregates this frame; the streaming twin
-    (streaming/flagging.py) must reproduce it bit-for-bit."""
+    ``sumthreshold_flags`` aggregates this frame."""
     th = st_thresholds()
     cells = _cells(vis)
     w = W.partitionBy("antenna1", "antenna2", "chan").orderBy("time")

@@ -1,9 +1,8 @@
 """Convolution-kernel tap library for the footprint gridder — the
 anti-aliasing window functions of the reference's
 gridding/perleypolyhedron/kernels.py (uspace :16-33, sinc :36-42,
-kbsinc :52-66, hanningsinc :74-83, pack/unpack :86-115, detaper
-:118-164), NumPy-only (the Bessel J_n falls back to quadrature since
-scipy is absent here).
+kbsinc :52-66), NumPy-only (the Bessel J_n falls back to quadrature
+since scipy is absent here).
 
 Driver-side by design: a kernel is O(oversample·(W+2)) floats — it never
 ships as data, only as generated Column literals (operators/gridding
@@ -31,15 +30,6 @@ def sinc_kernel(W: int, oversample: int = 5, a: float = 1.0) -> np.ndarray:
     return res / np.sum(res)
 
 
-def hanning_sinc_kernel(W: int, a: float = 0.5, oversample: int = 5) -> np.ndarray:
-    """Hanning-windowed sinc (a=0.5 is the plain Hann window; the
-    reference auto-fits `a` per support width — pass it explicitly)."""
-    u = uspace(W, oversample)
-    wnd = a + (1 - a) * np.cos(2.0 * np.pi / ((W + 2) + 1) * u)
-    res = sinc_kernel(W, oversample=oversample) * wnd
-    return res / np.sum(res)
-
-
 def bessel_jn(order: int, x: np.ndarray, n_quad: int = 4096) -> np.ndarray:
     """Bessel function of the first kind J_n via the integral
     representation J_n(x) = (1/π)∫₀^π cos(nθ − x·sinθ) dθ (trapezoid
@@ -62,50 +52,6 @@ def kaiser_bessel_sinc_kernel(
     wnd = bessel_jn(order, b * np.sqrt(np.maximum(arg, 0.0))) / ((W + 2) + 1)
     res = sinc_kernel(W, oversample=oversample) * wnd * np.sum(wnd)
     return res / np.sum(res)
-
-
-def pack_kernel(K: np.ndarray, W: int, oversample: int = 5) -> np.ndarray:
-    """Group taps by oversampling phase (cache-coherent layout for a
-    gather inner loop)."""
-    out = np.empty_like(K)
-    for t in range(oversample):
-        out[t * (W + 2) : (t + 1) * (W + 2)] = K[t::oversample]
-    return out
-
-
-def unpack_kernel(K: np.ndarray, W: int, oversample: int = 5) -> np.ndarray:
-    out = np.empty_like(K)
-    for t in range(oversample):
-        out[t::oversample] = K[t * (W + 2) : (t + 1) * (W + 2)]
-    return out
-
-
-def detaper_fft(npix: int, K2d: np.ndarray, W: int, oversample: int = 5) -> np.ndarray:
-    """Image-plane detaper of a 2-D kernel by the similarity theorem:
-    embed the kernel at the centre of an (npix·oversample)² grid, FFT,
-    crop the central npix² — |F(kernel)| sampled on the image grid."""
-    n = npix * oversample
-    pk = np.zeros((n, n))
-    r0 = n // 2 - K2d.shape[0] // 2
-    c0 = n // 2 - K2d.shape[1] // 2
-    pk[r0 : r0 + K2d.shape[0], c0 : c0 + K2d.shape[1]] = K2d
-    fpk = np.fft.fftshift(np.fft.fft2(np.fft.ifftshift(pk)))
-    lo = n // 2 - npix // 2
-    return np.abs(fpk[lo : lo + npix, lo : lo + npix])
-
-
-def detaper_dft(npix: int, K2d: np.ndarray, W: int, oversample: int = 5) -> np.ndarray:
-    """Direct-DFT detaper on the image grid (the memory-lean twin; used
-    as the oracle for detaper_fft in tests)."""
-    ks = uspace(W, oversample)
-    yy, xx = np.meshgrid(ks, ks, indexing="ij")
-    out = np.zeros((npix, npix), dtype=np.complex128)
-    for mm in range(npix):
-        mN = (mm - npix // 2) / float(npix)
-        for ll in range(npix):
-            lN = (ll - npix // 2) / float(npix)
-            out[mm, ll] = np.sum(K2d * np.exp(-2.0j * np.pi * (lN * xx + mN * yy)))
-    return np.abs(out)
 
 
 def taps_to_pairs(kernel: np.ndarray, W: int) -> list[tuple[int, float]]:

@@ -95,9 +95,6 @@ DECODE_META_SQL = """
 """
 
 
-FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes int, frame_head int"
-
-
 def frame_sample(with_payload: DataFrame, frame_size: int = 64, stride: int = 128) -> DataFrame:
     """Frame sampling over a binary payload (video frame-sample analog):
     emit a fixed-size window every `stride` bytes with typed metadata.
@@ -166,44 +163,6 @@ def extract_features(with_payload: DataFrame) -> DataFrame:
             )
 
     return with_payload.mapInPandas(batches, FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = "doc_id long, out_bytes long, out_width int, out_height int, resized binary"
-
-
-def resize_image(with_payload: DataFrame, factor: int = 4, fake: bool = True) -> DataFrame:
-    """STUB resize: real deployments decode → interpolate → re-encode
-    (PIL/libvips — absent here). The deterministic fake keeps every
-    `factor`-th payload byte (a 1-D 'nearest' subsample) and scales the
-    fake dims, preserving the real operator's shape: binary in → smaller
-    binary out + typed metadata, Arrow-batched."""
-    if not fake:
-        raise NotImplementedError(
-            "media codecs are not available in this container; pass fake=True "
-            "for the deterministic stand-in resizer"
-        )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure (executors cannot import this package)
-        def rz(p: bytes):
-            out = p[::factor]
-            n = len(p)
-            w, h = n % 640 + 1, (n * 7) % 480 + 1
-            return (len(out), max(1, w // factor), max(1, h // factor), out)
-
-        for pdf in it:
-            rows = [rz(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "out_bytes": [r[0] for r in rows],
-                    "out_width": [r[1] for r in rows],
-                    "out_height": [r[2] for r in rows],
-                    "resized": [r[3] for r in rows],
-                }
-            )
-
-    return with_payload.mapInPandas(batches, RESIZED_SCHEMA)
 
 
 # DuckDB substring() does not accept BLOB: frame length is pure integer

@@ -322,14 +322,6 @@ def lsh_bucket(embeddings: DataFrame, n_planes: int | None = None) -> DataFrame:
     return embeddings.select("vec_id", bucket.cast("int").alias("bucket"))
 
 
-def LSH_BUCKET_SQL() -> str:
-    return (
-        f"WITH {_lsh_np_cte()} "
-        f"SELECT vec_id, CAST({_lsh_fp_sql()} AS INT) AS bucket "
-        f"FROM embeddings ORDER BY vec_id"
-    )
-
-
 def ann_lsh_topk(embeddings: DataFrame, query_modulus: int = 125, k: int = 3) -> DataFrame:
     """ANN: candidates restricted to the query's LSH bucket, then exact
     quantized cosine re-ranking within the bucket."""

@@ -9,7 +9,6 @@ on the group key.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 

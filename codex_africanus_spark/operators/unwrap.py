@@ -5,7 +5,7 @@ per-baseline sequential unwrap into per-(baseline, 30-day-bucket)
 internal unwraps plus a bucket-summary stitch — exact because cumsum is
 associative. r12 extracts that core here so the STREAMING twin
 (streaming/unwrap.py) is built from the SAME projections: parity by
-construction, the streaming/lsh.py precedent.
+construction.
 
 Everything is integer-exact (milliradian grid): the wrap corrector
 compares integer deltas against ±3141, so there is no float rounding to

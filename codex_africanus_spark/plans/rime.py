@@ -311,19 +311,6 @@ class LMTransformer(Transformer):
 TRANSFORMERS: list[type[Transformer]] = [LMTransformer]
 
 
-def register_transformer(cls: type[Transformer]) -> None:
-    """Register a derived-column rule; conflicting output claims are an
-    error (the schema-conflict check of fused/core.py:191-199)."""
-    for existing in TRANSFORMERS:
-        clash = set(existing.outputs) & set(cls.outputs)
-        if clash:
-            raise ValueError(
-                f"transformer {cls.__name__} claims outputs {sorted(clash)} "
-                f"already provided by {existing.__name__}"
-            )
-    TRANSFORMERS.append(cls)
-
-
 def _apply_transformers(
     df: DataFrame, needed: set[str], extra: tuple = ()
 ) -> DataFrame:
@@ -435,11 +422,6 @@ MATRIX_TERM_MAP: dict[str, type[MatrixTerm]] = {
     "G": GainMatrixTerm,
     "R": FeedRotationMatrixTerm,
 }
-
-
-def register_matrix_term(char: str, cls: type[MatrixTerm]) -> None:
-    """Extensibility hook for sided matrix-valued terms."""
-    MATRIX_TERM_MAP[char] = cls
 
 
 def rime2x2(

@@ -5,11 +5,10 @@ The former single-module ``queries.py`` (13.3k lines) is split by domain
 and cross-domain helpers; ``relational`` / ``radio`` / ``events`` /
 ``corpus`` / ``ann`` hold the per-domain query builders + inline DuckDB
 oracles. Importing this package registers every query exactly as the
-single module did; the flat namespace below keeps every existing
-``from codex_africanus_spark.queries import X`` working unchanged.
+single module did. The package re-exports only the registry surface
+below; every other helper is imported from its domain module.
 """
 
-from . import _core
 from . import relational, radio, msops, imaging, events, corpus, ann  # noqa: F401
 
 from ._core import (  # noqa: F401
@@ -22,12 +21,3 @@ from ._core import (  # noqa: F401
     _MS_CTES,
     dense_or_distinct_bins,
 )
-
-# Backward-compatible flat namespace: re-export every public AND private
-# top-level name from the domain modules (tests import helpers like
-# _TAPER_PPB / _write_wsclean_file directly from this package).
-for _m in (_core, relational, radio, msops, imaging, events, corpus, ann):
-    for _k, _v in vars(_m).items():
-        if not _k.startswith("__") and _k not in globals():
-            globals()[_k] = _v
-del _m, _k, _v

@@ -780,9 +780,7 @@ def trigram_backoff_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("lsh_candidates_horizon", dedup_op.LSH_HORIZON_SQL)
 def lsh_candidates_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup candidates restricted to the ingest horizon (|Δdoc| ≤ 60
-    at 1 doc/min) — the batch/backfill surface of the streaming LSH gate
-    (streaming/lsh.py): same banded candidate join, horizon predicate in
-    place of the stream's watermark-bounded state eviction."""
+    at 1 doc/min): the banded candidate join with a horizon predicate."""
     return dedup_op.lsh_candidates_horizon(load(spark, "documents", sf_dir)).orderBy(
         "doc_a", "doc_b"
     )

@@ -389,20 +389,14 @@ def events_user_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def events_attribution_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """View→purchase attribution interval join (batch twin of the
-    stream-stream join in streaming/joins.py — same condition, same
-    schema, Kappa parity locked by tests/test_stream_stream_join.py).
-    One user_id-keyed shuffle; at 100 TB the streaming form bounds state
-    to ingest-rate x horizon per side via the watermark."""
+    """View→purchase attribution interval join
+    (streaming/joins.attribution_batch). One user_id-keyed shuffle."""
     ev = tpch_ms.events_table(spark, sf_dir).withColumn(
         "event_time", F.timestamp_micros(F.col("ts_us"))
     )
     from codex_africanus_spark.streaming import joins as sj
 
     return sj.attribution_batch(ev).orderBy("view_id", "purchase_id")
-
-
-_FUNNEL_STEPS = ("signup", "view", "click", "purchase")
 
 
 _EVENTS_FUNNEL_ORACLE = _with_ms(

@@ -3627,8 +3627,6 @@ def ms_corr_unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decomposition must be bit-equal, that is the point.
 # ---------------------------------------------------------------------------
 
-_UNWRAP_BUCKET_SECS = 2592000  # 30 days
-
 
 @register("phase_unwrap_salted", _PHASE_UNWRAP_ORACLE)
 def phase_unwrap_salted(spark: SparkSession, sf_dir: str) -> DataFrame:

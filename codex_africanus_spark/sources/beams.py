@@ -1,11 +1,11 @@
-"""FITS beam-cube ingest machinery: filename-schema expansion, header →
-axis grids, and a (library-gated) cube loader feeding the broadcast dict
-that operators/beam.beam_cube_dde samples.
+"""FITS beam-cube ingest machinery: filename-schema expansion and
+header → axis grids for the broadcast cube that
+operators/beam.beam_cube_dde samples. Pixel I/O needs a FITS library,
+which this engine does not carry.
 
 Capability parity with /root/reference/africanus/util/beams.py
 (beam_filenames :259-312, beam_grids :139-209, FitsAxes/BeamAxes :13-137)
-and the loader wiring of examples/predict.py:155-244 — re-implemented
-from the documented FITS conventions, not ported:
+— re-implemented from the documented FITS conventions, not ported:
 
 - axis metadata per FORTRAN-indexed header cards NAXISj/CTYPEj/CRVALj/
   CRPIXj/CDELTj/CUNITj, with CRPIX converted to 0-based C indexing;
@@ -173,51 +173,4 @@ def beam_filenames(
             for ri in ("re", "im")
         )
         out[corr] = pair  # type: ignore[assignment]
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Cube loader (FITS-library gated)
-# ---------------------------------------------------------------------------
-
-def load_beam_cube(
-    filename_schema: str,
-    corr_types: list[int],
-    l_axis: str | None = None,
-    m_axis: str | None = None,
-) -> dict[str, dict]:
-    """Load per-correlation complex beam cubes (examples/predict.py
-    :155-244): one re + one im FITS file per correlation, grids from the
-    first header. Returns {corr: {"l_grid","m_grid","f_grid","cube_re",
-    "cube_im"}} ready to broadcast into operators/beam.beam_cube_dde.
-
-    Requires astropy (absent in this container) — the schema expansion
-    and grid extraction above are library-free and fully tested; only
-    the pixel I/O is gated."""
-    try:
-        from astropy.io import fits  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "load_beam_cube needs astropy.io.fits for pixel I/O; "
-            "use beam_grids/beam_filenames (library-free) plus "
-            "operators/beam.make_test_beam_cube for synthetic cubes"
-        ) from e
-
-    import numpy as np
-
-    out: dict[str, dict] = {}
-    for corr, (re_file, im_file) in beam_filenames(filename_schema, corr_types).items():
-        with fits.open(re_file) as hdul_re, fits.open(im_file) as hdul_im:
-            header = dict(hdul_re[0].header)
-            (li, lg), (mi, mg), (fi, fg) = beam_grids(header, l_axis, m_axis)
-            # FITS data is FORTRAN-ordered: NumPy axis = ndims - fortran_idx
-            nd = int(header["NAXIS"])
-            perm = [nd - li, nd - mi, nd - fi]
-            out[corr] = {
-                "l_grid": np.asarray(lg),
-                "m_grid": np.asarray(mg),
-                "f_grid": np.asarray(fg),
-                "cube_re": np.transpose(hdul_re[0].data, perm),
-                "cube_im": np.transpose(hdul_im[0].data, perm),
-            }
     return out

@@ -37,88 +37,6 @@ def write_model_data(
     writer.parquet(path)
 
 
-def merge_column_update(
-    spark,
-    path: str,
-    updates: DataFrame,
-    keys: list[str],
-    update_cols: list[str],
-    partition_by: list[str],
-) -> list[tuple]:
-    """MERGE-style column update on a partitioned parquet table — the
-    'assign MODEL_DATA and write back' semantics of the reference's
-    xds_to_table(xds, ms, ["MODEL_DATA"]) (examples/predict.py:576-586),
-    i.e. Delta/Iceberg `MERGE ... WHEN MATCHED THEN UPDATE` without the
-    table-format dependency (neither library ships in this container):
-
-    1. the distinct partition values in `updates` bound the rewrite —
-       untouched partitions are never read or written (at 100 TB this
-       partition pruning IS the difference between a column update and
-       a full-table rewrite);
-    2. affected partitions are re-read, left-joined against the updates
-       on `keys`, and the target columns coalesced (rows without a
-       matching update keep their values — update-only, no inserts,
-       matching the reference's same-row-set column assignment);
-    3. rewritten partitions land in a staging directory first, then
-       replace the live partition directories — the poor-man's commit
-       a transactional table format would do atomically.
-
-    Returns the list of affected partition-value tuples.
-    """
-    import shutil
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    part_vals = [
-        tuple(r) for r in updates.select(*partition_by).distinct().collect()
-    ]
-    if not part_vals:
-        return []
-
-    existing = spark.read.parquet(path)
-    pred = None
-    for vals in part_vals:
-        clause = None
-        for col_name, v in zip(partition_by, vals):
-            c = F.col(col_name) == F.lit(v)
-            clause = c if clause is None else (clause & c)
-        pred = clause if pred is None else (pred | clause)
-    affected = existing.filter(pred)
-
-    upd = updates.select(
-        *keys, *[F.col(c).alias(f"__upd_{c}") for c in update_cols]
-    )
-    # a row matching multiple updates is ambiguous — same error a
-    # transactional MERGE raises (and the guard against the fact table's
-    # duplicate row_id keys; see FIXTURES.md)
-    if upd.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count():
-        raise ValueError(f"updates contain duplicate merge keys {keys}")
-    merged = affected.join(F.broadcast(upd), keys, "left")
-    for c in update_cols:
-        merged = merged.withColumn(
-            c, F.coalesce(F.col(f"__upd_{c}"), F.col(c))
-        ).drop(f"__upd_{c}")
-
-    staging = f"{path}__staging"
-    merged.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
-
-    root, stage_root = Path(path), Path(staging)
-    for vals in part_vals:
-        rel = "/".join(
-            f"{k}={v}" for k, v in zip(partition_by, vals)
-        )
-        src_dir, dst_dir = stage_root / rel, root / rel
-        if not src_dir.exists():
-            continue
-        if dst_dir.exists():
-            shutil.rmtree(dst_dir)
-        dst_dir.parent.mkdir(parents=True, exist_ok=True)
-        shutil.move(str(src_dir), str(dst_dir))
-    shutil.rmtree(stage_root, ignore_errors=True)
-    return part_vals
-
-
 def marker_committed_sink(
     stream: DataFrame,
     out_dir: str,

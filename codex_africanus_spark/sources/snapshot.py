@@ -338,66 +338,6 @@ def vacuum(
 
 
 # ---------------------------------------------------------------------------
-# Streaming sink: exactly-once foreachBatch commits
-# ---------------------------------------------------------------------------
-
-
-def committed_batch_ids(root: str) -> set[int]:
-    """Stream batch ids already landed in the manifest log."""
-    head = latest_version(root)
-    ids: set[int] = set()
-    for v in range(1, (head or 0) + 1):
-        b = _read_manifest(root, v).get("stream_batch_id")
-        if b is not None:
-            ids.add(b)
-    return ids
-
-
-def foreach_batch_committer(root: str, mode: str = "append"):
-    """`writeStream.foreachBatch` sink with exactly-once table commits.
-
-    foreachBatch alone is at-least-once: after a crash between the batch
-    function finishing and the checkpoint advancing, Structured Streaming
-    re-runs the same (batchId, data). The committer closes that hole the
-    same way Delta's idempotent writes do — the manifest records the
-    stream batch id, and a replayed id is skipped instead of re-appended,
-    making the data-lake table exactly-once end to end.
-
-    State is read from the manifest log itself (no side lookup table), so
-    recovery needs nothing beyond the table directory.
-    """
-
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in committed_batch_ids(root):
-            return
-        txn = f"txn-{uuid.uuid4().hex}"
-        data_dir = Path(root) / _DATA_DIR / txn
-        batch_df.write.mode("error").parquet(str(data_dir))
-        rel_files = sorted(
-            f"{_DATA_DIR}/{txn}/{p.relative_to(data_dir)}"
-            for p in data_dir.rglob("*.parquet")
-        )
-        log = _log_dir(root)
-        log.mkdir(parents=True, exist_ok=True)
-        for _ in range(20):
-            head = latest_version(root) or 0
-            manifest = {
-                "version": head + 1,
-                "action": mode,
-                "files": rel_files,
-                "schema": batch_df.schema.json(),
-                "stream_batch_id": batch_id,
-            }
-            tmp = log / f".tmp-{uuid.uuid4().hex}"
-            tmp.write_text(json.dumps(manifest, indent=1))
-            if _publish(tmp, _manifest_path(root, head + 1)):
-                return
-        raise SnapshotConflictError("streaming commit lost 20 races")
-
-    return _commit
-
-
-# ---------------------------------------------------------------------------
 # Incremental reads (append-only CDC) and compaction
 # ---------------------------------------------------------------------------
 

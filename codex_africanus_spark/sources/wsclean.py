@@ -29,11 +29,6 @@ from pyspark.sql import functions as F
 H2RAD = math.pi / 12.0  # hours → radians
 D2RAD = math.pi / 180.0
 
-CANONICAL_COLUMNS = [
-    "Name", "Type", "Ra", "Dec", "I", "SpectralIndex", "LogarithmicSI",
-    "ReferenceFrequency", "MajorAxis", "MinorAxis", "Orientation",
-]
-
 
 def _parse_header(line: str) -> tuple[list[str], dict[str, str]]:
     """Header → (column order, {column: default}) (file_model.py:108-115)."""

@@ -55,63 +55,3 @@ def streaming_fingerprint_counts(
             F.min("doc_id").alias("canonical_doc_id"),
         )
     )
-
-
-def streaming_incremental_ingest(index_root: str, report_root: str):
-    """Continuous near-dup ingestion (r7 verdict #7 candidate): the
-    incremental-dedup PROBE as a `foreachBatch` consumer with
-    exactly-once semantics — the composition of three flagship tiers:
-
-      1. the prefix-filter probe (`operators/dedup._probe_committed` —
-         the SAME definition the batch tier runs, so stream and batch
-         cannot diverge on what is a duplicate),
-      2. the transactional snapshot sink's idempotent stream commits
-         (manifest-recorded `stream_batch_id`; a replayed batch id is a
-         no-op PER TABLE),
-      3. Structured Streaming's at-least-once foreachBatch, upgraded to
-         exactly-once by (2).
-
-    Per micro-batch: probe the committed index (pure read — the probe
-    excludes the in-flight batch's own ids, so a partially-replayed
-    append cannot perturb it), append surviving non-duplicates'
-    sets/prefix rows to the index (later batches dedup against them),
-    and commit the per-doc report. Commit order sets → prefix → report,
-    each individually idempotent by batch id: a crash at ANY point
-    replays safely, and a report-present batch short-circuits.
-
-    Returns the batch function for `writeStream.foreachBatch(...)`.
-    The base index must exist (built by `incremental_dedup_ingest` or
-    the cold-build path); `dedup_index_rebuild` remains the periodic
-    rank-maintenance job, unchanged by streaming."""
-    from codex_africanus_spark.operators.dedup import (
-        _prefix_explode,
-        _probe_committed,
-        _rarest_first_sets,
-    )
-    from codex_africanus_spark.sources import snapshot as snap
-
-    sets_commit = snap.foreach_batch_committer(f"{index_root}/sets")
-    prefix_commit = snap.foreach_batch_committer(f"{index_root}/prefix")
-    report_commit = snap.foreach_batch_committer(report_root)
-
-    def _ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in snap.committed_batch_ids(report_root):
-            return  # report lands last ⇒ everything already committed
-        spark = batch_df.sparkSession
-        report, sh_batch, batch_ranks = _probe_committed(
-            spark, batch_df.select("doc_id", "text"), index_root
-        )
-        # freeze the probe result and the survivor rows once: the two
-        # index commits and the report commit must write ONE consistent
-        # computation (localCheckpoint blocks free on GC)
-        report = report.localCheckpoint(eager=True)
-        survivors = report.filter(F.col("is_dup") == 0).select("doc_id")
-        sets_new = _rarest_first_sets(
-            sh_batch.join(F.broadcast(survivors), "doc_id"),
-            F.broadcast(batch_ranks),
-        ).localCheckpoint(eager=True)
-        sets_commit(sets_new, batch_id)
-        prefix_commit(_prefix_explode(sets_new), batch_id)
-        report_commit(report.withColumn("batch_id", F.lit(batch_id)), batch_id)
-
-    return _ingest_batch

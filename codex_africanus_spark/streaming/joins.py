@@ -1,22 +1,13 @@
-"""Stream-stream event-time interval join (SURVEY §2.10 extension).
+"""Event-time interval join: view→purchase attribution (SURVEY §2.10
+extension).
 
 The batch engine's as-of/interval joins (operators/asof.py, the
 events_asof_prior_join RANGE-window pass) answer "which earlier event
-explains this one" over data at rest. The live form of the same question
-— view→purchase attribution within a horizon — is a *stream-stream* join:
-both sides are unbounded, so Spark buffers each side in the state store
-and the event-time range condition plus the watermarks bound how much
-state is retained (rows older than `watermark + horizon` are evicted).
-
-Kappa parity: `attribution_batch` applies the identical join condition
-to the same frames at rest, so a backfill and the live stream agree
-row-for-row — the property the tests assert with an AvailableNow pass
-over the events table.
-
-At 100 TB/day the state-store footprint is the product of (ingest rate ×
-horizon) per side, independent of history length — that is the whole
-point of the watermark bound; the join itself shuffles both sides on
-user_id once.
+explains this one". `attribution_batch` asks it for attribution: a
+purchase by the same user strictly after a view and within `HORIZON`.
+The join shuffles both sides on user_id once. `_attribution_join` takes
+streaming frames unchanged; watermarks on both sides would then bound
+the state to ingest rate × horizon per side.
 """
 
 from __future__ import annotations
@@ -25,12 +16,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 HORIZON = "1 hour"
-WATERMARK = "2 hours"
 
 
 def _attribution_join(views: DataFrame, purchases: DataFrame) -> DataFrame:
-    """Shared join condition: purchase strictly after the view, within
-    the horizon, same user. Works on streaming and batch frames alike."""
+    """The join condition: purchase strictly after the view, within the
+    horizon, same user. Works on streaming and batch frames alike."""
     v = views.select(
         F.col("event_id").alias("view_id"),
         F.col("user_id").alias("v_user"),
@@ -60,19 +50,6 @@ def _attribution_join(views: DataFrame, purchases: DataFrame) -> DataFrame:
         ).alias("gap_us"),
         "purchase_value",
     )
-
-
-def attribution_stream(events_stream: DataFrame) -> DataFrame:
-    """Streaming view→purchase attribution: split the event stream by
-    type, watermark both sides, interval-join. State per side is bounded
-    by watermark + horizon."""
-    views = events_stream.filter(F.col("event_type") == "view").withWatermark(
-        "event_time", WATERMARK
-    )
-    purchases = events_stream.filter(
-        F.col("event_type") == "purchase"
-    ).withWatermark("event_time", WATERMARK)
-    return _attribution_join(views, purchases)
 
 
 def attribution_batch(events: DataFrame) -> DataFrame:

@@ -51,12 +51,6 @@ CARRY_SCHEMA = (
     "t_min double, t_max double, w_q long, wre_q long, wim_q long"
 )
 
-BINS_SCHEMA = (
-    "antenna1 int, antenna2 int, bin_idx long, n_rows long, "
-    "time_start double, time_end double, vis_re_avg double, "
-    "vis_im_avg double, weight_sum double, closed boolean"
-)
-
 
 def empty_carry(spark) -> DataFrame:
     return local_frame(spark, [], CARRY_SCHEMA)

@@ -6,23 +6,15 @@ reference's decorrelation-bounded Binner needs when bins must close on
 *data-dependent* conditions rather than fixed windows (session_window
 covers only the gap rule).
 
-This operator maintains a running per-user accumulator: event count and
-exact fixed-point value sum, emitting one row per key per micro-batch
-with the updated totals — the minimal demonstration of the state-store
-round-trip (GroupState get/update/timeout) that a production BDA
-streaming binner builds on.
+`streaming_bda` is that binner: the open bin's exact fixed-point
+accumulator round-trips through the state store (GroupState
+get/update/timeout) between micro-batches.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id long, n_events long, value_sum_q long"
-STATE_SCHEMA = "n long, vq long"
 
 BDA_OUTPUT_SCHEMA = (
     "antenna1 int, antenna2 int, bin_idx long, n_rows long, "
@@ -426,27 +418,3 @@ def _make_bda_update(
             yield _pd.DataFrame(out, columns=cols)
 
     return update
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """events: streaming frame with (user_id, value). Emits cumulative
-    (n_events, fixed-point value sum) per user per micro-batch."""
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        # self-contained closure (executors cannot import this package)
-        n, vq = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            vq += int(round(float(pdf["value"].sum()) * 1e6))
-        state.update((n, vq))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "value_sum_q": [vq]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

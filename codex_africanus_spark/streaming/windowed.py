@@ -1,16 +1,13 @@
 """Structured Streaming surface (SURVEY §2.10).
 
 The reference is batch-only; these plans are the additive streaming
-mapping of its binning semantics:
-
-- fixed `time_bin_secs` binning (time_and_channel_mapping.py:275) →
-  tumbling event-time windows with a watermark;
-- BDA's data-dependent per-baseline bins (bda_mapping.py:111-186) →
-  session windows with a gap timeout (the decorrelation-bounded variant
-  runs through applyInPandasWithState; the gap-based tier is built-in).
+mapping of its fixed `time_bin_secs` binning
+(time_and_channel_mapping.py:275): event-time windows with a watermark.
+BDA's data-dependent per-baseline bins run through
+applyInPandasWithState instead (streaming/stateful.py).
 
 Batch/stream parity: the aggregation expressions are the *same Columns*
-as the batch queries (queries.events_tumbling_window), so a backfill run
+as the batch queries (queries.events_sliding_window), so a backfill run
 in batch mode and the live stream produce identical bins — the
 Kappa-architecture property the reference cannot offer.
 
@@ -24,22 +21,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codex_africanus_spark.functions.deterministic import qsum
+from codex_africanus_spark.sources import tables
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the events table (file source, one-file listing).
 
-    The nanos-as-long read gives exact integer event time; convert to a
-    proper timestamp column for watermarking.
+    The batch read (`sources.tables.load`) supplies the schema, with
+    exact integer event time; convert to a proper timestamp column for
+    watermarking.
     """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    schema = tables.load(spark, "events", sf_dir).schema
     # the file source requires a directory; glob-filter to the one table
     stream = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -47,26 +42,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return stream.withColumn(
         "event_time", F.timestamp_micros(events_ts_us(stream))
-    )
-
-
-def tumbling_window_stats(stream: DataFrame, window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window aggregate — same weighted-aggregate
-    expressions as the batch averaging engine."""
-    return (
-        stream.withWatermark("event_time", watermark)
-        .groupBy("event_type", F.window("event_time", window).alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (qsum(F.col("value"), 1e6) / F.lit(1e6)).alias("value_sum"),
-        )
-        .select(
-            "event_type",
-            F.col("win.start").alias("window_start"),
-            "n_events",
-            "value_sum",
-        )
     )
 
 
@@ -192,20 +167,3 @@ def streaming_window_drop(
         for p in q.recentProgress
     )
     return spark.table(name), dropped
-
-
-def session_window_stats(stream: DataFrame, gap: str = "30 minutes",
-                         watermark: str = "2 hours") -> DataFrame:
-    """Session windows with gap timeout — the streaming analogue of the
-    per-baseline BDA bin closure."""
-    return (
-        stream.withWatermark("event_time", watermark)
-        .groupBy("user_id", F.session_window("event_time", gap).alias("sess"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "n_events",
-        )
-    )

@@ -128,23 +128,12 @@ def test_gauss_newton_history_converges(spark, sf_dir):
 
 
 def test_psf_fit_and_restore():
-    """CLEAN triple completion: the fitted beam recovers a known Gaussian
-    and restore() places components at the right cells."""
-    import numpy as np
-
-    from codex_africanus_spark.operators.clean import psf_fit_gaussian, restore
-
-    yy, xx = np.indices((41, 41))
-    su, sv = 2.5, 1.5
-    psf = np.exp(-(((yy - 20) / su) ** 2 + ((xx - 20) / sv) ** 2) / 2.0)
-    amp, fsu, fsv = psf_fit_gaussian(psf)
-    assert abs(amp - 1.0) < 1e-9
-    # second moments of a 2-D separable gaussian reproduce sigma within
-    # truncation error of the finite window
-    assert abs(fsu - su) < 0.2 and abs(fsv - sv) < 0.2
+    """CLEAN triple completion: restore() with a known clean beam
+    (σ = 2.5, 1.5 cells) places components at the right cells."""
+    from codex_africanus_spark.operators.clean import restore
 
     comps = pd.DataFrame({"u_cell": [25, 10], "v_cell": [30, 12], "flux": [2.0, -1.0]})
-    img = restore(comps, (41, 41), (0, 0), (fsu, fsv))
+    img = restore(comps, (41, 41), (0, 0), (2.5, 1.5))
     # component peaks land at their cells with the component flux
     assert abs(img[25, 30] - 2.0) < 0.2
     assert abs(img[10, 12] - (-1.0)) < 0.2

@@ -90,13 +90,3 @@ def test_beam_filenames_invalid_schema():
         beams.beam_filenames("beam_$(bogus).fits", [9])
     with pytest.raises(ValueError, match="Stokes"):
         beams.beam_filenames("beam_$(corr)_$(reim).fits", [99])
-
-
-def test_load_beam_cube_gated_without_astropy():
-    try:
-        import astropy  # noqa: F401
-        pytest.skip("astropy present; gate not exercised")
-    except ImportError:
-        pass
-    with pytest.raises(ImportError, match="astropy"):
-        beams.load_beam_cube("beam_$(corr)_$(reim).fits", [9])

@@ -94,142 +94,3 @@ def test_write_model_data_roundtrip(spark, sf_dir, tmp_path):
     one = back.filter(F.col("chan") == 3)
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert one.count() == vis.filter(F.col("chan") == 3).count()
-
-
-def test_merge_column_update_partition_scoped(spark, sf_dir, tmp_path):
-    """MERGE-style MODEL_DATA update: only touched partitions rewritten,
-    matched rows updated, unmatched rows and untouched partitions intact."""
-    import os
-
-    from codex_africanus_spark.sources.sink import merge_column_update
-
-    path = str(tmp_path / "ms_table")
-    vis = (
-        tpch_ms.vis_table(spark, sf_dir)
-        .filter("row_id % 5 = 0")
-        # lineitem carries duplicate (row_id, a1, a2, chan) keys
-        # (FIXTURES.md) — a MERGE key must be unique
-        .dropDuplicates(["row_id", "antenna1", "antenna2", "chan"])
-        .select(
-            "row_id", "antenna1", "antenna2", "chan", "vis_re", "vis_im",
-            (F.expr("row_id DIV 8") % 4).cast("int").alias("scan_number"),
-            F.lit(0.0).alias("model_re"),
-        )
-    )
-    vis.write.partitionBy("scan_number").parquet(path)
-
-    before = {
-        (r.row_id, r.antenna1, r.antenna2, r.chan): r
-        for r in spark.read.parquet(path).collect()
-    }
-    untouched_dir = os.path.join(path, "scan_number=3")
-    mtimes_before = {
-        f: os.path.getmtime(os.path.join(untouched_dir, f))
-        for f in os.listdir(untouched_dir)
-    }
-
-    updates = (
-        spark.read.parquet(path)
-        .filter("scan_number IN (0, 1) AND chan = 2")
-        .select(
-            "row_id", "antenna1", "antenna2", "chan", "scan_number",
-            (F.col("vis_re") * 2).alias("model_re"),
-        )
-    )
-    n_updates = updates.count()
-    assert n_updates > 0
-    touched = merge_column_update(
-        spark, path, updates,
-        keys=["row_id", "antenna1", "antenna2", "chan"],
-        update_cols=["model_re"],
-        partition_by=["scan_number"],
-    )
-    assert sorted(t[0] for t in touched) == [0, 1]
-
-    after = spark.read.parquet(path).collect()
-    assert len(after) == len(before)
-    changed = 0
-    for r in after:
-        b = before[(r.row_id, r.antenna1, r.antenna2, r.chan)]
-        if r.scan_number in (0, 1) and r.chan == 2:
-            assert r.model_re == b.vis_re * 2
-            changed += 1
-        else:
-            assert r.model_re == b.model_re
-        assert r.vis_re == b.vis_re  # non-target columns untouched
-    assert changed == n_updates
-
-    # untouched partition files were not rewritten
-    mtimes_after = {
-        f: os.path.getmtime(os.path.join(untouched_dir, f))
-        for f in os.listdir(untouched_dir)
-    }
-    assert mtimes_after == mtimes_before
-
-
-def test_merge_column_update_concurrent_multifile_partitions(spark, sf_dir, tmp_path):
-    """MERGE under concurrent task-parallel partitions: every partition
-    directory holds MULTIPLE parquet files (written by parallel tasks),
-    updates span ≥2 partitions, and the staged-rewrite swap must preserve
-    full row multiplicity and values across all files — the layout a real
-    multi-executor writer produces (reference analogue: xds_to_table
-    column update, africanus/rime/examples/predict.py:576-586)."""
-    import os
-
-    from codex_africanus_spark.sources.sink import merge_column_update
-
-    path = str(tmp_path / "ms_table_mf")
-    vis = (
-        tpch_ms.vis_table(spark, sf_dir)
-        .filter("row_id % 7 = 0")
-        .dropDuplicates(["row_id", "antenna1", "antenna2", "chan"])
-        .select(
-            "row_id", "antenna1", "antenna2", "chan", "vis_re",
-            (F.expr("row_id DIV 16") % 3).cast("int").alias("scan_number"),
-            F.lit(0.0).alias("model_re"),
-        )
-        .repartition(6)  # >1 file per partition directory
-    )
-    vis.write.partitionBy("scan_number").parquet(path)
-    for scan in (0, 1, 2):
-        files = [
-            f for f in os.listdir(os.path.join(path, f"scan_number={scan}"))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) > 1, f"scan {scan} must be multi-file for this test"
-
-    before = {
-        (r.row_id, r.antenna1, r.antenna2, r.chan): r
-        for r in spark.read.parquet(path).collect()
-    }
-    updates = (
-        spark.read.parquet(path)
-        .filter("scan_number IN (0, 2) AND antenna1 = 1")
-        .select(
-            "row_id", "antenna1", "antenna2", "chan", "scan_number",
-            (F.col("vis_re") * 3).alias("model_re"),
-        )
-        .repartition(4)  # updates arrive task-parallel too
-    )
-    n_updates = updates.count()
-    assert n_updates > 0
-    touched = merge_column_update(
-        spark, path, updates,
-        keys=["row_id", "antenna1", "antenna2", "chan"],
-        update_cols=["model_re"],
-        partition_by=["scan_number"],
-    )
-    assert sorted(t[0] for t in touched) == [0, 2]
-
-    after = spark.read.parquet(path).collect()
-    assert len(after) == len(before)  # no row lost or duplicated across files
-    changed = 0
-    for r in after:
-        b = before[(r.row_id, r.antenna1, r.antenna2, r.chan)]
-        if r.scan_number in (0, 2) and r.antenna1 == 1:
-            assert r.model_re == b.vis_re * 3
-            changed += 1
-        else:
-            assert r.model_re == b.model_re
-        assert r.vis_re == b.vis_re
-    assert changed == n_updates

@@ -39,7 +39,7 @@ def test_cli_predict_writes_model_data(spark, sf_dir, tmp_path):
 def test_cli_predict_wsclean_sky_model(spark, sf_dir, tmp_path):
     """--sky-model: radec-only WSClean catalogue flows through the
     compiler's LMTransformer."""
-    from codex_africanus_spark.queries import _write_wsclean_file
+    from codex_africanus_spark.queries.imaging import _write_wsclean_file
 
     model_file = _write_wsclean_file(sf_dir)
     out = str(tmp_path / "model_ws")

@@ -21,21 +21,6 @@ def test_dirty_image_matches_direct_dft(spark, sf_dir):
     np.testing.assert_allclose(img / scale, expected / scale, atol=1e-9)
 
 
-def test_dirty_image_bands_matches_per_band_filter(spark, sf_dir):
-    """The one-pass banded accumulation must equal imaging each band's
-    rows separately (the reference's band loop, vis2im.py:46-76) —
-    bit-exact, since accumulation is fixed-point."""
-    vis = tpch_ms.vis_table(spark, sf_dir).filter("row_id % 7 = 0")
-    banded = fft_imaging.dirty_image_bands(vis, 16, 16, chan_per_band=2)
-    assert len(banded) >= 2
-    for b, (img, wsum) in banded.items():
-        img1, w1 = fft_imaging.dirty_image(
-            vis.filter(f"chan DIV 2 = {b}"), 16, 16
-        )
-        assert w1 == wsum
-        np.testing.assert_array_equal(img, img1)
-
-
 def _wstack_direct(rows, nx, ny, cell, w_step):
     """Driver-side direct w-term DFT over the same (plane, cell)
     discretization — the explicit_gridder analogue with w-correction

@@ -190,54 +190,3 @@ def test_streaming_dedup_boundary_fuzz(spark, tmp_path, per_file):
     assert sorted(got.text) == sorted(
         pdf.set_index("doc_id").loc[batch.canonical_doc_id].text
     ), per_file
-
-
-@pytest.mark.parametrize("per_file", [1, 3])
-def test_streaming_cms_boundary_fuzz(spark, tmp_path, per_file):
-    """CMS cell counters are pure mergeable state — ANY micro-batch
-    partitioning of the token stream (down to one doc per trigger)
-    must produce the identical final cell table as the batch sketch,
-    including an adversarial corpus (empty docs, single tokens, heavy
-    repetition) whose tokens land on shared cells."""
-    from codex_africanus_spark.streaming import sketches as ssk
-
-    texts = ["", "the", "the the the", "a b c d e f", "cat", "cat cat",
-             "x y x y x", "the cat", "b", "a a a a a a a a"]
-    pdf = pd.DataFrame(
-        [(i, t) for i, t in enumerate(texts)], columns=["doc_id", "text"]
-    )
-    src = tmp_path / f"cms_{per_file}"
-    src.mkdir()
-    for k in range(0, len(pdf), per_file):
-        path = src / f"b{k:03d}.parquet"
-        pq.write_table(
-            pa.Table.from_pandas(pdf.iloc[k:k + per_file], preserve_index=False),
-            path,
-        )
-        os.utime(path, (1_000_000_000 + k * 100,) * 2)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    name = f"cms_fuzz_{per_file}"
-    q = (
-        ssk.streaming_cms_cells(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / f"cck{per_file}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_done(q)
-    got = {
-        (r["row"], r["cell"]): r["n"]
-        for r in spark.sql(f"SELECT row, cell, n FROM {name}").collect()
-    }
-    batch_df = spark.createDataFrame(pdf)
-    want = {
-        (r["row"], r["cell"]): r["n"]
-        for r in ssk.batch_cms_cells(batch_df).collect()
-    }
-    assert got == want

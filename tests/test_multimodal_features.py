@@ -1,7 +1,4 @@
-"""Multimodal feature-extract / resize stages (decode-free tier +
-stubbed codec tier)."""
-
-import math
+"""Multimodal feature-extract stage (decode-free tier)."""
 
 import numpy as np
 
@@ -38,18 +35,3 @@ def test_entropy_separates_text_from_noise(spark):
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     out = {r.doc_id: r.entropy_milli for r in mm.extract_features(df).collect()}
     assert out[1] > 7800 and out[2] < 5000
-
-
-def test_resize_stub_shape(spark, sf_dir):
-    """Stubbed resize preserves the real operator's contract: smaller
-    binary out, scaled dims, deterministic."""
-    docs = load(spark, "documents", sf_dir).limit(20)
-    wp = mm.attach_binary_payload(docs)
-    out = mm.resize_image(wp, factor=4).collect()
-    src = {r.doc_id: len(r.payload) for r in wp.collect()}
-    assert len(out) == 20
-    for r in out:
-        n = src[r.doc_id]
-        assert r.out_bytes == math.ceil(n / 4)
-        assert len(r.resized) == r.out_bytes
-        assert r.out_width == max(1, (n % 640 + 1) // 4)

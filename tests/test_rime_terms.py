@@ -241,15 +241,3 @@ def test_missing_and_nonderivable_column_still_errors(spark, sf_dir):
     src = tpch_ms.source_table(spark, sf_dir).drop("l", "m", "n")
     with pytest.raises(ValueError, match="requires columns"):
         rime_plan.rime("(Kpq, Bpq)", vis, src)
-
-
-def test_register_transformer_conflict_rejected():
-    import pytest
-    from codex_africanus_spark.plans.rime import Transformer, register_transformer
-
-    class Clash(Transformer):
-        outputs = ("l",)
-        inputs = ()
-
-    with pytest.raises(ValueError, match="already provided"):
-        register_transformer(Clash)

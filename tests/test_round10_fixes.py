@@ -1,8 +1,8 @@
 """Round-10 ADVICE fixes, locked.
 
 1. (medium) applyInPandasWithState delivers a key's micro-batch rows as
-   MULTIPLE Arrow chunks with no cross-chunk order — the streaming
-   SumThreshold and BDA kernels must concat + sort ONCE, not per chunk.
+   MULTIPLE Arrow chunks with no cross-chunk order — the streaming BDA
+   kernel must concat + sort ONCE, not per chunk.
    Locked by running the same unordered single-micro-batch input under
    maxRecordsPerBatch=5 (many chunks per key) vs 10000 (one chunk) and
    requiring bit-equality.
@@ -23,7 +23,6 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 from codex_africanus_spark.operators import similarity as sim_op
-from codex_africanus_spark.streaming import flagging as sflag
 from codex_africanus_spark.streaming import stateful
 
 from tests.conftest import await_done
@@ -31,9 +30,6 @@ from tests.conftest import await_done
 VIS_SCHEMA = ("row_id long, time double, antenna1 int, antenna2 int, "
               "u double, v double, w double, vis_re double, vis_im double, "
               "weight double")
-CELL_SCHEMA = (
-    "antenna1 int, antenna2 int, chan int, time double, mean_mq long"
-)
 
 
 def _one_file(src, pdf):
@@ -52,59 +48,6 @@ def _with_arrow_chunk(spark, n, fn):
         return fn()
     finally:
         spark.conf.set(key, old)
-
-
-def _run_st(spark, src, ck, qname):
-    stream = (
-        spark.readStream.schema(CELL_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        sflag.streaming_sumthreshold(stream)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", str(ck))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_done(q)
-    out = spark.sql(f"SELECT * FROM {qname}").toPandas()
-    # last emission per cell (provisional rows superseded)
-    return (
-        out.groupby(["antenna1", "antenna2", "chan", "time"], as_index=False)
-        .last()
-        .sort_values(["antenna1", "antenna2", "chan", "time"])
-        .reset_index(drop=True)
-    )
-
-
-def test_streaming_sumthreshold_multichunk_unordered(spark, tmp_path):
-    """One key, 40 cells, ONE micro-batch, rows SHUFFLED: the 5-row
-    Arrow chunking must give the identical flag series as the one-chunk
-    delivery (pre-fix each chunk was sorted independently → the buffer
-    went non-monotone and f2/f4 window decisions silently forked)."""
-    rng = np.random.RandomState(7)
-    n = 40
-    means = np.where(rng.rand(n) < 0.2, 3_000_000, 10_000).astype(np.int64)
-    pdf = pd.DataFrame({
-        "antenna1": np.zeros(n, dtype="int32"),
-        "antenna2": np.ones(n, dtype="int32"),
-        "chan": np.zeros(n, dtype="int32"),
-        "time": 1000.0 + 10.0 * np.arange(n),
-        "mean_mq": means,
-    }).sample(frac=1.0, random_state=11).reset_index(drop=True)
-    src1, src2 = tmp_path / "a", tmp_path / "b"
-    _one_file(src1, pdf)
-    _one_file(src2, pdf)
-    ref = _run_st(spark, src1, tmp_path / "ck_a", "r10st_one")
-    got = _with_arrow_chunk(
-        spark, 5, lambda: _run_st(spark, src2, tmp_path / "ck_b", "r10st_many")
-    )
-    assert len(ref) == n == len(got)
-    for c in ["mean_mq", "f1", "f2", "f4", "fany", "closed"]:
-        assert (ref[c].to_numpy() == got[c].to_numpy()).all(), c
 
 
 def _run_bda(spark, src, ck, qname, **kw):

@@ -12,7 +12,7 @@ from codex_africanus_spark.operators import dedup as dedup_op
 from codex_africanus_spark.operators import retrieval as retr_op
 from codex_africanus_spark.sources import tpch_ms
 from codex_africanus_spark.sources.tables import load
-from codex_africanus_spark import queries as Q
+from codex_africanus_spark.queries import _core, ann, corpus, imaging, msops
 import pytest
 
 
@@ -22,7 +22,7 @@ import pytest
 def test_beam_stokes_predict_zero_q_makes_xx_equal_yy(spark, sf_dir):
     """With Q forced to 0 the I,Q→XX/YY compilation gives XX = YY = I,
     so the full beam-weighted reduction must agree exactly per cell."""
-    out = Q.beam_stokes_dde_predict(spark, sf_dir)
+    out = imaging.beam_stokes_dde_predict(spark, sf_dir)
     # monkey-free check on the real query: XX+YY = 2·(beam²·I part) and
     # XX−YY = 2·(beam²·Q part); verify the compiled asymmetry is nonzero
     # overall but vanishes where it must: recompute with flux_q = 0 by
@@ -39,7 +39,7 @@ def test_beam_stokes_predict_zero_q_makes_xx_equal_yy(spark, sf_dir):
 
 
 def test_beam_stokes_predict_partition_invariant(spark, sf_dir):
-    a = Q.beam_stokes_dde_predict(spark, sf_dir)
+    a = imaging.beam_stokes_dde_predict(spark, sf_dir)
     key = lambda r: (r.row_id, r.antenna1, r.antenna2, r.chan)  # noqa: E731
     got = {key(r): (r.xx_re, r.xx_im, r.yy_re, r.yy_im) for r in a.collect()}
     vis = tpch_ms.vis_table(spark, sf_dir)
@@ -51,7 +51,7 @@ def test_beam_stokes_predict_partition_invariant(spark, sf_dir):
     # fixed-point reduction ⇒ identical under any shuffle partitioning
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
-        b = Q.beam_stokes_dde_predict(spark, sf_dir)
+        b = imaging.beam_stokes_dde_predict(spark, sf_dir)
         got_b = {key(r): (r.xx_re, r.xx_im, r.yy_re, r.yy_im) for r in b.collect()}
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", "32")
@@ -168,13 +168,13 @@ def test_dedup_savings_matches_exact_dedup(spark, sf_dir):
 
 def test_uvdist_profile_accounts_every_row(spark, sf_dir):
     vis = tpch_ms.vis_table(spark, sf_dir)
-    prof = Q.uvdist_radial_profile(spark, sf_dir).collect()
+    prof = imaging.uvdist_radial_profile(spark, sf_dir).collect()
     assert sum(r.n_rows for r in prof) == vis.count()
     assert all(r.bin >= 0 and r.mean_amp >= 0 for r in prof)
 
 
 def test_redundant_cells_have_multiple_baselines(spark, sf_dir):
-    out = Q.redundant_baseline_average(spark, sf_dir)
+    out = msops.redundant_baseline_average(spark, sf_dir)
     rows = out.collect()
     assert len(rows) > 0
     assert all(r.n_baselines >= 2 and r.n_rows >= r.n_baselines for r in rows)
@@ -184,7 +184,7 @@ def test_baseline_segments_account_every_epoch(spark, sf_dir):
     vis = tpch_ms.vis_table(spark, sf_dir)
     segs = {
         (r.antenna1, r.antenna2): r
-        for r in Q.baseline_observation_segments(spark, sf_dir).collect()
+        for r in msops.baseline_observation_segments(spark, sf_dir).collect()
     }
     per_bl = (
         vis.select("antenna1", "antenna2", "time").distinct()
@@ -203,8 +203,8 @@ def test_elevation_matches_numpy_and_counts(spark, sf_dir):
     vis = tpch_ms.vis_table(spark, sf_dir)
     times = [r.time for r in vis.select("time").distinct().collect()]
     ants = tpch_ms.antenna_table(spark).collect()
-    ra, dec = Q._PA_FIELD
-    rep = {r.antenna: r for r in Q.antenna_elevation_flags(spark, sf_dir).collect()}
+    ra, dec = _core._PA_FIELD
+    rep = {r.antenna: r for r in msops.antenna_elevation_flags(spark, sf_dir).collect()}
     for a in ants:
         lon = math.atan2(a.ant_y, a.ant_x)
         lat = math.atan2(
@@ -238,7 +238,7 @@ def test_briggs_sweep_orders_neff_monotonically(spark, sf_dir):
     """More robust (natural-ward) => weaker downweighting of dense cells
     => higher effective visibility count: neff_p2 >= neff_r0 >= neff_m2;
     every neff is bounded by the unflagged row count."""
-    r = Q.briggs_robust_sweep(spark, sf_dir).collect()[0]
+    r = imaging.briggs_robust_sweep(spark, sf_dir).collect()[0]
     vis = tpch_ms.vis_table(spark, sf_dir)
     n = vis.filter(~(F.col("flag") | F.col("flag_row"))).count()
     assert r.neff_m1 <= r.neff_r0 <= r.neff_p1 <= n + 1e-6
@@ -246,7 +246,7 @@ def test_briggs_sweep_orders_neff_monotonically(spark, sf_dir):
 
 
 def test_bda_smearing_sinc_bounds(spark, sf_dir):
-    rows = Q.bda_smearing_report(spark, sf_dir).collect()
+    rows = msops.bda_smearing_report(spark, sf_dir).collect()
     assert len(rows) > 0
     for r in rows:
         assert -0.22 <= r.worst_sinc <= 1.0  # sinc range over any Δψ
@@ -256,7 +256,7 @@ def test_bda_smearing_sinc_bounds(spark, sf_dir):
 def test_wstack_occupancy_accounts_unflagged_rows(spark, sf_dir):
     vis = tpch_ms.vis_table(spark, sf_dir)
     n = vis.filter(~(F.col("flag") | F.col("flag_row"))).count()
-    occ = Q.wstack_plane_occupancy(spark, sf_dir).collect()
+    occ = imaging.wstack_plane_occupancy(spark, sf_dir).collect()
     assert sum(r.n_rows for r in occ) == n
     assert all(r.n_cells <= min(r.n_rows, 32 * 32) for r in occ)
 
@@ -264,7 +264,7 @@ def test_wstack_occupancy_accounts_unflagged_rows(spark, sf_dir):
 @pytest.mark.slow
 def test_simhash_histogram_mass_matches_pair_count(spark, sf_dir):
     docs = load(spark, "documents", sf_dir)
-    hist = Q.simhash_hamming_histogram(spark, sf_dir).collect()
+    hist = corpus.simhash_hamming_histogram(spark, sf_dir).collect()
     total = sum(r.n_pairs for r in hist)
     # candidate pairs at the full 48-bit threshold = all banded pairs
     all_pairs = dedup_op.simhash_near_dup_pairs(docs, max_hamming=48).count()
@@ -274,7 +274,7 @@ def test_simhash_histogram_mass_matches_pair_count(spark, sf_dir):
 
 def test_cluster_histogram_accounts_every_doc(spark, sf_dir):
     docs = load(spark, "documents", sf_dir)
-    hist = Q.dup_cluster_size_histogram(spark, sf_dir).collect()
+    hist = corpus.dup_cluster_size_histogram(spark, sf_dir).collect()
     assert sum(r.n_docs for r in hist) == docs.count()
     for r in hist:
         assert r.n_docs == r.cluster_size * r.n_clusters
@@ -283,7 +283,7 @@ def test_cluster_histogram_accounts_every_doc(spark, sf_dir):
 def test_lm_gap_test_half_is_harder(spark, sf_dir):
     """Held-out surprisal must exceed train surprisal for every source
     (the model has literally seen the train half)."""
-    rows = Q.lm_train_test_gap(spark, sf_dir).collect()
+    rows = corpus.lm_train_test_gap(spark, sf_dir).collect()
     assert len(rows) > 0
     for r in rows:
         assert r.generalization_gap > 0
@@ -318,7 +318,7 @@ def test_beam_pointing_antenna_zero_matches_scaled_base_cube(spark, sf_dir):
 
     src = {r.source_id: r for r in
            tpch_ms.source_table(spark, sf_dir).collect()}
-    rows = Q.beam_pointing_error_sampling(spark, sf_dir).collect()
+    rows = imaging.beam_pointing_error_sampling(spark, sf_dir).collect()
     assert len(rows) == len(src) * 7 * 7
     for r in rows[:40]:
         s = src[r.source_id]
@@ -332,7 +332,7 @@ def test_beam_pointing_antenna_zero_matches_scaled_base_cube(spark, sf_dir):
 def test_pca_power_iteration_matches_numpy_direction(spark, sf_dir):
     import numpy as np
 
-    out = Q.embedding_pca_power_iteration(spark, sf_dir).collect()
+    out = ann.embedding_pca_power_iteration(spark, sf_dir).collect()
     v = np.array([r.eigvec for r in sorted(out, key=lambda r: r.dim_idx)])
     lam = out[0].lambda_inf
     X = np.array(
@@ -370,7 +370,7 @@ def test_minhash_calibration_is_monotone_and_complete(spark, sf_dir):
     """More matching signatures must mean higher mean exact jaccard, and
     the per-level pair counts must sum to the LSH pair count."""
     docs = load(spark, "documents", sf_dir)
-    curve = Q.minhash_calibration_curve(spark, sf_dir).collect()
+    curve = corpus.minhash_calibration_curve(spark, sf_dir).collect()
     assert sum(r.n_pairs for r in curve) == dedup_op.minhash_lsh_pairs(docs).count()
     means = [r.mean_exact_jaccard for r in
              sorted(curve, key=lambda r: r.n_sig_match)]
@@ -406,12 +406,12 @@ def test_beam_dde_full_matches_python_recomputation(spark, sf_dir):
 
     bg = {
         (r.source_id, r.antenna, r.chan): r.beam_gain
-        for r in Q.beam_pointing_error_sampling(spark, sf_dir).collect()
+        for r in imaging.beam_pointing_error_sampling(spark, sf_dir).collect()
     }
     src = {r.source_id: r for r in tpch_ms.source_table(spark, sf_dir).collect()}
     out = {
         (r.row_id, r.antenna1, r.antenna2, r.chan): r
-        for r in Q.beam_dde_full_predict(spark, sf_dir).collect()
+        for r in imaging.beam_dde_full_predict(spark, sf_dir).collect()
     }
     vis_rows = tpch_ms.vis_table(spark, sf_dir).limit(400).collect()
     checked = 0

@@ -126,8 +126,9 @@ def test_zorder_box_scan_actually_skips_files(spark, sf_dir):
     """The uv-box query must open a strict subset of the z-ordered
     files (manifest-stats skipping), and its result must equal the
     unpruned filter — pruning is a pure I/O optimization."""
-    from codex_africanus_spark.queries import (
-        _ZORDER_BOX, _ensure_zorder_layout, registry,
+    from codex_africanus_spark.queries import registry
+    from codex_africanus_spark.queries.relational import (
+        _ZORDER_BOX, _ensure_zorder_layout,
     )
     from codex_africanus_spark.sources import snapshot as snap
 

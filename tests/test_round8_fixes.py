@@ -126,30 +126,30 @@ def test_noise_weight_expression_parity():
     """The Spark side quantizes (1/σ²)·1e6; the oracle must round the
     IDENTICAL double expression — (1.0/(σ·σ))·1e6, not 1e6/(σ·σ) —
     or a 1-ULP difference can flip the rounded BIGINT at a .5 boundary."""
-    import codex_africanus_spark.queries as q
+    from codex_africanus_spark.queries.msops import _NOISE_WEIGHTED_ORACLE
 
-    assert "ROUND((1.0 / (sigma * sigma)) * 1000000.0)" in q._NOISE_WEIGHTED_ORACLE
-    assert "ROUND(1000000.0 / (sigma * sigma))" not in q._NOISE_WEIGHTED_ORACLE
+    assert "ROUND((1.0 / (sigma * sigma)) * 1000000.0)" in _NOISE_WEIGHTED_ORACLE
+    assert "ROUND(1000000.0 / (sigma * sigma))" not in _NOISE_WEIGHTED_ORACLE
 
 
 def test_per_spec_transformer_resolves_and_is_required(spark, sf_dir):
     """The per-spec transformer override: with it, the custom term's
     missing `flux_nu` column is derived; without it, the same spec must
     fail schema validation (proving the transformer did the work)."""
-    from codex_africanus_spark import queries as q
     from codex_africanus_spark.plans import rime as rime_plan
+    from codex_africanus_spark.queries import radio
     from codex_africanus_spark.sources import tpch_ms
 
     vis = tpch_ms.vis_table(spark, sf_dir).limit(50)
     src = tpch_ms.source_table(spark, sf_dir)
     out = rime_plan.rime(
         "(Kpq, Bpq): [I,Q,U,V] -> [XX,XY,YX,YY]", vis, src,
-        terms={"B": q.SpectralFluxNuTerm},
-        transformers=(q.SpectralFluxTransformer,),
+        terms={"B": radio.SpectralFluxNuTerm},
+        transformers=(radio.SpectralFluxTransformer,),
     )
     assert out.limit(5).count() > 0
     with pytest.raises(ValueError, match="flux_nu"):
         rime_plan.rime(
             "(Kpq, Bpq): [I,Q,U,V] -> [XX,XY,YX,YY]", vis, src,
-            terms={"B": q.SpectralFluxNuTerm},
+            terms={"B": radio.SpectralFluxNuTerm},
         )

@@ -6,8 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from codex_africanus_spark import queries as q
-from codex_africanus_spark.queries import registry
+from codex_africanus_spark.queries import corpus, imaging, registry
 
 
 def test_delay_spectrum_parseval(spark, sf_dir):
@@ -39,7 +38,7 @@ def test_lsh_planner_scurve_properties():
     monotone nondecreasing in jaccard for every (b, r), and more bands
     at fixed b·r detect MORE at low similarity (the aggressiveness
     trade-off the planner exists to show)."""
-    rows = q._LSH_PLANNER_ROWS
+    rows = corpus._LSH_PLANNER_ROWS
     by_cfg = {}
     for b, r, d, p in rows:
         by_cfg.setdefault((b, r), {})[d] = p
@@ -75,7 +74,7 @@ def test_faceted_mosaic_matches_direct_predict(spark, sf_dir):
 
     vis = tpch_ms.vis_table(spark, sf_dir).filter(F.col("row_id") % 5 == 0)
     src = tpch_ms.source_table(spark, sf_dir)
-    K = float(q._FACET_K)
+    K = float(imaging._FACET_K)
     j = vis.crossJoin(F.broadcast(src))
     th = (
         F.lit(K)

@@ -154,7 +154,7 @@ def test_channel_interp_partial_cell_not_repaired(spark):
 
 
 def test_uv_taper_table_matches_gaussian(spark, sf_dir):
-    from codex_africanus_spark.queries import _TAPER_PPB
+    from codex_africanus_spark.queries.imaging import _TAPER_PPB
 
     for k, ppb in enumerate(_TAPER_PPB):
         mid = (k + 0.5) * 10.0
@@ -238,7 +238,7 @@ def test_markov_row_normalization(spark, sf_dir):
 
 
 def test_pbcor_mask_and_ratio(spark, sf_dir):
-    from codex_africanus_spark.queries import _PB_CUTOFF, _PB_R2
+    from codex_africanus_spark.queries.imaging import _PB_CUTOFF, _PB_R2
 
     def bg_exact(k):
         l = (k - 12) / 200.0
@@ -312,7 +312,7 @@ def test_gain_qa_closed_form(spark, sf_dir):
 
 
 def test_rag_packing_budget_and_order(spark, sf_dir):
-    from codex_africanus_spark.queries import _RAG_BUDGET
+    from codex_africanus_spark.queries.corpus import _RAG_BUDGET
 
     out = registry()["rag_context_packing"].fn(spark, sf_dir).collect()
     by_q = {}

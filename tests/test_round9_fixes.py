@@ -99,9 +99,9 @@ def test_av_align_zero_length_payload_guard():
     """The frames/wins builders filter nb > 0 before the sequence
     explode; sequence(0, nf-1) with nf=0 must be unreachable."""
     import inspect
-    from codex_africanus_spark import queries as q
+    from codex_africanus_spark.queries import corpus
 
-    src = inspect.getsource(q.multimodal_av_align_asof)
+    src = inspect.getsource(corpus.multimodal_av_align_asof)
     assert src.count('filter(F.col("nb") > 0)') >= 2
 
 

@@ -1,11 +1,7 @@
-"""Skew pre-split equivalence and the exactly-rounded fsum UDAF
-(ROADMAP quality backlog)."""
-
-import math
+"""Skew pre-split equivalence (ROADMAP quality backlog)."""
 
 import pyspark.sql.functions as F
 
-from codex_africanus_spark.functions.deterministic import fsum_udaf
 from codex_africanus_spark.operators import bda as bda_op
 from codex_africanus_spark.operators import skew
 from codex_africanus_spark.sources import tpch_ms
@@ -39,26 +35,6 @@ def test_salted_sessionize_narrow_buckets(spark, sf_dir):
         for r in skew.salted_sessionize(ev, bucket_us=600_000_000).collect()
     }
     assert salted == plain and len(plain) > 0
-
-
-def test_fsum_udaf_exactly_rounded(spark):
-    """Catastrophic-cancellation fixture: plain float sum loses the tail;
-    fsum returns the correctly-rounded true sum under any partitioning."""
-    rows = []
-    for g in range(4):
-        vals = [1e16, 3.14159, -1e16, 2.71828, 1e-9] * 7
-        rows += [(g, v) for v in vals]
-    df = spark.createDataFrame(rows, "g int, v double")
-    fsum = fsum_udaf()
-    got1 = {r.g: r.s for r in df.groupBy("g").agg(fsum("v").alias("s")).collect()}
-    got2 = {
-        r.g: r.s
-        for r in df.repartition(13).groupBy("g").agg(fsum("v").alias("s")).collect()
-    }
-    expected = math.fsum([1e16, 3.14159, -1e16, 2.71828, 1e-9] * 7)
-    assert got1 == got2
-    for g in range(4):
-        assert got1[g] == expected  # bit-exact, not approx
 
 
 def test_salted_sum_matches_plain(spark, sf_dir):

@@ -16,8 +16,6 @@ from pyspark.sql import functions as F
 
 from codex_africanus_spark.sources import snapshot as snap
 
-from tests.conftest import await_done
-
 
 @pytest.fixture()
 def root(tmp_path):
@@ -131,45 +129,6 @@ def test_partitioned_writes_pass_through(spark, root):
     assert n_files >= 1
     data_root = Path(root) / "data"
     assert all(p.suffix == ".parquet" for p in data_root.rglob("*.parquet"))
-
-
-def test_streaming_foreach_batch_exactly_once(spark, root, tmp_path):
-    """A replayed micro-batch (same batchId) must not double-append: the
-    manifest log records stream batch ids and skips duplicates."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src = tmp_path / "src"
-    src.mkdir()
-    pq.write_table(
-        pa.Table.from_pandas(
-            pd.DataFrame({"id": [1, 2, 3]}), preserve_index=False
-        ),
-        src / "a.parquet",
-    )
-    stream = spark.readStream.schema("id long").parquet(str(src))
-    committer = snap.foreach_batch_committer(root)
-    q = (
-        stream.writeStream.foreachBatch(committer)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_done(q)
-    assert snap.read_snapshot(spark, root).count() == 3
-    v_before = snap.latest_version(root)
-
-    # simulate the at-least-once replay: rerun batch 0 by hand
-    batch_df = spark.read.parquet(str(src))
-    committer(batch_df, 0)
-    assert snap.latest_version(root) == v_before, "replay must be a no-op"
-    assert snap.read_snapshot(spark, root).count() == 3
-
-    # a genuinely new batch id still commits
-    committer(batch_df, 1)
-    assert snap.read_snapshot(spark, root).count() == 6
-    assert snap.committed_batch_ids(root) == {0, 1}
 
 
 def test_incremental_reads_append_only(spark, root):

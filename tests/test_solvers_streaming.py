@@ -54,34 +54,6 @@ def test_spi_fit_recovers_catalogue(spark, sf_dir):
     np.testing.assert_allclose(out.i0_fit, src.flux_i, rtol=1e-5)
 
 
-def test_streaming_tumbling_matches_batch(spark, sf_dir, tmp_path):
-    """AvailableNow micro-batch stream result == batch query result
-    (Kappa parity)."""
-    stream = windowed.read_events_stream(spark, sf_dir)
-    agg = windowed.tumbling_window_stats(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("tumbling_test")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_done(q)
-    got = spark.sql(
-        "SELECT event_type, CAST(window_start AS LONG) AS hb, n_events, value_sum "
-        "FROM tumbling_test"
-    ).toPandas()
-    batch = registry()["events_tumbling_window"].fn(spark, sf_dir).toPandas()
-    assert len(got) == len(batch)
-    got = got.sort_values(["event_type", "hb"]).reset_index(drop=True)
-    batch = batch.sort_values(["event_type", "hour_bin"]).reset_index(drop=True)
-    np.testing.assert_array_equal(got.n_events.to_numpy(), batch.n_events.to_numpy())
-    np.testing.assert_allclose(got.value_sum.to_numpy(), batch.value_sum.to_numpy())
-    # window start = hour_bin * 3600
-    np.testing.assert_array_equal(got.hb.to_numpy(), batch.hour_bin.to_numpy() * 3600)
-
-
 def test_streaming_sliding_matches_batch(spark, sf_dir, tmp_path):
     """AvailableNow sliding-window stream == batch twin (Kappa parity);
     every event lands in exactly window/slide = 2 windows."""
@@ -109,23 +81,6 @@ def test_streaming_sliding_matches_batch(spark, sf_dir, tmp_path):
     np.testing.assert_array_equal(got.n_events.to_numpy(), batch.n_events.to_numpy())
     np.testing.assert_allclose(got.value_sum.to_numpy(), batch.value_sum.to_numpy())
     assert got.n_events.sum() == 2 * 1000  # 2 windows per event at sf0.001
-
-
-def test_streaming_session_windows_run(spark, sf_dir, tmp_path):
-    stream = windowed.read_events_stream(spark, sf_dir)
-    agg = windowed.session_window_stats(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("session_test")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_done(q)
-    n = spark.sql("SELECT count(*) FROM session_test").collect()[0][0]
-    total = spark.sql("SELECT sum(n_events) FROM session_test").collect()[0][0]
-    assert n > 0 and total == 1000  # every event lands in exactly one session
 
 
 def test_gauss_newton_bit_deterministic_across_partitioning(spark, sf_dir):

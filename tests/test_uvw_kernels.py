@@ -75,7 +75,6 @@ def test_bessel_jn_known_values():
 
 @pytest.mark.parametrize("maker,W,os", [
     (lambda: gk.sinc_kernel(3, 5), 3, 5),
-    (lambda: gk.hanning_sinc_kernel(5, oversample=3), 5, 3),
     (lambda: gk.kaiser_bessel_sinc_kernel(3, b=4.2, oversample=5), 3, 5),
 ])
 def test_kernels_normalized_peaked_at_origin(maker, W, os):
@@ -90,21 +89,6 @@ def test_kernels_normalized_peaked_at_origin(maker, W, os):
 def test_uspace_even_support_rejected():
     with pytest.raises(ValueError, match="odd"):
         gk.uspace(4)
-
-
-def test_pack_unpack_roundtrip():
-    k = gk.sinc_kernel(5, oversample=4)
-    assert np.array_equal(gk.unpack_kernel(gk.pack_kernel(k, 5, 4), 5, 4), k)
-
-
-def test_detaper_fft_matches_dft():
-    """Similarity-theorem FFT detaper == direct DFT sampling (the
-    reference keeps both, kernels.py:118-164)."""
-    k1 = gk.hanning_sinc_kernel(3, oversample=5)
-    K2d = np.outer(k1, k1)
-    fft_d = gk.detaper_fft(12, K2d, 3, 5)
-    dft_d = gk.detaper_dft(12, K2d, 3, 5)
-    np.testing.assert_allclose(fft_d, dft_d, rtol=1e-7, atol=1e-9)
 
 
 def test_taps_to_pairs_drops_padding():

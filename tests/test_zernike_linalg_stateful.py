@@ -1,12 +1,7 @@
 import numpy as np
-import pytest
 
 from codex_africanus_spark.functions import linalg as kla
 from codex_africanus_spark.operators import zernike as z_op
-from codex_africanus_spark.sources import tpch_ms
-from codex_africanus_spark.streaming import stateful, windowed
-
-from tests.conftest import await_done
 
 
 def test_zernike_matches_numpy(spark):
@@ -44,40 +39,3 @@ def test_kron_cholesky_property():
     dense = np.kron(As[0], As[1])
     Lk = np.kron(Ls[0], Ls[1])
     np.testing.assert_allclose(Lk @ Lk.T, dense, rtol=1e-9)
-
-
-def test_convex_hull_mask_square():
-    square = np.array([[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0]])
-    q = np.array([[0.5, 0.5], [2.0, 0.5], [-0.1, 0.2], [0.99, 0.01]])
-    np.testing.assert_array_equal(
-        kla.convex_hull_mask(square, q), [True, False, False, True]
-    )
-
-
-@pytest.mark.slow
-def test_stateful_running_totals(spark, sf_dir, tmp_path):
-    """applyInPandasWithState over the events stream: cumulative per-user
-    totals must equal the batch aggregate after AvailableNow drains."""
-    stream = windowed.read_events_stream(spark, sf_dir)
-    out = stateful.running_user_totals(stream.select("user_id", "value"))
-    q = (
-        out.writeStream.format("memory")
-        .queryName("stateful_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_done(q)
-    got = spark.sql(
-        "SELECT user_id, max(n_events) n, max(value_sum_q) vq FROM stateful_totals GROUP BY user_id"
-    ).toPandas().sort_values("user_id").reset_index(drop=True)
-    ev = tpch_ms.events_table(spark, sf_dir).toPandas()
-    batch = (
-        ev.groupby("user_id")
-        .agg(n=("event_id", "count"))
-        .reset_index()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    assert (got.n.to_numpy() == batch.n.to_numpy()).all()
