@@ -3,14 +3,14 @@
 The registered batch query `events_hourly_gap_fill` and the streaming
 incremental twin (streaming/gapfill.py) compose these SAME functions,
 so batch/stream parity holds by construction: the stream maintains the
-`hourly` frame incrementally (integer count merge — exact and
-commutative under any micro-batch split) and the gap statistics are
-recomputed by the identical `gap_fill_stats` on every step.
+`hourly` frame incrementally (the carry unioned into the batch's
+one aggregate — exact and commutative under any micro-batch split) and
+the gap statistics are recomputed by the identical `gap_fill_stats`.
 
 Scale: `hourly` is span-bounded ((types x hours), thousands of rows at
-any event cardinality) — the dense grid generator (data-dependent
-sequence + explode) runs at type grain, and nothing event-grain ever
-crosses it (plan-locked in tests/test_plans_scale.py).
+any event cardinality), and the statistics of each type's dense hour
+grid are read off it without generating the grid or joining
+(plan-locked in tests/test_plans_scale.py).
 """
 
 from __future__ import annotations
@@ -20,36 +20,39 @@ from pyspark.sql import functions as F
 
 HOUR_US = 3_600_000_000
 
+# Every state row has n >= 1 and a unique key, so a type's dense hour grid
+# has max(h) - min(h) + 1 hours, the rows are its non-gaps, and peak and
+# total are max(n) and sum(n). A null type never matches its own grid, so
+# all its hours are gaps with peak and total 0. (SQL strings: building
+# them is one call each, not one per operator.)
+_N_HOURS = "max(h) - min(h) + 1"
+_STATS = (
+    f"{_N_HOURS} AS n_hours",
+    f"IF(event_type IS NULL, {_N_HOURS}, {_N_HOURS} - count(1)) AS n_gap_hours",
+    "IF(event_type IS NULL, 0, max(n)) AS peak_hour_events",
+    "IF(event_type IS NULL, 0, sum(n)) AS total_events",
+)
 
-def hourly_counts(ev: DataFrame) -> DataFrame:
-    """Event-grain collapse to the (event_type, hour) state frame."""
-    return ev.groupBy(
-        "event_type", F.expr(f"ts_us DIV {HOUR_US}").alias("h")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
+
+def hourly_counts(ev: DataFrame, carry: DataFrame | None = None) -> DataFrame:
+    """Event-grain collapse to the (event_type, h, n) state frame; the
+    rows of a `carry` (an earlier state frame) add into the same
+    aggregate."""
+    rows = ev.selectExpr("event_type", f"ts_us DIV {HOUR_US} AS h", "1L AS n")
+    if carry is not None:
+        rows = rows.unionByName(carry)
+    return rows.groupBy("event_type", "h").agg(F.expr("sum(n) AS n"))
 
 
 def gap_fill_stats(hourly: DataFrame) -> DataFrame:
-    """Dense-grid gap statistics per type over a (event_type, h, n)
-    frame: sequence(min, max) + explode generates the grid, the sparse
-    counts left-join in, and only per-type statistics leave."""
-    bounds = hourly.groupBy("event_type").agg(
-        F.min("h").alias("h0"), F.max("h").alias("h1")
-    )
-    grid = bounds.select(
-        "event_type",
-        F.explode(F.sequence(F.col("h0"), F.col("h1"))).alias("h"),
-    )
-    filled = grid.join(hourly, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce(F.col("n"), F.lit(0)).alias("n")
-    )
+    """Statistics of each type's dense hour grid [min(h), max(h)], read
+    off the sparse rows in one aggregate (see `_STATS`); a null hour is on
+    no grid. At most one row per type: sorted in one partition, no range
+    exchange."""
     return (
-        filled.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_hours"),
-            F.count(F.when(F.col("n") == 0, 1)).cast("long")
-            .alias("n_gap_hours"),
-            F.max("n").cast("long").alias("peak_hour_events"),
-            F.sum("n").cast("long").alias("total_events"),
-        )
-        .orderBy("event_type")
+        hourly.where("h IS NOT NULL")
+        .groupBy("event_type")
+        .agg(*map(F.expr, _STATS))
+        .coalesce(1)
+        .sortWithinPartitions("event_type")
     )

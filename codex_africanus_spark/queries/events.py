@@ -2237,12 +2237,11 @@ def events_branch_dim_serving_join(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# r13 widening: GAP-FILLED time series — the dense-grid generator shape
-# (data-dependent sequence() + explode = a Generate node sized by an
-# aggregate, not a literal) left-joined back to the sparse hourly aggs.
-# The classic warehouse gap-fill; the registry's sequence() uses were
-# all literal-bounded. Output stays per-type (bounded) — the dense grid
-# is collapsed to gap statistics, never emitted raw.
+# r13 widening: GAP-FILLED time series — per-type statistics of the dense
+# hour grid. The oracle spells out the classic warehouse gap-fill (a
+# generate_series grid LEFT JOINed to the sparse hourly counts); Spark
+# reads the same statistics off the sparse counts in one aggregate, so
+# the oracle checks it independently. Output stays per-type (bounded).
 # ---------------------------------------------------------------------------
 
 _GAPFILL_ORACLE = _with_ms(
@@ -2277,12 +2276,8 @@ _GAPFILL_ORACLE = _with_ms(
 
 @register("events_hourly_gap_fill", _GAPFILL_ORACLE)
 def events_hourly_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filled hourly activity profile (see section comment): the
-    dense per-type hour grid comes from sequence(min, max) + explode —
-    grid size is span-bounded (hours, not events), the left join runs
-    at grid grain, and only per-type gap statistics leave the plan.
-    r13: built from the shared operators/gapfill.py core (ops
-    unchanged — the streaming incremental twin composes the same
-    functions, parity by construction)."""
+    """Gap-filled hourly activity profile (see section comment), built
+    from the shared operators/gapfill.py core: the streaming incremental
+    twin composes the same functions, parity by construction."""
     ev = tpch_ms.events_table(spark, sf_dir)
     return gapfill_op.gap_fill_stats(gapfill_op.hourly_counts(ev))

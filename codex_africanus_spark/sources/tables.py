@@ -44,9 +44,10 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     # group testdata) sources fan out; many-file sources are already split.
     try:
         files = list(df.inputFiles())
-        n_files = len(files)
     except Exception:
-        files, n_files = [], 0
+        files = []
+    if not files or len(files) >= max(2, target // 2):
+        return df
     # r13 (sf10 bench finding): a single LARGE multi-row-group file is
     # natively splittable — the scan yields ~size/maxPartitionBytes
     # tasks, and chaining the derivation onto those beats a full
@@ -57,49 +58,34 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     # split count from file sizes and skip the exchange when the scan
     # already splits >= 8 ways; the driver's small single-row-group
     # testdata (1 split) still fans out exactly as before.
-    if n_files and n_files < max(2, target // 2):
-        try:
-            import os as _os
+    try:
+        mpb = (
+            df.sparkSession._jsparkSession.sessionState().conf()
+            .filesMaxPartitionBytes()
+        )
+        local = [f[len("file:"):] if f.startswith("file:") else f
+                 for f in files]
+        if all(os.path.exists(p) for p in local):
+            total = sum(os.path.getsize(p) for p in local)
+            # cap by the real row-group count (a KB-scale footer
+            # read): one giant row group is ONE split whatever the
+            # byte math says — exactly the driver-testdata layout
+            # this exchange exists for
+            import pyarrow.parquet as _pq
 
-            raw = df.sparkSession.conf.get(
-                "spark.sql.files.maxPartitionBytes", str(128 << 20)
-            ).strip().lower()
-            units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-            num = raw.rstrip("bkmg")
-            suffix = raw[len(num):].rstrip("b")
-            mpb = int(num) * units.get(suffix, 1)
-            local = [f[len("file:"):] if f.startswith("file:") else f
-                     for f in files]
-            if all(_os.path.exists(p) for p in local):
-                total = sum(_os.path.getsize(p) for p in local)
-                # cap by the real row-group count (a KB-scale footer
-                # read): one giant row group is ONE split whatever the
-                # byte math says — exactly the driver-testdata layout
-                # this exchange exists for
-                import pyarrow.parquet as _pq
-
-                groups = sum(
-                    _pq.ParquetFile(p).metadata.num_row_groups
-                    for p in local
-                )
-                if min(-(-total // mpb), groups) >= 8:
-                    return df
-        except Exception:
-            pass  # unknown scheme/size -> keep the conservative fan-out
-    if n_files and n_files < max(2, target // 2):
-        # idempotence: inputFiles() still reports the source file after a
-        # repartition, so composed operators (vis_table → source_coherency
-        # both call fan_out) were stacking a SECOND full round-robin
-        # exchange of the fact rows. Walk the analyzed logical plan for a
-        # Repartition node that already meets the parallelism goal — a
-        # substring match would also trip on coalesce(1) (rendered as
-        # Repartition) and suppress a needed fan-out (r7 advice). Node
-        # walk, no plan render, no job; these are narrow near-source
-        # plans (a handful of nodes).
-        if _plan_has_repartition(df, target):
-            return df
-        return df.repartition(target)
-    return df
+            groups = sum(
+                _pq.ParquetFile(p).metadata.num_row_groups for p in local
+            )
+            if min(-(-total // mpb), groups) >= 8:
+                return df
+    except Exception:
+        pass  # unknown scheme/size -> keep the conservative fan-out
+    # idempotence: inputFiles() still reports the source file after a
+    # repartition, so a second fan_out of a composed frame must not stack
+    # another full exchange of the fact rows.
+    if _plan_has_repartition(df, target):
+        return df
+    return df.repartition(target)
 
 
 def _plan_has_repartition(df: DataFrame, target: int) -> bool:
@@ -217,7 +203,29 @@ def localize(df: DataFrame) -> DataFrame:
     return local_frame(df.sparkSession, df.toArrow(), df.schema)
 
 
+# Spark's inferred schema per parquet path, with the (name, size,
+# mtime_ns) of the data files it was inferred from: a rewritten file no
+# longer matches, so a stale entry is re-inferred, never used.
+_SCHEMAS: dict = {}
+
+
+def _data_files(path: str) -> tuple:
+    """(name, size, mtime_ns) of each local data file Spark reads under
+    `path`; empty for a remote or missing path."""
+    walk = ([(os.path.dirname(path), [], [os.path.basename(path)])]
+            if os.path.isfile(path) else os.walk(path))
+    out = []
+    for root, dirs, files in walk:
+        dirs[:] = [d for d in dirs if d[0] not in "_."]
+        for full in (os.path.join(root, f) for f in files if f[0] not in "_."):
+            st = os.stat(full)
+            out.append((full, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    """Read a testdata table, declaring the schema Spark inferred (one
+    job) on the first read of the same files: a warm read runs no job."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}")
     # TIMESTAMP(NANOS) columns require nanosAsLong on this Spark version.
@@ -225,4 +233,13 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = os.path.abspath(path)
+    files = _data_files(key)
+    memo = _SCHEMAS.get(key)
+    if files and memo and memo[0] == files:
+        return spark.read.schema(memo[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if files:
+        _SCHEMAS[key] = (files, df.schema)
+    return df

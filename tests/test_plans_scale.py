@@ -912,14 +912,21 @@ def test_r13_nullsafe_join_is_broadcast_not_smj(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_r13_gap_fill_generate_at_grid_grain(spark, sf_dir):
-    """events_hourly_gap_fill: the dense grid comes from ONE Generate
-    (explode of a data-dependent sequence) at type grain; the event scan
-    aggregates BEFORE the grid join, so nothing event-grain crosses the
-    generator; no cartesian."""
+def test_r13_gap_fill_stats_grid_free(spark, sf_dir):
+    """events_hourly_gap_fill: the gap statistics are read off the sparse
+    (event_type, hour) counts by one per-type aggregate — no generated
+    grid, no join, no cartesian — and the event scan is aggregated to
+    (event_type, hour) BEFORE the per-type aggregate, so nothing
+    event-grain reaches it."""
     plan = plan_of(registry()["events_hourly_gap_fill"].fn(spark, sf_dir))
-    assert plan.count("Generate explode") == 1
+    assert "Generate" not in plan
+    assert "Join" not in plan
     assert "CartesianProduct" not in plan
+    # the executed plan prints consumers above their inputs
+    per_type = re.search(r"HashAggregate\(keys=\[event_type#\d+\]", plan)
+    hourly = re.search(r"HashAggregate\(keys=\[event_type#\d+, h#", plan)
+    assert per_type and hourly
+    assert per_type.start() < hourly.start() < plan.index("FileScan")
 
 
 def test_r13_watermark_window_drop_shape(spark, sf_dir):

@@ -1,9 +1,9 @@
-"""Streaming gap-fill twin (r13): incremental grid maintenance must
-reproduce the registered batch query BIT-EXACTLY across arbitrary
-micro-batch splits — including splits that EXTEND a type's hour span
-retroactively (the grid re-derives from merged bounds every step) —
-and the sink must survive a driver restart (durable carry) and batch
-replay (marker idiom)."""
+"""Streaming gap-fill twin (r13): incremental maintenance of the hourly
+counts must reproduce the registered batch query BIT-EXACTLY across
+arbitrary micro-batch splits — including splits that EXTEND a type's
+hour span retroactively (the statistics re-derive from the merged
+counts every step) — and the sink must survive a driver restart
+(durable carry) and batch replay (marker idiom)."""
 
 import os
 
@@ -15,6 +15,8 @@ from codex_africanus_spark.operators import gapfill as gapfill_op
 from codex_africanus_spark.queries import registry
 from codex_africanus_spark.sources import tpch_ms
 from codex_africanus_spark.streaming import gapfill as sgap
+
+from tests.conftest import fuzz_compare
 
 EV_SCHEMA = (
     "event_id long, ts_us long, user_id long, event_type string, value double"
@@ -158,3 +160,89 @@ def test_streaming_gapfill_sink_exactly_once_and_restart(
             rec = json.load(fh)
         summary = os.path.join(out_dir, f"summary_batch_{rec['batch_id']}")
         assert rec["rows"] == spark.read.parquet(summary).count()
+
+def _edge_events_dir(tmp_path):
+    """An events table with a null event_type (hours 0, 0, 3), a type
+    seen in one hour only (5), a type with interior gaps (1, 1, 2, 6, 9)
+    plus one event without a timestamp. Event ids are shuffled against
+    time, so later micro-batches extend spans backward."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0, hour = 1_704_067_200_000_000, gapfill_op.HOUR_US
+    rows = (
+        [(None, 0), (None, 0), (None, 3)]
+        + [("single", 5)] * 3
+        + [("gappy", h) for h in (1, 1, 2, 6, 9)]
+        + [("gappy", None)]
+    )
+    order = np.random.default_rng(5).permutation(len(rows))
+    rows = [rows[i] for i in order]
+    ts = [None if h is None else t0 + h * hour + 17 * i
+          for i, (_, h) in enumerate(rows)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(rows)), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array([7] * len(rows), pa.int64()),
+            "event_type": pa.array([t for t, _ in rows], pa.string()),
+            "value": pa.array([1.25] * len(rows), pa.float64()),
+            "props": pa.array(["{}"] * len(rows), pa.string()),
+        }),
+        tmp_path / "events.parquet",
+    )
+    return str(tmp_path), len(rows)
+
+
+@pytest.mark.parametrize("splits", [1, 2, 3])
+def test_gapfill_null_type_and_single_hour_edges(spark, tmp_path, splits):
+    """The batch query (1 split) and the streaming twin (2 and 3 splits)
+    against the DuckDB oracle on the edge groups: a null type counts
+    every hour of its span as a gap with peak and total 0, a one-hour
+    type has no gap, an event without a timestamp lies on no grid."""
+    import duckdb
+
+    d, n = _edge_events_dir(tmp_path)
+    if splits == 1:
+        got = registry()["events_hourly_gap_fill"].fn(spark, d)
+    else:
+        ev = tpch_ms.events_table(spark, d)
+        carry = sgap.empty_carry(spark)
+        for part in np.array_split(np.arange(n), splits):
+            batch = ev.filter(
+                ev.event_id.between(int(part[0]), int(part[-1]))
+            )
+            got, carry = sgap.gap_fill_increment(batch, carry)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet'")
+    want = con.execute(registry()["events_hourly_gap_fill"].oracle).df()
+    assert want["event_type"].isna().sum() == 1  # the edge is exercised
+    fuzz_compare(got.toPandas(), want, f"gap fill, {splits} split(s)")
+
+
+def test_gapfill_increment_job_budget(spark, sf_dir):
+    """One increment is one aggregate collected to the driver: at most 2
+    Spark jobs (AQE runs a shuffle-map job and a result job). Publishing
+    its summary aggregates the driver-held carry in one partition: 1 job."""
+    sc = spark.sparkContext
+    ev = tpch_ms.events_table(spark, sf_dir)
+    carry = sgap.empty_carry(spark)
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    n, (summary, carry) = jobs(
+        "gapfill-increment", lambda: sgap.gap_fill_increment(ev, carry)
+    )
+    assert n <= 2, f"increment launched {n} jobs"
+    n, _ = jobs(
+        "gapfill-summary",
+        lambda: summary.write.format("noop").mode("overwrite").save(),
+    )
+    assert n <= 1, f"summary write launched {n} jobs"

@@ -26,7 +26,7 @@ replay markers and time nothing). ONE JSON line on stdout:
    "queries": {name: sec}, "sf": ..., "batches": N, "runs": N}
 
 Usage: python tools/bench_streaming.py [SF_DIR]
-Baseline: ROADMAP.md "Streaming CDC carry handoff".
+Baseline: the latest run recorded in CHANGES.md.
 """
 
 import json
