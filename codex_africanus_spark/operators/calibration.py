@@ -244,8 +244,11 @@ def compute_and_corrupt_vis(
     measured and REJECTED (114.5 s — `aggregate()` is CodegenFallback,
     interpreted per element at fact-table volume).
     """
-    n_dir = src.count()  # tiny catalogue by contract (reference holds it
-    # in memory too); bounds the unrolled codegen below
+    from codex_africanus_spark.sources.tables import collect_small
+
+    # tiny catalogue by contract (reference holds it in memory too), read
+    # once per file version; bounds the unrolled codegen below
+    n_dir = len(collect_small(src.select("source_id"), FOLD_MAX_DIRS))
     if n_dir == 0 or n_dir > FOLD_MAX_DIRS:
         return _cc_vis_expand(vis, src, gains, scale)
     return _cc_vis_folded(vis, src, gains, scale, n_dir)

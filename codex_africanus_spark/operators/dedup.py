@@ -222,12 +222,11 @@ def minhash_signatures(docs: DataFrame, keep: tuple = ()) -> DataFrame:
     return hashed.select("doc_id", *keep, *sig_cols)
 
 
-def lsh_banded(docs: DataFrame, keep: tuple = ()) -> DataFrame:
+def lsh_banded(docs: DataFrame) -> DataFrame:
     """(doc_id, sig_0..k, band, band_key): one posexplode over the array
     of band keys — the shared candidate-generation frame for LSH pairing
-    and for seeding connected-components labels. `keep` columns ride
-    through (see minhash_signatures)."""
-    sigs = minhash_signatures(docs, keep=keep)
+    and for seeding connected-components labels."""
+    sigs = minhash_signatures(docs)
     band_keys = F.array(
         *[
             F.concat_ws("_", F.col(f"sig_{2 * b}"), F.col(f"sig_{2 * b + 1}"))
@@ -236,7 +235,6 @@ def lsh_banded(docs: DataFrame, keep: tuple = ()) -> DataFrame:
     )
     return sigs.select(
         "doc_id",
-        *keep,
         *[F.col(f"sig_{k}") for k in range(len(MINHASH_A))],
         F.posexplode(band_keys).alias("band", "band_key"),
     )
@@ -2262,10 +2260,10 @@ def para_units(docs: DataFrame, keep: tuple = ()) -> DataFrame:
     )
 
 
-def para_banded_from_units(units: DataFrame, keep: tuple = ()) -> DataFrame:
+def para_banded_from_units(units: DataFrame) -> DataFrame:
     """Band-keyed MinHash frame of paragraph units. Pure projections."""
     hashed = units.select(
-        "uid", "doc_id", *keep,
+        "uid", "doc_id",
         F.transform(word_3gram_shingles("ptext"), hash31).alias("hs"),
     )
     sig_cols = [
@@ -2274,7 +2272,7 @@ def para_banded_from_units(units: DataFrame, keep: tuple = ()) -> DataFrame:
         ).alias(f"sig_{i}")
         for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     ]
-    sigs = hashed.select("uid", "doc_id", *keep, *sig_cols)
+    sigs = hashed.select("uid", "doc_id", *sig_cols)
     band_keys = F.array(
         *[
             F.concat_ws("_", F.col(f"sig_{2 * b}"), F.col(f"sig_{2 * b + 1}"))
@@ -2282,7 +2280,7 @@ def para_banded_from_units(units: DataFrame, keep: tuple = ()) -> DataFrame:
         ]
     )
     return sigs.select(
-        "uid", "doc_id", *keep,
+        "uid", "doc_id",
         *[F.col(f"sig_{k}") for k in range(len(MINHASH_A))],
         F.posexplode(band_keys).alias("band", "band_key"),
     )

@@ -39,8 +39,11 @@ def dense_or_distinct_bins(
     `distinct` when the axis is sparse or wide (a dense range over a
     10⁶-wide time axis would silently explode the synthesized
     bins×ant×chan×dir gains table). Empty/fully-filtered input yields an
-    empty axis rather than a TypeError on a None bound."""
-    lo, hi = df.agg(F.min(col), F.max(col)).collect()[0]
+    empty axis rather than a TypeError on a None bound. The bounds are
+    read once per file version (`tables.collect_small`)."""
+    from codex_africanus_spark.sources.tables import collect_small
+
+    lo, hi = collect_small(df.agg(F.min(col), F.max(col)), 1)[0]
     spark = df.sparkSession
     if lo is None:
         return spark.range(0).select(F.col("id").alias(col))

@@ -64,6 +64,12 @@ CONFS: tuple[tuple[str, str], ...] = (
     # external session they stay whatever its builder chose
     ("spark.ui.enabled", "false"),
     ("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")),
+    # With DataFrame debugging on, PySpark wraps every Column operator and
+    # function in extra py4j calls and an `inspect` stack walk to record
+    # its Python call site (a warm predict_vis_point_gauss build: 311
+    # py4j calls with it, 271 without). The cost: a DataFrame error no
+    # longer names the Python line that built the failing expression.
+    ("spark.python.sql.dataFrameDebugging.enabled", "false"),
 )
 
 

@@ -9,7 +9,11 @@ filters early so they appear in PushedFilters.
 from __future__ import annotations
 
 import os
+import threading
+from urllib.parse import unquote, urlparse
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -126,12 +130,16 @@ def scan_twin(df: DataFrame) -> DataFrame:
     for nothing: partial aggregation already collapses the scan to
     O(#groups) rows per task, so the pre-aggregation exchange is pure
     shuffle cost (guide §2.4 — remove shuffles outright). Builders that
-    fan out attach the unfanned projection as `_scan_twin`; it holds the
-    IDENTICAL row multiset (same scan, same projection, no repartition),
-    so any aggregate computed over the twin is value-identical. Falls
-    back to `df` itself when no twin was attached (arbitrary caller
-    frames, filtered lineages — behavior unchanged)."""
-    return getattr(df, "_scan_twin", df)
+    fan out attach the unfanned projection as `_scan_twin`, either as a
+    frame or as a no-argument function that builds it on first use; it
+    holds the IDENTICAL row multiset (same scan, same projection, no
+    repartition), so any aggregate computed over the twin is
+    value-identical. Falls back to `df` itself when no twin was attached
+    (arbitrary caller frames, filtered lineages — behavior unchanged)."""
+    twin = getattr(df, "_scan_twin", df)
+    if callable(twin):
+        twin = df._scan_twin = twin()
+    return twin
 
 
 def fast_row_count(df: DataFrame) -> int:
@@ -243,3 +251,65 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
     if files:
         _SCHEMAS[key] = (files, df.schema)
     return df
+
+
+# Small collected frames, oldest first: (SparkContext, input files,
+# frame, rows). The input files are `_data_files` entries for every file
+# the frame reads, so a rewritten file misses, and a hit must also have
+# the same semantics as the stored frame, so another plan over the same
+# files misses too.
+_SMALL: list = []
+_SMALL_MAX = 8
+_SMALL_LOCK = threading.Lock()
+
+
+def _frame_files(frame: DataFrame):
+    """`_data_files` entries for every input file of `frame`, or None
+    when the files do not fix its rows: a leaf that is not a file scan
+    (a LocalRelation, a range), a remote or missing file, or a
+    nondeterministic plan."""
+    try:
+        plan = frame._jdf.queryExecution().analyzed()
+        if not plan.deterministic():
+            return None
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if (leaf.getClass().getSimpleName() != "LogicalRelation"
+                    or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"):
+                return None
+        files = []
+        for uri in frame.inputFiles():
+            url = urlparse(uri)
+            path = unquote(url.path)
+            if url.scheme not in ("", "file") or not os.path.isfile(path):
+                return None
+            files += _data_files(path)
+    except (Py4JError, PySparkException, OSError):
+        return None
+    return tuple(sorted(files)) or None
+
+
+def collect_small(frame: DataFrame, cap: int):
+    """The collected rows of a small frame, at most `cap` + 1 of them
+    (`cap` + 1 rows means "more than `cap`").
+
+    A complete result (≤ `cap` rows) is kept, and a later call on a frame
+    with the same semantics over the same unchanged files returns it
+    without a job, whatever its `cap`, so callers apply their size gates
+    to the result. Frames whose rows the files do not fix are collected
+    every time."""
+    sc = frame.sparkSession.sparkContext
+    files = _frame_files(frame)
+    with _SMALL_LOCK:
+        _SMALL[:] = [e for e in _SMALL if e[0] is sc]
+        stored = [e for e in _SMALL if e[1] == files] if files else []
+    for entry in stored:
+        if frame.sameSemantics(entry[2]):
+            return entry[3]
+    rows = frame.limit(cap + 1).collect()
+    if files is not None and len(rows) <= cap:
+        with _SMALL_LOCK:
+            _SMALL.append((sc, files, frame, rows))
+            del _SMALL[:-_SMALL_MAX]
+    return rows

@@ -7,9 +7,14 @@ source catalogue) from the synthetic tables with *engine-independent
 integer/float arithmetic*, so every astronomy operator can be demonstrated
 as a query whose DuckDB oracle derives the identical frame.
 
-Each builder has a paired `*_SQL` CTE string. The Spark expression and the
-SQL are kept textually adjacent and covered by tests/test_derived_frames.py
-which asserts value equality against DuckDB at sf0.001.
+Each builder is one `selectExpr` over Spark SQL expression strings, and
+its DuckDB mirror, a paired `*_SQL` CTE string, sits right below it;
+tests/test_derived_frames.py asserts value equality between the two at
+sf0.001. The strings build the same analyzed plan the equivalent Column
+trees would, with one parse instead of a py4j round trip per operator,
+so they keep the Column trees' operand order and association and write
+double literals with a `D` suffix (a bare `10.0` is a DECIMAL in Spark
+SQL).
 
 Scale note: `vis` derives 1:1 from lineitem (the fact table) with pure
 narrow projections — no shuffle, no UDF — so at 100 TB this layer is free:
@@ -42,38 +47,37 @@ def vis_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codex_africanus_spark.sources.tables import fan_out
 
     raw = load(spark, "lineitem", sf_dir)
-    out = _vis_select(fan_out(raw))
+    exprs = _vis_exprs(epoch_us_sql(raw, "l_shipdate"))
+    out = fan_out(raw).selectExpr(*exprs)
     # unfanned twin (identical rows, no round-robin exchange) for
-    # consumers that only need a tiny aggregate — see tables.scan_twin
-    out._scan_twin = _vis_select(raw)
+    # consumers that only need a tiny aggregate, built on first use —
+    # see tables.scan_twin
+    out._scan_twin = lambda: raw.selectExpr(*exprs)
     return out
 
 
-def _vis_select(li: DataFrame) -> DataFrame:
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-    a = (F.col("l_suppkey") % N_ANT).cast("int")
-    b = (F.col("l_partkey") % N_ANT).cast("int")
-    chan = (F.col("l_linenumber") - 1).cast("int")
-    return li.select(
-        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("row_id"),
-        (epoch_us_expr(li, "l_shipdate") / F.lit(1000000))
-        .cast("long")
-        .cast("double")
-        .alias("time"),
-        F.least(a, b).alias("antenna1"),
-        F.greatest(a, b).alias("antenna2"),
-        ((cents % 2001 - 1000) / F.lit(10.0)).alias("u"),
-        (((F.col("l_partkey") * 37) % 2001 - 1000) / F.lit(10.0)).alias("v"),
-        (((F.col("l_suppkey") * 73) % 201 - 100) / F.lit(10.0)).alias("w"),
-        chan.alias("chan"),
-        (F.lit(REF_FREQ) * (1 + chan / F.lit(8.0))).alias("frequency"),
-        (F.col("l_orderkey") % 13 == 0).alias("flag_row"),
-        ((F.col("l_orderkey") + F.col("l_linenumber")) % 11 == 0).alias("flag"),
-        (F.lit(1.0) + (F.col("l_orderkey") % 5)).alias("weight"),
-        ((F.lit(1.0) + (F.col("l_partkey") % 3)) / F.lit(2.0)).alias("sigma"),
-        F.col("l_quantity").alias("vis_re"),
-        ((cents % 100) / F.lit(10.0)).alias("vis_im"),
-        F.col("l_quantity").alias("interval"),
+def _vis_exprs(epoch_us: str) -> tuple[str, ...]:
+    cents = "CAST(round(l_extendedprice * 100) AS BIGINT)"
+    a = f"CAST(l_suppkey % {N_ANT} AS INT)"
+    b = f"CAST(l_partkey % {N_ANT} AS INT)"
+    chan = "CAST(l_linenumber - 1 AS INT)"
+    return (
+        "l_orderkey * 8 + l_linenumber AS row_id",
+        f"CAST(CAST(({epoch_us}) / 1000000 AS BIGINT) AS DOUBLE) AS time",
+        f"least({a}, {b}) AS antenna1",
+        f"greatest({a}, {b}) AS antenna2",
+        f"({cents} % 2001 - 1000) / 10.0D AS u",
+        "((l_partkey * 37) % 2001 - 1000) / 10.0D AS v",
+        "((l_suppkey * 73) % 201 - 100) / 10.0D AS w",
+        f"{chan} AS chan",
+        f"{REF_FREQ!r}D * ({chan} / 8.0D + 1) AS frequency",
+        "l_orderkey % 13 = 0 AS flag_row",
+        "(l_orderkey + l_linenumber) % 11 = 0 AS flag",
+        "1.0D + l_orderkey % 5 AS weight",
+        "(1.0D + l_partkey % 3) / 2.0D AS sigma",
+        "l_quantity AS vis_re",
+        f"({cents} % 100) / 10.0D AS vis_im",
+        "l_quantity AS interval",
     )
 
 
@@ -103,25 +107,24 @@ VIS_SQL = """
 # --------------------------------------------------------------------------
 
 def source_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    na = load(spark, "nation", sf_dir)
-    k = F.col("n_nationkey").cast("long")
-    l = (k - 12) / F.lit(200.0)
-    m = ((k * 7) % 25 - 12) / F.lit(250.0)
-    return na.select(
-        k.cast("int").alias("source_id"),
-        l.alias("l"),
-        m.alias("m"),
-        F.sqrt(F.lit(1.0) - l * l - m * m).alias("n"),
-        (F.lit(1.0) + (k % 5)).alias("flux_i"),
-        ((k % 3 - 1) / F.lit(4.0)).alias("flux_q"),
-        (((k * 3) % 5 - 2) / F.lit(8.0)).alias("flux_u"),
-        (((k * 11) % 7 - 3) / F.lit(10.0)).alias("flux_v"),
-        ((k % 7 - 3) / F.lit(10.0)).alias("spi"),
-        F.lit(REF_FREQ).alias("ref_freq"),
-        F.when(k % 3 == 0, F.lit("GAUSSIAN")).otherwise(F.lit("POINT")).alias("source_type"),
-        ((1 + k % 4) * F.lit(4.84813681109536e-6)).alias("emaj"),
-        ((1 + k % 4) * F.lit(4.84813681109536e-6) * F.lit(0.5)).alias("emin"),
-        (k * F.lit(0.3)).alias("position_angle"),
+    k = "CAST(n_nationkey AS BIGINT)"
+    l = f"({k} - 12) / 200.0D"
+    m = f"(({k} * 7) % 25 - 12) / 250.0D"
+    return load(spark, "nation", sf_dir).selectExpr(
+        f"CAST({k} AS INT) AS source_id",
+        f"{l} AS l",
+        f"{m} AS m",
+        f"sqrt(1.0D - ({l}) * ({l}) - ({m}) * ({m})) AS n",
+        f"1.0D + {k} % 5 AS flux_i",
+        f"({k} % 3 - 1) / 4.0D AS flux_q",
+        f"(({k} * 3) % 5 - 2) / 8.0D AS flux_u",
+        f"(({k} * 11) % 7 - 3) / 10.0D AS flux_v",
+        f"({k} % 7 - 3) / 10.0D AS spi",
+        f"{REF_FREQ!r}D AS ref_freq",
+        f"CASE WHEN {k} % 3 = 0 THEN 'GAUSSIAN' ELSE 'POINT' END AS source_type",
+        f"({k} % 4 + 1) * 4.84813681109536E-6D AS emaj",
+        f"({k} % 4 + 1) * 4.84813681109536E-6D * 0.5D AS emin",
+        f"{k} * 0.3D AS position_angle",
     )
 
 
@@ -149,24 +152,27 @@ SOURCE_SQL = """
 # gains table  (antenna × chan; T4 analogue, diagonal complex gain)
 # --------------------------------------------------------------------------
 
+def _axis(spark: SparkSession, n: int, name: str) -> DataFrame:
+    """0..n-1 as one INT column."""
+    return spark.range(n).selectExpr(f"CAST(id AS INT) AS {name}")
+
+
 def gains_table(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     """Small dimension table (n_ant × n_chan rows) — always broadcast."""
-    ant = spark.range(N_ANT).select(F.col("id").cast("int").alias("antenna"))
-    chan = spark.range(N_CHAN_BASE - 1).select(F.col("id").cast("int").alias("chan"))
-    g = ant.crossJoin(chan)
-    phase = (F.col("antenna") * 7 + F.col("chan")) * F.lit(0.05)
-    phase_y = phase + F.lit(0.1)
-    amp = F.lit(1.0) + F.col("antenna") / F.lit(50.0) + F.col("chan") / F.lit(100.0)
+    g = _axis(spark, N_ANT, "antenna").crossJoin(_axis(spark, N_CHAN_BASE - 1, "chan"))
+    phase = "(antenna * 7 + chan) * 0.05D"
+    phase_y = f"{phase} + 0.1D"
+    amp = "(1.0D + antenna / 50.0D + chan / 100.0D)"
     # trig differs at 1 ULP between JVM Math and libm — quantize to 9dp so
     # the frame is engine-reproducible (both engines round half-away-from-0)
-    return g.select(
+    return g.selectExpr(
         "antenna",
         "chan",
-        F.round(amp * F.cos(phase), 9).alias("gain_re"),
-        F.round(amp * F.sin(phase), 9).alias("gain_im"),
+        f"round({amp} * cos({phase}), 9) AS gain_re",
+        f"round({amp} * sin({phase}), 9) AS gain_im",
         # second polarization (diagonal 2×2 Jones: gx ≠ gy)
-        F.round(amp * F.cos(phase_y), 9).alias("gain_y_re"),
-        F.round(amp * F.sin(phase_y), 9).alias("gain_y_im"),
+        f"round({amp} * cos({phase_y}), 9) AS gain_y_re",
+        f"round({amp} * sin({phase_y}), 9) AS gain_y_im",
     )
 
 
@@ -191,13 +197,12 @@ def antenna_table(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     """N_ANT rows of deterministic ITRF-ish XYZ near a southern-hemisphere
     site (KAT-7-like geocentric magnitudes) — integer-derived offsets so
     the frame is engine-reproducible without trig."""
-    a = spark.range(N_ANT).select(F.col("id").cast("int").alias("antenna"))
-    k = F.col("antenna").cast("long")
-    return a.select(
+    k = "CAST(antenna AS BIGINT)"
+    return _axis(spark, N_ANT, "antenna").selectExpr(
         "antenna",
-        (F.lit(5109224.0) + k * F.lit(13.5)).alias("ant_x"),
-        (F.lit(2006790.0) + ((k * k) % 11) * F.lit(7.25)).alias("ant_y"),
-        (F.lit(-3239100.0) + k * F.lit(5.75)).alias("ant_z"),
+        f"5109224.0D + {k} * 13.5D AS ant_x",
+        f"2006790.0D + (({k} * {k}) % 11) * 7.25D AS ant_y",
+        f"-3239100.0D + {k} * 5.75D AS ant_z",
     )
 
 
@@ -225,30 +230,24 @@ def dde_gains_table(
     the reference's `unique_time` axis, utils.py:45-70); `dirs` carries one
     `source_id` per calibration direction. The product is still a small
     dimension table (bins × 7 ant × 7 chan × n_dir) — always broadcast."""
-    ant = spark.range(N_ANT).select(F.col("id").cast("int").alias("antenna"))
-    chan = spark.range(N_CHAN_BASE - 1).select(F.col("id").cast("int").alias("chan"))
-    g = time_bins.crossJoin(ant).crossJoin(chan).crossJoin(dirs.select("source_id"))
+    g = (
+        time_bins.crossJoin(_axis(spark, N_ANT, "antenna"))
+        .crossJoin(_axis(spark, N_CHAN_BASE - 1, "chan"))
+        .crossJoin(dirs.select("source_id"))
+    )
     amp = (
-        F.lit(1.0)
-        + F.col("antenna") / F.lit(40.0)
-        + F.col("chan") / F.lit(90.0)
-        + F.col("source_id") / F.lit(30.0)
-        + (F.col("time_bin") % 7) / F.lit(60.0)
+        "(1.0D + antenna / 40.0D + chan / 90.0D + source_id / 30.0D"
+        " + (time_bin % 7) / 60.0D)"
     )
-    ph = (
-        (F.col("time_bin") % 5) * F.lit(0.13)
-        + F.col("antenna") * F.lit(0.11)
-        + F.col("chan") * F.lit(0.07)
-        + F.col("source_id") * F.lit(0.19)
-    )
+    ph = "(time_bin % 5) * 0.13D + antenna * 0.11D + chan * 0.07D + source_id * 0.19D"
     # 9dp quantization: engine-reproducible trig (see gains_table note)
-    return g.select(
+    return g.selectExpr(
         "time_bin",
         "antenna",
         "chan",
         "source_id",
-        F.round(amp * F.cos(ph), 9).alias("g_re"),
-        F.round(amp * F.sin(ph), 9).alias("g_im"),
+        f"round({amp} * cos({ph}), 9) AS g_re",
+        f"round({amp} * sin({ph}), 9) AS g_im",
     )
 
 
@@ -274,7 +273,7 @@ def dde_gains_sql(time_bins_cte: str, dirs_cte: str) -> str:
 # events-as-stream table (timestamps as exact integer microseconds)
 # --------------------------------------------------------------------------
 
-def epoch_us_expr(df: DataFrame, col: str) -> Column:
+def epoch_us_sql(df: DataFrame, col: str) -> str:
     """Exact integer epoch-µs from whatever physical type a timestamp
     column landed as: TIMESTAMP(MICROS) parquet reads as timestamp_ntz
     (or timestamp when NTZ inference is off — internally UTC µs either
@@ -284,25 +283,23 @@ def epoch_us_expr(df: DataFrame, col: str) -> Column:
     the session zone if the engine confs ever fail to apply)."""
     t = dict(df.dtypes).get(col)
     if t == "timestamp_ntz":
-        return F.expr(
-            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})"
-        )
+        return f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})"
     if t == "timestamp":
-        return F.unix_micros(F.col(col))
-    return F.expr(f"{col} DIV 1000")  # nanos-as-long legacy read
+        return f"unix_micros({col})"
+    return f"{col} DIV 1000"  # nanos-as-long legacy read
 
 
 def events_ts_us(ev: DataFrame) -> Column:
-    return epoch_us_expr(ev, "ts")
+    return F.expr(epoch_us_sql(ev, "ts"))
 
 
 def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with ts as exact integer epoch-microseconds — the common
     exact grid between Spark and the DuckDB oracle (see events_ts_us)."""
     ev = load(spark, "events", sf_dir)
-    return ev.select(
+    return ev.selectExpr(
         "event_id",
-        events_ts_us(ev).alias("ts_us"),
+        f"{epoch_us_sql(ev, 'ts')} AS ts_us",
         "user_id",
         "event_type",
         "value",

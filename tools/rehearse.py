@@ -8,7 +8,8 @@ Usage:
     cd /tmp && python /root/repo/tools/rehearse.py [SF_DIR] [name1,name2,...]
     # default SF_DIR /root/testdata/sf0.01 (the driver's correctness scale);
     # no names = full registry; the literal name list `--tier1` expands
-    # to TIER1 below (the sf1.0 sweep membership).
+    # to TIER1 below (the sf1.0 sweep membership). Exit status: 0 all ok,
+    # 1 some query failed, 2 a name is not in the registry (nothing runs).
 """
 import importlib.util
 import sys
@@ -68,6 +69,18 @@ ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 if ONLY == ["--tier1"]:
     ONLY = list(TIER1)
 
+spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+mod = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(mod)
+
+q, o = mod.queries(), mod.oracle_sql()
+names = ONLY if ONLY else list(q)
+unknown = [n for n in names if n not in q]
+if unknown:
+    # a typo is a usage error, not a query failure: stop before any Spark work
+    print("unknown query names:", ", ".join(unknown), file=sys.stderr)
+    sys.exit(2)
+
 spark = (
     SparkSession.builder.master("local[32]")
     .config("spark.sql.shuffle.partitions", "32")
@@ -75,11 +88,6 @@ spark = (
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
-mod = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(mod)
-
-q, o = mod.queries(), mod.oracle_sql()
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
@@ -98,7 +106,6 @@ def dtype_class(dt):
     return {"i": "int", "u": "int", "f": "float", "M": "datetime"}.get(kind, "object")
 
 
-names = ONLY if ONLY else list(q)
 fails = []
 t_all = time.time()
 for i, name in enumerate(names):
