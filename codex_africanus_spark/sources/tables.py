@@ -67,9 +67,8 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
             df.sparkSession._jsparkSession.sessionState().conf()
             .filesMaxPartitionBytes()
         )
-        local = [f[len("file:"):] if f.startswith("file:") else f
-                 for f in files]
-        if all(os.path.exists(p) for p in local):
+        local = _local_paths(files)
+        if local:
             total = sum(os.path.getsize(p) for p in local)
             # cap by the real row-group count (a KB-scale footer
             # read): one giant row group is ONE split whatever the
@@ -90,6 +89,19 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     if _plan_has_repartition(df, target):
         return df
     return df.repartition(target)
+
+
+def _local_paths(uris) -> list | None:
+    """Local paths of the file URIs Spark reports (`inputFiles()`), or
+    None when one is remote or missing."""
+    paths = []
+    for uri in uris:
+        url = urlparse(uri)
+        path = unquote(url.path)
+        if url.scheme not in ("", "file") or not os.path.isfile(path):
+            return None
+        paths.append(path)
+    return paths
 
 
 def _plan_has_repartition(df: DataFrame, target: int) -> bool:
@@ -157,9 +169,8 @@ def fast_row_count(df: DataFrame) -> int:
             node = node.children().apply(0)
         if node.getClass().getSimpleName() != "LogicalRelation":
             return df.count()
-        files = [f[len("file:"):] if f.startswith("file:") else f
-                 for f in df.inputFiles()]
-        if not files or not all(os.path.exists(p) for p in files):
+        files = _local_paths(df.inputFiles())
+        if not files:
             return df.count()
         import pyarrow.parquet as _pq
 
@@ -278,13 +289,10 @@ def _frame_files(frame: DataFrame):
             if (leaf.getClass().getSimpleName() != "LogicalRelation"
                     or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"):
                 return None
-        files = []
-        for uri in frame.inputFiles():
-            url = urlparse(uri)
-            path = unquote(url.path)
-            if url.scheme not in ("", "file") or not os.path.isfile(path):
-                return None
-            files += _data_files(path)
+        paths = _local_paths(frame.inputFiles())
+        if paths is None:
+            return None
+        files = [entry for path in paths for entry in _data_files(path)]
     except (Py4JError, PySparkException, OSError):
         return None
     return tuple(sorted(files)) or None
