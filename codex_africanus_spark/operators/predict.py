@@ -11,9 +11,13 @@ sandwich).
 Spark plan shape (designed for 100 TB):
 - source catalogue is small → **BroadcastNestedLoopJoin** for the cross
   join (no shuffle of the fact table);
-- the source reduction is a `groupBy(row).sum()` → Tungsten partial+final
-  hash aggregation, replacing the reference's hand-built linear/tree
-  reductions (dask_predict.py:64-369);
+- the source reduction, replacing the reference's hand-built linear/tree
+  reductions (dask_predict.py:64-369), runs in one of two tiers. The
+  default Arrow fold (operators/predict_arrow) sums the sources per row
+  inside one `mapInArrow` stage over a `row_id` hash exchange and merges
+  duplicate keys in the same task, so no groupBy runs after it. The
+  expand path (catalogue past the fold's gates) is a
+  `groupBy(row).sum()`: Tungsten partial+final hash aggregation;
 - gains are a tiny dim table → **broadcast hash equi-join** twice
   (antenna1 and antenna2 sides), exactly as SURVEY.md §2.3 prescribes;
 - everything is Column arithmetic → one WholeStageCodegen span per stage,
@@ -111,20 +115,18 @@ def predict_point_vis(
 
     r14 (guide §4): dispatches to the Arrow/numpy source-fold tier when
     its gates hold (operators/predict_arrow) — the per-(source,row,chan)
-    trig runs SIMD-vectorized in numpy and each row arrives at the
-    aggregate as ONE pre-summed BIGINT pair instead of n_src expanded
-    rows. Identical quantized-addend multiset + associative integer
-    addition ⇒ bit-identical output (flip-rate-measured and locked by
+    trig runs SIMD-vectorized in numpy, each row's sources are summed as
+    int64 in the batch and duplicate keys are merged in the same task,
+    so the fold's rows are the final model rows. Identical
+    quantized-addend multiset + associative integer addition ⇒
+    bit-identical output (flip-rate-measured and locked by
     tests/test_round14_arrow_predict.py at every driver-verified scale).
     """
     from codex_africanus_spark.operators import predict_arrow
 
     folded = predict_arrow.point_fold(vis, sources, convention, with_shape)
     if folded is not None:
-        return folded.groupBy("row_id", "antenna1", "antenna2", "chan").agg(
-            (F.sum("q_re") / F.lit(QSCALE)).alias("model_re"),
-            (F.sum("q_im") / F.lit(QSCALE)).alias("model_im"),
-        )
+        return folded
     coh = source_coherency(vis, sources, convention, with_shape)
     return (
         coh.groupBy("row_id", "antenna1", "antenna2", "chan")
@@ -186,14 +188,9 @@ def predict_full_corr(vis: DataFrame, sources: DataFrame, gains: DataFrame) -> D
     from codex_africanus_spark.operators import predict_arrow
     from codex_africanus_spark.sources.tables import fan_out, scan_twin
 
-    corr_cols = ["xx_re", "xx_im", "xy_re", "xy_im", "yx_re", "yx_im", "yy_re", "yy_im"]
     # r14 Arrow/numpy source-fold tier (guide §4; see predict_point_vis)
-    folded = predict_arrow.full_corr_fold(vis, sources)
-    if folded is not None:
-        model = folded.groupBy("row_id", "antenna1", "antenna2", "chan").agg(
-            *[(F.sum(f"q_{c}") / F.lit(QSCALE)).alias(c) for c in corr_cols]
-        )
-    else:
+    model = predict_arrow.full_corr_fold(vis, sources)
+    if model is None:
         # hoist the brightness matrix to the broadcast side: bxx/byy depend
         # only on (source, chan) — evaluate pow() on n_src × n_chan rows and
         # equi-join on chan (same loop-invariant hoist as source_coherency);
@@ -227,7 +224,10 @@ def predict_full_corr(vis: DataFrame, sources: DataFrame, gains: DataFrame) -> D
             (byy * ct).alias("yy_re"), (byy * st).alias("yy_im"),
         )
         model = coh.groupBy("row_id", "antenna1", "antenna2", "chan").agg(
-            *[(qsum(F.col(c), QSCALE) / F.lit(QSCALE)).alias(c) for c in corr_cols]
+            *[
+                (qsum(F.col(c), QSCALE) / F.lit(QSCALE)).alias(c)
+                for c in predict_arrow.CORR_SUMS
+            ]
         )
     g1 = F.broadcast(
         gains.select(

@@ -3,12 +3,24 @@
 The predict family's measured floor is the per-(source,row,chan) cos/sin/exp
 evaluated scalar-at-a-time by JVM codegen (~17 s executor time per expansion
 stage at sf0.1, dominant at sf10 — r13 profile). This tier folds the source
-axis per vis row inside an Arrow `mapInPandas` batch: numpy's SIMD trig
+axis per vis row inside one Arrow `mapInArrow` stage: numpy's SIMD trig
 evaluates the same addends, each addend is quantized to the 1e-6 grid and
-summed over sources as int64 *inside the batch*, and the downstream groupBy
-merges 1x fact rows of pre-summed BIGINTs instead of n_src x expanded rows.
-Integer addition is associative, so the aggregate output is the exact sum of
-the identical quantized multiset the expand path feeds to `qsum`.
+summed over sources as int64 inside the batch. The stage's input is hash
+partitioned by `row_id`, and every duplicate of a (row_id, antenna1,
+antenna2, chan) key shares its row_id, so one task sees all of a key's
+rows. The kernel keeps the keys and the int64 row sums of its whole
+partition, merges duplicate keys with one `pyarrow` group-by sum at the
+end and divides by QSCALE once: the fold returns final model rows, and no
+groupBy runs downstream. Integer addition is associative, so each key's
+sum is the exact sum of the identical quantized multiset the expand path
+feeds to `qsum`, and int64 -> double then / 1e6 is the same IEEE
+operation as Spark's `sum(q) / lit(1e6)`.
+
+Overflow: the expand path's quantize cast and BIGINT sum raise under ANSI
+mode. The kernel checks each batch instead of wrapping: it raises when an
+addend lies outside the int64 range (or is NaN), when n_src times the
+largest addend magnitude could overflow a row sum, or when a key's merged
+sum could.
 
 Bit-exactness evidence:
 - cos/sin of theta and the gaussian envelope's cos/sin/exp: the flip-rate
@@ -47,7 +59,7 @@ expand path by setting ARROW_MAX_SRC to 0.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from codex_africanus_spark.constants import MINUS_TWO_PI_OVER_C, TWO_PI_OVER_C
 from codex_africanus_spark.functions.shapes import GAUSS_SCALE
@@ -84,17 +96,92 @@ def _collect_sources(sources: DataFrame, need: tuple[str, ...]):
     return {c: np.array([r[c] for r in rows], dtype=np.float64) for c in need}
 
 
-def _fold_schema(vis_sel: DataFrame, sum_names: tuple[str, ...]) -> StructType:
-    """Key columns keep their incoming types; sums are BIGINT."""
-    fields = [vis_sel.schema[c] for c in KEY_COLS]
-    fields += [StructField(n, LongType()) for n in sum_names]
-    return StructType(fields)
+def _fold(vis: DataFrame, names: tuple[str, ...], n_src: int, setup) -> DataFrame:
+    """One Arrow stage over one exchange: final model rows, KEY_COLS +
+    `names` (DOUBLE).
 
+    The input is the unfanned scan hash-repartitioned by `row_id` to
+    `spark.sql.shuffle.partitions` (a fixed number, so AQE cannot
+    coalesce the Python stage into one task). `setup()` runs once per
+    task in the worker and returns the per-batch kernel
+    `(u, v, w, frequency, quant) -> [int64 row sums, one per name]`.
+    The task holds only the copied key columns and the row sums (36 B a
+    row for the point fold), then one group-by sum merges duplicate keys.
+    `fold` and `setup` are closures, which cloudpickle ships by value:
+    the worker never imports this package."""
+    from codex_africanus_spark.operators.predict import QSCALE
+    from codex_africanus_spark.sources.tables import scan_twin
 
-def _fold_input(vis: DataFrame) -> DataFrame:
-    from codex_africanus_spark.sources.tables import fan_out
+    width = int(vis.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    inp = scan_twin(vis).select(*VIS_COLS).repartition(width, "row_id")
+    schema = StructType(
+        [inp.schema[c] for c in KEY_COLS] + [StructField(n, DoubleType()) for n in names]
+    )
+    keys, names = list(KEY_COLS), list(names)
+    scale, lim = float(QSCALE), 2.0 ** 63
 
-    return fan_out(vis).select(*VIS_COLS)
+    def fold(batches):
+        import numpy as _np
+        import pyarrow as _pa
+
+        def overflow(what):
+            return ArithmeticError(
+                f"[ARITHMETIC_OVERFLOW] predict fold: {what} can leave the "
+                "BIGINT range (the expand path's ANSI cast/sum raises here)"
+            )
+
+        kernel, peak = setup(), 0.0
+
+        def quant(x):
+            nonlocal peak
+            # value-identical to where(v>=0, v+0.5, v-0.5).astype(int64)
+            # (the engine's quantize): copysign(0.5, -0.0) = -0.5 still
+            # truncates to 0; one fewer temporary per call (measured 3x)
+            v = x * scale
+            v += _np.copysign(0.5, v)
+            lo, hi = v.min(), v.max()
+            if not -lim < lo <= hi < lim:  # NaN fails too, as the cast does
+                raise overflow("a quantized addend")
+            peak = max(peak, -lo, hi)
+            return v.astype(_np.int64)
+
+        parts, rows, row_bound = [], 0, 0.0
+        for b in batches:
+            if not b.num_rows:
+                continue
+            peak = 0.0
+            u, v, w, fq = (
+                _np.asarray(b.column(c).to_numpy(zero_copy_only=False), dtype=_np.float64)
+                for c in ("u", "v", "w", "frequency")
+            )
+            sums = kernel(u, v, w, fq, quant)
+            # |row sum| <= n_src * the batch's largest |addend|
+            row_bound = max(row_bound, n_src * peak)
+            if not row_bound < lim:
+                raise overflow("a row's sum over sources")
+            rows += b.num_rows
+            # copy the keys: a slice would pin the whole IPC batch body
+            parts.append(_pa.RecordBatch.from_arrays(
+                [_pa.concat_arrays([b.column(k)]) for k in keys]
+                + [_pa.array(s) for s in sums],
+                names=keys + names,
+            ))
+        if not parts:
+            return
+        merged = _pa.Table.from_batches(parts).group_by(keys, use_threads=False).aggregate(
+            [(n, "sum") for n in names]
+        )
+        del parts
+        # a key merges at most (rows - keys + 1) row sums
+        if not (rows - merged.num_rows + 1) * row_bound < lim:
+            raise overflow("a key's merged sum")
+        cols = [merged.column(k) for k in keys] + [
+            _pa.array(merged.column(f"{n}_sum").to_numpy().astype(_np.float64) / scale)
+            for n in names
+        ]
+        yield from _pa.Table.from_arrays(cols, names=keys + names).to_batches(1 << 16)
+
+    return inp.mapInArrow(fold, schema)
 
 
 def point_fold(
@@ -102,12 +189,13 @@ def point_fold(
     sources: DataFrame,
     convention: str = "fourier",
     with_shape: bool = True,
+    names: tuple[str, str] = ("model_re", "model_im"),
 ) -> DataFrame | None:
-    """Per-row folded point/gaussian coherency sums, or None (fallback).
+    """Σ_sources point/gaussian coherency per key, or None (fallback).
 
-    Returns one row per input vis row: KEY_COLS + (q_re, q_im) BIGINT
-    partial sums over the source axis. The caller's groupBy(KEY_COLS)
-    .sum() then equals the expand path's qsum exactly.
+    Returns one row per (row_id, antenna1, antenna2, chan): KEY_COLS +
+    the two `names` on the 1e-6 grid, bit-equal to the expand path's
+    `qsum(...) / QSCALE`.
     """
     need_src = POINT_COLS + (SHAPE_COLS if with_shape else ())
     if not set(need_src) <= set(sources.columns) or not set(VIS_COLS) <= set(vis.columns):
@@ -119,9 +207,8 @@ def point_fold(
     const = float(MINUS_TWO_PI_OVER_C if convention == "fourier" else TWO_PI_OVER_C)
     gs = float(GAUSS_SCALE)
     shape = bool(with_shape)
-    key_cols = list(KEY_COLS)
 
-    def fold(batches):
+    def setup():
         import numpy as _np
 
         L, M = src["l"], src["m"]
@@ -138,19 +225,8 @@ def point_fold(
             pa = src["position_angle"][gidx]
             CA, SA = _np.cos(pa), _np.sin(pa)
 
-        def quant(x):
-            # value-identical to where(v>=0, v+0.5, v-0.5).astype(int64)
-            # (the engine's quantize): copysign(0.5, -0.0) = -0.5 still
-            # truncates to 0; one fewer temporary per call (measured 3x)
-            v = x * 1e6
-            v += _np.copysign(0.5, v)
-            return v.astype(_np.int64)
-
-        for pdf in batches:
-            u = pdf["u"].to_numpy(dtype=_np.float64)[:, None]
-            v = pdf["v"].to_numpy(dtype=_np.float64)[:, None]
-            w = pdf["w"].to_numpy(dtype=_np.float64)[:, None]
-            fq1 = pdf["frequency"].to_numpy(dtype=_np.float64)
+        def kernel(u, v, w, fq1, quant):
+            u, v, w = u[:, None], v[:, None], w[:, None]
             fq = fq1[:, None]
             # theta: the exact expand-path tree (C * path) * frequency
             theta = (const * (u * L + v * M + w * NM1)) * fq
@@ -165,21 +241,19 @@ def point_fold(
                 u1 = (u * CA + v * SA) * FR * sfe
                 v1 = (-u * SA + v * CA) * sfe
                 flux[:, gidx] *= _np.exp(-(u1 * u1 + v1 * v1))
-            out = pdf[key_cols].copy()
-            out["q_re"] = quant(flux * ct).sum(axis=1)
-            out["q_im"] = quant(flux * st).sum(axis=1)
-            yield out
+            return [quant(flux * ct).sum(axis=1), quant(flux * st).sum(axis=1)]
 
-    vis_sel = _fold_input(vis)
-    return vis_sel.mapInPandas(fold, _fold_schema(vis_sel, ("q_re", "q_im")))
+        return kernel
+
+    return _fold(vis, tuple(names), len(src["l"]), setup)
 
 
 def full_corr_fold(vis: DataFrame, sources: DataFrame) -> DataFrame | None:
-    """Per-row folded 2x2-brightness coherency sums, or None (fallback).
+    """Σ_sources 2x2-brightness coherency per key, or None (fallback).
 
-    One row per vis row: KEY_COLS + q_{xx,xy,yx,yy}_{re,im} BIGINT sums.
-    Brightness (bxx/byy incl. the spectral pow) is evaluated on the same
-    per-batch unique-frequency grid; theta trig is numpy
+    One row per key: KEY_COLS + CORR_SUMS (xx_re … yy_im) on the 1e-6
+    grid. Brightness (bxx/byy incl. the spectral pow) is evaluated on the
+    same per-batch unique-frequency grid; theta trig is numpy
     (flip-rate-verified)."""
     if not set(FULL_CORR_COLS) <= set(sources.columns) or not set(VIS_COLS) <= set(vis.columns):
         return None
@@ -188,9 +262,8 @@ def full_corr_fold(vis: DataFrame, sources: DataFrame) -> DataFrame | None:
         return None
 
     const = float(MINUS_TWO_PI_OVER_C)
-    key_cols = list(KEY_COLS)
 
-    def fold(batches):
+    def setup():
         import numpy as _np
 
         L, M = src["l"], src["m"]
@@ -198,17 +271,8 @@ def full_corr_fold(vis: DataFrame, sources: DataFrame) -> DataFrame | None:
         FI, FQ_, SPI, RF = src["flux_i"], src["flux_q"], src["spi"], src["ref_freq"]
         BU, BV = src["flux_u"], src["flux_v"]
 
-        def quant(x):
-            # value-identical to where(v>=0, v+0.5, v-0.5).astype(int64)
-            v = x * 1e6
-            v += _np.copysign(0.5, v)
-            return v.astype(_np.int64)
-
-        for pdf in batches:
-            u = pdf["u"].to_numpy(dtype=_np.float64)[:, None]
-            v = pdf["v"].to_numpy(dtype=_np.float64)[:, None]
-            w = pdf["w"].to_numpy(dtype=_np.float64)[:, None]
-            fq1 = pdf["frequency"].to_numpy(dtype=_np.float64)
+        def kernel(u, v, w, fq1, quant):
+            u, v, w = u[:, None], v[:, None], w[:, None]
             fq = fq1[:, None]
             theta = (const * (u * L + v * M + w * NM1)) * fq
             ct, st = _np.cos(theta), _np.sin(theta)
@@ -224,17 +288,13 @@ def full_corr_fold(vis: DataFrame, sources: DataFrame) -> DataFrame | None:
             # P,Q,R,S compute each product once
             p, q = BU * ct, BV * st
             r, s2 = BU * st, BV * ct
-            out = pdf[key_cols].copy()
-            out["q_xx_re"] = quant(bxx * ct).sum(axis=1)
-            out["q_xx_im"] = quant(bxx * st).sum(axis=1)
-            out["q_xy_re"] = quant(p - q).sum(axis=1)
-            out["q_xy_im"] = quant(r + s2).sum(axis=1)
-            out["q_yx_re"] = quant(p + q).sum(axis=1)
-            out["q_yx_im"] = quant(r - s2).sum(axis=1)
-            out["q_yy_re"] = quant(byy * ct).sum(axis=1)
-            out["q_yy_im"] = quant(byy * st).sum(axis=1)
-            yield out
+            return [
+                quant(bxx * ct).sum(axis=1), quant(bxx * st).sum(axis=1),
+                quant(p - q).sum(axis=1), quant(r + s2).sum(axis=1),
+                quant(p + q).sum(axis=1), quant(r - s2).sum(axis=1),
+                quant(byy * ct).sum(axis=1), quant(byy * st).sum(axis=1),
+            ]
 
-    vis_sel = _fold_input(vis)
-    sums = tuple(f"q_{c}" for c in CORR_SUMS)
-    return vis_sel.mapInPandas(fold, _fold_schema(vis_sel, sums))
+        return kernel
+
+    return _fold(vis, CORR_SUMS, len(src["l"]), setup)

@@ -635,13 +635,11 @@ def rime(
         from codex_africanus_spark.operators import predict_arrow
 
         folded = predict_arrow.point_fold(
-            vis, sources, "fourier", GaussianShapeTerm in term_types
+            vis, sources, "fourier", GaussianShapeTerm in term_types,
+            names=("vis_re", "vis_im"),
         )
         if folded is not None:
-            return folded.groupBy("row_id", "antenna1", "antenna2", "chan").agg(
-                (F.sum("q_re") / F.lit(QSCALE)).alias("vis_re"),
-                (F.sum("q_im") / F.lit(QSCALE)).alias("vis_im"),
-            )
+            return folded
     # r13 loop-invariant hoist (guide §1.2): the STANDARD BrightnessTerm
     # multiplies z by a real flux that depends only on (source, chan) —
     # evaluate its pow() once per (source, chan) on the broadcast side

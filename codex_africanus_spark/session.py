@@ -38,6 +38,15 @@ LOCAL_ONLY = frozenset({
     "spark.sql.shuffle.partitions",
 })
 
+# Launch-time confs: a running session refuses them (each refused set
+# cost ~6 ms), so `configure_session` skips them and an external session
+# keeps whatever its builder chose; `get_spark` passes them at launch.
+LAUNCH_ONLY = frozenset({
+    "spark.ui.enabled",
+    "spark.driver.memory",
+    "spark.python.sql.dataFrameDebugging.enabled",
+})
+
 # The engine's one session-conf table: `get_spark` builds from it,
 # `configure_session` applies it to an externally-created session.
 CONFS: tuple[tuple[str, str], ...] = (
@@ -60,8 +69,7 @@ CONFS: tuple[tuple[str, str], ...] = (
     ("spark.sql.files.maxPartitionBytes", "8m"),
     ("spark.sql.files.openCostInBytes", "1m"),
     ("spark.sql.shuffle.partitions", DEFAULT_CPUS),
-    # launch-time confs: a running session refuses them, so on an
-    # external session they stay whatever its builder chose
+    # the LAUNCH_ONLY entries
     ("spark.ui.enabled", "false"),
     ("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")),
     # With DataFrame debugging on, PySpark wraps every Column operator and
@@ -89,13 +97,13 @@ def get_spark(app_name: str = "codex_africanus_spark", cpus: str | None = None) 
 def configure_session(spark: SparkSession) -> SparkSession:
     """Apply this engine's runtime confs to an externally-created session
     (the driver harness constructs its own SparkSession); the LOCAL_ONLY
-    entries only under a `local` master."""
+    entries only under a `local` master, the LAUNCH_ONLY ones never."""
     try:
         is_local = spark.conf.get("spark.master", "").startswith("local")
     except Exception:
         is_local = False
     for k, v in CONFS:
-        if k in LOCAL_ONLY and not is_local:
+        if k in LAUNCH_ONLY or (k in LOCAL_ONLY and not is_local):
             continue
         try:
             spark.conf.set(k, v)

@@ -133,13 +133,16 @@ def _plan_has_repartition(df: DataFrame, target: int) -> bool:
 
 
 def scan_twin(df: DataFrame) -> DataFrame:
-    """The pre-fan_out lineage of a fanned frame, for tiny aggregates.
+    """The pre-fan_out lineage of a fanned frame, for tiny aggregates
+    or a consumer that brings its own exchange.
 
     `fan_out` buys parallelism for expensive per-row derivations by
     round-robin exchanging the raw scan — but a consumer that only runs
     a small distinct/groupBy over one or two columns (e.g. the predict
     family's `(chan, frequency)` hoist) inherits that full-data exchange
-    for nothing: partial aggregation already collapses the scan to
+    for nothing, and so does one that repartitions the rows itself (the
+    predict fold's `row_id` hash exchange): partial aggregation already
+    collapses the scan to
     O(#groups) rows per task, so the pre-aggregation exchange is pure
     shuffle cost (guide §2.4 — remove shuffles outright). Builders that
     fan out attach the unfanned projection as `_scan_twin`, either as a

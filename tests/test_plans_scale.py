@@ -31,7 +31,7 @@ def test_predict_uses_broadcast_join_not_shuffle(spark, sf_dir, monkeypatch):
     vis = tpch_ms.vis_table(spark, sf_dir)
     src = tpch_ms.source_table(spark, sf_dir)
     plan = plan_of(predict_op.predict_point_vis(vis, src))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "SortMergeJoin" not in plan
     monkeypatch.setattr(predict_arrow, "ARROW_MAX_SRC", 0)
     plan = plan_of(predict_op.predict_point_vis(vis, src))
@@ -39,11 +39,14 @@ def test_predict_uses_broadcast_join_not_shuffle(spark, sf_dir, monkeypatch):
     assert "SortMergeJoin" not in plan
 
 
-def test_predict_aggregation_is_partial_final(spark, sf_dir):
-    """The source reduction must be map-side partial + final hash agg —
-    the property that keeps shuffle O(#groups) instead of O(#pairs)."""
+def test_predict_aggregation_is_partial_final(spark, sf_dir, monkeypatch):
+    """The expand path's source reduction must be map-side partial + final
+    hash agg — the property that keeps shuffle O(#groups) instead of
+    O(#pairs). (The Arrow fold sums inside its kernel and has no
+    aggregate: test_round14_arrow_predict locks that plan.)"""
     vis = tpch_ms.vis_table(spark, sf_dir)
     src = tpch_ms.source_table(spark, sf_dir)
+    monkeypatch.setattr(predict_arrow, "ARROW_MAX_SRC", 0)
     plan = plan_of(predict_op.predict_point_vis(vis, src))
     assert plan.count("HashAggregate") >= 2
     assert "partial_sum" in plan

@@ -98,11 +98,11 @@ def test_local_catalogue_is_collected_every_build(spark, sf_dir, collects):
 
 def test_lowered_source_gate_after_memoized_build(spark, sf_dir, monkeypatch):
     q = registry()["predict_vis_point_gauss"]
-    assert "MapInPandas" in q.fn(spark, sf_dir)._jdf.queryExecution().analyzed().toString()
+    assert "MapInArrow" in q.fn(spark, sf_dir)._jdf.queryExecution().analyzed().toString()
     monkeypatch.setattr(predict_arrow, "ARROW_MAX_SRC", 0)
     vis = tpch_ms.vis_table(spark, sf_dir)
     src = tpch_ms.source_table(spark, sf_dir)
     assert predict_arrow.point_fold(vis, src) is None
     n, df = _jobs(spark, "predict-gate-0", lambda: q.fn(spark, sf_dir))
     assert n == 0
-    assert "MapInPandas" not in df._jdf.queryExecution().analyzed().toString()
+    assert "MapInArrow" not in df._jdf.queryExecution().analyzed().toString()

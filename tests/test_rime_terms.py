@@ -11,6 +11,10 @@ import pytest
 # selection; run with `pytest -m slow` (see pytest.ini).
 pytestmark = pytest.mark.slow
 
+# rows pair up across two RIME outputs only by the full key: (row_id,
+# chan) repeats across antenna pairs, and tie order differs between plans
+KEY = ("row_id", "antenna1", "antenna2", "chan")
+
 
 def test_rime_beam_term_composes(spark, sf_dir):
     """'(Kpq, Bpq, Dpq)' = beam-gain-weighted predict: must equal the
@@ -18,8 +22,8 @@ def test_rime_beam_term_composes(spark, sf_dir):
     recomputing the beam factor independently."""
     vis = tpch_ms.vis_table(spark, sf_dir).filter(F.col("row_id") % 59 == 0)
     src = tpch_ms.source_table(spark, sf_dir)
-    with_beam = rp.rime("(Kpq, Bpq, Dpq)", vis, src).orderBy("row_id", "chan").toPandas()
-    plain = rp.rime("(Kpq, Bpq)", vis, src).orderBy("row_id", "chan").toPandas()
+    with_beam = rp.rime("(Kpq, Bpq, Dpq)", vis, src).orderBy(*KEY).toPandas()
+    plain = rp.rime("(Kpq, Bpq)", vis, src).orderBy(*KEY).toPandas()
     assert len(with_beam) == len(plain) > 0
     # the beam taper is ≤ 1 on-grid, so |V_beam| ≤ ~|V_plain| overall
     assert (np.abs(with_beam.vis_re) <= np.abs(plain.vis_re) + 2.0).all()
@@ -35,8 +39,8 @@ def test_rime_zernike_term_composes(spark, sf_dir):
 
     vis = tpch_ms.vis_table(spark, sf_dir).filter(F.col("row_id") % 59 == 0)
     src = tpch_ms.source_table(spark, sf_dir)
-    with_z = rp.rime("(Kpq, Bpq, Zp)", vis, src).orderBy("row_id", "chan").toPandas()
-    plain = rp.rime("(Kpq, Bpq)", vis, src).orderBy("row_id", "chan").toPandas()
+    with_z = rp.rime("(Kpq, Bpq, Zp)", vis, src).orderBy(*KEY).toPandas()
+    plain = rp.rime("(Kpq, Bpq)", vis, src).orderBy(*KEY).toPandas()
     assert len(with_z) == len(plain) > 0
     assert not np.allclose(with_z.vis_re, plain.vis_re)
     # single-source sanity: gain factor recomputed driver-side
@@ -50,8 +54,8 @@ def test_rime_zernike_term_composes(spark, sf_dir):
     )
     vis1 = vis.filter(F.col("row_id") == int(plain.row_id.iloc[0]))
     src1 = src.orderBy("source_id").limit(1)
-    z1 = rp.rime("(Kpq, Bpq, Zp)", vis1, src1).orderBy("chan").toPandas()
-    p1 = rp.rime("(Kpq, Bpq)", vis1, src1).orderBy("chan").toPandas()
+    z1 = rp.rime("(Kpq, Bpq, Zp)", vis1, src1).orderBy(*KEY).toPandas()
+    p1 = rp.rime("(Kpq, Bpq)", vis1, src1).orderBy(*KEY).toPandas()
     np.testing.assert_allclose(z1.vis_re, p1.vis_re * gain, atol=1e-4)
 
 
@@ -196,8 +200,8 @@ def test_rime_custom_term_registration(spark, sf_dir):
     try:
         vis = tpch_ms.vis_table(spark, sf_dir).filter(F.col("row_id") % 97 == 0)
         src = tpch_ms.source_table(spark, sf_dir)
-        halved = rp.rime("(Kpq, Bpq, Hpq)", vis, src).orderBy("row_id", "chan").toPandas()
-        plain = rp.rime("(Kpq, Bpq)", vis, src).orderBy("row_id", "chan").toPandas()
+        halved = rp.rime("(Kpq, Bpq, Hpq)", vis, src).orderBy(*KEY).toPandas()
+        plain = rp.rime("(Kpq, Bpq)", vis, src).orderBy(*KEY).toPandas()
         # fixed-point grids: halving before quantization ≈ half after
         np.testing.assert_allclose(halved.vis_re, plain.vis_re * 0.5, atol=1e-4)
     finally:

@@ -50,7 +50,7 @@ def test_rime_compiled_pow_on_broadcast_side(spark, sf_dir):
     exchange (source × chan grain), not in the per-pair projection
     (r13 change 5; measured 43 s → 18 s executor time at sf0.1)."""
     plan = plan_of(registry()["rime_compiled_predict"].fn(spark, sf_dir))
-    if "MapInPandas" in plan:
+    if "MapInArrow" in plan:
         # r14: the Arrow source-fold tier subsumes the hoist — there is
         # no per-pair projection (and no broadcast) left at all; pow runs
         # in the kernel's (unique-freq x source) grid. The r13 property

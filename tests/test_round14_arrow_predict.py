@@ -75,18 +75,18 @@ def test_fold_matches_expand_driver_scales(spark, monkeypatch, sf, path):
 def test_fold_dispatches_on_bench_queries(spark, sf_dir):
     """The bench queries must actually take the Arrow tier (a silent
     fallback would leave the optimization OFF while tests stay green):
-    the fold plan carries a MapInPandas/ArrowEvalPython node and no
-    BroadcastNestedLoop/BroadcastHashJoin below the aggregate."""
+    the fold plan carries a MapInArrow node and no
+    BroadcastNestedLoop/BroadcastHashJoin."""
     vis = tpch_ms.vis_table(spark, sf_dir)
     src = tpch_ms.source_table(spark, sf_dir)
     plan = predict_op.predict_point_vis(vis, src)._jdf.queryExecution().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Join" not in plan
 
 
 def test_fold_collapses_duplicate_keys(spark, sf_dir, monkeypatch):
-    """Rows sharing (row_id, a1, a2, chan) must merge in the final
-    groupBy exactly as the expand path's aggregate merges them."""
+    """Rows sharing (row_id, a1, a2, chan) must merge in the fold's
+    group-by sum exactly as the expand path's aggregate merges them."""
     vis = tpch_ms.vis_table(spark, sf_dir)
     dup = vis.unionByName(vis.limit(7))
     src = tpch_ms.source_table(spark, sf_dir)
@@ -131,4 +131,70 @@ def test_rime_fold_gates_on_exact_standard_terms(spark, sf_dir):
     vis = tpch_ms.vis_table(spark, sf_dir)
     src = tpch_ms.source_table(spark, sf_dir)
     df = rime_plan.rime(RIME_SPEC, vis, src, terms={"B": MyBrightness})
-    assert "MapInPandas" not in df._jdf.queryExecution().toString()
+    assert "MapInArrow" not in df._jdf.queryExecution().toString()
+
+
+# the three callers of the fold, each over the sf0.001 corpus (6000 rows
+# over 5939 distinct keys, so duplicate keys are present)
+FOLD_CALLERS = ["point_shape", "full_corr", "rime_kbe"]
+
+
+@pytest.mark.parametrize("path", FOLD_CALLERS)
+def test_fold_merges_duplicates_across_tiny_batches(spark, sf_dir, monkeypatch, path):
+    """With 3-row Arrow batches a duplicated key's rows land in different
+    batches (and the union's copies in different map outputs), so only
+    the fold's end-of-partition group-by can merge them."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        build = _builders(spark, sf_dir)[path]
+        folded, expanded = _both_paths(monkeypatch, build)
+        _bitcompare(folded, expanded)
+    finally:
+        spark.conf.set(conf, old)
+
+
+@pytest.mark.parametrize("path", FOLD_CALLERS)
+def test_fold_is_one_arrow_stage_over_one_exchange(spark, sf_dir, path):
+    """The fold's input is one by-number hash exchange on row_id (no
+    round-robin fan-out), the kernel is MapInArrow, and no aggregate sits
+    above it: the fold's rows are the final model rows."""
+    df = _builders(spark, sf_dir)[path]()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+    assert plan.count("Exchange hashpartitioning(row_id") == 1, plan
+    assert "RoundRobinPartitioning" not in plan, plan
+    above, _, below = plan.partition("MapInArrow")
+    assert "HashAggregate" not in above, plan
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert f", {width}), REPARTITION_BY_NUM" in below
+
+
+def _huge_catalogue(src, flux):
+    return src.withColumn("flux_i", F.lit(flux))
+
+
+def test_fold_overflow_raises_like_the_expand_path(spark, sf_dir, monkeypatch):
+    """An addend past 2^63 on the 1e-6 grid: the JVM path's ANSI cast
+    raises, and so must the fold instead of wrapping to INT64_MIN."""
+    vis = tpch_ms.vis_table(spark, sf_dir)
+    src = _huge_catalogue(tpch_ms.source_table(spark, sf_dir), 1e16)
+    folded, expanded = _both_paths(
+        monkeypatch, lambda: predict_op.predict_point_vis(vis, src, with_shape=False)
+    )
+    assert "MapInArrow" in folded._jdf.queryExecution().toString()
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW.*quantized addend"):
+        folded.collect()
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        expanded.collect()
+
+
+def test_fold_overflow_raises_on_a_row_sum_bound(spark, sf_dir):
+    """Every addend fits in int64 (|addend| <= 1e18), but 25 of them
+    could not be summed in one: the fold refuses instead of wrapping."""
+    vis = tpch_ms.vis_table(spark, sf_dir)
+    src = _huge_catalogue(tpch_ms.source_table(spark, sf_dir), 1e12)
+    folded = predict_op.predict_point_vis(vis, src, with_shape=False)
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW.*row's sum"):
+        folded.collect()

@@ -1,7 +1,7 @@
 """`session.CONFS` is the engine's one session-conf table: a session
 built by `get_spark` carries every entry, and `configure_session`
 applies it to an externally-created session, keeping the local-only
-bench knobs off a cluster."""
+bench knobs off a cluster and never setting a launch-time conf."""
 
 from types import SimpleNamespace
 
@@ -35,8 +35,11 @@ def test_spark_fixture_carries_the_conf_table(spark):
 
 
 def test_configure_session_keeps_local_knobs_off_a_cluster():
-    assert session.LOCAL_ONLY < {k for k, _ in session.CONFS}
+    keys = {k for k, _ in session.CONFS}
+    assert session.LOCAL_ONLY < keys and session.LAUNCH_ONLY < keys
+    runtime = {k: v for k, v in session.CONFS if k not in session.LAUNCH_ONLY}
     assert _configured("yarn") == {
-        k: v for k, v in session.CONFS if k not in session.LOCAL_ONLY
+        k: v for k, v in runtime.items() if k not in session.LOCAL_ONLY
     }
-    assert _configured("local[4]") == dict(session.CONFS)
+    # a running session refuses launch-time confs, so none is attempted
+    assert _configured("local[4]") == runtime
