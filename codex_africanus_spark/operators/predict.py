@@ -14,8 +14,10 @@ Spark plan shape (designed for 100 TB):
 - the source reduction, replacing the reference's hand-built linear/tree
   reductions (dask_predict.py:64-369), runs in one of two tiers. The
   default Arrow fold (operators/predict_arrow) sums the sources per row
-  inside one `mapInArrow` stage over a `row_id` hash exchange and merges
-  duplicate keys in the same task, so no groupBy runs after it. The
+  inside one `mapInArrow` stage and merges duplicate keys in the same
+  task, so no groupBy runs after it. A small input (by parquet footer
+  rows) is one narrow task with no exchange; a larger one runs over a
+  `row_id` hash exchange. The
   expand path (catalogue past the fold's gates) is a
   `groupBy(row).sum()`: Tungsten partial+final hash aggregation;
 - gains are a tiny dim table → **broadcast hash equi-join** twice

@@ -5,10 +5,11 @@ evaluated scalar-at-a-time by JVM codegen (~17 s executor time per expansion
 stage at sf0.1, dominant at sf10 — r13 profile). This tier folds the source
 axis per vis row inside one Arrow `mapInArrow` stage: numpy's SIMD trig
 evaluates the same addends, each addend is quantized to the 1e-6 grid and
-summed over sources as int64 inside the batch. The stage's input is hash
-partitioned by `row_id`, and every duplicate of a (row_id, antenna1,
-antenna2, chan) key shares its row_id, so one task sees all of a key's
-rows. The kernel keeps the keys and the int64 row sums of its whole
+summed over sources as int64 inside the batch. Every duplicate of a
+(row_id, antenna1, antenna2, chan) key shares its row_id, and the
+stage's input keeps a key's rows in one task: a small input is one
+partition, a larger one is hash partitioned by `row_id` (see "Dispatch
+gates"). The kernel keeps the keys and the int64 row sums of its whole
 partition, merges duplicate keys with one `pyarrow` group-by sum at the
 end and divides by QSCALE once: the fold returns final model rows, and no
 groupBy runs downstream. Integer addition is associative, so each key's
@@ -20,7 +21,8 @@ Overflow: the expand path's quantize cast and BIGINT sum raise under ANSI
 mode. The kernel checks each batch instead of wrapping: it raises when an
 addend lies outside the int64 range (or is NaN), when n_src times the
 largest addend magnitude could overflow a row sum, or when a key's merged
-sum could.
+sum could: its row count times that row-sum bound, so the check does not
+depend on how many rows share the task.
 
 Bit-exactness evidence:
 - cos/sin of theta and the gaussian envelope's cos/sin/exp: the flip-rate
@@ -54,6 +56,16 @@ Dispatch gates (fall back to the JVM expand path, behavior unchanged):
 any required vis/source column missing; empty or > ARROW_MAX_SRC source
 catalogue (the fold embeds it in the task closure). Tests force the
 expand path by setting ARROW_MAX_SRC to 0.
+
+Task count: the fold's work is rows × n_src × output columns quantized
+addends, with rows read from the parquet footers of the vis scan twin
+(`tables.footer_rows`: no Spark job, and None when the twin is not a
+bare local parquet scan). Each Python task carries a fixed pyspark
+worker cost of about 0.25 CPU-s, so work ≤ FOLD_ONE_TASK_ADDENDS runs
+as one narrow task (`coalesce(1)`, no exchange); larger or unsized
+inputs keep the `row_id` hash exchange at `spark.sql.shuffle.partitions`
+width. Tests force the width regime by setting FOLD_ONE_TASK_ADDENDS to
+0.
 """
 
 from __future__ import annotations
@@ -67,6 +79,15 @@ from codex_africanus_spark.functions.shapes import GAUSS_SCALE
 # closure-embedded catalogue bound: the reference holds the source
 # catalogue in memory too; past this the broadcast-join expand path wins
 ARROW_MAX_SRC = 4096
+
+# the fold runs as one task up to this many addends (rows × n_src ×
+# output columns). Paired walls on a 4-vCPU box, speedup of fewer tasks
+# over the 4-task exchange: the point fold at 100k rows (5M addends,
+# perfbench ms_predict) on one task 1.07x; full_corr at 100k rows (20M)
+# on one task 0.81x; full_corr at sf0.1 (120M) on 3 tasks 0.86x. So the
+# point fold at ms_predict size takes one task, and full_corr at 100k
+# rows keeps the exchange.
+FOLD_ONE_TASK_ADDENDS = 1 << 23
 
 KEY_COLS = ("row_id", "antenna1", "antenna2", "chan")
 VIS_COLS = KEY_COLS + ("u", "v", "w", "frequency")
@@ -97,23 +118,34 @@ def _collect_sources(sources: DataFrame, need: tuple[str, ...]):
 
 
 def _fold(vis: DataFrame, names: tuple[str, ...], n_src: int, setup) -> DataFrame:
-    """One Arrow stage over one exchange: final model rows, KEY_COLS +
-    `names` (DOUBLE).
+    """One Arrow stage: final model rows, KEY_COLS + `names` (DOUBLE).
 
-    The input is the unfanned scan hash-repartitioned by `row_id` to
-    `spark.sql.shuffle.partitions` (a fixed number, so AQE cannot
-    coalesce the Python stage into one task). `setup()` runs once per
-    task in the worker and returns the per-batch kernel
+    The input is the unfanned scan twin in one of two regimes, chosen
+    from parquet footers with no Spark job:
+    - small: work (footer rows × n_src × len(names) addends) ≤
+      FOLD_ONE_TASK_ADDENDS. The scan is coalesced to one partition:
+      one narrow task, no exchange, and every duplicate key is in it;
+    - width: larger work, or a twin whose rows no footer gives. The scan
+      is hash-repartitioned by `row_id` to `spark.sql.shuffle.partitions`
+      (a fixed number, so AQE cannot coalesce the Python stage into one
+      task).
+    `setup()` runs once per task in the worker and returns the per-batch
+    kernel
     `(u, v, w, frequency, quant) -> [int64 row sums, one per name]`.
     The task holds only the copied key columns and the row sums (36 B a
     row for the point fold), then one group-by sum merges duplicate keys.
     `fold` and `setup` are closures, which cloudpickle ships by value:
     the worker never imports this package."""
     from codex_africanus_spark.operators.predict import QSCALE
-    from codex_africanus_spark.sources.tables import scan_twin
+    from codex_africanus_spark.sources.tables import footer_rows, scan_twin
 
-    width = int(vis.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    inp = scan_twin(vis).select(*VIS_COLS).repartition(width, "row_id")
+    inp = scan_twin(vis).select(*VIS_COLS)
+    rows = footer_rows(inp)
+    if rows is not None and rows * n_src * len(names) <= FOLD_ONE_TASK_ADDENDS:
+        inp = inp.coalesce(1)
+    else:
+        width = int(vis.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        inp = inp.repartition(width, "row_id")
     schema = StructType(
         [inp.schema[c] for c in KEY_COLS] + [StructField(n, DoubleType()) for n in names]
     )
@@ -123,6 +155,7 @@ def _fold(vis: DataFrame, names: tuple[str, ...], n_src: int, setup) -> DataFram
     def fold(batches):
         import numpy as _np
         import pyarrow as _pa
+        import pyarrow.compute as _pc
 
         def overflow(what):
             return ArithmeticError(
@@ -145,7 +178,7 @@ def _fold(vis: DataFrame, names: tuple[str, ...], n_src: int, setup) -> DataFram
             peak = max(peak, -lo, hi)
             return v.astype(_np.int64)
 
-        parts, rows, row_bound = [], 0, 0.0
+        parts, row_bound = [], 0.0
         for b in batches:
             if not b.num_rows:
                 continue
@@ -159,7 +192,6 @@ def _fold(vis: DataFrame, names: tuple[str, ...], n_src: int, setup) -> DataFram
             row_bound = max(row_bound, n_src * peak)
             if not row_bound < lim:
                 raise overflow("a row's sum over sources")
-            rows += b.num_rows
             # copy the keys: a slice would pin the whole IPC batch body
             parts.append(_pa.RecordBatch.from_arrays(
                 [_pa.concat_arrays([b.column(k)]) for k in keys]
@@ -170,10 +202,12 @@ def _fold(vis: DataFrame, names: tuple[str, ...], n_src: int, setup) -> DataFram
             return
         merged = _pa.Table.from_batches(parts).group_by(keys, use_threads=False).aggregate(
             [(n, "sum") for n in names]
+            + [(keys[0], "count", _pc.CountOptions(mode="all"))]
         )
         del parts
-        # a key merges at most (rows - keys + 1) row sums
-        if not (rows - merged.num_rows + 1) * row_bound < lim:
+        # every partial sum of a key (the hash sum wraps silently) adds at
+        # most its row count of row sums
+        if not int(_pc.max(merged.column(f"{keys[0]}_count")).as_py()) * row_bound < lim:
             raise overflow("a key's merged sum")
         cols = [merged.column(k) for k in keys] + [
             _pa.array(merged.column(f"{n}_sum").to_numpy().astype(_np.float64) / scale)

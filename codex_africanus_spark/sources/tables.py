@@ -44,11 +44,12 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     """
     target = df.sparkSession.sparkContext.defaultParallelism * multiplier
     # NOTE: df.rdd.getNumPartitions() would trigger an eager job under AQE;
-    # inputFiles() reads only the file index. Single-file (= single-row-
-    # group testdata) sources fan out; many-file sources are already split.
+    # the file listing reads only the file index. Single-file (= single-
+    # row-group testdata) sources fan out; many-file sources are already
+    # split.
     try:
-        files = list(df.inputFiles())
-    except Exception:
+        files, _ = _plan_files(df)
+    except (Py4JError, PySparkException):
         files = []
     if not files or len(files) >= max(2, target // 2):
         return df
@@ -83,7 +84,7 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
                 return df
     except Exception:
         pass  # unknown scheme/size -> keep the conservative fan-out
-    # idempotence: inputFiles() still reports the source file after a
+    # idempotence: the listing still reports the source file after a
     # repartition, so a second fan_out of a composed frame must not stack
     # another full exchange of the fact rows.
     if _plan_has_repartition(df, target):
@@ -91,9 +92,35 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     return df.repartition(target)
 
 
+def _fs_files(node) -> list | None:
+    """The file URIs a logical-plan leaf reads, or None when it is not a
+    `HadoopFsRelation` scan."""
+    if (node.getClass().getSimpleName() != "LogicalRelation"
+            or node.relation().getClass().getSimpleName() != "HadoopFsRelation"):
+        return None
+    return list(node.relation().location().inputFiles())
+
+
+def _plan_files(df: DataFrame) -> tuple[list, bool]:
+    """(the file URIs the file-scan leaves of `df`'s analyzed plan read,
+    whether every leaf is such a scan).
+
+    The listing comes from each relation's file index, as
+    `DataFrame.inputFiles()` does, but nothing optimizes the plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files, only_files = [], True
+    for i in range(leaves.size()):
+        got = _fs_files(leaves.apply(i))
+        if got is None:
+            only_files = False
+        else:
+            files += got
+    return list(dict.fromkeys(files)), only_files
+
+
 def _local_paths(uris) -> list | None:
-    """Local paths of the file URIs Spark reports (`inputFiles()`), or
-    None when one is remote or missing."""
+    """Local paths of the file URIs Spark reports, or None when one is
+    remote or missing."""
     paths = []
     for uri in uris:
         url = urlparse(uri)
@@ -140,10 +167,10 @@ def scan_twin(df: DataFrame) -> DataFrame:
     round-robin exchanging the raw scan — but a consumer that only runs
     a small distinct/groupBy over one or two columns (e.g. the predict
     family's `(chan, frequency)` hoist) inherits that full-data exchange
-    for nothing, and so does one that repartitions the rows itself (the
-    predict fold's `row_id` hash exchange): partial aggregation already
-    collapses the scan to
-    O(#groups) rows per task, so the pre-aggregation exchange is pure
+    for nothing, and so does one that partitions the rows itself (the
+    predict fold, one coalesced task or a `row_id` hash exchange):
+    partial aggregation already collapses the scan to O(#groups) rows
+    per task, so the pre-aggregation exchange is pure
     shuffle cost (guide §2.4 — remove shuffles outright). Builders that
     fan out attach the unfanned projection as `_scan_twin`, either as a
     frame or as a no-argument function that builds it on first use; it
@@ -157,29 +184,32 @@ def scan_twin(df: DataFrame) -> DataFrame:
     return twin
 
 
-def fast_row_count(df: DataFrame) -> int:
-    """Exact row count without launching a Spark job when `df` is a bare
-    (possibly projected) single-relation parquet scan: parquet footers
-    carry exact per-file row counts, so the driver reads KB-scale
-    metadata instead of scheduling a scan stage (guide §2.4 — the count
-    feeds plan-build decisions like N-scaled cell/plane counts, where a
-    whole job of stage latency is pure glue). Any other plan shape —
-    filters, joins, non-file relations, remote schemes — falls back to
-    df.count() unchanged."""
+def footer_rows(df: DataFrame) -> int | None:
+    """Exact row count of a bare (possibly projected) scan of local
+    parquet files, read from the parquet footers with no Spark job
+    (KB-scale metadata instead of a scan stage); None for any other
+    plan shape: filters, joins, non-file relations, remote schemes."""
     try:
-        node = df._jdf.queryExecution().optimizedPlan()
+        node = df._jdf.queryExecution().analyzed()
         while node.getClass().getSimpleName() == "Project":
             node = node.children().apply(0)
-        if node.getClass().getSimpleName() != "LogicalRelation":
-            return df.count()
-        files = _local_paths(df.inputFiles())
-        if not files:
-            return df.count()
+        paths = _local_paths(_fs_files(node) or ())
+        if not paths:
+            return None
         import pyarrow.parquet as _pq
 
-        return sum(_pq.ParquetFile(p).metadata.num_rows for p in files)
-    except Exception:
-        return df.count()
+        return sum(_pq.ParquetFile(p).metadata.num_rows for p in paths)
+    except (Py4JError, PySparkException, OSError, ValueError):
+        return None  # not parquet (pyarrow raises ArrowInvalid, a ValueError)
+
+
+def fast_row_count(df: DataFrame) -> int:
+    """Exact row count: `footer_rows` when `df` is a bare parquet scan
+    (the count feeds plan-build decisions like N-scaled cell/plane
+    counts, where a whole job of stage latency is pure glue), else
+    df.count()."""
+    rows = footer_rows(df)
+    return df.count() if rows is None else rows
 
 
 def local_frame(spark: SparkSession, data, schema) -> DataFrame:
@@ -283,16 +313,10 @@ def _frame_files(frame: DataFrame):
     (a LocalRelation, a range), a remote or missing file, or a
     nondeterministic plan."""
     try:
-        plan = frame._jdf.queryExecution().analyzed()
-        if not plan.deterministic():
+        if not frame._jdf.queryExecution().analyzed().deterministic():
             return None
-        leaves = plan.collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if (leaf.getClass().getSimpleName() != "LogicalRelation"
-                    or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"):
-                return None
-        paths = _local_paths(frame.inputFiles())
+        uris, only_files = _plan_files(frame)
+        paths = _local_paths(uris) if only_files else None
         if paths is None:
             return None
         files = [entry for path in paths for entry in _data_files(path)]
