@@ -1,7 +1,7 @@
 """Spherical ↔ tangent-plane coordinate transforms as Column expressions.
 
 Parity with /root/reference/africanus/coordinates/coordinates.py:29-199
-(radec_to_lmn, radec_to_lm, lmn_to_radec, lm_to_radec). Pure trig — stays
+(radec_to_lmn, lmn_to_radec, lm_to_radec). Pure trig — stays
 JVM-side in whole-stage codegen; no UDFs.
 """
 
@@ -23,11 +23,6 @@ def radec_to_lmn(
     m = F.sin(dec) * F.cos(dec0) - F.cos(dec) * F.sin(dec0) * F.cos(dra)
     n = F.sqrt(F.greatest(F.lit(0.0), F.lit(1.0) - l * l - m * m))
     return l, m, n
-
-
-def radec_to_lm(ra: Column, dec: Column, ra0: Column, dec0: Column) -> tuple[Column, Column]:
-    l, m, _ = radec_to_lmn(ra, dec, ra0, dec0)
-    return l, m
 
 
 def lmn_to_radec(l: Column, m: Column, n: Column, ra0: Column, dec0: Column):

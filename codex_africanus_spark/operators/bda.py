@@ -425,8 +425,8 @@ def bda_average_quantized(
 # across engines, quantized to a 1e-9 grid.
 BDA_LIGHTSPEED = 299792458.0
 BDA_DECORRELATION = 0.98
-BDA_MAX_FOV_DEG = 0.05  # synthetic uvw units — keeps bins multi-row
-BDA_MAX_LM = 0.0008726646259971648  # radians(BDA_MAX_FOV_DEG)
+# radians(0.05 deg): synthetic uvw units — keeps bins multi-row
+BDA_MAX_LM = 0.0008726646259971648
 BDA_N_MAX = 3.8077184716378554e-07  # |sqrt(1 - max_lm^2) - 1|
 # K = max_chan_freq * sin(max_lm) * pi / c  (bda_mapping.py:152-158)
 BDA_SINC_K = 0.014677480880217962

@@ -4,12 +4,12 @@ r12 verdict item 3 / ROADMAP candidate).
 The registered batch query `events_cdc_dim_state_join`
 (queries/events.py) and the streaming twin
 (streaming/cdc.py:streaming_cdc_dim_sink) both build their plans from
-THESE functions — the streaming/unwrap.py "parity by construction"
-idiom: the per-epoch pinned-version broadcast join and the integer
-(epoch, segment) aggregate are the same Column expressions, so the
-running streaming summary after the last micro-batch is bit-equal to
-the batch query wherever the batch boundaries fall (the aggregate is a
-sum/count of integers — commutative and associative across batches).
+THESE functions — parity by construction: the per-epoch pinned-version
+broadcast join and the integer (epoch, segment) aggregate are the same
+Column expressions, so the running streaming summary after the last
+micro-batch is bit-equal to the batch query wherever the batch
+boundaries fall (the aggregate is a sum/count of integers — commutative
+and associative across batches).
 
 Semantics (the versioned-dim contract): the dimension root receives
 exactly one append per epoch, in epoch order, so epoch ``e`` is served

@@ -4,7 +4,7 @@ Images/audio/video are carried as opaque BINARY columns with typed
 metadata. The Spark-side plumbing — schema, Arrow batching via
 mapInPandas, partition-sized batches, UDF signatures — is real and
 tested; the actual media decode is STUBBED (no image/audio libs in this
-container): `decode_image` raises NotImplementedError unless
+container): `decode_metadata` raises NotImplementedError unless
 `fake=True`, in which case a deterministic header parse stands in for
 the decoder so the pipeline shape can be exercised end-to-end.
 
@@ -32,18 +32,6 @@ def attach_binary_payload(docs: DataFrame) -> DataFrame:
     """Demo payload: utf-8 bytes of the text column as an opaque blob
     (stands in for an image column; the plumbing is format-agnostic)."""
     return docs.select("doc_id", F.encode(F.col("text"), "utf-8").alias("payload"))
-
-
-def decode_image(payload: bytes, fake: bool = False) -> tuple[int, int]:
-    """STUB: real deployments plug a codec here (PIL/libvips/ffmpeg).
-    The deterministic fake derives (width, height) from payload bytes."""
-    if not fake:
-        raise NotImplementedError(
-            "media codecs are not available in this container; pass fake=True "
-            "for the deterministic stand-in decoder"
-        )
-    n = len(payload)
-    return (n % 640 + 1, (n * 7) % 480 + 1)
 
 
 def decode_metadata(with_payload: DataFrame, fake: bool = True) -> DataFrame:

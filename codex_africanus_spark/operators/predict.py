@@ -48,7 +48,6 @@ QSCALE = 1e6
 def source_coherency(
     vis: DataFrame,
     sources: DataFrame,
-    convention: str = "fourier",
     with_shape: bool = True,
 ) -> DataFrame:
     """Per-(source, row) complex coherency: flux(ν)·shape(u,v,ν)·e^{iθ}.
@@ -82,7 +81,6 @@ def source_coherency(
     theta = phase_delay_angle(
         phase_path(F.col("u"), F.col("v"), F.col("w"), F.col("l"), F.col("m"), F.col("n")),
         F.col("frequency"),
-        convention,
     )
     flux = F.col("flux")
     if with_shape:
@@ -107,7 +105,6 @@ def source_coherency(
 def predict_point_vis(
     vis: DataFrame,
     sources: DataFrame,
-    convention: str = "fourier",
     with_shape: bool = True,
 ) -> DataFrame:
     """Σ_sources coherency per row — deterministic fixed-point reduction.
@@ -126,10 +123,10 @@ def predict_point_vis(
     """
     from codex_africanus_spark.operators import predict_arrow
 
-    folded = predict_arrow.point_fold(vis, sources, convention, with_shape)
+    folded = predict_arrow.point_fold(vis, sources, with_shape)
     if folded is not None:
         return folded
-    coh = source_coherency(vis, sources, convention, with_shape)
+    coh = source_coherency(vis, sources, with_shape)
     return (
         coh.groupBy("row_id", "antenna1", "antenna2", "chan")
         .agg(

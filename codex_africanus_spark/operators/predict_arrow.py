@@ -73,7 +73,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from codex_africanus_spark.constants import MINUS_TWO_PI_OVER_C, TWO_PI_OVER_C
+from codex_africanus_spark.constants import MINUS_TWO_PI_OVER_C
 from codex_africanus_spark.functions.shapes import GAUSS_SCALE
 
 # closure-embedded catalogue bound: the reference holds the source
@@ -221,7 +221,6 @@ def _fold(vis: DataFrame, names: tuple[str, ...], n_src: int, setup) -> DataFram
 def point_fold(
     vis: DataFrame,
     sources: DataFrame,
-    convention: str = "fourier",
     with_shape: bool = True,
     names: tuple[str, str] = ("model_re", "model_im"),
 ) -> DataFrame | None:
@@ -238,7 +237,7 @@ def point_fold(
     if src is None:
         return None
 
-    const = float(MINUS_TWO_PI_OVER_C if convention == "fourier" else TWO_PI_OVER_C)
+    const = float(MINUS_TWO_PI_OVER_C)
     gs = float(GAUSS_SCALE)
     shape = bool(with_shape)
 

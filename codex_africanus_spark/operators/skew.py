@@ -277,14 +277,12 @@ def salted_bda_average(
     this generalizes from memoryless to monotone-accumulated rules)."""
     import math
 
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import Window as W
 
     from codex_africanus_spark.functions.deterministic import quantize
 
     tol_q = int(math.floor(decorr_tol * motion_grid + 0.5))
-    SPAN = max_span_secs
+    span = max_span_secs
 
     ev = vis.select(
         "row_id", "time", "antenna1", "antenna2", "u", "v", "w",
@@ -341,21 +339,59 @@ def salted_bda_average(
         .localCheckpoint(eager=True)
     )
 
-    # ---- Phase A: per-bucket entry region + chain-from-i DP ----------
+    summaries = salted_bda_phase_a(rows, tol_q, span)
+    b_schema = (
+        "antenna1 int, antenna2 int, __bucket long, i_star long, "
+        "entry_bin long, bin_base long"
+    )
+    resolution = summaries.groupBy("antenna1", "antenna2").applyInPandas(
+        salted_bda_phase_b(tol_q, span), b_schema
+    )
+    partials = salted_bda_phase_c(
+        rows.join(resolution, ["antenna1", "antenna2", "__bucket"]), tol_q, span
+    )
+    return (
+        partials.groupBy("antenna1", "antenna2", "bin_idx")
+        .agg(
+            F.sum("n").alias("n_rows"),
+            F.min("tmin").alias("time_start"),
+            F.max("tmax").alias("time_end"),
+            F.sum("swre").alias("swre"),
+            F.sum("swim").alias("swim"),
+            F.sum("sw").alias("sw"),
+        )
+        .select(
+            "antenna1", "antenna2", "bin_idx", "n_rows",
+            "time_start", "time_end",
+            (F.col("swre") / F.col("sw")).alias("vis_re_avg"),
+            (F.col("swim") / F.col("sw")).alias("vis_im_avg"),
+            (F.col("sw") / F.lit(value_grid)).alias("weight_sum"),
+        )
+    )
+
+
+def salted_bda_phase_a(rows: DataFrame, tol_q: int, span: float) -> DataFrame:
+    """Phase A of `salted_bda_average` over its motion-prefix rows
+    (antenna1, antenna2, __bucket, time, row_id, __qb): one summary row
+    per (baseline, bucket) carrying the entry region and the
+    chain-from-i DP. The streaming increment (streaming/salted.py)
+    runs the same kernel."""
+    import numpy as np
+
     a_schema = (
         "antenna1 int, antenna2 int, __bucket long, n_rows long, "
         "qb_last long, t_last double, r_q array<long>, r_t array<double>, "
         "r_nclosed array<long>, r_exit_acc array<long>, r_exit_t array<double>"
     )
 
-    def phase_a(key, pdf: pd.DataFrame) -> list:
+    def phase_a(key, pdf):
         # rows arrive in (time, row_id) order from the stream sort
         qb = pdf["__qb"].to_numpy()
         t = pdf["time"].to_numpy()
         n = len(pdf)
         jmp = np.minimum(
             np.searchsorted(qb, qb + tol_q, side="right"),
-            np.searchsorted(t, t + SPAN, side="right"),
+            np.searchsorted(t, t + span, side="right"),
         )
         nclosed = np.zeros(n, dtype=np.int64)
         exit_acc = np.zeros(n, dtype=np.int64)
@@ -371,7 +407,7 @@ def salted_bda_average(
                 exit_t[i] = exit_t[j]
         e = min(
             int(np.searchsorted(qb, tol_q, side="right")),
-            int(np.searchsorted(t, t[0] + SPAN, side="right")),
+            int(np.searchsorted(t, t[0] + span, side="right")),
         )
         re_ = min(e, n - 1)
         a1, a2, bkt = key
@@ -385,7 +421,7 @@ def salted_bda_average(
     # sorted-stream, not applyInPandas: thousands of tiny (baseline,
     # bucket) groups would each pay an Arrow round-trip (measured 27 s
     # at sf0.01 vs ~3 s streamed)
-    summaries = _stream_by_groups(
+    return _stream_by_groups(
         rows.select(
             "antenna1", "antenna2", "__bucket", "time", "row_id", "__qb"
         ),
@@ -397,13 +433,15 @@ def salted_bda_average(
          "r_q", "r_t", "r_nclosed", "r_exit_acc", "r_exit_t"],
     )
 
-    # ---- Phase B: per-baseline stitch over bucket summaries ----------
-    b_schema = (
-        "antenna1 int, antenna2 int, __bucket long, i_star long, "
-        "entry_bin long, bin_base long"
-    )
 
-    def phase_b(pdf: pd.DataFrame) -> pd.DataFrame:
+def salted_bda_phase_b(tol_q: int, span: float):
+    """The Phase B kernel of `salted_bda_average`: one baseline's bucket
+    summaries (Phase A rows) in, its (__bucket, i_star, entry_bin,
+    bin_base) resolution out, for applyInPandas."""
+    import numpy as np
+    import pandas as pd
+
+    def phase_b(pdf):
         pdf = pdf.sort_values("__bucket").reset_index(drop=True)
         a1 = int(pdf["antenna1"].iloc[0])
         a2 = int(pdf["antenna2"].iloc[0])
@@ -418,16 +456,25 @@ def salted_bda_average(
             r_q = np.asarray(pdf["r_q"].iloc[k], dtype=np.int64)
             r_t = np.asarray(pdf["r_t"].iloc[k], dtype=np.float64)
             if started:
-                if acc_carry + qb_last <= tol_q and t_last <= anchor_t + SPAN:
+                if acc_carry + qb_last <= tol_q and t_last <= anchor_t + span:
                     # whole bucket absorbed into the open entering bin
                     out.append((a1, a2, bkt, -1, cur_bin, -1))
                     acc_carry += qb_last
                     continue
                 i_star = min(
                     int(np.searchsorted(r_q, tol_q - acc_carry, side="right")),
-                    int(np.searchsorted(r_t, anchor_t + SPAN, side="right")),
+                    int(np.searchsorted(r_t, anchor_t + span, side="right")),
                 )
-                assert i_star < len(r_q), "entry region must contain i*"
+                if i_star >= len(r_q):
+                    # contract check must survive `python -O` and carry
+                    # enough state to diagnose from a task failure
+                    raise ValueError(
+                        "salted BDA entry-region invariant violated: "
+                        f"i*={i_star} >= |entry region|={len(r_q)} for "
+                        f"baseline=({a1},{a2}) bucket={bkt} "
+                        f"acc_carry={acc_carry} anchor_t={anchor_t} "
+                        f"tol_q={tol_q}"
+                    )
             else:
                 i_star = 0
             out.append((a1, a2, bkt, i_star, cur_bin, next_bin))
@@ -444,17 +491,22 @@ def salted_bda_average(
             ],
         )
 
-    resolution = summaries.groupBy("antenna1", "antenna2").applyInPandas(
-        phase_b, b_schema
-    )
+    return phase_b
 
-    # ---- Phase C: per-bucket re-scan from i*, partial fixed-point agg
+
+def salted_bda_phase_c(rows: DataFrame, tol_q: int, span: float) -> DataFrame:
+    """Phase C of `salted_bda_average`: the motion-prefix rows joined
+    with their bucket's (i_star, entry_bin, bin_base) resolution in,
+    per-bin partial fixed-point sums (bin_idx, n, tmin, tmax, swre,
+    swim, sw) out. The streaming increment runs the same kernel."""
+    import numpy as np
+
     c_schema = (
         "antenna1 int, antenna2 int, bin_idx long, n long, tmin double, "
         "tmax double, swre long, swim long, sw long"
     )
 
-    def phase_c(key, pdf: pd.DataFrame) -> list:
+    def phase_c(key, pdf):
         # rows arrive in (time, row_id) order from the stream sort
         qb = pdf["__qb"].to_numpy()
         t = pdf["time"].to_numpy()
@@ -471,7 +523,7 @@ def salted_bda_average(
             aq, at = int(qb[i_star]), float(t[i_star])
             bins[i_star] = bin_base
             for j in range(i_star + 1, n):
-                if int(qb[j]) - aq > tol_q or float(t[j]) - at > SPAN:
+                if int(qb[j]) - aq > tol_q or float(t[j]) - at > span:
                     local += 1
                     aq, at = int(qb[j]), float(t[j])
                 bins[j] = bin_base + local
@@ -491,29 +543,11 @@ def salted_bda_average(
             for k, (s, e) in enumerate(zip(starts, ends))
         ]
 
-    partials = _stream_by_groups(
-        rows.join(resolution, ["antenna1", "antenna2", "__bucket"]),
+    return _stream_by_groups(
+        rows,
         ["antenna1", "antenna2", "__bucket"],
         ["time", "row_id", "u", "v", "w", "wre_q"],
         phase_c, c_schema,
         ["antenna1", "antenna2", "bin_idx", "n", "tmin", "tmax",
          "swre", "swim", "sw"],
-    )
-    return (
-        partials.groupBy("antenna1", "antenna2", "bin_idx")
-        .agg(
-            F.sum("n").alias("n_rows"),
-            F.min("tmin").alias("time_start"),
-            F.max("tmax").alias("time_end"),
-            F.sum("swre").alias("swre"),
-            F.sum("swim").alias("swim"),
-            F.sum("sw").alias("sw"),
-        )
-        .select(
-            "antenna1", "antenna2", "bin_idx", "n_rows",
-            "time_start", "time_end",
-            (F.col("swre") / F.col("sw")).alias("vis_re_avg"),
-            (F.col("swim") / F.col("sw")).alias("vis_im_avg"),
-            (F.col("sw") / F.lit(value_grid)).alias("weight_sum"),
-        )
     )

@@ -1,15 +1,13 @@
-"""Shared core of the salted integer-exact phase unwrap.
+"""Core of the salted integer-exact phase unwrap.
 
 The r11 query `phase_unwrap_salted` (queries/msops.py) decomposes the
 per-baseline sequential unwrap into per-(baseline, 30-day-bucket)
 internal unwraps plus a bucket-summary stitch — exact because cumsum is
-associative. r12 extracts that core here so the STREAMING twin
-(streaming/unwrap.py) is built from the SAME projections: parity by
-construction.
+associative. The query builds its plan from the projections here.
 
 Everything is integer-exact (milliradian grid): the wrap corrector
 compares integer deltas against ±3141, so there is no float rounding to
-fork across engines or across batch/streaming.
+fork across engines.
 
 Reference semantics anchor: numpy.unwrap over a per-baseline time
 series (the reference uses phase unwrapping inside its gain solvers,
@@ -116,27 +114,4 @@ def stitch_buckets(summ: DataFrame) -> DataFrame:
                 F.lit(0),
             ),
         )
-    )
-
-
-def baseline_summary(stitched: DataFrame) -> DataFrame:
-    """Collapse a stitched bucket frame to per-baseline totals — the
-    exact shape the streaming carry needs (and the registered query's
-    final aggregate, minus its column aliases): counts, net/total wraps
-    including boundary correctors, the first/last raw phases of the
-    span, and the globally-shifted last/min/max unwrapped values
-    (k = 0 at the frame's first row)."""
-    return stitched.groupBy("antenna1", "antenna2").agg(
-        F.sum("n").alias("n_b"),
-        (F.sum("net_in") + F.sum("c_b")).cast("long").alias("net_b"),
-        (F.sum("abs_in") + F.sum(F.abs(F.col("c_b")))).cast("long")
-        .alias("abs_b"),
-        F.expr("min_by(first_p, bucket)").cast("long").alias("first_p"),
-        F.expr("max_by(last_p, bucket)").cast("long").alias("last_p"),
-        F.expr(f"max_by(last_unw_in + {WRAP_GRID} * offset, bucket)")
-        .cast("long").alias("last_unw"),
-        F.min(F.col("min_unw_in") + WRAP_GRID * F.col("offset")).cast("long")
-        .alias("min_unw"),
-        F.max(F.col("max_unw_in") + WRAP_GRID * F.col("offset")).cast("long")
-        .alias("max_unw"),
     )

@@ -635,7 +635,7 @@ def rime(
         from codex_africanus_spark.operators import predict_arrow
 
         folded = predict_arrow.point_fold(
-            vis, sources, "fourier", GaussianShapeTerm in term_types,
+            vis, sources, GaussianShapeTerm in term_types,
             names=("vis_re", "vis_im"),
         )
         if folded is not None:

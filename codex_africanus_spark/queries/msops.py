@@ -3631,9 +3631,7 @@ def ms_corr_unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("phase_unwrap_salted", _PHASE_UNWRAP_ORACLE)
 def phase_unwrap_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket-decomposed exact phase unwrap (see the section comment).
-    r12: the bucket-summary/stitch core moved to operators/unwrap.py
-    (same expressions verbatim) so the streaming twin
-    (streaming/unwrap.py) shares it — parity by construction."""
+    The bucket-summary/stitch core lives in operators/unwrap.py."""
     from codex_africanus_spark.operators import unwrap as unwrap_op
 
     vis = tpch_ms.vis_table(spark, sf_dir)

@@ -269,7 +269,8 @@ def vacuum(
     (r12 — a forgotten `extra_live_roots` used to reclaim data dirs an
     O(1) branch's read-through view still references); unregistered
     sharers (e.g. branches created by older code) must still be passed
-    via `extra_live_roots`. `drop_branch` unregisters.
+    via `extra_live_roots`. Removing a branch directory unregisters it
+    on the next registry walk (`registered_branches`).
 
     Refuses to run on a BRANCH root (r10 ADVICE, medium): a branch's
     data directory is a link into the SOURCE's shared pool, so
@@ -308,9 +309,8 @@ def vacuum(
     # r12 (r11 verdict item 7): REGISTERED branches are auto-pinned —
     # an O(1) branch reads manifests <= base from THIS log, so a vacuum
     # that forgot extra_live_roots used to reclaim data dirs the
-    # branch's read-through view still references. drop_branch()
-    # unregisters; stale registrations self-clean in
-    # registered_branches().
+    # branch's read-through view still references. Registrations of
+    # removed branch directories self-clean in registered_branches().
     for r2 in set(extra_live_roots) | set(registered_branches(root)):
         h2 = latest_version(r2)
         for v in range(1, (h2 or 0) + 1):
@@ -606,33 +606,19 @@ def _all_stats(root: str, version: int | None) -> dict:
     return {f: stats.get(f, {}) for f in files}
 
 
-def read_snapshot_where(
-    spark: SparkSession,
-    root: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> DataFrame:
-    """Data-skipping read: only files whose [min,max] for `col` intersects
-    [lo, hi] are opened; the residual filter still applies row-level.
-    With stats on the layout key this is manifest-level partition pruning
-    without directory layout — the Delta/Iceberg scan-planning shape."""
-    return read_snapshot_where_all(spark, root, {col: (lo, hi)}, version)
-
-
 def read_snapshot_where_all(
     spark: SparkSession,
     root: str,
     preds: dict,
     version: int | None = None,
 ) -> DataFrame:
-    """Multi-predicate data-skipping read: a file survives only if its
-    [min, max] intersects EVERY `col: (lo, hi)` range — with a Z-ordered
-    layout both dimensions' footprints are narrow per file, so a 2-D box
-    prunes on both (the point of Morton clustering; a single-dimension
-    sort could only skip on its own key). Residual filters still apply
-    row-level."""
+    """Data-skipping read: a file is opened only if its [min, max]
+    intersects EVERY `col: (lo, hi)` range — manifest-level partition
+    pruning without directory layout, the Delta/Iceberg scan-planning
+    shape. With a Z-ordered layout both dimensions' footprints are
+    narrow per file, so a 2-D box prunes on both (the point of Morton
+    clustering; a single-dimension sort could only skip on its own key).
+    Residual filters still apply row-level."""
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -770,7 +756,7 @@ def zorder_column(col_a, col_b, bits: int = 16):
 
     Range-partitioning by this value clusters BOTH dimensions: each file
     covers a Z-curve segment, so its [min,max] footprint in either
-    column is narrow and `read_snapshot_where` can skip files on either
+    column is narrow and `read_snapshot_where_all` can skip files on either
     predicate — the Delta OPTIMIZE ZORDER effect, without a sort on any
     single dimension dominating the other.
     """
@@ -805,7 +791,7 @@ def commit_zordered(
     file stats on both columns — multi-dimensional data skipping.
 
     Two pruning tiers compose on a read:
-    - file-level: the manifest's per-file [min,max] (read_snapshot_where*)
+    - file-level: the manifest's per-file [min,max] (read_snapshot_where_all)
     - row-group-level: the reader's residual predicate reaches the
       parquet scan as PushedFilters, and because rows are Z-sorted
       WITHIN each file too, every row group's footprint is narrow in
@@ -907,25 +893,11 @@ def create_branch(root: str, branch_root: str, version: int | None = None) -> in
     return base
 
 
-def drop_branch(branch_root: str) -> None:
-    """Delete a branch: removes its registration from the source root
-    (so vacuum stops pinning its history) and the branch directory
-    itself. The shared data pool is untouched — reclaim via a
-    subsequent `vacuum` on the source."""
-    meta = _branch_meta(branch_root)
-    if meta is None:
-        raise ValueError(f"{branch_root} is not a branch root")
-    tag = hashlib.md5(os.path.abspath(branch_root).encode()).hexdigest()[:16]
-    marker = Path(meta["source"]) / _BRANCH_REG / f"{tag}.json"
-    marker.unlink(missing_ok=True)
-    shutil.rmtree(branch_root, ignore_errors=True)
-
-
 def registered_branches(root: str) -> list[str]:
     """Live registered branch roots of `root`. Stale registrations
-    (branch directory gone without drop_branch — e.g. an rmtree'd /tmp
-    experiment) are cleaned up on the way through rather than pinning
-    a dead branch's history forever."""
+    (branch directory removed, e.g. an rmtree'd experiment) are cleaned
+    up on the way through rather than pinning a dead branch's history
+    forever."""
     reg = Path(root) / _BRANCH_REG
     out: list[str] = []
     if not reg.is_dir():

@@ -1,9 +1,9 @@
 """Streaming twin of the CDC-refreshed versioned-dimension join (r13,
 r12 verdict item 3 / ROADMAP candidate).
 
-Kappa shape, the streaming/unwrap.py idiom: `cdc_dim_increment` is a
-pure (event micro-batch, carry) → (running summary, new carry) function
-built from the SAME operators/cdc.py core the registered batch query
+Kappa shape: `cdc_dim_increment` is a pure (event micro-batch, carry)
+→ (running summary, new carry) function built from the SAME
+operators/cdc.py core the registered batch query
 `events_cdc_dim_state_join` composes — parity by construction. The
 (epoch, segment) aggregate is integer (count + cent-grid value sum), so
 merging per-batch partials into the carry is exact and commutative:
@@ -25,10 +25,10 @@ independent of history length. In process, each step collects the
 merged carry through Arrow and hands it back as a JVM ``LocalRelation``
 (`sources.tables.localize`): no Python worker scans it and the planner
 sees its real size. The marker-committed carry stays on disk, DURABLE
-as ``carry_<batch_id>.parquet`` beside the summaries (the
-r12-ADVICE salted/unwrap idiom: reload the latest marker-committed
-carry each batch, marker written last), so a driver restart replays
-against the true stream state.
+as ``carry_<batch_id>.parquet`` beside the summaries
+(`sources.sink.marker_committed_sink`: reload the latest
+marker-committed carry each batch, marker written last), so a driver
+restart replays against the true stream state.
 """
 
 from __future__ import annotations

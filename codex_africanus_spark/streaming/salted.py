@@ -15,12 +15,12 @@ baseline); across batches the carry is O(#baselines).
 
 Kappa shape: `salted_bda_increment` is a pure (batch frame, carry
 frame) → (bins frame, new carry frame) function — directly usable from
-`foreachBatch` (see `streaming_salted_bda_sink`) with the repo's
-exactly-once batch-id marker idiom, and directly testable without the
-streaming machinery. The empty carry is an Arrow-built JVM
-``LocalRelation`` (`sources.tables.local_frame`); the returned carry
-stays a lazy plan, which the sink commits to disk as parquet, marker
-last, and reloads on the next batch.
+`foreachBatch` (see `streaming_salted_bda_sink`, the marker-committed
+durable-carry protocol of `sources.sink.marker_committed_sink`) and
+directly testable without the streaming machinery. The empty carry is
+an Arrow-built JVM ``LocalRelation`` (`sources.tables.local_frame`);
+the returned carry stays a lazy plan, which the sink commits to disk as
+parquet, marker last, and reloads on the next batch.
 
 Bit-equality to the unsalted streaming twin: the closure rule reads
 only the exact integer motion prefix and the anchor time, both of
@@ -41,6 +41,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codex_africanus_spark.sources.sink import marker_committed_sink
 from codex_africanus_spark.sources.tables import local_frame
 
 # per-baseline open-bin accumulator — field-for-field the unsalted
@@ -80,12 +81,15 @@ def salted_bda_increment(
     the batch is free — the bucket streams sort on the full
     (time, row_id, u, v, w, wre_q) tie-break key.
     """
-    import numpy as np  # noqa: F401 — re-exported into phase closures
-    import pandas as pd  # noqa: F401
+    import numpy as np
+    import pandas as pd
     from pyspark.sql import Window as W
 
     from codex_africanus_spark.functions.deterministic import quantize
-    from codex_africanus_spark.operators.skew import _stream_by_groups
+    from codex_africanus_spark.operators.skew import (
+        salted_bda_phase_a,
+        salted_bda_phase_c,
+    )
 
     tol_q = int(math.floor(decorr_tol * motion_grid + 0.5))
     SPAN = max_span_secs
@@ -152,55 +156,8 @@ def salted_bda_increment(
         .drop("__prev", "__cpu", "__cpv", "__cpw", "__dq")
     )
 
-    # ---- Phase A (verbatim batch kernel): per-bucket entry region + DP
-    a_schema = (
-        "antenna1 int, antenna2 int, __bucket long, n_rows long, "
-        "qb_last long, t_last double, r_q array<long>, r_t array<double>, "
-        "r_nclosed array<long>, r_exit_acc array<long>, r_exit_t array<double>"
-    )
-
-    def phase_a(key, pdf):
-        qb = pdf["__qb"].to_numpy()
-        t = pdf["time"].to_numpy()
-        n = len(pdf)
-        jmp = np.minimum(
-            np.searchsorted(qb, qb + tol_q, side="right"),
-            np.searchsorted(t, t + SPAN, side="right"),
-        )
-        nclosed = np.zeros(n, dtype=np.int64)
-        exit_acc = np.zeros(n, dtype=np.int64)
-        exit_t = np.zeros(n, dtype=np.float64)
-        for i in range(n - 1, -1, -1):
-            j = jmp[i]
-            if j >= n:
-                exit_acc[i] = qb[n - 1] - qb[i]
-                exit_t[i] = t[i]
-            else:
-                nclosed[i] = 1 + nclosed[j]
-                exit_acc[i] = exit_acc[j]
-                exit_t[i] = exit_t[j]
-        e = min(
-            int(np.searchsorted(qb, tol_q, side="right")),
-            int(np.searchsorted(t, t[0] + SPAN, side="right")),
-        )
-        re_ = min(e, n - 1)
-        a1, a2, bkt = key
-        return [(
-            int(a1), int(a2), int(bkt), n, int(qb[n - 1]), float(t[n - 1]),
-            qb[: re_ + 1].tolist(), t[: re_ + 1].tolist(),
-            nclosed[: re_ + 1].tolist(), exit_acc[: re_ + 1].tolist(),
-            exit_t[: re_ + 1].tolist(),
-        )]
-
-    summaries = _stream_by_groups(
-        rows.select(
-            "antenna1", "antenna2", "__bucket", "time", "row_id", "__qb"
-        ),
-        ["antenna1", "antenna2", "__bucket"], ["time", "row_id", "__qb"],
-        phase_a, a_schema,
-        ["antenna1", "antenna2", "__bucket", "n_rows", "qb_last", "t_last",
-         "r_q", "r_t", "r_nclosed", "r_exit_acc", "r_exit_t"],
-    )
+    # ---- Phase A (the batch kernel): per-bucket entry region + DP
+    summaries = salted_bda_phase_a(rows, tol_q, SPAN)
 
     # ---- Phase B: per-baseline stitch, INITIALIZED from the carry ----
     b_schema = (
@@ -289,47 +246,8 @@ def salted_bda_increment(
         F.first("exit_t").alias("exit_t"),
     )
 
-    # ---- Phase C (verbatim batch kernel): per-bucket re-scan from i*
-    c_schema = (
-        "antenna1 int, antenna2 int, bin_idx long, n long, tmin double, "
-        "tmax double, swre long, swim long, sw long"
-    )
-
-    def phase_c(key, pdf):
-        qb = pdf["__qb"].to_numpy()
-        t = pdf["time"].to_numpy()
-        n = len(pdf)
-        i_star = int(pdf["i_star"].iat[0])
-        entry_bin = int(pdf["entry_bin"].iat[0])
-        bin_base = int(pdf["bin_base"].iat[0])
-        bins = np.empty(n, dtype=np.int64)
-        if i_star < 0:
-            bins[:] = entry_bin
-        else:
-            bins[:i_star] = entry_bin
-            local = 0
-            aq, at = int(qb[i_star]), float(t[i_star])
-            bins[i_star] = bin_base
-            for j in range(i_star + 1, n):
-                if int(qb[j]) - aq > tol_q or float(t[j]) - at > SPAN:
-                    local += 1
-                    aq, at = int(qb[j]), float(t[j])
-                bins[j] = bin_base + local
-        starts = np.concatenate(
-            ([0], np.flatnonzero(bins[1:] != bins[:-1]) + 1)
-        )
-        ends = np.concatenate((starts[1:], [n]))
-        swre = np.add.reduceat(pdf["wre_q"].to_numpy(), starts)
-        swim = np.add.reduceat(pdf["wim_q"].to_numpy(), starts)
-        sw = np.add.reduceat(pdf["w_q"].to_numpy(), starts)
-        a1, a2 = int(key[0]), int(key[1])
-        return [
-            (a1, a2, int(bins[s]), int(e - s), float(t[s]), float(t[e - 1]),
-             int(swre[k]), int(swim[k]), int(sw[k]))
-            for k, (s, e) in enumerate(zip(starts, ends))
-        ]
-
-    partials = _stream_by_groups(
+    # ---- Phase C (the batch kernel): per-bucket re-scan from i*
+    partials = salted_bda_phase_c(
         rows.join(
             resolution.select(
                 "antenna1", "antenna2", "__bucket", "i_star", "entry_bin",
@@ -337,11 +255,7 @@ def salted_bda_increment(
             ),
             ["antenna1", "antenna2", "__bucket"],
         ),
-        ["antenna1", "antenna2", "__bucket"],
-        ["time", "row_id", "u", "v", "w", "wre_q"],
-        phase_c, c_schema,
-        ["antenna1", "antenna2", "bin_idx", "n", "tmin", "tmax",
-         "swre", "swim", "sw"],
+        tol_q, SPAN,
     )
     # the carried open bin's accumulated partials merge into its
     # continuation exactly (integer partials are order-independent)
@@ -416,62 +330,21 @@ def salted_bda_increment(
 
 
 def streaming_salted_bda_sink(
-    out_root: str,
-    state_root: str,
+    stream_vis: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
     decorr_tol: float = 500.0,
     max_span_secs: float = 2_592_000.0,
     bucket_secs: float = 2_592_000.0,
 ):
-    """foreachBatch consumer: exactly-once salted BDA over a vis stream.
-
-    Per batch: read the latest committed carry, run
-    :func:`salted_bda_increment`, write the bins to the batch-unique
-    partition directory ``out_root/batch_id=<id>`` (mode=overwrite),
-    write the new carry as ``state_root/carry_<batch_id>.parquet``,
-    then publish a ``_done_<batch_id>`` marker LAST.
-
-    Exactly-once argument (r10 ADVICE, medium): the three steps are
-    non-atomic, but every one of them is IDEMPOTENT under replay —
-    Structured Streaming re-runs a crashed batch with the same
-    (batch_id, data), the bins OVERWRITE their own partition directory
-    (an interrupted or duplicate write is replaced, never appended
-    beside), the carry overwrite is deterministic from (same input,
-    same previous carry), and the marker is the commit point. A reader
-    of ``out_root`` therefore never sees duplicated bins; to also
-    exclude the (transient) torn files of a mid-crash batch, filter to
-    ``batch_id <= max(done markers)``. A fully-committed batch id sees
-    its marker and becomes a no-op. Carry files of superseded batches
-    are retained for replay until vacuumed."""
-    import os
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if os.path.exists(os.path.join(state_root, f"_done_{batch_id}")):
-            return  # replayed batch — already committed
-        os.makedirs(state_root, exist_ok=True)
-        done = sorted(
-            int(f.split("_done_")[1])
-            for f in os.listdir(state_root)
-            if f.startswith("_done_")
-        )
-        prev = [b for b in done if b < batch_id]
-        if prev:
-            carry = spark.read.parquet(
-                os.path.join(state_root, f"carry_{prev[-1]}.parquet")
-            )
-        else:
-            carry = empty_carry(spark)
-        bins, carry_new = salted_bda_increment(
+    """foreachBatch wiring: `salted_bda_increment` under the
+    marker-committed durable-carry protocol (`sources.sink`). Each
+    batch's bins land in ``summary_batch_<id>``; a bin re-emitted by a
+    later batch supersedes its earlier row (the update-mode upsert
+    contract)."""
+    return marker_committed_sink(
+        stream_vis, out_dir, checkpoint_dir, CARRY_SCHEMA, empty_carry,
+        lambda batch_df, carry: salted_bda_increment(
             batch_df, carry, decorr_tol, max_span_secs, bucket_secs
-        )
-        # batch-unique target + overwrite = replay rewrites in place
-        bins.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"batch_id={batch_id}")
-        )
-        carry_new.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"carry_{batch_id}.parquet")
-        )
-        with open(os.path.join(state_root, f"_done_{batch_id}"), "w") as f:
-            f.write("")
-
-    return _batch
+        ),
+    )

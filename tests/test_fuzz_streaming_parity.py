@@ -13,11 +13,8 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from codex_africanus_spark.operators import bda as bda_op
-from codex_africanus_spark.operators import dedup as dedup_op
-from codex_africanus_spark.streaming import dedup as sdedup
 from codex_africanus_spark.streaming import stateful
 
 from tests.conftest import await_done
@@ -138,55 +135,3 @@ def test_streaming_bda_boundary_fuzz(spark, tmp_path, strategy):
             got[c].to_numpy(), batch[c].to_numpy(), rtol=1e-12,
             err_msg=f"{strategy}:{c}",
         )
-
-
-@pytest.mark.parametrize("per_file", [1, 2])
-def test_streaming_dedup_boundary_fuzz(spark, tmp_path, per_file):
-    """First-arrival-wins exact dedup under adversarial arrival
-    granularity: with arrival order = doc_id order, the survivor set
-    must equal the batch canonical (MIN doc_id per digest) regardless
-    of where the micro-batch cuts land — including a duplicate pair
-    split across two consecutive one-row batches."""
-    M = 60_000_000
-    B = 1_000_000_000_000_000
-    texts = ["alpha", "beta", "alpha", "gamma", "beta", "alpha", "delta",
-             "gamma", "epsilon", "delta"]
-    rows = [(i, t, B + i * M) for i, t in enumerate(texts)]
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text", "ts_us"])
-    src = tmp_path / f"docs_{per_file}"
-    src.mkdir()
-    for k in range(0, len(pdf), per_file):
-        path = src / f"b{k:03d}.parquet"
-        pq.write_table(
-            pa.Table.from_pandas(pdf.iloc[k:k + per_file], preserve_index=False),
-            path,
-        )
-        os.utime(path, (1_000_000_000 + k * 100,) * 2)
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts_us long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withColumn("event_time", F.timestamp_micros(F.col("ts_us")))
-    )
-    out = sdedup.streaming_exact_dedup(stream, watermark="1 hour")
-    name = f"dedup_fuzz_{per_file}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ck{per_file}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_done(q)
-    got = spark.sql(f"SELECT doc_id, text FROM {name}").toPandas()
-    docs = spark.createDataFrame(
-        pdf.assign(lang="en", source="src0", n_chars=pdf.text.str.len())[
-            ["doc_id", "text", "lang", "source", "n_chars"]
-        ]
-    )
-    batch = dedup_op.exact_dedup(docs).toPandas()
-    assert sorted(got.doc_id) == sorted(batch.canonical_doc_id), per_file
-    assert sorted(got.text) == sorted(
-        pdf.set_index("doc_id").loc[batch.canonical_doc_id].text
-    ), per_file

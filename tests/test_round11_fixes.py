@@ -24,10 +24,14 @@ import numpy as np
 import pandas as pd
 import pytest
 
-import codex_africanus_spark.streaming.salted as ssalt
 import codex_africanus_spark.streaming.stateful as stf
 from codex_africanus_spark.sources import snapshot as snap
-from tests.test_salted_bda import SCHEMA, _fuzz_frame
+from tests.test_streaming_salted_bda import (
+    forget_commit,
+    fuzz_sink,
+    run_sink,
+    sunk_bins,
+)
 
 
 def _df(spark, tag, n=4):
@@ -44,36 +48,21 @@ def test_salted_sink_partial_commit_replay_no_duplicates(spark, tmp_path):
     """Crash window the r10 test missed: bins committed, carry+marker
     not. The replayed batch must OVERWRITE its own bins, not append a
     second copy."""
-    pdf = _fuzz_frame(23, n=240)
-    ordered = pdf.sort_values(["time", "row_id", "u", "v", "w", "vis_re"])
-    out_root = str(tmp_path / "bins")
-    state_root = str(tmp_path / "state")
-    fn = ssalt.streaming_salted_bda_sink(
-        out_root, state_root, decorr_tol=60.0, max_span_secs=900.0,
-        bucket_secs=300.0,
-    )
-    chunks = np.array_split(ordered, 3)
-    for i, chunk in enumerate(chunks):
-        fn(spark.createDataFrame(chunk.reset_index(drop=True), SCHEMA), i)
-    committed = spark.read.parquet(out_root).toPandas()
-
-    # simulate the crash: batch 2's bins are on disk but its marker and
-    # carry never landed
     import shutil
 
-    os.remove(os.path.join(state_root, "_done_2"))
-    shutil.rmtree(os.path.join(state_root, "carry_2.parquet"))
-    fn(spark.createDataFrame(chunks[2].reset_index(drop=True), SCHEMA), 2)
-    replayed = spark.read.parquet(out_root).toPandas()
-    assert len(replayed) == len(committed)
-    key = ["antenna1", "antenna2", "bin_idx", "batch_id"]
-    a = committed.sort_values(key).reset_index(drop=True)
-    b = replayed.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        a[sorted(a.columns)], b[sorted(b.columns)], check_dtype=False
-    )
-    # and the marker is back, so a second replay is a pure no-op
-    assert os.path.exists(os.path.join(state_root, "_done_2"))
+    _, src, out_dir, ck = fuzz_sink(spark, tmp_path, 23, 240)
+    committed = sunk_bins(spark, out_dir)
+
+    # simulate the crash: batch 2's bins are on disk but its marker,
+    # carry and streaming commit never landed
+    os.remove(os.path.join(out_dir, "_marker_2.json"))
+    shutil.rmtree(os.path.join(out_dir, "carry_2.parquet"))
+    forget_commit(ck, 2)
+    run_sink(spark, src, out_dir, ck)
+    pd.testing.assert_frame_equal(sunk_bins(spark, out_dir), committed)
+    # the marker and carry are back, so a second replay is a pure no-op
+    assert os.path.exists(os.path.join(out_dir, "_marker_2.json"))
+    assert os.path.exists(os.path.join(out_dir, "carry_2.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -123,7 +112,7 @@ def test_merge_ff_carries_stats_for_data_skipping(spark, tmp_path):
     # every live file still carries k-range stats after the merge
     assert all("k" in s for s in stats.values()), stats
     # and the skipping read opens only the matching file
-    got = snap.read_snapshot_where(spark, main, "k", 1000, 1010)
+    got = snap.read_snapshot_where_all(spark, main, {"k": (1000, 1010)})
     assert got.count() == 11
     opened = [f for f, s in stats.items() if not (s["k"][0] > 1010 or s["k"][1] < 1000)]
     assert len(opened) == 1

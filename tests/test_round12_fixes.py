@@ -192,28 +192,8 @@ def test_vacuum_auto_pins_registered_branch(spark, tmp_path):
 
 
 def test_drop_branch_unregisters_and_vacuum_reclaims(spark, tmp_path):
-    """After drop_branch the source vacuum may reclaim the base-only
-    data dirs; the registry marker is gone."""
-    from codex_africanus_spark.sources import snapshot as snap
-
-    main = str(tmp_path / "main")
-    dev = str(tmp_path / "dev")
-    snap.commit(_snap_df(spark, "a"), main, mode="overwrite")       # v1
-    snap.create_branch(main, dev)
-    snap.commit(_snap_df(spark, "b", n=3), main, mode="overwrite")  # v2
-    assert snap.vacuum(main, 2) == []  # branch pins v1's files
-    snap.drop_branch(dev)
-    assert snap.registered_branches(main) == []
-    assert not os.path.exists(dev)
-    removed = snap.vacuum(main, 2)
-    assert len(removed) == 1  # v1's overwrite txn dir now reclaimable
-    assert snap.read_snapshot(spark, main).count() == 3  # head intact
-
-
-def test_stale_branch_registration_self_cleans(spark, tmp_path):
-    """A branch dir removed without drop_branch (rmtree'd experiment)
-    must not pin the source's history forever: the stale marker is
-    dropped on the next registry walk and vacuum proceeds."""
+    """After the branch directory is removed the source vacuum may
+    reclaim the base-only data dirs; the registry marker is gone."""
     import shutil as _sh
 
     from codex_africanus_spark.sources import snapshot as snap
@@ -223,7 +203,29 @@ def test_stale_branch_registration_self_cleans(spark, tmp_path):
     snap.commit(_snap_df(spark, "a"), main, mode="overwrite")       # v1
     snap.create_branch(main, dev)
     snap.commit(_snap_df(spark, "b", n=3), main, mode="overwrite")  # v2
-    _sh.rmtree(dev)  # vanished without drop_branch
+    assert snap.vacuum(main, 2) == []  # branch pins v1's files
+    _sh.rmtree(dev)
+    assert snap.registered_branches(main) == []
+    assert not os.path.exists(dev)
+    removed = snap.vacuum(main, 2)
+    assert len(removed) == 1  # v1's overwrite txn dir now reclaimable
+    assert snap.read_snapshot(spark, main).count() == 3  # head intact
+
+
+def test_stale_branch_registration_self_cleans(spark, tmp_path):
+    """A removed branch dir (rmtree'd experiment) must not pin the
+    source's history forever: the stale marker is dropped on the next
+    registry walk and vacuum proceeds."""
+    import shutil as _sh
+
+    from codex_africanus_spark.sources import snapshot as snap
+
+    main = str(tmp_path / "main")
+    dev = str(tmp_path / "dev")
+    snap.commit(_snap_df(spark, "a"), main, mode="overwrite")       # v1
+    snap.create_branch(main, dev)
+    snap.commit(_snap_df(spark, "b", n=3), main, mode="overwrite")  # v2
+    _sh.rmtree(dev)  # vanished without unregistering
     assert snap.registered_branches(main) == []  # marker self-cleans
     assert len(snap.vacuum(main, 2)) == 1
 

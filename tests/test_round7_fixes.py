@@ -135,7 +135,9 @@ def test_zorder_box_scan_actually_skips_files(spark, sf_dir):
     root = _ensure_zorder_layout(spark, sf_dir)
     lo_u, hi_u, lo_v, hi_v = _ZORDER_BOX
     all_files = snap.snapshot_files(root + "/data")
-    pruned = snap.read_snapshot_where(spark, root + "/data", "u_cell", lo_u, hi_u)
+    pruned = snap.read_snapshot_where_all(
+        spark, root + "/data", {"u_cell": (lo_u, hi_u)}
+    )
     assert 0 < len(pruned.inputFiles()) < len(all_files)
     full = (
         snap.read_snapshot(spark, root + "/data")

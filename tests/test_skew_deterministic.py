@@ -82,3 +82,30 @@ def test_salted_sessionize_carry_across_arrow_batches(spark, sf_dir):
         )
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_salted_bda_phase_b_raises_on_broken_entry_region():
+    """Phase B's entry-region contract holds under `python -O` too: a
+    bucket summary whose region ends before i* raises a ValueError that
+    names the baseline, bucket and carry, not an assert."""
+    import pandas as pd
+    import pytest
+
+    summary = pd.DataFrame({
+        "antenna1": [0, 0],
+        "antenna2": [1, 1],
+        "__bucket": [0, 1],
+        "qb_last": [0, 100],      # bucket 1 is not absorbed whole ...
+        "t_last": [0.0, 1.0],
+        "r_q": [[0], [0, 5]],     # ... but its region stops at Qb <= tol_q
+        "r_t": [[0.0], [0.5, 0.6]],
+        "r_nclosed": [[0], [0, 0]],
+        "r_exit_acc": [[0], [0, 0]],
+        "r_exit_t": [[0.0], [0.0, 0.0]],
+    })
+    phase_b = skew.salted_bda_phase_b(10, 900.0)
+    with pytest.raises(
+        ValueError, match=r"i\*=2 >= \|entry region\|=2 for baseline=\(0,1\) "
+        r"bucket=1 acc_carry=0"
+    ):
+        phase_b(summary)

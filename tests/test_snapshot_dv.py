@@ -76,7 +76,7 @@ def test_compact_purges_and_reenables_cow_paths(spark, tmp_path):
     snap.commit_deletes(spark, root, "grp = 3")
     assert snap.snapshot_delete_files(root)
     with pytest.raises(ValueError, match="deletion vectors"):
-        snap.read_snapshot_where(spark, root, "k", 0, 10)
+        snap.read_snapshot_where_all(spark, root, {"k": (0, 10)})
     with pytest.raises(ValueError, match="deletion vectors"):
         snap.merge_into(spark, root, _mk(spark, 5), "k")
     snap.compact(spark, root)
@@ -85,7 +85,7 @@ def test_compact_purges_and_reenables_cow_paths(spark, tmp_path):
         df.filter("grp != 3")
     )
     # CoW paths live again after the purge
-    assert snap.read_snapshot_where(spark, root, "k", 0, 10).count() > 0
+    assert snap.read_snapshot_where_all(spark, root, {"k": (0, 10)}).count() > 0
 
 
 def test_vacuum_pins_dv_files(spark, tmp_path):

@@ -173,7 +173,7 @@ def test_stats_and_data_skipping(spark, root):
     assert len(all_files) == 4
     st = snap._all_stats(root, None)
     assert all("id" in s for s in st.values())
-    df = snap.read_snapshot_where(spark, root, "id", 10, 20)
+    df = snap.read_snapshot_where_all(spark, root, {"id": (10, 20)})
     opened = df.inputFiles()
     assert 0 < len(opened) < len(all_files), opened
     got = sorted(r.id for r in df.collect())
@@ -246,8 +246,8 @@ def test_zorder_skips_on_both_dimensions(spark, root, tmp_path):
     n_files = len(snap.snapshot_files(root))
     assert n_files > 4
 
-    opened_x = len(snap.read_snapshot_where(spark, root, "x", 3, 4).inputFiles())
-    opened_y = len(snap.read_snapshot_where(spark, root, "y", 3, 4).inputFiles())
+    opened_x = len(snap.read_snapshot_where_all(spark, root, {"x": (3, 4)}).inputFiles())
+    opened_y = len(snap.read_snapshot_where_all(spark, root, {"y": (3, 4)}).inputFiles())
     assert opened_x < n_files / 2, (opened_x, n_files)
     assert opened_y < n_files / 2, (opened_y, n_files)
 
@@ -256,12 +256,12 @@ def test_zorder_skips_on_both_dimensions(spark, root, tmp_path):
     laid = grid.repartitionByRange(16, "x").sortWithinPartitions("x")
     snap.commit_with_stats(laid, root2, stats_cols=["x", "y"], mode="overwrite")
     ctrl_files = len(snap.snapshot_files(root2))
-    ctrl_y = len(snap.read_snapshot_where(spark, root2, "y", 3, 4).inputFiles())
+    ctrl_y = len(snap.read_snapshot_where_all(spark, root2, {"y": (3, 4)}).inputFiles())
     assert ctrl_y >= ctrl_files - 1, (ctrl_y, ctrl_files)  # no y-skipping
 
     # correctness: same rows either way
-    a = snap.read_snapshot_where(spark, root, "y", 3, 4).count()
-    b = snap.read_snapshot_where(spark, root2, "y", 3, 4).count()
+    a = snap.read_snapshot_where_all(spark, root, {"y": (3, 4)}).count()
+    b = snap.read_snapshot_where_all(spark, root2, {"y": (3, 4)}).count()
     assert a == b == 128
 
 

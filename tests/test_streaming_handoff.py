@@ -1,16 +1,14 @@
 """The streaming twins hand their driver-held carry back to Spark as an
 Arrow-built JVM LocalRelation (`sources.tables.local_frame`), never a
-pickled Python RDD: the empty carry of all four twins, and the carry
-returned by one gapfill, cdc and unwrap increment. Bit-equality of the
+pickled Python RDD: the empty carry of all three twins, and the carry
+returned by one gapfill and cdc increment. Bit-equality of the
 handoff to the registered batch queries is the fast 3-split case of each
 twin's parity test."""
 
-from codex_africanus_spark.operators import unwrap as unwrap_op
 from codex_africanus_spark.sources import tpch_ms
 from codex_africanus_spark.streaming import cdc as scdc
 from codex_africanus_spark.streaming import gapfill as sgap
 from codex_africanus_spark.streaming import salted as ssalt
-from codex_africanus_spark.streaming import unwrap as sunwrap
 
 from tests.test_local_frame import assert_local_relation
 from tests.test_streaming_cdc import _build_dim
@@ -27,7 +25,7 @@ def _assert_carry(carry, twin):
 
 
 def test_empty_carries_are_local_relations(spark):
-    for twin in (sgap, scdc, sunwrap, ssalt):
+    for twin in (sgap, scdc, ssalt):
         _assert_carry(twin.empty_carry(spark), twin)
 
 
@@ -44,8 +42,3 @@ def test_cdc_carry_is_local_relation(spark, sf_dir, tmp_path):
     _, carry = scdc.cdc_dim_increment(ev, scdc.empty_carry(spark), root)
     _assert_carry(carry, scdc)
 
-
-def test_unwrap_carry_is_local_relation(spark, sf_dir):
-    ph = unwrap_op.phase_frame(tpch_ms.vis_table(spark, sf_dir))
-    _, carry = sunwrap.phase_unwrap_increment(ph, sunwrap.empty_carry(spark))
-    _assert_carry(carry, sunwrap)

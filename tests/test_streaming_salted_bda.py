@@ -4,6 +4,8 @@ BIT-EXACTLY under the adversarial skew fuzz, across arbitrary
 micro-batch splits — while its fact-scale stages stay keyed by
 (baseline, bucket), never by baseline alone."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -129,24 +131,80 @@ def test_salted_increment_fact_stages_keyed_by_bucket(spark):
             assert "phase_b" in ln
 
 
+def _write_parts(src, ordered, splits):
+    """One parquet file per micro-batch, in time order (distinct mtimes
+    fix the file source's batch order)."""
+    src.mkdir()
+    for i, chunk in enumerate(np.array_split(ordered, splits)):
+        path = src / f"part-{i:03d}.parquet"
+        pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False), path)
+        os.utime(path, (1_000_000_000 + i * 100,) * 2)
+
+
+def run_sink(spark, src, out_dir, ck):
+    """Drive `streaming_salted_bda_sink` over `src`, one file a batch."""
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    q = (
+        ssalt.streaming_salted_bda_sink(
+            stream, out_dir, ck, decorr_tol=60.0, max_span_secs=900.0,
+            bucket_secs=300.0,
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_done(q)
+
+
+def forget_commit(ck, batch_id):
+    """Drop a batch from the checkpoint's commit log, as a crash before
+    the commit would: the restarted query replays that batch."""
+    for f in (str(batch_id), f".{batch_id}.crc"):
+        os.remove(os.path.join(ck, "commits", f))
+
+
+def sunk_bins(spark, out_dir):
+    """Every marker-committed batch's bins, tagged with their batch id."""
+    ids = sorted(
+        int(f[len("_marker_"):-len(".json")])
+        for f in os.listdir(out_dir) if f.startswith("_marker_")
+    )
+    out = pd.concat(
+        spark.read.parquet(os.path.join(out_dir, f"summary_batch_{b}"))
+        .toPandas().assign(batch_id=b)
+        for b in ids
+    )
+    key = ["batch_id", "antenna1", "antenna2", "bin_idx"]
+    return out.sort_values(key).reset_index(drop=True)
+
+
+def fuzz_sink(spark, tmp_path, seed, n):
+    """Run the sink over `seed`'s fuzz frame in 3 batches; return the
+    frame and the (src, out_dir, checkpoint) paths."""
+    pdf = _fuzz_frame(seed, n=n)
+    src = tmp_path / "src"
+    out_dir, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    _write_parts(
+        src, pdf.sort_values(["time", "row_id", "u", "v", "w", "vis_re"]), 3
+    )
+    run_sink(spark, src, out_dir, ck)
+    return pdf, src, out_dir, ck
+
+
 def test_foreach_batch_sink_exactly_once(spark, tmp_path):
     """The foreachBatch consumer commits bins + carry with a batch-id
-    marker: a replayed batch id is a no-op (no duplicate bins)."""
-    pdf = _fuzz_frame(11, n=300)
-    ordered = pdf.sort_values(["time", "row_id", "u", "v", "w", "vis_re"])
-    out_root = str(tmp_path / "bins")
-    state_root = str(tmp_path / "state")
-    fn = ssalt.streaming_salted_bda_sink(
-        out_root, state_root, decorr_tol=60.0, max_span_secs=900.0,
-        bucket_secs=300.0,
-    )
-    chunks = np.array_split(ordered, 3)
-    for i, chunk in enumerate(chunks):
-        fn(spark.createDataFrame(chunk.reset_index(drop=True), SCHEMA), i)
-    first = spark.read.parquet(out_root).toPandas()
-    fn(spark.createDataFrame(chunks[1].reset_index(drop=True), SCHEMA), 1)
-    replay = spark.read.parquet(out_root).toPandas()
-    assert len(replay) == len(first)  # replayed batch committed nothing
+    marker: a batch that Structured Streaming replays after its marker
+    landed (its commit-log entry lost) is a no-op."""
+    pdf, src, out_dir, ck = fuzz_sink(spark, tmp_path, 11, 300)
+    first = sunk_bins(spark, out_dir)
+    assert first.batch_id.max() == 2
+    forget_commit(ck, 2)
+    run_sink(spark, src, out_dir, ck)
+    assert os.path.exists(os.path.join(ck, "commits", "2"))  # replayed
+    pd.testing.assert_frame_equal(sunk_bins(spark, out_dir), first)
     # and the sink's bins match the direct increment protocol
     direct = _salted_final_bins(spark, pdf, 3, 60.0, 900.0, 300.0)
     idx = first.groupby(["antenna1", "antenna2", "bin_idx"])["n_rows"].idxmax()
