@@ -10,13 +10,18 @@ the gap statistics are recomputed by the identical `gap_fill_stats`.
 Scale: `hourly` is span-bounded ((types x hours), thousands of rows at
 any event cardinality), and the statistics of each type's dense hour
 grid are read off it without generating the grid or joining
-(plan-locked in tests/test_plans_scale.py).
+(plan-locked in tests/test_plans_scale.py). Events from one parquet row
+group are aggregated in their one scan task with no exchange (see
+`hourly_counts`), so the batch query over the one-row-group testdata
+runs as one stage.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from codex_africanus_spark.sources.tables import row_groups
 
 HOUR_US = 3_600_000_000
 
@@ -37,10 +42,19 @@ _STATS = (
 def hourly_counts(ev: DataFrame, carry: DataFrame | None = None) -> DataFrame:
     """Event-grain collapse to the (event_type, h, n) state frame; the
     rows of a `carry` (an earlier state frame) add into the same
-    aggregate."""
+    aggregate.
+
+    When every event comes from one parquet row group (`row_groups`),
+    one scan task already reads them all, so the rows and the carry are
+    coalesced into that task and the aggregate needs no exchange: only
+    its final merge, over span-bounded partial rows, loses parallelism.
+    Any other input (several row groups or files, a non-file leaf such as
+    a foreachBatch micro-batch) keeps the hash exchange."""
     rows = ev.selectExpr("event_type", f"ts_us DIV {HOUR_US} AS h", "1L AS n")
     if carry is not None:
         rows = rows.unionByName(carry)
+    if row_groups(ev) == 1:
+        rows = rows.coalesce(1)
     return rows.groupBy("event_type", "h").agg(F.expr("sum(n) AS n"))
 
 

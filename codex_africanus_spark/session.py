@@ -47,6 +47,20 @@ LAUNCH_ONLY = frozenset({
     "spark.python.sql.dataFrameDebugging.enabled",
 })
 
+
+def driver_memory() -> str:
+    """`SPARK_DRIVER_MEMORY` when set, else the smaller of 16g and half
+    the host's physical memory: the local driver JVM holds every task
+    thread, and a heap cap above the host lets it grow until the kernel
+    kills it instead of failing with an OutOfMemoryError."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    except (AttributeError, OSError, ValueError):  # no sysconf name here
+        half_mb = 16 * 1024
+    default = "16g" if half_mb >= 16 * 1024 else f"{half_mb}m"
+    return os.environ.get("SPARK_DRIVER_MEMORY", default)
+
+
 # The engine's one session-conf table: `get_spark` builds from it,
 # `configure_session` applies it to an externally-created session.
 CONFS: tuple[tuple[str, str], ...] = (
@@ -71,7 +85,7 @@ CONFS: tuple[tuple[str, str], ...] = (
     ("spark.sql.shuffle.partitions", DEFAULT_CPUS),
     # the LAUNCH_ONLY entries
     ("spark.ui.enabled", "false"),
-    ("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")),
+    ("spark.driver.memory", driver_memory()),
     # With DataFrame debugging on, PySpark wraps every Column operator and
     # function in extra py4j calls and an `inspect` stack walk to record
     # its Python call site (a warm predict_vis_point_gauss build: 311

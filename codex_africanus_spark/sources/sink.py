@@ -59,7 +59,10 @@ def marker_committed_sink(
        writes and the marker rewrites both idempotently;
     5. take the summary's row count from its parquet footers, not a
        re-run of the summary plan;
-    6. write ``_marker_<id>.json`` LAST.
+    6. write ``_marker_<id>.json`` LAST;
+    7. delete the carries of earlier batches (`_reclaim_carries`): a
+       marked batch is never replayed, and every later batch reads this
+       carry or a newer one, so ``out_dir`` holds one carry at rest.
 
     Returns the unstarted DataStreamWriter."""
     import json
@@ -71,9 +74,10 @@ def marker_committed_sink(
         if os.path.exists(marker):  # replayed batch: already applied
             return
         os.makedirs(out_dir, exist_ok=True)
+        names = os.listdir(out_dir)
         done = sorted(
             int(f[len("_marker_"):-len(".json")])
-            for f in os.listdir(out_dir)
+            for f in names
             if f.startswith("_marker_") and f.endswith(".json")
         )
         prev = [b for b in done if b < batch_id]
@@ -92,9 +96,24 @@ def marker_committed_sink(
         rows = fast_row_count(spark.read.parquet(target))
         with open(marker, "w") as fh:
             json.dump({"batch_id": batch_id, "rows": rows}, fh)
+        _reclaim_carries(out_dir, names, batch_id)
 
     return (
         stream.writeStream.foreachBatch(_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )
+
+
+def _reclaim_carries(out_dir: str, names, batch_id: int) -> None:
+    """Delete the ``carry_<id>.parquet`` entries among `names` (a listing
+    of `out_dir`) whose id is below `batch_id`, once that batch's marker
+    is written; a crash before this call leaves them for the next batch's
+    reclaim."""
+    import os
+    import shutil
+
+    for f in names:
+        if (f.startswith("carry_") and f.endswith(".parquet")
+                and int(f[len("carry_"):-len(".parquet")]) < batch_id):
+            shutil.rmtree(os.path.join(out_dir, f), ignore_errors=True)

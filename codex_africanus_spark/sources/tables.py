@@ -40,7 +40,10 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     scan cannot be split — every downstream stage would run on ≤2 tasks.
     One round-robin exchange of the narrow rows (~tens of MB) buys full
     parallelism for the O(25×) expansion that follows. On a real cluster
-    with many files/row groups the condition is false and this is a no-op.
+    with many files/row groups the condition is false and this is a no-op:
+    many files, or a scan that splits ≥ 8 ways by both bytes and
+    `row_groups`, keep `df` as it is. A frame whose row groups are
+    unknown (a leaf that is not a local parquet scan) fans out.
     """
     target = df.sparkSession.sparkContext.defaultParallelism * multiplier
     # NOTE: df.rdd.getNumPartitions() would trigger an eager job under AQE;
@@ -70,17 +73,11 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
         )
         local = _local_paths(files)
         if local:
-            total = sum(os.path.getsize(p) for p in local)
-            # cap by the real row-group count (a KB-scale footer
-            # read): one giant row group is ONE split whatever the
-            # byte math says — exactly the driver-testdata layout
-            # this exchange exists for
-            import pyarrow.parquet as _pq
-
-            groups = sum(
-                _pq.ParquetFile(p).metadata.num_row_groups for p in local
-            )
-            if min(-(-total // mpb), groups) >= 8:
+            splits = -(-sum(os.path.getsize(p) for p in local) // mpb)
+            # cap by the real row-group count (`row_groups`): one giant
+            # row group is ONE split whatever the byte math says —
+            # exactly the driver-testdata layout this exchange exists for
+            if splits >= 8 and (row_groups(df) or 0) >= 8:
                 return df
     except Exception:
         pass  # unknown scheme/size -> keep the conservative fan-out
@@ -116,6 +113,28 @@ def _plan_files(df: DataFrame) -> tuple[list, bool]:
         else:
             files += got
     return list(dict.fromkeys(files)), only_files
+
+
+def row_groups(df: DataFrame) -> int | None:
+    """The total parquet row groups of the files that `df`'s file-scan
+    leaves read, from the file index and the footers (KB-scale metadata),
+    with no Spark job; None when any leaf is not a scan of local parquet
+    files (a ``LocalRelation``, a foreachBatch micro-batch's RDD, a remote
+    scheme).
+
+    Operators above the leaves, such as filters and projections, do not
+    change it. A row group is the unit one scan task reads, so 1 means
+    that one task reads every row `df` derives from its scans."""
+    try:
+        uris, only_files = _plan_files(df)
+        paths = _local_paths(uris) if only_files else None
+        if not paths:
+            return None
+        import pyarrow.parquet as _pq
+
+        return sum(_pq.ParquetFile(p).metadata.num_row_groups for p in paths)
+    except (Py4JError, PySparkException, OSError, ValueError):
+        return None  # not parquet (pyarrow raises ArrowInvalid, a ValueError)
 
 
 def _local_paths(uris) -> list | None:

@@ -14,7 +14,10 @@ adds its hours, exactly as the batch query would).
 
 In-process handoff: each step collects the merged carry through Arrow
 and hands it back as a JVM ``LocalRelation`` (`sources.tables.localize`)
-— no Python worker scans it and the planner sees its real size.
+— no Python worker scans it and the planner sees its real size. A batch
+cut from one parquet row group merges with that carry in its one scan
+task (`hourly_counts`), so the step is one Spark job with no exchange;
+any other batch keeps the hash exchange before the aggregate.
 
 The durable carry, committed by a marker written last so a restarted
 driver replays against the true state, is `sources.sink.marker_committed_sink`.
@@ -41,8 +44,9 @@ def gap_fill_increment(
     """One micro-batch step: collapse the batch to hourly counts and add
     the carry in the same aggregate (exact integer add), recompute the
     gap statistics from the merged state. Returns (summary, new_carry).
-    The merged carry is driver-held, so the statistics read it as one
-    partition and need no exchange."""
+    The merge is one job, with no exchange when the batch comes from one
+    parquet row group. The merged carry is driver-held, so the
+    statistics read it as one partition and need no exchange."""
     new_carry = localize(gapfill_op.hourly_counts(batch_ev, carry))
     return gapfill_op.gap_fill_stats(new_carry.coalesce(1)), new_carry
 

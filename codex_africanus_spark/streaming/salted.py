@@ -65,7 +65,6 @@ def salted_bda_increment(
     bucket_secs: float = 2_592_000.0,
     motion_grid: float = 1e6,
     value_grid: float = 1e6,
-    _cut: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """One micro-batch of salted BDA: returns (bins, new_carry).
 
@@ -238,8 +237,7 @@ def salted_bda_increment(
     # fact-scale; localCheckpoint per the loop-frame discipline is not
     # needed (single downstream consumer tree), but resolution feeds
     # two consumers (phase C join + exit frame), so cut it once
-    if _cut:
-        resolution = resolution.localCheckpoint(eager=False)
+    resolution = resolution.localCheckpoint(eager=False)
     exit_state = resolution.groupBy("antenna1", "antenna2").agg(
         F.first("open_bin").alias("open_bin"),
         F.first("exit_acc").alias("exit_acc"),
@@ -278,8 +276,8 @@ def salted_bda_increment(
         )
         .join(F.broadcast(exit_state), ["antenna1", "antenna2"])
     )
-    if _cut:  # feeds bins AND carry_out — cut once, reuse
-        merged = merged.localCheckpoint(eager=False)
+    # feeds bins AND carry_out — cut once, reuse
+    merged = merged.localCheckpoint(eager=False)
 
     nan, inf = F.lit(float("nan")), F.lit(float("inf"))
 

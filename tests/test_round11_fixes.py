@@ -44,13 +44,27 @@ def _df(spark, tag, n=4):
 
 
 @pytest.mark.slow
-def test_salted_sink_partial_commit_replay_no_duplicates(spark, tmp_path):
+def test_salted_sink_partial_commit_replay_no_duplicates(
+    spark, tmp_path, monkeypatch
+):
     """Crash window the r10 test missed: bins committed, carry+marker
     not. The replayed batch must OVERWRITE its own bins, not append a
     second copy."""
     import shutil
 
+    from codex_africanus_spark.sources import sink
+
+    # a crash before batch 2's marker also comes before that marker's
+    # reclaim of batch 1's carry, which the replay reads
+    reclaim = sink._reclaim_carries
+
+    def reclaim_except_batch_2(out_dir, names, batch_id):
+        if batch_id != 2:
+            reclaim(out_dir, names, batch_id)
+
+    monkeypatch.setattr(sink, "_reclaim_carries", reclaim_except_batch_2)
     _, src, out_dir, ck = fuzz_sink(spark, tmp_path, 23, 240)
+    monkeypatch.setattr(sink, "_reclaim_carries", reclaim)
     committed = sunk_bins(spark, out_dir)
 
     # simulate the crash: batch 2's bins are on disk but its marker,
@@ -63,6 +77,7 @@ def test_salted_sink_partial_commit_replay_no_duplicates(spark, tmp_path):
     # the marker and carry are back, so a second replay is a pure no-op
     assert os.path.exists(os.path.join(out_dir, "_marker_2.json"))
     assert os.path.exists(os.path.join(out_dir, "carry_2.parquet"))
+    assert not os.path.exists(os.path.join(out_dir, "carry_1.parquet"))
 
 
 # ---------------------------------------------------------------------------

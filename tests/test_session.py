@@ -43,3 +43,24 @@ def test_configure_session_keeps_local_knobs_off_a_cluster():
     }
     # a running session refuses launch-time confs, so none is attempted
     assert _configured("local[4]") == runtime
+
+
+def _sysconf(pages, page_size=4096):
+    values = {"SC_PAGE_SIZE": page_size, "SC_PHYS_PAGES": pages}
+    return lambda name: values[name]
+
+
+def test_driver_memory_fits_the_host(monkeypatch):
+    # half the physical memory when that is below 16g, else 16g
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setattr(session.os, "sysconf", _sysconf(15 * 2**30 // 4096))
+    assert session.driver_memory() == "7680m"
+    monkeypatch.setattr(session.os, "sysconf", _sysconf(64 * 2**30 // 4096))
+    assert session.driver_memory() == "16g"
+    # SPARK_DRIVER_MEMORY still wins, whatever the host
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "24g")
+    assert session.driver_memory() == "24g"
+
+
+def test_conf_table_driver_memory_is_the_default():
+    assert dict(session.CONFS)["spark.driver.memory"] == session.driver_memory()

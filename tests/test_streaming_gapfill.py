@@ -6,6 +6,7 @@ counts every step) — and the sink must survive a driver restart
 (durable carry) and batch replay (marker idiom)."""
 
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -14,6 +15,11 @@ import pytest
 from codex_africanus_spark.operators import gapfill as gapfill_op
 from codex_africanus_spark.queries import registry
 from codex_africanus_spark.sources import tpch_ms
+from codex_africanus_spark.sources.tables import (
+    local_frame,
+    localize,
+    row_groups,
+)
 from codex_africanus_spark.streaming import gapfill as sgap
 
 from tests.conftest import fuzz_compare
@@ -34,6 +40,10 @@ def _want(spark, sf_dir):
 
 def _summarize(df):
     return df.toPandas().sort_values("event_type").reset_index(drop=True)
+
+
+def _rows(df):
+    return df.toPandas().sort_values(df.columns).reset_index(drop=True)
 
 
 @pytest.mark.parametrize(
@@ -221,11 +231,12 @@ def test_gapfill_null_type_and_single_hour_edges(spark, tmp_path, splits):
 
 
 def test_gapfill_increment_job_budget(spark, sf_dir):
-    """One increment is one aggregate collected to the driver: at most 2
-    Spark jobs (AQE runs a shuffle-map job and a result job). Publishing
-    its summary aggregates the driver-held carry in one partition: 1 job."""
+    """One increment over a one-row-group batch is one aggregate, with no
+    exchange, collected to the driver: 1 Spark job. Publishing its
+    summary aggregates the driver-held carry in one partition: 1 job."""
     sc = spark.sparkContext
     ev = tpch_ms.events_table(spark, sf_dir)
+    assert row_groups(ev) == 1
     carry = sgap.empty_carry(spark)
 
     def jobs(group, action):
@@ -240,9 +251,129 @@ def test_gapfill_increment_job_budget(spark, sf_dir):
     n, (summary, carry) = jobs(
         "gapfill-increment", lambda: sgap.gap_fill_increment(ev, carry)
     )
-    assert n <= 2, f"increment launched {n} jobs"
+    assert n <= 1, f"increment launched {n} jobs"
     n, _ = jobs(
         "gapfill-summary",
         lambda: summary.write.format("noop").mode("overwrite").save(),
     )
     assert n <= 1, f"summary write launched {n} jobs"
+
+
+def _increment_aggregate(monkeypatch, batch, carry):
+    """(summary, carry, the executed plan of the aggregate that
+    `gap_fill_increment` hands to `localize`)."""
+    seen = []
+
+    def recorded(df):
+        seen.append(df._jdf.queryExecution().executedPlan().toString())
+        return localize(df)
+
+    monkeypatch.setattr(sgap, "localize", recorded)
+    summary, carry = sgap.gap_fill_increment(batch, carry)
+    assert len(seen) == 1
+    return summary, carry, seen[0]
+
+
+def test_gapfill_one_row_group_increment_has_no_exchange(
+    spark, sf_dir, monkeypatch
+):
+    """Every event of a batch cut from one parquet row group is read by
+    one scan task, so the batch rows and a non-empty carry merge in that
+    task: `Coalesce 1` below the aggregate and no exchange."""
+    ev = tpch_ms.events_table(spark, sf_dir)
+    _, carry = sgap.gap_fill_increment(
+        ev.filter("event_id % 2 = 0"), sgap.empty_carry(spark)
+    )
+    batch = ev.filter("event_id % 2 = 1")
+    assert row_groups(batch) == 1
+    summary, _, plan = _increment_aggregate(monkeypatch, batch, carry)
+    assert "Coalesce 1" in plan
+    assert "LocalTableScan" in plan  # the carry is in the same aggregate
+    assert "Exchange" not in plan
+    pd.testing.assert_frame_equal(
+        _summarize(summary), _want(spark, sf_dir),
+        check_dtype=False, check_exact=True,
+    )
+
+
+def test_gapfill_several_row_groups_keep_the_exchange(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A batch read from a parquet file with 2 row groups may be split
+    over 2 scan tasks: the increment keeps the hash exchange on
+    (event_type, h) and gives the same bits as the one-row-group read of
+    the same events."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    two = tmp_path / "two"
+    two.mkdir()
+    pq.write_table(
+        table, two / "events.parquet", row_group_size=-(-table.num_rows // 2)
+    )
+    batch = tpch_ms.events_table(spark, str(two))
+    assert row_groups(batch) == 2
+    empty = sgap.empty_carry(spark)
+    summary, carry, plan = _increment_aggregate(monkeypatch, batch, empty)
+    assert re.search(r"Exchange hashpartitioning\(event_type#\d+, h#", plan)
+    assert "Coalesce 1" not in plan
+
+    one_summary, one_carry = sgap.gap_fill_increment(
+        tpch_ms.events_table(spark, sf_dir), empty
+    )
+    for got, want in ((summary, one_summary), (carry, one_carry)):
+        pd.testing.assert_frame_equal(_rows(got), _rows(want), check_exact=True)
+
+
+def test_row_groups_is_none_without_a_parquet_leaf(spark, sf_dir):
+    """`row_groups` counts the row groups of the scanned files through
+    filters and projections, and is None when a leaf is not a local
+    parquet scan, such as a driver-held carry."""
+    ev = tpch_ms.events_table(spark, sf_dir)
+    assert row_groups(ev.filter("event_id < 10").select("event_type")) == 1
+    assert row_groups(sgap.empty_carry(spark)) is None
+    assert row_groups(ev.unionByName(ev)) == 1
+    carry = local_frame(spark, [("a", 1, 2)], sgap.CARRY_SCHEMA)
+    assert row_groups(
+        ev.selectExpr("event_type", "0L AS h", "1L AS n").unionByName(carry)
+    ) is None
+
+
+def test_gapfill_sink_keeps_one_carry(spark, sf_dir, tmp_path):
+    """Once a batch's marker is written no replay reads an older carry:
+    after k micro-batches `out_dir` holds the carry of the last one only,
+    and its summary is still the batch query's answer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.conftest import await_done
+
+    ev = tpch_ms.events_table(spark, sf_dir)
+    src = tmp_path / "ev_src"
+    src.mkdir()
+    pdf = ev.toPandas().sort_values(["ts_us", "event_id"])
+    for i, chunk in enumerate(np.array_split(pdf, 3)):
+        path = src / f"part-{i:03d}.parquet"
+        pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False), path)
+        os.utime(path, (1_000_000_000 + i * 100,) * 2)
+    out_dir = str(tmp_path / "out")
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    q = (
+        sgap.streaming_gap_fill_sink(stream, out_dir, str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_done(q)
+    names = os.listdir(out_dir)
+    assert sorted(f for f in names if f.startswith("_marker_")) == [
+        f"_marker_{b}.json" for b in range(3)
+    ]
+    assert [f for f in names if f.startswith("carry_")] == ["carry_2.parquet"]
+    pd.testing.assert_frame_equal(
+        _summarize(spark.read.parquet(os.path.join(out_dir, "summary_batch_2"))),
+        _want(spark, sf_dir), check_dtype=False, check_exact=True,
+    )

@@ -81,10 +81,12 @@ if unknown:
     print("unknown query names:", ", ".join(unknown), file=sys.stderr)
     sys.exit(2)
 
+from codex_africanus_spark.session import driver_memory  # noqa: E402
+
 spark = (
     SparkSession.builder.master("local[32]")
     .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "16g")
+    .config("spark.driver.memory", driver_memory())
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
