@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from codex_africanus_spark.sources.tables import fan_out, local_frame
+from codex_africanus_spark.sources.tables import (
+    fan_out, frame_files, local_frame, source_fingerprint)
 from codex_africanus_spark.functions.text import (
     HASH_P,
     hash31,
@@ -65,24 +66,14 @@ def _arrow_shingle_ok(docs: DataFrame) -> bool:
     measured: the kernel is 1.31x/1.13x on minhash-LSH/prefix-filter at
     sf10 (59 MB corpus) but 0.8x on the 0.6 MB sf0.1 corpus, where the
     shingle CPU is smaller than the worker round-trip. Size-adaptive
-    like tables.fan_out: the sum of input file sizes against
-    ARROW_SHINGLE_MIN_BYTES; unknown lineage means small/test frames,
-    which stay JVM."""
-    import os
-
+    like tables.fan_out: the sum of the input file sizes
+    (`tables.frame_files`) against ARROW_SHINGLE_MIN_BYTES; a frame
+    that is not a scan of local files (small/test frames) stays JVM."""
     d = dict(docs.dtypes)
     if d.get("doc_id") != "bigint" or d.get("text") != "string":
         return False
-    try:
-        files = [f[len("file:"):] if f.startswith("file:") else f
-                 for f in docs.inputFiles()]
-        return (
-            bool(files)
-            and all(os.path.exists(p) for p in files)
-            and sum(os.path.getsize(p) for p in files) >= ARROW_SHINGLE_MIN_BYTES
-        )
-    except Exception:
-        return False
+    files = frame_files(docs)
+    return bool(files) and sum(size for _, size, _ in files) >= ARROW_SHINGLE_MIN_BYTES
 
 
 def _shingle_frame(docs: DataFrame) -> DataFrame:
@@ -1810,7 +1801,6 @@ def incremental_dedup_ingest(spark, docs: DataFrame, root: str) -> DataFrame:
     (operators/similarity.py:662 build_ivf_index)."""
     from codex_africanus_spark.operators.similarity import (
         _index_fresh_source,
-        _source_fingerprint,
         _tombstone_index_meta,
         _write_index_meta,
     )
@@ -1818,7 +1808,7 @@ def incremental_dedup_ingest(spark, docs: DataFrame, root: str) -> DataFrame:
 
     base_docs = docs.filter(F.col("doc_id") % INGEST_MODULUS != 0)
     batch_docs = docs.filter(F.col("doc_id") % INGEST_MODULUS == 0)
-    source_fp = _source_fingerprint(docs)
+    source_fp = source_fingerprint(docs)
     consts = _ingest_constants()
     warm = _index_fresh_source(
         spark, root, INGEST_INDEX_FORMAT, consts, source_fp

@@ -28,6 +28,7 @@ from codex_africanus_spark.sources.tables import (
     fan_out,
     fast_row_count,
     local_frame,
+    source_fingerprint,
 )
 
 DOT_SCALE = "1000000000000"  # 1e12 as exact integer literal
@@ -836,7 +837,7 @@ def _corpus_fingerprint(embeddings: DataFrame):
     64-bit value mod 2^64 on the driver, so the stored `checksum long`
     stays order- and partition-independent. One narrow scan; far
     cheaper than the index build it guards — used on the BUILD path
-    only; probes use the driver-side `_source_fingerprint`."""
+    only; probes use the driver-side `tables.source_fingerprint`."""
     row = embeddings.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64("vec_id", "embedding").cast("decimal(38,0)")).alias("chk"),
@@ -845,32 +846,6 @@ def _corpus_fingerprint(embeddings: DataFrame):
     if chk >= _U64 >> 1:
         chk -= _U64
     return int(row["n"]), chk
-
-
-def _source_fingerprint(frame: DataFrame) -> str | None:
-    """Driver-side staleness signal for the probe-only path: a digest of
-    the source file-set (sorted path|size|mtime via the Hadoop FS
-    metadata API — NO Spark job, no data scan). Parquet files are
-    immutable, so an unchanged file-set implies an unchanged corpus;
-    a regenerated/overwritten corpus changes mtimes and invalidates.
-    Returns None when the frame has no file-based lineage (callers then
-    fall back to the deep content fingerprint). Callers passing a
-    FILTERED view of the files should use deep_check=True — the source
-    fingerprint identifies the files, not a derived row-set."""
-    files = sorted(frame.inputFiles())
-    if not files:
-        return None
-    spark = frame.sparkSession
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    import hashlib
-
-    parts = []
-    for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        st = p.getFileSystem(hconf).getFileStatus(p)
-        parts.append(f"{f}|{st.getLen()}|{st.getModificationTime()}")
-    return hashlib.sha256("\n".join(parts).encode()).hexdigest()
 
 
 def _write_index_meta(
@@ -973,7 +948,7 @@ def build_ivf_index(
     if fingerprint is None:
         fingerprint = _ivf_fingerprint(*_corpus_fingerprint(embeddings))
     if source_fp is None:
-        source_fp = _source_fingerprint(embeddings)
+        source_fp = source_fingerprint(embeddings)
     _tombstone_index_meta(spark, root)
     cent, assign = _ivf_build(embeddings, n_vecs=fingerprint[1])
     snap.commit(cent, f"{root}/centroids", mode="overwrite")
@@ -1010,7 +985,7 @@ def _ensure_ivf_index(spark, embeddings: DataFrame, root: str, deep_check: bool 
     source digest so the next probe takes the warm path. deep_check=True
     forces the content scan (use when passing a filtered view of the
     source files)."""
-    src = _source_fingerprint(embeddings)
+    src = source_fingerprint(embeddings)
     if not deep_check and _index_fresh_source(
         spark, root, IVF_INDEX_FORMAT, _ivf_fingerprint(0, 0)[3], src
     ):
@@ -1675,7 +1650,7 @@ def build_pq_index(
     if fingerprint is None:
         fingerprint = _pq_fingerprint(*_corpus_fingerprint(embeddings))
     if source_fp is None:
-        source_fp = _source_fingerprint(embeddings)
+        source_fp = source_fingerprint(embeddings)
     _tombstone_index_meta(spark, root)
     cb = _pq_codebook(embeddings)
     codes = _pq_codes_from_dists(_pq_dists(embeddings, cb))
@@ -1691,7 +1666,7 @@ def _ensure_pq_index(
     _ensure_ivf_index): warm path checks only the driver-side source
     digest; cold/deep path falls back to the content fingerprint and
     rebuilds through build_pq_index."""
-    src = _source_fingerprint(embeddings)
+    src = source_fingerprint(embeddings)
     if deep_check or not _index_fresh_source(
         spark, root, PQ_INDEX_FORMAT, _pq_fingerprint(0, 0)[3], src
     ):

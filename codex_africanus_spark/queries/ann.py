@@ -359,7 +359,7 @@ def ann_pq_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     newv = emb.filter(F.col("vec_id") % 10 == 0)
     tag = hashlib.md5(_q9o.path.abspath(sf_dir).encode()).hexdigest()[:12]
     root = f"{_q9t.gettempdir()}/cas_pq_append/{tag}"
-    src = sim_op._source_fingerprint(emb)
+    src = tables.source_fingerprint(emb)
     consts = sim_op._pq_fingerprint(0, 0)[3]
     if not sim_op._index_fresh_source(
         spark, root, sim_op.PQ_INDEX_FORMAT, consts, src
@@ -480,7 +480,7 @@ def ann_ivf_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     newv = emb.filter(F.col("vec_id") % 10 == 0)
     tag = hashlib.md5(_q8o.path.abspath(sf_dir).encode()).hexdigest()[:12]
     root = f"{_q8t.gettempdir()}/cas_ivf_append/{tag}"
-    src = sim_op._source_fingerprint(emb)
+    src = tables.source_fingerprint(emb)
     consts = sim_op._ivf_fingerprint(0, 0)[3]
     if not sim_op._index_fresh_source(
         spark, root, sim_op.IVF_INDEX_FORMAT, consts, src

@@ -3113,15 +3113,15 @@ def flag_version_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free row-id checksum."""
     from codex_africanus_spark.operators.similarity import (
         _index_fresh_source,
-        _source_fingerprint,
         _tombstone_index_meta,
         _write_index_meta,
     )
     from codex_africanus_spark.sources import snapshot as snap
+    from codex_africanus_spark.sources.tables import source_fingerprint
 
     root = _flagver_root(sf_dir)
     vis = tpch_ms.vis_table(spark, sf_dir)
-    src_fp = _source_fingerprint(vis.select(F.col("row_id").alias("vec_id")))
+    src_fp = source_fingerprint(vis.select(F.col("row_id").alias("vec_id")))
     consts = "flagver=v2-amp2c-gt-160000;fmt=1"
     if not _index_fresh_source(spark, root, 91, consts, src_fp):
         import shutil

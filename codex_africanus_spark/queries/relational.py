@@ -1630,7 +1630,6 @@ def _ensure_zorder_layout(spark: SparkSession, sf_dir: str) -> str:
     freshness contract) — build-once, range-query-many."""
     from codex_africanus_spark.operators.similarity import (
         _index_fresh_source,
-        _source_fingerprint,
         _tombstone_index_meta,
         _write_index_meta,
     )
@@ -1638,7 +1637,7 @@ def _ensure_zorder_layout(spark: SparkSession, sf_dir: str) -> str:
 
     root = _zorder_root(sf_dir)
     vis = tpch_ms.vis_table(spark, sf_dir)
-    src_fp = _source_fingerprint(vis)
+    src_fp = tables_mod.source_fingerprint(vis)
     consts = f"zorder=u_cell,v_cell;files=16;box_bits=8;fmt={_ZORDER_FORMAT}"
     if not _index_fresh_source(spark, root, _ZORDER_FORMAT, consts, src_fp):
         _tombstone_index_meta(spark, root)
@@ -1803,7 +1802,6 @@ def snapshot_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFram
     layout-independent, so the oracle recomputes from lineitem."""
     from codex_africanus_spark.operators.similarity import (
         _index_fresh_source,
-        _source_fingerprint,
         _tombstone_index_meta,
         _write_index_meta,
     )
@@ -1811,7 +1809,7 @@ def snapshot_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFram
 
     root = _schema_evo_root(sf_dir)
     li = load(spark, "lineitem", sf_dir)
-    src_fp = _source_fingerprint(li.select(F.col("l_orderkey").alias("vec_id")))
+    src_fp = tables_mod.source_fingerprint(li.select(F.col("l_orderkey").alias("vec_id")))
     consts = "schema_evo=v2-adds-price_cents;fmt=1"
     if not _index_fresh_source(spark, root, 90, consts, src_fp):
         _tombstone_index_meta(spark, root)
@@ -1898,7 +1896,6 @@ def snapshot_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     _branch.py — here the driver checks the three read surfaces)."""
     from codex_africanus_spark.operators.similarity import (
         _index_fresh_source,
-        _source_fingerprint,
         _tombstone_index_meta,
         _write_index_meta,
     )
@@ -1906,7 +1903,7 @@ def snapshot_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _branch_root(sf_dir)
     li = load(spark, "lineitem", sf_dir)
-    src_fp = _source_fingerprint(li.select(F.col("l_orderkey").alias("vec_id")))
+    src_fp = tables_mod.source_fingerprint(li.select(F.col("l_orderkey").alias("vec_id")))
     consts = "branching=ff-merge;fmt=1"
     main = f"{root}/main"
     dev = f"{root}/dev"

@@ -19,7 +19,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from codex_africanus_spark.sources.tables import fast_row_count
+from codex_africanus_spark.sources.tables import footer_sum
 
 
 def write_model_data(
@@ -52,13 +52,15 @@ def marker_committed_sink(
 
     1. a batch whose marker exists was already applied: skip it;
     2. load the carry of the latest marker below this batch, or
-       `empty_carry(spark)` for the first one;
+       `empty_carry(spark)` for the first one. Only the first batch
+       after a start (restart recovery) lists ``out_dir`` for it; the
+       next batch takes the carry this sink just committed;
     3. `step(batch_df, carry) -> (summary, new_carry)`;
     4. overwrite ``summary_batch_<id>`` and ``carry_<id>.parquet`` —
        batch-unique targets, so a replay after a crash between these
        writes and the marker rewrites both idempotently;
-    5. take the summary's row count from its parquet footers, not a
-       re-run of the summary plan;
+    5. take the summary's row count from the written files' parquet
+       footers (`tables.footer_sum`), with no schema-inference job;
     6. write ``_marker_<id>.json`` LAST;
     7. delete the carries of earlier batches (`_reclaim_carries`): a
        marked batch is never replayed, and every later batch reads this
@@ -68,35 +70,39 @@ def marker_committed_sink(
     import json
     import os
 
+    last = None  # the id of the batch this sink last committed
+
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal last
         spark = batch_df.sparkSession
         marker = os.path.join(out_dir, f"_marker_{batch_id}.json")
         if os.path.exists(marker):  # replayed batch: already applied
             return
-        os.makedirs(out_dir, exist_ok=True)
-        names = os.listdir(out_dir)
-        done = sorted(
-            int(f[len("_marker_"):-len(".json")])
-            for f in names
-            if f.startswith("_marker_") and f.endswith(".json")
-        )
-        prev = [b for b in done if b < batch_id]
-        if prev:
-            carry = spark.read.schema(carry_schema).parquet(
-                os.path.join(out_dir, f"carry_{prev[-1]}.parquet")
-            )
+        if last is not None and batch_id == last + 1:
+            prev, names = last, [f"carry_{last}.parquet"]
         else:
+            os.makedirs(out_dir, exist_ok=True)
+            names = os.listdir(out_dir)
+            done = [int(f[len("_marker_"):-len(".json")]) for f in names
+                    if f.startswith("_marker_") and f.endswith(".json")]
+            prev = max((b for b in done if b < batch_id), default=None)
+        if prev is None:
             carry = empty_carry(spark)
+        else:
+            carry = spark.read.schema(carry_schema).parquet(
+                os.path.join(out_dir, f"carry_{prev}.parquet")
+            )
         summary, carry_new = step(batch_df, carry)
         target = os.path.join(out_dir, f"summary_batch_{batch_id}")
         summary.write.mode("overwrite").parquet(target)
         carry_new.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"carry_{batch_id}.parquet")
         )
-        rows = fast_row_count(spark.read.parquet(target))
+        rows = footer_sum([target], "num_rows")
         with open(marker, "w") as fh:
             json.dump({"batch_id": batch_id, "rows": rows}, fh)
         _reclaim_carries(out_dir, names, batch_id)
+        last = batch_id
 
     return (
         stream.writeStream.foreachBatch(_batch)

@@ -1,13 +1,24 @@
-"""Parquet scan helpers for the driver's testdata star schema.
+"""Parquet scan helpers for the driver's testdata star schema, and the
+one place that knows which files a frame reads.
 
 At 100 TB these reads are the entry point for partition pruning and
 column pruning — always `.select()` the needed columns immediately so
 Catalyst pushes projection into the parquet scan (ReadSchema), and pass
 filters early so they appear in PushedFilters.
+
+Every size gate, memo key and index fingerprint reads a frame's files
+through four primitives, with no Spark job: `_plan_files` walks the
+analyzed plan's file-scan leaves, `_data_files` stats local files,
+`footer_sum` reads parquet footers and `source_fingerprint` digests a
+file set. Two stat sources stay on purpose: index metas store
+`source_fingerprint`'s Hadoop `FileStatus` digest, whose bytes must not
+change, on any scheme; the in-process memo keys keep `os.stat`'s
+nanosecond mtimes, so a rewrite within the same millisecond misses.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import threading
 from urllib.parse import unquote, urlparse
@@ -42,18 +53,15 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     parallelism for the O(25×) expansion that follows. On a real cluster
     with many files/row groups the condition is false and this is a no-op:
     many files, or a scan that splits ≥ 8 ways by both bytes and
-    `row_groups`, keep `df` as it is. A frame whose row groups are
-    unknown (a leaf that is not a local parquet scan) fans out.
+    `row_groups`, keep `df` as it is. Only a frame whose every leaf scans
+    local files (`frame_files`) fans out.
     """
     target = df.sparkSession.sparkContext.defaultParallelism * multiplier
     # NOTE: df.rdd.getNumPartitions() would trigger an eager job under AQE;
     # the file listing reads only the file index. Single-file (= single-
     # row-group testdata) sources fan out; many-file sources are already
     # split.
-    try:
-        files, _ = _plan_files(df)
-    except (Py4JError, PySparkException):
-        files = []
+    files = frame_files(df)
     if not files or len(files) >= max(2, target // 2):
         return df
     # r13 (sf10 bench finding): a single LARGE multi-row-group file is
@@ -66,21 +74,16 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     # split count from file sizes and skip the exchange when the scan
     # already splits >= 8 ways; the driver's small single-row-group
     # testdata (1 split) still fans out exactly as before.
-    try:
-        mpb = (
-            df.sparkSession._jsparkSession.sessionState().conf()
-            .filesMaxPartitionBytes()
-        )
-        local = _local_paths(files)
-        if local:
-            splits = -(-sum(os.path.getsize(p) for p in local) // mpb)
-            # cap by the real row-group count (`row_groups`): one giant
-            # row group is ONE split whatever the byte math says —
-            # exactly the driver-testdata layout this exchange exists for
-            if splits >= 8 and (row_groups(df) or 0) >= 8:
-                return df
-    except Exception:
-        pass  # unknown scheme/size -> keep the conservative fan-out
+    mpb = (
+        df.sparkSession._jsparkSession.sessionState().conf()
+        .filesMaxPartitionBytes()
+    )
+    # cap by the real row-group count (`row_groups`): one giant row group
+    # is ONE split whatever the byte math says — exactly the driver-
+    # testdata layout this exchange exists for
+    if (-(-sum(size for _, size, _ in files) // mpb) >= 8
+            and (row_groups(df) or 0) >= 8):
+        return df
     # idempotence: the listing still reports the source file after a
     # repartition, so a second fan_out of a composed frame must not stack
     # another full exchange of the fact rows.
@@ -89,65 +92,86 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     return df.repartition(target)
 
 
-def _fs_files(node) -> list | None:
-    """The file URIs a logical-plan leaf reads, or None when it is not a
-    `HadoopFsRelation` scan."""
-    if (node.getClass().getSimpleName() != "LogicalRelation"
-            or node.relation().getClass().getSimpleName() != "HadoopFsRelation"):
-        return None
-    return list(node.relation().location().inputFiles())
-
-
-def _plan_files(df: DataFrame) -> tuple[list, bool]:
+def _plan_files(df: DataFrame) -> tuple[list, bool, bool]:
     """(the file URIs the file-scan leaves of `df`'s analyzed plan read,
-    whether every leaf is such a scan).
+    whether every leaf is such a scan, whether the plan is a bare scan:
+    a chain of ``Project`` over one leaf).
 
-    The listing comes from each relation's file index, as
-    `DataFrame.inputFiles()` does, but nothing optimizes the plan."""
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    The only code that reads a frame's leaves. The listing comes from
+    each relation's file index, as `DataFrame.inputFiles` does, without
+    optimizing the plan, so partition filters do not prune it."""
+    node = df._jdf.queryExecution().analyzed()
+    name = node.nodeName()
+    while name == "Project":
+        node = node.child()
+        name = node.nodeName()
+    if name == "LogicalRelation":  # always a leaf
+        leaves, bare = [node], True
+    else:
+        found = node.collectLeaves()
+        leaves, bare = [found.apply(i) for i in range(found.size())], False
     files, only_files = [], True
-    for i in range(leaves.size()):
-        got = _fs_files(leaves.apply(i))
-        if got is None:
+    for leaf in leaves:
+        rel = leaf.relation() if leaf.nodeName() == "LogicalRelation" else None
+        if rel is None or rel.getClass().getSimpleName() != "HadoopFsRelation":
             only_files = False
         else:
-            files += got
-    return list(dict.fromkeys(files)), only_files
+            files += rel.location().inputFiles()
+    return list(dict.fromkeys(files)), only_files, bare
+
+
+def _local_files(uris) -> tuple | None:
+    """`_data_files` entries of the file URIs Spark reports, sorted; None
+    when there is none, or one is remote or missing."""
+    files = []
+    for uri in uris:
+        url = urlparse(uri)
+        local = url.scheme in ("", "file")
+        found = _data_files(unquote(url.path)) if local else ()
+        if not found:
+            return None
+        files += found
+    return tuple(sorted(files)) or None
+
+
+def frame_files(frame: DataFrame) -> tuple | None:
+    """`_data_files` entries of every file under `frame`'s scans; None
+    when a leaf of its analyzed plan is not a scan of local files (a
+    ``LocalRelation``, a foreachBatch micro-batch's RDD, a remote
+    scheme). The size gates sum its sizes; `collect_small` keys on it."""
+    try:
+        uris, only_files, _ = _plan_files(frame)
+        return _local_files(uris) if only_files else None
+    except (Py4JError, PySparkException, OSError):
+        return None
+
+
+def footer_sum(paths, field: str) -> int:
+    """The sum of parquet footer field `field` (``num_rows``,
+    ``num_row_groups``) over the data files at `paths`, files or
+    directories (`_data_files`), with no Spark job; raises OSError, or
+    ValueError for a file that is not parquet (ArrowInvalid)."""
+    import pyarrow.parquet as _pq
+
+    return sum(
+        getattr(_pq.ParquetFile(f).metadata, field)
+        for p in paths for f, _, _ in _data_files(p)
+    )
 
 
 def row_groups(df: DataFrame) -> int | None:
-    """The total parquet row groups of the files that `df`'s file-scan
-    leaves read, from the file index and the footers (KB-scale metadata),
-    with no Spark job; None when any leaf is not a scan of local parquet
-    files (a ``LocalRelation``, a foreachBatch micro-batch's RDD, a remote
-    scheme).
+    """The total parquet row groups of `frame_files(df)`, from the
+    footers with no Spark job; None when any leaf is not a scan of local
+    parquet files.
 
     Operators above the leaves, such as filters and projections, do not
     change it. A row group is the unit one scan task reads, so 1 means
     that one task reads every row `df` derives from its scans."""
+    paths = [f for f, _, _ in frame_files(df) or ()]
     try:
-        uris, only_files = _plan_files(df)
-        paths = _local_paths(uris) if only_files else None
-        if not paths:
-            return None
-        import pyarrow.parquet as _pq
-
-        return sum(_pq.ParquetFile(p).metadata.num_row_groups for p in paths)
-    except (Py4JError, PySparkException, OSError, ValueError):
-        return None  # not parquet (pyarrow raises ArrowInvalid, a ValueError)
-
-
-def _local_paths(uris) -> list | None:
-    """Local paths of the file URIs Spark reports, or None when one is
-    remote or missing."""
-    paths = []
-    for uri in uris:
-        url = urlparse(uri)
-        path = unquote(url.path)
-        if url.scheme not in ("", "file") or not os.path.isfile(path):
-            return None
-        paths.append(path)
-    return paths
+        return footer_sum(paths, "num_row_groups") if paths else None
+    except (OSError, ValueError):
+        return None
 
 
 def _plan_has_repartition(df: DataFrame, target: int) -> bool:
@@ -205,21 +229,16 @@ def scan_twin(df: DataFrame) -> DataFrame:
 
 def footer_rows(df: DataFrame) -> int | None:
     """Exact row count of a bare (possibly projected) scan of local
-    parquet files, read from the parquet footers with no Spark job
-    (KB-scale metadata instead of a scan stage); None for any other
-    plan shape: filters, joins, non-file relations, remote schemes."""
+    parquet files (`_plan_files`), read from the parquet footers with no
+    Spark job (KB-scale metadata instead of a scan stage); None for any
+    other plan shape: filters, joins, non-file relations, remote schemes."""
     try:
-        node = df._jdf.queryExecution().analyzed()
-        while node.getClass().getSimpleName() == "Project":
-            node = node.children().apply(0)
-        paths = _local_paths(_fs_files(node) or ())
-        if not paths:
-            return None
-        import pyarrow.parquet as _pq
-
-        return sum(_pq.ParquetFile(p).metadata.num_rows for p in paths)
+        uris, only_files, bare = _plan_files(df)
+        files = _local_files(uris) if only_files and bare else None
+        paths = [f for f, _, _ in files or ()]
+        return footer_sum(paths, "num_rows") if paths else None
     except (Py4JError, PySparkException, OSError, ValueError):
-        return None  # not parquet (pyarrow raises ArrowInvalid, a ValueError)
+        return None
 
 
 def fast_row_count(df: DataFrame) -> int:
@@ -281,8 +300,10 @@ _SCHEMAS: dict = {}
 
 
 def _data_files(path: str) -> tuple:
-    """(name, size, mtime_ns) of each local data file Spark reads under
-    `path`; empty for a remote or missing path."""
+    """(path, size, mtime_ns) of each local data file Spark reads at
+    `path`, a file or a directory (names that start with ``_`` or ``.``
+    are not data), sorted; empty for a remote or missing path. The one
+    `os.stat` of the module: memo keys compare these entries."""
     walk = ([(os.path.dirname(path), [], [os.path.basename(path)])]
             if os.path.isfile(path) else os.walk(path))
     out = []
@@ -317,31 +338,12 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
 
 
 # Small collected frames, oldest first: (SparkContext, input files,
-# frame, rows). The input files are `_data_files` entries for every file
-# the frame reads, so a rewritten file misses, and a hit must also have
-# the same semantics as the stored frame, so another plan over the same
-# files misses too.
+# frame, rows). The input files are the frame's `frame_files`, so a
+# rewritten file misses, and a hit must also have the same semantics as
+# the stored frame, so another plan over the same files misses too.
 _SMALL: list = []
 _SMALL_MAX = 8
 _SMALL_LOCK = threading.Lock()
-
-
-def _frame_files(frame: DataFrame):
-    """`_data_files` entries for every input file of `frame`, or None
-    when the files do not fix its rows: a leaf that is not a file scan
-    (a LocalRelation, a range), a remote or missing file, or a
-    nondeterministic plan."""
-    try:
-        if not frame._jdf.queryExecution().analyzed().deterministic():
-            return None
-        uris, only_files = _plan_files(frame)
-        paths = _local_paths(uris) if only_files else None
-        if paths is None:
-            return None
-        files = [entry for path in paths for entry in _data_files(path)]
-    except (Py4JError, PySparkException, OSError):
-        return None
-    return tuple(sorted(files)) or None
 
 
 def collect_small(frame: DataFrame, cap: int):
@@ -352,9 +354,14 @@ def collect_small(frame: DataFrame, cap: int):
     with the same semantics over the same unchanged files returns it
     without a job, whatever its `cap`, so callers apply their size gates
     to the result. Frames whose rows the files do not fix are collected
-    every time."""
+    every time: a nondeterministic plan, or one that `frame_files`
+    does not cover."""
     sc = frame.sparkSession.sparkContext
-    files = _frame_files(frame)
+    try:
+        fixed = frame._jdf.queryExecution().analyzed().deterministic()
+    except (Py4JError, PySparkException):
+        fixed = False
+    files = frame_files(frame) if fixed else None
     with _SMALL_LOCK:
         _SMALL[:] = [e for e in _SMALL if e[0] is sc]
         stored = [e for e in _SMALL if e[1] == files] if files else []
@@ -367,3 +374,26 @@ def collect_small(frame: DataFrame, cap: int):
             _SMALL.append((sc, files, frame, rows))
             del _SMALL[:-_SMALL_MAX]
     return rows
+
+
+def source_fingerprint(frame: DataFrame) -> str | None:
+    """Driver-side staleness signal of the persisted indexes: a sha256
+    digest of the sorted ``uri|length|mtime`` of the files under
+    `frame`'s scans (`_plan_files`), stated through Hadoop's FileStatus:
+    no Spark job, and any scheme. Parquet files are immutable, so an
+    unchanged file-set implies an unchanged corpus. None when the frame
+    has no file-based lineage (callers then fall back to the deep
+    content fingerprint). Callers passing a FILTERED view of the files
+    should use deep_check=True: this identifies the files, not a
+    derived row-set."""
+    uris = sorted(_plan_files(frame)[0])
+    if not uris:
+        return None
+    spark = frame.sparkSession
+    hconf = spark._jsc.hadoopConfiguration()
+    parts = []
+    for uri in uris:
+        p = spark._jvm.org.apache.hadoop.fs.Path(uri)
+        st = p.getFileSystem(hconf).getFileStatus(p)
+        parts.append(f"{uri}|{st.getLen()}|{st.getModificationTime()}")
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()

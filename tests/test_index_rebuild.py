@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from codex_africanus_spark.operators import dedup as dedup_op
 from codex_africanus_spark.sources import snapshot as snap
-from codex_africanus_spark.sources.tables import load
+from codex_africanus_spark.sources.tables import load, source_fingerprint
 import pytest
 
 # Heavyweight end-to-end rehearsal: excluded from the default (driver-budget)
@@ -102,7 +102,7 @@ def test_ivf_append_additive_fingerprint_and_crash_safety(spark, sf_dir, tmp_pat
     base = emb.filter(F.col("vec_id") % 10 != 0)
     newv = emb.filter(F.col("vec_id") % 10 == 0)
     root = str(tmp_path / "ivf")
-    src = sim_op._source_fingerprint(emb)
+    src = source_fingerprint(emb)
     consts = sim_op._ivf_fingerprint(0, 0)[3]
 
     sim_op.build_ivf_index(base, root, source_fp="pending-append")

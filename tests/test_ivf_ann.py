@@ -1,7 +1,7 @@
 """IVF ANN tier: recall floor, determinism, broadcast plan shape."""
 
 from codex_africanus_spark.operators import similarity as sim
-from codex_africanus_spark.sources.tables import load
+from codex_africanus_spark.sources.tables import load, source_fingerprint
 import pytest
 
 # Heavyweight end-to-end rehearsal: excluded from the default (driver-budget)
@@ -198,7 +198,7 @@ def test_tombstone_invalidates_mid_rebuild_meta(spark, sf_dir, tmp_path):
     emb = load(spark, "embeddings", sf_dir)
     root = str(tmp_path / "ivf")
     sim.build_ivf_index(emb, root)
-    src = sim._source_fingerprint(emb)
+    src = source_fingerprint(emb)
     fp = sim._ivf_fingerprint(*sim._corpus_fingerprint(emb))
     assert sim._index_fresh(spark, root, fp)
     assert sim._index_fresh_source(spark, root, sim.IVF_INDEX_FORMAT, fp[3], src)

@@ -339,15 +339,25 @@ def test_row_groups_is_none_without_a_parquet_leaf(spark, sf_dir):
     ) is None
 
 
-def test_gapfill_sink_keeps_one_carry(spark, sf_dir, tmp_path):
+def test_gapfill_sink_keeps_one_carry(spark, sf_dir, tmp_path, monkeypatch):
     """Once a batch's marker is written no replay reads an older carry:
     after k micro-batches `out_dir` holds the carry of the last one only,
-    and its summary is still the batch query's answer."""
+    and its summary is still the batch query's answer. Only the run's
+    first batch lists `out_dir`; each later one takes the carry of the
+    batch before it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from tests.conftest import await_done
 
+    listed = []
+    listdir = os.listdir
+
+    def counted(path="."):
+        listed.append(os.fspath(path))
+        return listdir(path)
+
+    monkeypatch.setattr(os, "listdir", counted)
     ev = tpch_ms.events_table(spark, sf_dir)
     src = tmp_path / "ev_src"
     src.mkdir()
@@ -368,6 +378,7 @@ def test_gapfill_sink_keeps_one_carry(spark, sf_dir, tmp_path):
         .start()
     )
     await_done(q)
+    assert listed.count(out_dir) == 1
     names = os.listdir(out_dir)
     assert sorted(f for f in names if f.startswith("_marker_")) == [
         f"_marker_{b}.json" for b in range(3)
@@ -377,3 +388,32 @@ def test_gapfill_sink_keeps_one_carry(spark, sf_dir, tmp_path):
         _summarize(spark.read.parquet(os.path.join(out_dir, "summary_batch_2"))),
         _want(spark, sf_dir), check_dtype=False, check_exact=True,
     )
+
+
+def test_gapfill_sink_batch_job_budget(spark, sf_dir, tmp_path):
+    """One sink micro-batch runs 4 Spark jobs: the increment's collect of
+    the merged carry, the summary write with the broadcast it plans, and
+    the carry write. The marker's row count comes from the footers of
+    the files just written, with no schema-inference job."""
+    import json
+
+    from tests.conftest import await_done
+
+    src = tmp_path / "ev_src"
+    tpch_ms.events_table(spark, sf_dir).write.parquet(str(src))
+    out_dir = str(tmp_path / "out")
+    stream = spark.readStream.schema(EV_SCHEMA).parquet(str(src))
+    q = (
+        sgap.streaming_gap_fill_sink(stream, out_dir, str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_done(q)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) <= 4, f"one micro-batch launched {len(jobs)} jobs"
+    with open(os.path.join(out_dir, "_marker_0.json")) as fh:
+        rows = json.load(fh)["rows"]
+    summary = spark.read.parquet(os.path.join(out_dir, "summary_batch_0"))
+    assert rows == summary.count() > 0

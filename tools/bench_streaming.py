@@ -17,9 +17,12 @@ number to move. This tool times the three twin families end-to-end:
 
 Each twin is measured with bench.py's protocol (`bench.measure`: one
 warm-up, then bench.RUNS timed executions, min reported). Every
-execution drives all BATCHES micro-batches, handed to Spark through
-`sources.tables.local_frame` like the engine's own driver-held frames,
-and noop-writes the twin's final output; the watermark twin stages into
+execution drives all BATCHES micro-batches and noop-writes the twin's
+final output. The cdc batches are handed to Spark through
+`sources.tables.local_frame` like the engine's own driver-held frames;
+the gap-fill batches are `event_id` ranges of the events scan, as
+perfbench's `gapfill_ingest` cuts them, so they take the file-scan path
+of the batch query; the watermark twin stages into
 fresh source/checkpoint dirs per execution (a reused checkpoint would
 replay markers and time nothing). ONE JSON line on stdout:
   {"metric": "streaming_twin_wall_time", "value": total,
@@ -83,6 +86,16 @@ def _drive(spark, ev_pdf, increment, carry):
     return summary
 
 
+def _drive_scan(ev, cuts, increment, carry):
+    """Feed the events to `increment` as the `event_id` ranges
+    [cuts[i], cuts[i + 1]) of the events scan; return the last batch's
+    summary."""
+    for lo, hi in zip(cuts, cuts[1:]):
+        batch = ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
+        summary, carry = increment(batch, carry)
+    return summary
+
+
 def main() -> None:
     spark = get_spark("codex-africanus-spark-bench-streaming")
     ev = tpch_ms.events_table(spark, SF_DIR)
@@ -90,6 +103,9 @@ def main() -> None:
     # micro-batch splitter needs a stable row order; inside the timed
     # region each execution re-creates every batch DataFrame from it)
     ev_pdf = ev.toPandas().sort_values("event_id").reset_index(drop=True)
+    # the same BATCHES cuts, as event_id bounds of the scan
+    cuts = [int(c["event_id"].iloc[0]) for c in np.array_split(ev_pdf, BATCHES)]
+    cuts.append(int(ev_pdf["event_id"].iloc[-1]) + 1)
     work = tempfile.mkdtemp(prefix="bench_streaming_")
 
     def _drive_wm():
@@ -113,8 +129,8 @@ def main() -> None:
         "cdc_increment": lambda: _drive(
             spark, ev_pdf, partial(scdc.cdc_dim_increment, root=dim_root),
             scdc.empty_carry(spark)),
-        "gapfill_increment": lambda: _drive(
-            spark, ev_pdf, sgap.gap_fill_increment, sgap.empty_carry(spark)),
+        "gapfill_increment": lambda: _drive_scan(
+            ev, cuts, sgap.gap_fill_increment, sgap.empty_carry(spark)),
         "watermark_window_drop": _drive_wm,
     }
     timings: dict[str, float] = {}
