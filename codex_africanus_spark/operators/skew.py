@@ -254,7 +254,8 @@ def salted_bda_average(
         provable superset of every feasible first-restart i*) is
         emitted, as array columns on ONE summary row per bucket.
       Phase B (sequential but tiny): per baseline, walk bucket
-        summaries in order carrying (acc_carry, anchor_t, bin counter):
+        summaries in order carrying (acc_carry, anchor_t, bin counter),
+        started from the open bin an earlier micro-batch carried in:
         resolve i* by two searchsorteds into the region, absorb
         fully-covered buckets, and read the exit state from the DP —
         never touching row-level data. O(#buckets) rows per baseline.
@@ -272,110 +273,34 @@ def salted_bda_average(
     ~1e9-unit steps, ≥9e9 rows/bucket before overflow — size buckets
     accordingly).
 
+    Code: the three kernels are `salted_bda_phase_a/b/c` below; the
+    one driver that wires them (motion prefix, carry routing, final
+    merge) is `streaming.salted.salted_bda_increment`, and this
+    operator is that increment on the empty carry, without its
+    ``closed`` column. A bin whose weights all quantize to 0 averages
+    to NULL.
+
     Cites: reference bda_mapping.py:111-277 (Binner semantics);
     salted_sessionize above (the two-level-key precedent, whose stitch
     this generalizes from memoryless to monotone-accumulated rules)."""
-    import math
-
-    from pyspark.sql import Window as W
-
-    from codex_africanus_spark.functions.deterministic import quantize
-
-    tol_q = int(math.floor(decorr_tol * motion_grid + 0.5))
-    span = max_span_secs
-
-    ev = vis.select(
-        "row_id", "time", "antenna1", "antenna2", "u", "v", "w",
-        quantize(F.col("vis_re") * F.col("weight"), value_grid).alias("wre_q"),
-        quantize(F.col("vis_im") * F.col("weight"), value_grid).alias("wim_q"),
-        quantize(F.col("weight"), value_grid).alias("w_q"),
-        F.floor(F.col("time") / F.lit(bucket_secs)).cast("long").alias("__bucket"),
+    # a call-time import: streaming.salted imports this module's kernels
+    from codex_africanus_spark.streaming.salted import (
+        empty_carry,
+        salted_bda_increment,
     )
 
-    # ---- motion steps without a whole-baseline window: lag within the
-    # (baseline, bucket) partition; the bucket's FIRST row takes its
-    # step from the previous bucket's last row via a summary-lag join
-    # (summary is one row per bucket — never fact-scale).
-    # total order: (u, v, w, wre_q) breaks duplicate (time, row_id)
-    # keys exactly as the sequential twin's (u, v, w, vis_re) does
-    # (weight is constant on a row_id tie, so wre_q orders like vis_re)
-    w2 = W.partitionBy("antenna1", "antenna2", "__bucket").orderBy(
-        "time", "row_id", "u", "v", "w", "wre_q"
+    bins, _ = salted_bda_increment(
+        vis, empty_carry(vis.sparkSession), decorr_tol, max_span_secs,
+        bucket_secs, motion_grid, value_grid,
     )
-    wb = W.partitionBy("antenna1", "antenna2").orderBy("__bucket")
-    last_row = F.max(F.struct("time", "row_id", "u", "v", "w")).alias("__last")
-    bsum = ev.groupBy("antenna1", "antenna2", "__bucket").agg(last_row)
-    bprev = bsum.select(
-        "antenna1", "antenna2", "__bucket",
-        F.lag("__last").over(wb).alias("__prev"),
-    )
-    pu, pv, pw = (F.lag(c).over(w2) for c in ("u", "v", "w"))
-    step_in = (
-        F.abs(F.col("u") - pu) + F.abs(F.col("v") - pv) + F.abs(F.col("w") - pw)
-    )
-    step_bound = (
-        F.abs(F.col("u") - F.col("__prev.u"))
-        + F.abs(F.col("v") - F.col("__prev.v"))
-        + F.abs(F.col("w") - F.col("__prev.w"))
-    )
-    rows = (
-        ev.join(bprev, ["antenna1", "antenna2", "__bucket"])
-        .withColumn(
-            "__dq",
-            F.when(pu.isNotNull(), quantize(step_in, motion_grid))
-            .when(F.col("__prev").isNotNull(), quantize(step_bound, motion_grid))
-            .otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "__qb", F.sum("__dq").over(w2.rowsBetween(W.unboundedPreceding, 0))
-        )
-        .drop("__prev", "__dq")
-        # r13 (guide §5, multi-consumer frames): Phase A and Phase C both
-        # consume `rows`; without pinning, the whole motion-prefix
-        # lineage (scan → fan-out exchange → bucket-summary SortAggregate
-        # → lag join → two windows) executes TWICE. One GC-scoped
-        # materialization halves the heavy half of the operator; the
-        # checkpointed frame is O(input) narrow columns.
-        .localCheckpoint(eager=True)
-    )
-
-    summaries = salted_bda_phase_a(rows, tol_q, span)
-    b_schema = (
-        "antenna1 int, antenna2 int, __bucket long, i_star long, "
-        "entry_bin long, bin_base long"
-    )
-    resolution = summaries.groupBy("antenna1", "antenna2").applyInPandas(
-        salted_bda_phase_b(tol_q, span), b_schema
-    )
-    partials = salted_bda_phase_c(
-        rows.join(resolution, ["antenna1", "antenna2", "__bucket"]), tol_q, span
-    )
-    return (
-        partials.groupBy("antenna1", "antenna2", "bin_idx")
-        .agg(
-            F.sum("n").alias("n_rows"),
-            F.min("tmin").alias("time_start"),
-            F.max("tmax").alias("time_end"),
-            F.sum("swre").alias("swre"),
-            F.sum("swim").alias("swim"),
-            F.sum("sw").alias("sw"),
-        )
-        .select(
-            "antenna1", "antenna2", "bin_idx", "n_rows",
-            "time_start", "time_end",
-            (F.col("swre") / F.col("sw")).alias("vis_re_avg"),
-            (F.col("swim") / F.col("sw")).alias("vis_im_avg"),
-            (F.col("sw") / F.lit(value_grid)).alias("weight_sum"),
-        )
-    )
+    return bins.drop("closed")
 
 
 def salted_bda_phase_a(rows: DataFrame, tol_q: int, span: float) -> DataFrame:
     """Phase A of `salted_bda_average` over its motion-prefix rows
     (antenna1, antenna2, __bucket, time, row_id, __qb): one summary row
     per (baseline, bucket) carrying the entry region and the
-    chain-from-i DP. The streaming increment (streaming/salted.py)
-    runs the same kernel."""
+    chain-from-i DP."""
     import numpy as np
 
     a_schema = (
@@ -435,9 +360,12 @@ def salted_bda_phase_a(rows: DataFrame, tol_q: int, span: float) -> DataFrame:
 
 
 def salted_bda_phase_b(tol_q: int, span: float):
-    """The Phase B kernel of `salted_bda_average`: one baseline's bucket
-    summaries (Phase A rows) in, its (__bucket, i_star, entry_bin,
-    bin_base) resolution out, for applyInPandas."""
+    """The Phase B kernel of `salted_bda_average`, for applyInPandas:
+    one baseline's bucket summaries (Phase A rows, each also carrying
+    the baseline's open bin from an earlier batch as c_bin, c_start,
+    c_acc, or nulls) in; per bucket its (i_star, entry_bin, bin_base)
+    resolution, with the baseline's open bin and exit state (open_bin,
+    exit_acc, exit_t) repeated on every row, out."""
     import numpy as np
     import pandas as pd
 
@@ -446,9 +374,15 @@ def salted_bda_phase_b(tol_q: int, span: float):
         a1 = int(pdf["antenna1"].iloc[0])
         a2 = int(pdf["antenna2"].iloc[0])
         out = []
-        started = False
-        acc_carry, anchor_t = 0, 0.0
-        cur_bin, next_bin = -1, 0
+        started = not pd.isna(pdf["c_bin"].iloc[0])
+        if started:
+            # resume the carried open bin (the unsalted twin's state)
+            acc_carry = int(pdf["c_acc"].iloc[0])
+            anchor_t = float(pdf["c_start"].iloc[0])
+            cur_bin = int(pdf["c_bin"].iloc[0])
+        else:
+            acc_carry, anchor_t, cur_bin = 0, 0.0, -1
+        next_bin = cur_bin + 1
         for k in range(len(pdf)):
             bkt = int(pdf["__bucket"].iloc[k])
             qb_last = int(pdf["qb_last"].iloc[k])
@@ -484,10 +418,10 @@ def salted_bda_phase_b(tol_q: int, span: float):
             anchor_t = float(pdf["r_exit_t"].iloc[k][i_star])
             started = True
         return pd.DataFrame(
-            out,
+            [(*r, cur_bin, acc_carry, anchor_t) for r in out],
             columns=[
                 "antenna1", "antenna2", "__bucket", "i_star",
-                "entry_bin", "bin_base",
+                "entry_bin", "bin_base", "open_bin", "exit_acc", "exit_t",
             ],
         )
 
@@ -498,7 +432,7 @@ def salted_bda_phase_c(rows: DataFrame, tol_q: int, span: float) -> DataFrame:
     """Phase C of `salted_bda_average`: the motion-prefix rows joined
     with their bucket's (i_star, entry_bin, bin_base) resolution in,
     per-bin partial fixed-point sums (bin_idx, n, tmin, tmax, swre,
-    swim, sw) out. The streaming increment runs the same kernel."""
+    swim, sw) out."""
     import numpy as np
 
     c_schema = (

@@ -535,8 +535,11 @@ def bda_salted_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposed over a two-level (baseline, 30-day-bucket) key so no
     task holds a whole baseline — Phase-A per-bucket DP, a tiny
     per-baseline bucket-summary stitch, Phase-C re-scan emitting
-    fixed-point PARTIAL sums merged exactly by a final groupBy (see
-    operators/skew.py:salted_bda_average). Integer motion accumulation
+    fixed-point PARTIAL sums merged exactly by a final groupBy
+    (operators/skew.py:salted_bda_average, which runs the streaming
+    increment streaming/salted.py:salted_bda_increment on the empty
+    carry; a zero weight sum averages to NULL, as the oracle's double
+    division does). Integer motion accumulation
     (quantized steps, deterministic.py discipline) is what makes the
     decomposition decision-identical to the sequential scan — the
     recursive-CTE oracle replays the same integer closures, and

@@ -3,15 +3,19 @@
 `streaming/stateful.streaming_bda` keys its state by raw baseline, so
 one hot baseline's rows serialize into a single task every micro-batch
 (vectorized since r9, but still one task). This module is the salted
-counterpart: each micro-batch is processed through the batch salted
-decomposition (`operators/skew.salted_bda_average`'s Phase A/B/C over
-the two-level (baseline, coarse-time-bucket) key) with a TINY
-per-baseline carry frame injected as Phase B's initial state — the
-open bin's accumulator, exactly what the unsalted kernel persists in
-the state store (stateful.BDA_STATE_SCHEMA). Within a batch the hot
-baseline's rows fan out over its buckets (Phase A and Phase C are
-(baseline, bucket)-keyed sorted streams — no task ever holds the whole
-baseline); across batches the carry is O(#baselines).
+counterpart, and the one driver of the salted decomposition
+(`operators/skew`'s Phase A/B/C kernels over the two-level (baseline,
+coarse-time-bucket) key): it builds the motion prefix, runs the three
+phases with a TINY per-baseline carry frame injected as Phase B's
+initial state — the open bin's accumulator, exactly what the unsalted
+kernel persists in the state store (stateful.BDA_STATE_SCHEMA) — and
+merges the carried partials into the bins. The batch operator
+`skew.salted_bda_average` is this increment on the empty carry, minus
+``closed``: the carry is a mergeable summary, the empty carry its
+identity, and the optimizer prunes every join against it. Within a
+batch the hot baseline's rows fan out over its buckets (Phase A and
+Phase C are (baseline, bucket)-keyed sorted streams — no task ever
+holds the whole baseline); across batches the carry is O(#baselines).
 
 Kappa shape: `salted_bda_increment` is a pure (batch frame, carry
 frame) → (bins frame, new carry frame) function — directly usable from
@@ -39,8 +43,15 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from codex_africanus_spark.functions.deterministic import quantize
+from codex_africanus_spark.operators.skew import (
+    salted_bda_phase_a,
+    salted_bda_phase_b,
+    salted_bda_phase_c,
+)
 from codex_africanus_spark.sources.sink import marker_committed_sink
 from codex_africanus_spark.sources.tables import local_frame
 
@@ -80,18 +91,8 @@ def salted_bda_increment(
     the batch is free — the bucket streams sort on the full
     (time, row_id, u, v, w, wre_q) tie-break key.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window as W
-
-    from codex_africanus_spark.functions.deterministic import quantize
-    from codex_africanus_spark.operators.skew import (
-        salted_bda_phase_a,
-        salted_bda_phase_c,
-    )
-
     tol_q = int(math.floor(decorr_tol * motion_grid + 0.5))
-    SPAN = max_span_secs
+    span = max_span_secs
 
     ev = batch.select(
         "row_id", "time", "antenna1", "antenna2", "u", "v", "w",
@@ -106,10 +107,14 @@ def salted_bda_increment(
     carry_in = carry.join(present, ["antenna1", "antenna2"], "leftsemi")
     carry_thru = carry.join(present, ["antenna1", "antenna2"], "left_anti")
 
-    # ---- motion steps (batch op's lag machinery + the carry boundary):
-    # within-(baseline,bucket) lag; a bucket's first row steps from the
-    # previous bucket's last row (summary-lag join); the batch's FIRST
-    # row per baseline steps from the carried last position.
+    # ---- motion prefix without a whole-baseline window: lag within the
+    # (baseline, bucket) partition; a bucket's first row steps from the
+    # previous bucket's last row (a summary-lag join; one row per
+    # bucket, never fact-scale); the batch's FIRST row per baseline
+    # steps from the carried last position. Total order: (u, v, w,
+    # wre_q) breaks duplicate (time, row_id) keys exactly as the
+    # sequential twin's (u, v, w, vis_re) does (weight is constant on a
+    # row_id tie, so wre_q orders like vis_re).
     w2 = W.partitionBy("antenna1", "antenna2", "__bucket").orderBy(
         "time", "row_id", "u", "v", "w", "wre_q"
     )
@@ -153,98 +158,31 @@ def salted_bda_increment(
             "__qb", F.sum("__dq").over(w2.rowsBetween(W.unboundedPreceding, 0))
         )
         .drop("__prev", "__cpu", "__cpv", "__cpw", "__dq")
+        # Phase A and Phase C both read the motion prefix: computed once,
+        # for 5 build jobs (its AQE stages, sf0.001)
+        .localCheckpoint(eager=False)
     )
 
-    # ---- Phase A (the batch kernel): per-bucket entry region + DP
-    summaries = salted_bda_phase_a(rows, tol_q, SPAN)
-
-    # ---- Phase B: per-baseline stitch, INITIALIZED from the carry ----
-    b_schema = (
-        "antenna1 int, antenna2 int, __bucket long, i_star long, "
-        "entry_bin long, bin_base long, open_bin long, exit_acc long, "
-        "exit_t double"
-    )
-
-    def phase_b(pdf):
-        pdf = pdf.sort_values("__bucket").reset_index(drop=True)
-        a1 = int(pdf["antenna1"].iloc[0])
-        a2 = int(pdf["antenna2"].iloc[0])
-        out = []
-        if not pd.isna(pdf["c_bin"].iloc[0]):
-            # resume the carried open bin (the unsalted twin's state)
-            started = True
-            acc_carry = int(pdf["c_acc"].iloc[0])
-            anchor_t = float(pdf["c_start"].iloc[0])
-            cur_bin = int(pdf["c_bin"].iloc[0])
-            next_bin = cur_bin + 1
-        else:
-            started = False
-            acc_carry, anchor_t = 0, 0.0
-            cur_bin, next_bin = -1, 0
-        for k in range(len(pdf)):
-            bkt = int(pdf["__bucket"].iloc[k])
-            qb_last = int(pdf["qb_last"].iloc[k])
-            t_last = float(pdf["t_last"].iloc[k])
-            r_q = np.asarray(pdf["r_q"].iloc[k], dtype=np.int64)
-            r_t = np.asarray(pdf["r_t"].iloc[k], dtype=np.float64)
-            if started:
-                if acc_carry + qb_last <= tol_q and t_last <= anchor_t + SPAN:
-                    out.append((a1, a2, bkt, -1, cur_bin, -1))
-                    acc_carry += qb_last
-                    continue
-                i_star = min(
-                    int(np.searchsorted(r_q, tol_q - acc_carry, side="right")),
-                    int(np.searchsorted(r_t, anchor_t + SPAN, side="right")),
-                )
-                if i_star >= len(r_q):
-                    # contract check must survive `python -O` and carry
-                    # enough state to diagnose from a task failure
-                    # (r10 ADVICE, low)
-                    raise ValueError(
-                        "salted BDA entry-region invariant violated: "
-                        f"i*={i_star} >= |entry region|={len(r_q)} for "
-                        f"baseline=({a1},{a2}) bucket={bkt} "
-                        f"acc_carry={acc_carry} anchor_t={anchor_t} "
-                        f"tol_q={tol_q}"
-                    )
-            else:
-                i_star = 0
-            out.append((a1, a2, bkt, i_star, cur_bin, next_bin))
-            cur_bin = next_bin + int(pdf["r_nclosed"].iloc[k][i_star])
-            next_bin = cur_bin + 1
-            acc_carry = int(pdf["r_exit_acc"].iloc[k][i_star])
-            anchor_t = float(pdf["r_exit_t"].iloc[k][i_star])
-            started = True
-        return pd.DataFrame(
-            [(r[0], r[1], r[2], r[3], r[4], r[5],
-              cur_bin, acc_carry, anchor_t) for r in out],
-            columns=["antenna1", "antenna2", "__bucket", "i_star",
-                     "entry_bin", "bin_base", "open_bin", "exit_acc",
-                     "exit_t"],
-        )
-
+    summaries = salted_bda_phase_a(rows, tol_q, span)
     csel = carry_in.select(
         "antenna1", "antenna2",
         F.col("bin_idx").alias("c_bin"), F.col("start_t").alias("c_start"),
         F.col("acc_q").alias("c_acc"),
     )
+    b_schema = (
+        "antenna1 int, antenna2 int, __bucket long, i_star long, "
+        "entry_bin long, bin_base long, open_bin long, exit_acc long, "
+        "exit_t double"
+    )
     resolution = (
         summaries.join(F.broadcast(csel), ["antenna1", "antenna2"], "left")
         .groupBy("antenna1", "antenna2")
-        .applyInPandas(phase_b, b_schema)
+        .applyInPandas(salted_bda_phase_b(tol_q, span), b_schema)
+        # Phase C and the new carry's exit state both read the stitch:
+        # 2 more build jobs; uncut, the carry write re-ran Phases A-C
+        # and a 3-batch sf0.1 drive took 22-29% longer
+        .localCheckpoint(eager=False)
     )
-    # bucket summaries are one row per (baseline, bucket) — never
-    # fact-scale; localCheckpoint per the loop-frame discipline is not
-    # needed (single downstream consumer tree), but resolution feeds
-    # two consumers (phase C join + exit frame), so cut it once
-    resolution = resolution.localCheckpoint(eager=False)
-    exit_state = resolution.groupBy("antenna1", "antenna2").agg(
-        F.first("open_bin").alias("open_bin"),
-        F.first("exit_acc").alias("exit_acc"),
-        F.first("exit_t").alias("exit_t"),
-    )
-
-    # ---- Phase C (the batch kernel): per-bucket re-scan from i*
     partials = salted_bda_phase_c(
         rows.join(
             resolution.select(
@@ -253,7 +191,7 @@ def salted_bda_increment(
             ),
             ["antenna1", "antenna2", "__bucket"],
         ),
-        tol_q, SPAN,
+        tol_q, span,
     )
     # the carried open bin's accumulated partials merge into its
     # continuation exactly (integer partials are order-independent)
@@ -274,36 +212,33 @@ def salted_bda_increment(
             F.sum("swim").alias("swim"),
             F.sum("sw").alias("sw"),
         )
-        .join(F.broadcast(exit_state), ["antenna1", "antenna2"])
     )
-    # feeds bins AND carry_out — cut once, reuse
-    merged = merged.localCheckpoint(eager=False)
-
-    nan, inf = F.lit(float("nan")), F.lit(float("inf"))
-
-    def _avg(num):
-        # numpy int64-quotient semantics (0/0 → nan, x/0 → ±inf) — the
-        # unsalted twin's closed-bin arithmetic, r10 ADVICE class
-        return (
-            F.when(F.col("sw") != 0, F.col(num) / F.col("sw"))
-            .when(F.col(num) == 0, nan)
-            .otherwise(F.signum(F.col(num)) * inf)
-        )
-
+    # a bin whose weights all quantize to 0 averages to NULL; a
+    # baseline's open bin is its last, so `closed` reads no exit state
+    # (and a caller that drops it prunes the window)
     bins = merged.select(
         "antenna1", "antenna2", "bin_idx", "n_rows",
         "time_start", "time_end",
-        _avg("swre").alias("vis_re_avg"),
-        _avg("swim").alias("vis_im_avg"),
+        F.try_divide("swre", "sw").alias("vis_re_avg"),
+        F.try_divide("swim", "sw").alias("vis_im_avg"),
         (F.col("sw") / F.lit(value_grid)).alias("weight_sum"),
-        (F.col("bin_idx") < F.col("open_bin")).alias("closed"),
+        (
+            F.col("bin_idx")
+            < F.max("bin_idx").over(W.partitionBy("antenna1", "antenna2"))
+        ).alias("closed"),
     )
 
-    last_pos = ev.groupBy("antenna1", "antenna2").agg(
+    exit_state = resolution.groupBy("antenna1", "antenna2").agg(
+        F.first("open_bin").alias("open_bin"),
+        F.first("exit_acc").alias("exit_acc"),
+        F.first("exit_t").alias("exit_t"),
+    )
+    last_pos = rows.groupBy("antenna1", "antenna2").agg(
         F.max(F.struct("time", "row_id", "u", "v", "w")).alias("__last")
     )
     carry_new = (
-        merged.filter(F.col("bin_idx") == F.col("open_bin"))
+        merged.join(F.broadcast(exit_state), ["antenna1", "antenna2"])
+        .filter(F.col("bin_idx") == F.col("open_bin"))
         .join(F.broadcast(last_pos), ["antenna1", "antenna2"])
         .select(
             "antenna1", "antenna2", "bin_idx",

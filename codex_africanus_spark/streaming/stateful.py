@@ -59,18 +59,19 @@ def _make_scan_kernel(
     motion_grid: float = 1e6,
     value_grid: float = 1e6,
 ):
-    """Vectorized per-batch BDA scan (r8 verdict item 2):
-    ``salted_bda_average``'s Phase-A integer kernel lifted into the
+    """Vectorized per-batch BDA scan (r8 verdict item 2): the Phase-A
+    integer kernel (``skew.salted_bda_phase_a``) lifted into the
     state-store update path. Motion steps quantize to exact int64 on the
     1/motion_grid grid, so the accumulator is ASSOCIATIVE — one global
     prefix ``Q = cumsum(dq)`` replaces the per-row scalar loop, bin
     closures become one vectorized two-sided jump table
     (``searchsorted(Q, Q + tol_q)`` for motion, ``searchsorted(t,
-    t + span)`` for the span rule — exactly skew.py phase_a's jmp), the
-    chain walk touches one scalar per BIN, and per-bin sums are int64
-    ``np.add.reduceat`` segments (exact, order-independent). The entry
-    bin continues from carried state via the same two searchsorteds
-    Phase B uses to resolve i*.
+    t + span)`` for the span rule — exactly ``salted_bda_phase_a``'s
+    jmp), the chain walk touches one scalar per BIN, and per-bin sums
+    are int64 ``np.add.reduceat`` segments (exact, order-independent).
+    The entry bin continues from carried state via the same two
+    searchsorteds Phase B (``skew.salted_bda_phase_b``) uses to resolve
+    i*.
 
     Semantics: the streaming twin of ``bda.bda_average_quantized`` /
     ``skew.salted_bda_average`` — the engine's production (fixed-point)
@@ -250,12 +251,13 @@ def streaming_bda(
     Σ|Δuvw| ≤ decorr_tol and the span ≤ max_span_secs — in the engine's
     production FIXED-POINT discipline (motion and value sums as exact
     int64 on the 1e-6 grid, the ``bda_average_quantized`` /
-    ``salted_bda_average`` semantics; r9 lifted that Phase-A kernel in
-    here, replacing the per-row Python loop), with the open bin's
-    accumulator persisted in the state store, so a baseline's bin
-    can span any number of micro-batches. Closed bins are emitted with
-    ``closed=true`` (immutable thereafter); the open bin is re-emitted
-    each batch with ``closed=false`` (update-mode upsert). Rows must
+    ``salted_bda_average`` semantics; r9 lifted its Phase-A kernel,
+    ``skew.salted_bda_phase_a``, in here, replacing the per-row Python
+    loop), with the open bin's accumulator persisted in the state
+    store, so a baseline's bin can span any number of micro-batches.
+    Closed bins are emitted with ``closed=true`` (immutable
+    thereafter); the open bin is re-emitted each batch with
+    ``closed=false`` (update-mode upsert). Rows must
     arrive time-ordered per key across batches (the reference's
     monotone-time row contract, predict.py:688 / SURVEY §2.10 — late
     rows would belong to an emitted bin and are the flagged-row case).
@@ -329,8 +331,10 @@ def _make_bda_update(
         def _div(a, b):
             # Python-int mirror of the numpy closed-bin quotient: a bin
             # whose every weight quantizes to 0 (weight < 0.5/VG) must
-            # emit nan/±inf like `res / ws` does, not raise
-            # ZeroDivisionError and kill the query (r9 ADVICE)
+            # not raise ZeroDivisionError and kill the query (r9
+            # ADVICE). 0/0 gives nan, which Arrow turns into NULL on the
+            # way out, as the salted twin gives; x/0 gives ±inf, as
+            # numpy does
             if b != 0:
                 return a / b
             import math as _math

@@ -2,7 +2,8 @@
 catalogue has been read: `tables.collect_small` keeps the collected rows
 for later builds over the same, unchanged input files. A rewritten file,
 a catalogue that no file fixes, and a size gate lowered after the first
-build must each still behave as a fresh collect would."""
+build must each still behave as a fresh collect would. The salted BDA
+query's build runs the jobs of its checkpoint cuts and no others."""
 
 import os
 import shutil
@@ -54,6 +55,16 @@ def test_second_build_runs_no_job(spark, sf_dir, name):
     fn(spark, sf_dir)
     n, _ = _jobs(spark, f"{name}-warm-build", lambda: fn(spark, sf_dir))
     assert n == 0, f"warm build of {name} launched {n} jobs"
+
+
+def test_salted_bda_second_build_jobs(spark, sf_dir):
+    """bda_salted_average builds with the jobs of its two lazy cuts only:
+    the AQE stages below the motion-prefix rows (5) and the two more
+    below the Phase B stitch."""
+    fn = registry()["bda_salted_average"].fn
+    fn(spark, sf_dir)
+    n, _ = _jobs(spark, "bda_salted_average-warm-build", lambda: fn(spark, sf_dir))
+    assert n == 7, f"warm build of bda_salted_average launched {n} jobs"
 
 
 def test_rewritten_catalogue_file_is_read_again(spark, sf_dir, tmp_path, collects):

@@ -104,16 +104,28 @@ def test_salted_bda_on_ms_table(spark, sf_dir):
     assert len(got) > 10
 
 
-def test_salted_bda_plan_two_level_keys(spark, sf_dir):
+def test_salted_bda_plan_two_level_keys(spark, sf_dir, monkeypatch):
     """Plan lock: the fact-scale pandas stages group by (baseline,
     bucket) — never by baseline alone; the only baseline-keyed stage is
     the Phase-B stitch, whose input is the bucket-summary aggregate
-    (one row per bucket). No task holds a whole hot baseline."""
+    (one row per bucket). No task holds a whole hot baseline. The plan
+    read is the frames below the operator's `localCheckpoint` cuts
+    and the bins above them."""
     from codex_africanus_spark.sources import tpch_ms
 
     vis = tpch_ms.vis_table(spark, sf_dir).filter(F.col("row_id") % 17 == 0)
+    cut = []
+    checkpoint = type(vis).localCheckpoint
+
+    def recorded(self, *args, **kwargs):
+        cut.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(vis), "localCheckpoint", recorded)
     out = skew_op.salted_bda_average(vis, 500.0, 4_320_000.0, 2_592_000.0)
-    plan = out._jdf.queryExecution().analyzed().toString()
+    plan = "\n".join(
+        df._jdf.queryExecution().analyzed().toString() for df in (*cut, out)
+    )
     # Phase A/C are sorted-stream MapInPandas over (baseline, bucket)
     # repartitions — per-group applyInPandas at thousands of tiny
     # bucket groups pays an Arrow round-trip each (27 s vs 3 s measured)

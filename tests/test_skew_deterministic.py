@@ -87,7 +87,9 @@ def test_salted_sessionize_carry_across_arrow_batches(spark, sf_dir):
 def test_salted_bda_phase_b_raises_on_broken_entry_region():
     """Phase B's entry-region contract holds under `python -O` too: a
     bucket summary whose region ends before i* raises a ValueError that
-    names the baseline, bucket and carry, not an assert."""
+    names the baseline, bucket and carry, not an assert. Both an open
+    bin started in this batch and one carried from an earlier batch
+    (c_bin, c_start, c_acc) are checked."""
     import pandas as pd
     import pytest
 
@@ -102,6 +104,9 @@ def test_salted_bda_phase_b_raises_on_broken_entry_region():
         "r_nclosed": [[0], [0, 0]],
         "r_exit_acc": [[0], [0, 0]],
         "r_exit_t": [[0.0], [0.0, 0.0]],
+        "c_bin": [None, None],    # no bin carried in
+        "c_start": [None, None],
+        "c_acc": [None, None],
     })
     phase_b = skew.salted_bda_phase_b(10, 900.0)
     with pytest.raises(
@@ -109,3 +114,24 @@ def test_salted_bda_phase_b_raises_on_broken_entry_region():
         r"bucket=1 acc_carry=0"
     ):
         phase_b(summary)
+
+    carried = pd.DataFrame({
+        "antenna1": [0],
+        "antenna2": [1],
+        "__bucket": [3],
+        "qb_last": [100],         # the carried bin does not absorb it ...
+        "t_last": [1.0],
+        "r_q": [[0, 2]],          # ... and its region stops at Qb <= 10 - 7
+        "r_t": [[0.5, 0.6]],
+        "r_nclosed": [[0, 0]],
+        "r_exit_acc": [[0, 0]],
+        "r_exit_t": [[0.0, 0.0]],
+        "c_bin": [4],
+        "c_start": [0.0],
+        "c_acc": [7],
+    })
+    with pytest.raises(
+        ValueError, match=r"i\*=2 >= \|entry region\|=2 for baseline=\(0,1\) "
+        r"bucket=3 acc_carry=7"
+    ):
+        phase_b(carried)

@@ -109,8 +109,8 @@ def test_salted_increment_fact_stages_keyed_by_bucket(spark, monkeypatch):
     the ONLY baseline-keyed pandas stage is the Phase-B stitch, whose
     input is the one-row-per-bucket summary frame. The plan read is the
     one the sink runs: the frames below the increment's two
-    `localCheckpoint` cuts (Phase A + B, Phase C + merge) and the bins
-    above them."""
+    `localCheckpoint` cuts (the motion prefix; Phase A + B) and the
+    bins above them."""
     pdf = _fuzz_frame(3, n=200)
     batch = spark.createDataFrame(pdf, SCHEMA)
     cut = []
@@ -128,7 +128,7 @@ def test_salted_increment_fact_stages_keyed_by_bucket(spark, monkeypatch):
     plan = "\n".join(
         df._jdf.queryExecution().analyzed().toString() for df in (*cut, bins)
     )
-    # Phase A below the first cut, Phase C below the second
+    # Phase A below the second cut, Phase C above both
     assert plan.count("MapInPandas") >= 2
     reparts = [
         ln for ln in plan.splitlines() if "RepartitionByExpression" in ln
